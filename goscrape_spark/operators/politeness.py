@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def schedule_politeness(df: DataFrame, delay_ms: int,
                         host_col: str = "host",
@@ -91,7 +93,7 @@ def parse_robots_txt(text: str) -> list[str]:
 def robots_rules_df(spark, rules: dict[str, list[str]]) -> DataFrame:
     rows = [(host, prefix) for host, prefixes in rules.items()
             for prefix in prefixes]
-    return spark.createDataFrame(rows or [], "host string, disallow string")
+    return local_frame(spark, rows, "host string, disallow string")
 
 
 def apply_robots(candidates: DataFrame, rules: DataFrame,
@@ -116,9 +118,9 @@ def rfc_rules_df(spark, parsed: dict[str, list[tuple[str, bool]]]) -> DataFrame:
     rows = [(host, pat, rule_regex(pat), allow, len(pat))
             for host, rules in parsed.items()
             for pat, allow in rules]
-    return spark.createDataFrame(
-        rows or [], "host string, pattern string, regex string, "
-                    "is_allow boolean, rule_len int")
+    return local_frame(spark, rows,
+                       "host string, pattern string, regex string, "
+                       "is_allow boolean, rule_len int")
 
 
 def apply_robots_rfc(candidates: DataFrame, rules: DataFrame,

@@ -28,6 +28,16 @@ Scale design (north_rule): frontier/seen shuffles hash on ``dedup_key`` /
 parquet snapshots + manifest via sources/storage.py for resumability); the
 optional Bloom pre-filter (operators/seen.py) keeps the 10^10-row seen table
 from being shuffled against small candidate sets; AQE handles residual skew.
+
+Driver-built frames (the seed ``seen`` row and frontier, the empty
+``written`` table, the epoch-0 ``seed_row``, the empty result frames, the
+sitemap ``done`` set, the robots rules) are built with
+``session.local_frame``, never from a Python list: a list-built frame is a
+PythonRDD leaf, and every scan of it runs one Python-worker task per core
+even with zero rows.  A warm ``count()`` of a one-row list-built frame took
+~0.35 s and ~0.85 Python CPU-s on a 4-core host, against ~0.1 s and none
+for ``local_frame``.  tests/test_local_frames.py fails on any other
+``createDataFrame`` call in plans/, sources/ or operators/politeness.py.
 """
 
 from __future__ import annotations
@@ -51,6 +61,7 @@ from ..operators.extract import (
     ref_dedup_key,
 )
 from ..operators.seen import SeenSet
+from ..session import local_frame
 
 # stage ranks reproducing the sequential consideration order (SURVEY §3.4)
 STAGE_RANKS = {"page": 0, "link": 1, "script": 2, "body": 3, "style": 4,
@@ -304,8 +315,8 @@ class Crawler:
         urls = list(dict.fromkeys(
             self._sitemap_lines.get(self.seed_host, []))) or \
             [f"{self.seed.scheme}://{self.seed_host}/sitemap.xml"]
-        done = spark.createDataFrame([(u,) for u in sorted(set(urls))],
-                                     "url string")
+        done = local_frame(spark, [(u,) for u in sorted(set(urls))],
+                           "url string")
         cur, n_cur = done, len(urls)
         loc_frames: list[DataFrame] = []
         for _ in range(3):
@@ -400,11 +411,10 @@ class Crawler:
             self._seed_key = seed_key  # pre-rebase key, needed at commit time
             if not self._seed_admitted():
                 raise ValueError("start page is excluded from downloading")
-            seen = spark.createDataFrame([(seed_key, 0)],
-                                         "dedup_key string, epoch int")
-            frontier = spark.createDataFrame(
-                [(self.seed.string(), 0, 0)],
-                "url string, depth int, seq bigint")
+            seen = local_frame(spark, [(seed_key, 0)],
+                               "dedup_key string, epoch int")
+            frontier = local_frame(spark, [(self.seed.string(), 0, 0)],
+                                   "url string, depth int, seq bigint")
             epoch = 0
             next_seq = 1
             n_frontier = 1
@@ -422,7 +432,7 @@ class Crawler:
         if self.bloom is not None:
             self.bloom.enable_stats(spark.sparkContext)
             if resumed is None:
-                self.bloom.add_keys([r.dedup_key for r in seen.collect()])
+                self.bloom.add_keys([seed_key])  # seen's one row, no job
             else:
                 self.bloom.add_keys_df(seen)  # rebuild from committed table
 
@@ -447,286 +457,296 @@ class Crawler:
             aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
             spark.conf.set("spark.sql.adaptive.enabled", "false")
 
-        # filesystem state for the fileExists asset skip
-        # (scraper/download.go:76-79): one row per already-written path
-        written = spark.createDataFrame([], "file_path string")
-        # safe OVERestimate of written's row count (pages + allowed assets
-        # accumulated per epoch) — gates the broadcast fileExists anti-join
-        self._written_rows = 0
-        if resumed is not None and self.checkpoint is not None:
-            w = self.checkpoint.resume_written(spark)
-            if w is not None:
-                written = w
-                self._written_rows = written.count()
+        try:
+            # filesystem state for the fileExists asset skip
+            # (scraper/download.go:76-79): one row per already-written path
+            written = local_frame(spark, [], "file_path string")
+            # safe OVERestimate of written's row count (pages + allowed assets
+            # accumulated per epoch) — gates the broadcast fileExists anti-join
+            self._written_rows = 0
+            if resumed is not None and self.checkpoint is not None:
+                w = self.checkpoint.resume_written(spark)
+                if w is not None:
+                    written = w
+                    self._written_rows = written.count()
 
-        self._live_fetch_cache = None
-        while epoch < self.max_epochs:
-            if n_frontier == 0:
-                break
-            self._live_fetch_cache = None  # css-fetch cache is per-epoch
-            self._n_frontier = n_frontier  # gates the broadcast mock plan
+            self._live_fetch_cache = None
+            while epoch < self.max_epochs:
+                if n_frontier == 0:
+                    break
+                self._live_fetch_cache = None  # css-fetch cache is per-epoch
+                self._n_frontier = n_frontier  # gates the broadcast mock plan
 
-            # Adaptive parallelism, sized by DATA not cores: shuffle stages
-            # in the loop move small metadata rows, so partition counts
-            # follow row volume (per-task overhead otherwise dominates — a
-            # 32-partition shuffle of 1k rows is pure scheduling cost).  The
-            # Python-heavy stages (extract/rewrite mapInPandas) are fanned
-            # out separately to all cores below.  The frontier is explicitly
-            # repartitioned because W2's global sequence window necessarily
-            # emitted a single partition.
-            parts = max(2, min(default_parts, n_frontier // 2000 + 1))
-            cpu_parts = max(2, min(default_parts, n_frontier // 50 + 1))
-            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            frontier = frontier.repartition(parts, "url")
+                # Adaptive parallelism, sized by DATA not cores: shuffle stages
+                # in the loop move small metadata rows, so partition counts
+                # follow row volume (per-task overhead otherwise dominates — a
+                # 32-partition shuffle of 1k rows is pure scheduling cost).
+                # The Python-heavy stages (extract/rewrite mapInPandas) are
+                # fanned out separately to all cores below.  The frontier is
+                # explicitly repartitioned because W2's global sequence window
+                # necessarily emitted a single partition.
+                parts = max(2, min(default_parts, n_frontier // 2000 + 1))
+                cpu_parts = max(2, min(default_parts, n_frontier // 50 + 1))
+                spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+                frontier = frontier.repartition(parts, "url")
 
-            fetched = self._fetch(frontier, epoch)
-            meta_lazy = None
-            if self.live or epoch == 0:
-                # live: the checkpoint pins real network side effects (one
-                # GET per URL).  epoch 0: one row; the depth-0 redirect
-                # rebase (first()) needs a materialized frame.
-                fetched = self._localckpt(fetched, "fetched")
-                if epoch == 0:
-                    fetched = self._rebase_seed(fetched)
-                fetched_meta = fetched
-            else:
-                # mock: fetch outcomes are a pure fixture join — checkpoint
-                # only body-FREE metadata (log/meta consumers) derived from
-                # the slim fixture table (_fetch_meta) so the epoch never
-                # re-reads body-bearing fixture blocks just to drop the
-                # column; bodies flow lazily and are materialized once per
-                # epoch (inside the processed checkpoint below)
-                meta_lazy = self._fetch_meta(frontier)
+                fetched = self._fetch(frontier, epoch)
+                meta_lazy = None
+                if self.live or epoch == 0:
+                    # live: the checkpoint pins real network side effects (one
+                    # GET per URL).  epoch 0: one row; the depth-0 redirect
+                    # rebase (first()) needs a materialized frame.
+                    fetched = self._localckpt(fetched, "fetched")
+                    if epoch == 0:
+                        fetched = self._rebase_seed(fetched)
+                    fetched_meta = fetched
+                else:
+                    # mock: fetch outcomes are a pure fixture join — checkpoint
+                    # only body-FREE metadata (log/meta consumers) derived from
+                    # the slim fixture table (_fetch_meta) so the epoch never
+                    # re-reads body-bearing fixture blocks just to drop the
+                    # column; bodies flow lazily and are materialized once per
+                    # epoch (inside the processed checkpoint below)
+                    meta_lazy = self._fetch_meta(frontier)
 
-            pages_ok = fetched.filter(F.col("status") == "ok")
-            # FUSED per-page Arrow pass (operators/extract.process_pages_df):
-            # media-ref extraction + binary sniff + offline rewrite + output
-            # path in ONE stage, so each body crosses the JVM->Python
-            # boundary once per epoch; fanned out to all cores regardless of
-            # the (data-sized) shuffle partitioning.  The full interleaved
-            # span table (with text runs) stays lazy and is only computed if
-            # the caller materializes CrawlResult.documents.
-            page_bodies = pages_ok.select(
-                F.col("page_url").alias("url"), "body", "seq")
-            if cpu_parts != parts:
-                # only worth a body shuffle when it actually adds parallelism
-                # (small epochs); at big epochs the fetch join already ran at
-                # the same width
-                page_bodies = page_bodies.repartition(cpu_parts, "url")
-            processed_lazy = process_pages_df(page_bodies, self.seed_host,
-                                              self.config.output_directory)
-            if meta_lazy is not None:
-                # the body-free meta checkpoint and the Arrow-heavy fused
-                # pass share no lineage: overlap them (§2.6) so the tiny
-                # meta job back-fills cores idled by the Arrow stage's tail
-                processed, fetched_meta = self._parallel(
-                    lambda: self._localckpt(processed_lazy, "processed"),
-                    lambda: self._localckpt(meta_lazy, "fetched_meta"))
-            else:
-                processed = self._localckpt(processed_lazy, "processed")
-            pages_ok_meta = fetched_meta.filter(F.col("status") == "ok")
+                pages_ok = fetched.filter(F.col("status") == "ok")
+                # FUSED per-page Arrow pass
+                # (operators/extract.process_pages_df): media-ref extraction +
+                # binary sniff + offline rewrite + output path in ONE stage, so
+                # each body crosses the JVM->Python boundary once per epoch;
+                # fanned out to all cores regardless of the (data-sized)
+                # shuffle partitioning.  The full interleaved span table (with
+                # text runs) stays lazy and is only computed if the caller
+                # materializes CrawlResult.documents.
+                page_bodies = pages_ok.select(
+                    F.col("page_url").alias("url"), "body", "seq")
+                if cpu_parts != parts:
+                    # only worth a body shuffle when it actually adds
+                    # parallelism (small epochs); at big epochs the fetch join
+                    # already ran at the same width
+                    page_bodies = page_bodies.repartition(cpu_parts, "url")
+                processed_lazy = process_pages_df(page_bodies, self.seed_host,
+                                                  self.config.output_directory)
+                if meta_lazy is not None:
+                    # the body-free meta checkpoint and the Arrow-heavy fused
+                    # pass share no lineage: overlap them (§2.6) so the tiny
+                    # meta job back-fills cores idled by the Arrow stage's tail
+                    processed, fetched_meta = self._parallel(
+                        lambda: self._localckpt(processed_lazy, "processed"),
+                        lambda: self._localckpt(meta_lazy, "fetched_meta"))
+                else:
+                    processed = self._localckpt(processed_lazy, "processed")
+                pages_ok_meta = fetched_meta.filter(F.col("status") == "ok")
 
-            page_meta = pages_ok_meta.select(
-                F.col("page_url"), F.col("seq").alias("parent_seq"),
-                F.col("depth"))
-            full_spans = extract_spans_df(page_bodies, include_text=True)
-            documents.append(full_spans.join(
-                page_meta.select("page_url", "depth"),
-                full_spans["url"] == page_meta["page_url"], "left")
-                .drop("page_url")
-                .withColumn("epoch", F.lit(epoch)))
+                page_meta = pages_ok_meta.select(
+                    F.col("page_url"), F.col("seq").alias("parent_seq"),
+                    F.col("depth"))
+                full_spans = extract_spans_df(page_bodies, include_text=True)
+                documents.append(full_spans.join(
+                    page_meta.select("page_url", "depth"),
+                    full_spans["url"] == page_meta["page_url"], "left")
+                    .drop("page_url")
+                    .withColumn("epoch", F.lit(epoch)))
 
-            # file paths the ok pages of this epoch write (the "filesystem
-            # state" the fileExists check consults, download.go:76-79) fall
-            # out of the fused pass for free.  Slim checkpoint: the several
-            # consumers (blockers union, first-ok agg, written delta) would
-            # otherwise each re-scan the body-bearing processed blocks to
-            # project two tiny columns.
-            # deferred: the first consumer (the fileExists admission) is
-            # several actions downstream, so this tiny checkpoint overlaps
-            # the admission chain instead of serializing before it
-            page_paths_d = self._deferred(lambda: self._localckpt(
-                processed.select("file_path", "seq"), "page_paths"))
+                # file paths the ok pages of this epoch write (the "filesystem
+                # state" the fileExists check consults, download.go:76-79) fall
+                # out of the fused pass for free.  Slim checkpoint: the several
+                # consumers (blockers union, first-ok agg, written delta) would
+                # otherwise each re-scan the body-bearing processed blocks to
+                # project two tiny columns.
+                # deferred: the first consumer (the fileExists admission) is
+                # several actions downstream, so this tiny checkpoint overlaps
+                # the admission chain instead of serializing before it
+                page_paths_d = self._deferred(lambda: self._localckpt(
+                    processed.select("file_path", "seq"), "page_paths"))
 
-            if n_frontier <= self.CANDIDATES_BROADCAST_MAX:
-                # shuffle-free: per-tag arrays built on the page row, tiny
-                # meta broadcast (see _candidates_fast)
-                candidates = self._candidates_fast(processed, page_meta)
-            else:
-                # beyond the broadcast gate: the explode + re-aggregate
-                # shape (equivalent rows; shuffles on url)
-                spans = (processed.select("url", F.explode("refs").alias("r"))
-                         .select("url", "r.*"))
-                candidates = self._base_candidates(spans, page_meta)
-            if epoch == 0 and cfg.use_sitemaps:
-                sm_cands = self._sitemap_candidates()
-                if sm_cands is not None:
-                    candidates = candidates.unionByName(sm_cands)
+                if n_frontier <= self.CANDIDATES_BROADCAST_MAX:
+                    # shuffle-free: per-tag arrays built on the page row, tiny
+                    # meta broadcast (see _candidates_fast)
+                    candidates = self._candidates_fast(processed, page_meta)
+                else:
+                    # beyond the broadcast gate: the explode + re-aggregate
+                    # shape (equivalent rows; shuffles on url)
+                    spans = (processed
+                             .select("url", F.explode("refs").alias("r"))
+                             .select("url", "r.*"))
+                    candidates = self._base_candidates(spans, page_meta)
+                if epoch == 0 and cfg.use_sitemaps:
+                    sm_cands = self._sitemap_candidates()
+                    if sm_cands is not None:
+                        candidates = candidates.unionByName(sm_cands)
 
-            inserts, survivors, assets_allowed, assets_deferred = \
-                self._admission_fixpoint(candidates, seen, page_paths_d,
-                                         written)
+                inserts, survivors, assets_allowed, assets_deferred = \
+                    self._admission_fixpoint(candidates, seen, page_paths_d,
+                                             written)
 
-            # record fetches: the page fetches of this epoch + admitted assets
-            # pages are all seed-host (F5), so the robots Crawl-delay
-            # merge collapses to one scalar max here
-            page_delay_ms = max(cfg.politeness_delay_ms,
-                                self._host_delay_ms.get(self.seed_host, 0))
-            if page_delay_ms > 0:
-                # epoch seqs are dense [epoch_base, epoch_base + n): W2's
-                # global_sequence assigned start=next_seq-n_frontier..-1, so
-                # the politeness offset is pure column arithmetic — no
-                # window, no shuffle.  (Was row_number() OVER (ORDER BY seq):
-                # a single-task sort of the whole epoch whenever
-                # politeness_delay_ms > 0 — the exact W2 scale-killer shape.)
-                epoch_base = next_seq - n_frontier
-                page_not_before = ((F.col("seq") - F.lit(epoch_base))
-                                   .cast("long")
-                                   * F.lit(page_delay_ms))
-            else:
-                page_not_before = F.lit(0).cast("long")
-            page_log = fetched_meta.select(
-                F.col("req_url").alias("url"), F.lit("page").alias("kind"),
-                page_not_before.alias("not_before_ms"),
-                F.col("status"), F.col("attempts"),
-                F.col("seq").alias("parent_seq"),
-                F.lit(0).alias("stage_rank"), F.lit(0).alias("sub_rank"),
-                F.lit(0).alias("intra1"), F.lit(0).alias("intra2"),
-                F.col("depth"), F.lit(epoch).alias("epoch"),
-                F.lit("").alias("stage"))
+                # record fetches: the page fetches of this epoch + admitted
+                # assets.  Pages are all seed-host (F5), so the robots
+                # Crawl-delay merge collapses to one scalar max here
+                page_delay_ms = max(cfg.politeness_delay_ms,
+                                    self._host_delay_ms.get(self.seed_host, 0))
+                if page_delay_ms > 0:
+                    # epoch seqs are dense [epoch_base, epoch_base + n): W2's
+                    # global_sequence assigned start=next_seq-n_frontier..-1,
+                    # so the politeness offset is pure column arithmetic — no
+                    # window, no shuffle.  (Was row_number() OVER (ORDER BY
+                    # seq): a single-task sort of the whole epoch whenever
+                    # politeness_delay_ms > 0 — the exact W2 scale-killer
+                    # shape.)
+                    epoch_base = next_seq - n_frontier
+                    page_not_before = ((F.col("seq") - F.lit(epoch_base))
+                                       .cast("long")
+                                       * F.lit(page_delay_ms))
+                else:
+                    page_not_before = F.lit(0).cast("long")
+                page_log = fetched_meta.select(
+                    F.col("req_url").alias("url"), F.lit("page").alias("kind"),
+                    page_not_before.alias("not_before_ms"),
+                    F.col("status"), F.col("attempts"),
+                    F.col("seq").alias("parent_seq"),
+                    F.lit(0).alias("stage_rank"), F.lit(0).alias("sub_rank"),
+                    F.lit(0).alias("intra1"), F.lit(0).alias("intra2"),
+                    F.col("depth"), F.lit(epoch).alias("epoch"),
+                    F.lit("").alias("stage"))
 
-            # Three independent post-admission branches (all consume the
-            # just-checkpointed inserts/assets_allowed): the asset fetch,
-            # the next-frontier sequence assignment, and the Bloom build.
-            # Overlapped (§2.6) so each branch's driver latency and stage
-            # tails back-fill the others; sequential under GOSCRAPE_PARALLEL=0.
-            delta = inserts.select("dedup_key") \
-                           .withColumn("epoch", F.lit(epoch + 1))
+                # Three independent post-admission branches (all consume the
+                # just-checkpointed inserts/assets_allowed): the asset fetch,
+                # the next-frontier sequence assignment, and the Bloom build.
+                # Overlapped (§2.6) so each branch's driver latency and stage
+                # tails back-fill the others; sequential under
+                # GOSCRAPE_PARALLEL=0.
+                delta = inserts.select("dedup_key") \
+                               .withColumn("epoch", F.lit(epoch + 1))
 
-            def _assets_branch():
-                af = self._localckpt(
-                    self._fetch_assets(assets_allowed, epoch,
-                                       deferred=assets_deferred),
-                    "asset_fetch")
-                # slim written-delta checkpoint: the lazy union chain used
-                # to reference the BODY-bearing asset_fetch blocks, so every
-                # later epoch's fileExists anti-join re-deserialized all
-                # prior epochs' asset payloads just to read file_path.  One
-                # tiny checkpoint per epoch keeps the chain body-free.
-                wd = self._localckpt(
-                    page_paths_d.get().select("file_path").unionByName(
-                        af.filter(F.col("status") == "ok")
-                          .select("file_path")),
-                    "written_delta")
-                return af, wd
+                def _assets_branch():
+                    af = self._localckpt(
+                        self._fetch_assets(assets_allowed, epoch,
+                                           deferred=assets_deferred),
+                        "asset_fetch")
+                    # slim written-delta checkpoint: the lazy union chain used
+                    # to reference the BODY-bearing asset_fetch blocks, so
+                    # every later epoch's fileExists anti-join re-deserialized
+                    # all prior epochs' asset payloads just to read file_path.
+                    # One tiny checkpoint per epoch keeps the chain body-free.
+                    wd = self._localckpt(
+                        page_paths_d.get().select("file_path").unionByName(
+                            af.filter(F.col("status") == "ok")
+                              .select("file_path")),
+                        "written_delta")
+                    return af, wd
 
-            def _seq_branch():
-                # next frontier: page survivors ordered by the composite key
-                # (W2).  global_sequence range-partitions + offsets instead
-                # of a single-task global window once the epoch is wide
-                # enough; its scalable path already counted its partitions —
-                # reuse instead of an extra count() job.
-                from ..operators.ranking import global_sequence_with_total
-                seq_df, seq_total = global_sequence_with_total(
-                    survivors.filter(~F.col("is_asset"))
-                             .select("url", "depth", *ORDER_COLS),
-                    ORDER_COLS, start=next_seq, out_col="seq",
-                    parts=parts)
-                np_df = self._localckpt(
-                    seq_df.select("url", (F.col("depth") + 1).alias("depth"),
-                                  "seq"), "next_pages")
-                return np_df, (seq_total if seq_total is not None
-                               else np_df.count())
+                def _seq_branch():
+                    # next frontier: page survivors ordered by the composite
+                    # key (W2).  global_sequence range-partitions + offsets
+                    # instead of a single-task global window once the epoch is
+                    # wide enough; its scalable path already counted its
+                    # partitions — reuse instead of an extra count() job.
+                    from ..operators.ranking import global_sequence_with_total
+                    seq_df, seq_total = global_sequence_with_total(
+                        survivors.filter(~F.col("is_asset"))
+                                 .select("url", "depth", *ORDER_COLS),
+                        ORDER_COLS, start=next_seq, out_col="seq",
+                        parts=parts)
+                    np_df = self._localckpt(
+                        seq_df.select("url",
+                                      (F.col("depth") + 1).alias("depth"),
+                                      "seq"), "next_pages")
+                    return np_df, (seq_total if seq_total is not None
+                                   else np_df.count())
 
-            def _bloom_branch():
-                if self.bloom is not None:
-                    # distributed per-partition build, OR-merged driver-side
-                    self.bloom.add_keys_df(delta)
+                def _bloom_branch():
+                    if self.bloom is not None:
+                        # distributed per-partition build, OR-merged
+                        # driver-side
+                        self.bloom.add_keys_df(delta)
 
-            (asset_fetch, written_delta), (next_pages, n_next), _ = \
-                self._parallel(_assets_branch, _seq_branch, _bloom_branch)
-            fetch_logs.append(page_log)
-            fetch_logs.append(asset_fetch.drop("body", "file_path"))
+                (asset_fetch, written_delta), (next_pages, n_next), _ = \
+                    self._parallel(_assets_branch, _seq_branch, _bloom_branch)
+                fetch_logs.append(page_log)
+                fetch_logs.append(asset_fetch.drop("body", "file_path"))
 
-            # output table: pages (already rewritten in the fused pass) +
-            # fetched assets
-            outputs.append(
-                processed.select("url", "file_path", "body", "is_page", "seq")
-                .withColumn("wpos", F.struct(
-                    F.lit(epoch).alias("epoch"), self._page_pos().alias("pos")))
-                .drop("seq")
-                .withColumn("epoch", F.lit(epoch)))
-            outputs.append(self._asset_outputs(asset_fetch, epoch))
+                # output table: pages (already rewritten in the fused pass) +
+                # fetched assets
+                outputs.append(
+                    processed.select("url", "file_path", "body", "is_page",
+                                     "seq")
+                    .withColumn("wpos", F.struct(
+                        F.lit(epoch).alias("epoch"),
+                        self._page_pos().alias("pos")))
+                    .drop("seq")
+                    .withColumn("epoch", F.lit(epoch)))
+                outputs.append(self._asset_outputs(asset_fetch, epoch))
 
-            # filesystem-state accumulation: every ok page write + every ok
-            # (unblocked) asset write becomes an existing file for later
-            # epochs' fileExists admission.  Slim per-epoch checkpoints
-            # (built in _assets_branch) — duplicates are harmless for the
-            # anti-join, so no distinct shuffle.
-            written = written.unionByName(written_delta)
-            if self._fs_obs is not None:
-                # overestimate: every frontier page + every allowed asset
-                self._written_rows += n_frontier + \
-                    int(self._fs_obs.get["n_allowed"])
-            else:
-                self._written_rows = self.WRITTEN_BROADCAST_MAX + 1
+                # filesystem-state accumulation: every ok page write + every ok
+                # (unblocked) asset write becomes an existing file for later
+                # epochs' fileExists admission.  Slim per-epoch checkpoints
+                # (built in _assets_branch) — duplicates are harmless for the
+                # anti-join, so no distinct shuffle.
+                written = written.unionByName(written_delta)
+                if self._fs_obs is not None:
+                    # overestimate: every frontier page + every allowed asset
+                    self._written_rows += n_frontier + \
+                        int(self._fs_obs.get["n_allowed"])
+                else:
+                    self._written_rows = self.WRITTEN_BROADCAST_MAX + 1
 
-            # seen append (insert-before-reject: ALL admitted keys).  The
-            # first-wins window already guarantees one row per key, so no
-            # distinct; the union stays lazy — every branch is a checkpoint,
-            # so lineage is shallow and nothing recomputes.
-            seen = seen.unionByName(delta)
-            next_seq += n_next
-            frontier = next_pages
-            n_frontier = n_next
-            if self.checkpoint is not None:
-                commit_delta = delta
-                if epoch == 0:
-                    # epoch-0 delta must carry the driver-inserted seed key
-                    # (computed BEFORE any depth-0 redirect rebase) so a
-                    # resume can reconstruct seen purely from deltas
-                    seed_row = spark.createDataFrame(
-                        [(self._seed_key, 0)],
-                        "dedup_key string, epoch int")
-                    commit_delta = delta.unionByName(seed_row)
-                self.checkpoint.commit_epoch(
-                    epoch, frontier=frontier, seen_delta=commit_delta,
-                    metrics={"next_seq": next_seq,
-                             "seed_host": self.seed_host,
-                             # already counted by the loop: no extra action
-                             "frontier_rows": n_next},
-                    written_delta=written_delta)
-            # plan-depth compaction: seen/written are lazy unionByName
-            # chains over per-epoch checkpointed deltas — correct at BFS
-            # depths, but the union tree (and Catalyst analysis time per
-            # epoch) grows linearly with epochs.  Every K epochs collapse
-            # the chain into ONE checkpointed table so a deep/continuous
-            # crawl's per-epoch plan stays O(K), not O(epoch).  Children
-            # are already materialized, so this re-reads checkpoint blocks
-            # once per K epochs and recomputes nothing.
-            if (epoch + 1) % self.compact_every == 0:
-                seen = self._localckpt(seen, "seen_compact")
-                written = self._localckpt(written, "written_compact")
-            epoch += 1
+                # seen append (insert-before-reject: ALL admitted keys).  The
+                # first-wins window already guarantees one row per key, so no
+                # distinct; the union stays lazy — every branch is a
+                # checkpoint, so lineage is shallow and nothing recomputes.
+                seen = seen.unionByName(delta)
+                next_seq += n_next
+                frontier = next_pages
+                n_frontier = n_next
+                if self.checkpoint is not None:
+                    commit_delta = delta
+                    if epoch == 0:
+                        # epoch-0 delta must carry the driver-inserted seed key
+                        # (computed BEFORE any depth-0 redirect rebase) so a
+                        # resume can reconstruct seen purely from deltas
+                        seed_row = local_frame(spark, [(self._seed_key, 0)],
+                                               "dedup_key string, epoch int")
+                        commit_delta = delta.unionByName(seed_row)
+                    self.checkpoint.commit_epoch(
+                        epoch, frontier=frontier, seen_delta=commit_delta,
+                        metrics={"next_seq": next_seq,
+                                 "seed_host": self.seed_host,
+                                 # already counted by the loop: no extra action
+                                 "frontier_rows": n_next},
+                        written_delta=written_delta)
+                # plan-depth compaction: seen/written are lazy unionByName
+                # chains over per-epoch checkpointed deltas — correct at BFS
+                # depths, but the union tree (and Catalyst analysis time per
+                # epoch) grows linearly with epochs.  Every K epochs collapse
+                # the chain into ONE checkpointed table so a deep/continuous
+                # crawl's per-epoch plan stays O(K), not O(epoch).  Children
+                # are already materialized, so this re-reads checkpoint blocks
+                # once per K epochs and recomputes nothing.
+                if (epoch + 1) % self.compact_every == 0:
+                    seen = self._localckpt(seen, "seen_compact")
+                    written = self._localckpt(written, "written_compact")
+                epoch += 1
+        finally:
+            # restored even when the loop raises: the session is shared
+            spark.conf.set("spark.sql.shuffle.partitions", str(default_parts))
+            if aqe_prev is not None:
+                spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
-        spark.conf.set("spark.sql.shuffle.partitions", str(default_parts))
-        if aqe_prev is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-
-        empty_log = self.spark.createDataFrame(
-            [], "url string, kind string, not_before_ms bigint, status string,"
-                " attempts int, parent_seq bigint, stage_rank int, "
-                "sub_rank int, intra1 int, intra2 int, depth int, epoch int, "
-                "stage string")
-        empty_doc = self.spark.createDataFrame(
-            [], "url string, kind string, text string, media_ref string, "
-                "offset int, tag_idx int, attr string, vstart int, vend int, "
-                "token string, depth int, epoch int")
-        empty_out = self.spark.createDataFrame(
-            [], "url string, file_path string, body binary, is_page boolean, "
-                "epoch int, wpos struct<epoch:int, pos:struct<"
-                "parent_seq:bigint, stage_rank:int, sub_rank:int, "
-                "intra1:int, intra2:int>>")
+        empty_log = local_frame(
+            spark, [], "url string, kind string, not_before_ms bigint, "
+                       "status string, attempts int, parent_seq bigint, "
+                       "stage_rank int, sub_rank int, intra1 int, intra2 int, "
+                       "depth int, epoch int, stage string")
+        empty_doc = local_frame(
+            spark, [], "url string, kind string, text string, "
+                       "media_ref string, offset int, tag_idx int, "
+                       "attr string, vstart int, vend int, token string, "
+                       "depth int, epoch int")
+        empty_out = local_frame(
+            spark, [], "url string, file_path string, body binary, "
+                       "is_page boolean, epoch int, wpos struct<epoch:int, "
+                       "pos:struct<parent_seq:bigint, stage_rank:int, "
+                       "sub_rank:int, intra1:int, intra2:int>>")
         fetch_log = _union_all(fetch_logs, empty_log)
         docs = _union_all(documents, empty_doc)
         # final filesystem state: the LAST writer per path in sequential

@@ -4,13 +4,19 @@ Local defaults target the sandbox (local[N], 32 cores); the same builder
 settings are what a spark-submit deployment would carry in --conf flags.
 AQE is on so skewed hosts get runtime-split shuffle partitions (the salting
 in plans/crawl.py is the explicit first line of defense; AQE is the backstop).
+
+:func:`local_frame` builds the crawl's driver-side frames as JVM relations.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Iterable
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def get_spark(app_name: str = "goscrape-spark", master: str | None = None,
@@ -35,3 +41,27 @@ def get_spark(app_name: str = "goscrape-spark", master: str | None = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple],
+                schema: str) -> DataFrame:
+    """Driver-built rows as a relation the JVM scans without Python workers.
+
+    ``spark.createDataFrame(<python list>)`` plans a PythonRDD leaf: every
+    scan of it runs one Python-worker task per default-parallelism slice,
+    even with zero rows (~0.2 Python CPU-s per task on a 4-core host).  An
+    Arrow table crosses to the JVM once, when the frame is built, and becomes
+    a ``LocalRelation`` whatever ``spark.sql.execution.arrow.pyspark.enabled``
+    says; an empty one is pruned from unions and joins by the optimizer.
+
+    ``rows`` are tuples in ``schema`` order; ``schema`` is a DDL string and
+    the frame's columns, types and order are exactly its fields (all
+    nullable).  Every driver-built frame the crawl scans goes through here.
+    """
+    struct = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow)
+    return spark.createDataFrame(table, schema=struct)

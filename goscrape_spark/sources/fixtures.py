@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..plans.simulator import PageFixture
+from ..session import local_frame
 
 SITE_LINKS_START = "https://example.org/#fragment"
 
@@ -104,4 +105,4 @@ def pages_df(spark: SparkSession, pages: dict) -> DataFrame:
             body = v.encode("utf-8") if isinstance(v, str) else bytes(v)
             resp, retry = None, 0
         rows.append((url, bytearray(body), resp, retry))
-    return spark.createDataFrame(rows, schema=PAGES_SCHEMA)
+    return local_frame(spark, rows, PAGES_SCHEMA)

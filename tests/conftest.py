@@ -13,3 +13,18 @@ def spark():
     s = get_spark("goscrape-tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def no_auto_broadcast(spark):
+    """Turns off Spark's size-based broadcast choice for one test, so a
+    BroadcastHashJoin in a plan can only come from a hint in the code under
+    test (a fixture built by ``pages_df`` is a LocalRelation whose exact,
+    tiny size Spark would otherwise broadcast on its own)."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)

@@ -36,7 +36,7 @@ def test_mock_fetch_broadcasts_small_frontier(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_mock_fetch_falls_back_above_threshold(spark):
+def test_mock_fetch_falls_back_above_threshold(spark, no_auto_broadcast):
     """An oversized frontier must NOT be broadcast (an epoch's url set has
     to fit in every executor) — the co-partitioned shuffle join is the
     scale path."""

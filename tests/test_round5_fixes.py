@@ -34,7 +34,8 @@ def test_pages_broadcast_gate_is_byte_sized(spark):
     assert not c._mock_broadcastable()
 
 
-def test_mock_status_falls_back_without_broadcast(spark):
+def test_mock_status_falls_back_without_broadcast(spark,
+                                                  no_auto_broadcast):
     """With the byte gate closed, _mock_status must still produce the same
     statuses through the shuffle join (no broadcast hint in the plan)."""
     c = _crawler(spark)
