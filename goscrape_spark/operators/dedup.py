@@ -145,7 +145,8 @@ def minhash_signatures(df: DataFrame, id_col: str = "doc_id",
             sigs = []
             for ws in pdf["_ws"]:
                 if ws is None:
-                    sigs.append(None)
+                    # same as the column form: an array of NULLs
+                    sigs.append([None] * num_perm)
                     continue
                 toks = list(ws)
                 k = len(toks) - 2

@@ -38,6 +38,17 @@ even with zero rows.  A warm ``count()`` of a one-row list-built frame took
 ~0.35 s and ~0.85 Python CPU-s on a 4-core host, against ~0.1 s and none
 for ``local_frame``.  tests/test_local_frames.py fails on any other
 ``createDataFrame`` call in plans/, sources/ or operators/politeness.py.
+
+An epoch stage is materialized once (``_localckpt``).  Counts and
+driver-side harvests ride a pyspark ``Observation`` on that checkpoint
+(``_observed``): the allowed/deferred asset counts and link signature on
+``assets_allowed``, the inserted-key count on ``inserts``, the frontier
+count on ``next_pages``, the live Set-Cookie snapshots on the fetch
+checkpoint and the fixture size on the slim fixture table — never a
+separate ``count``/``isEmpty``/``first``/``collect`` job.  A live fetch
+returns its input rows with the fetch columns added (sources/fetch.py), so
+no join puts the outcomes back, and its one checkpoint carries the
+caller's label (``fetched``, ``asset_round``, ``css_fetch``).
 """
 
 from __future__ import annotations
@@ -163,8 +174,10 @@ class Crawler:
         # materialized through _localckpt, so this doubles as a stage-level
         # attribution table (bench.py emits it into BENCH_FULL)
         self.stage_secs: dict[str, float] = {}
-        # metrics observed during the latest assets_allowed checkpoint
+        # metrics observed during the latest assets_allowed and inserts
+        # checkpoints
         self._fs_obs = None
+        self._ins_obs = None
         # S4: session cookie jar state, keyed (domain, path, name); starts
         # from the configured cookies and absorbs live Set-Cookie snapshots
         # per fetch round (the reference's shared cookiejar.Jar,
@@ -320,7 +333,8 @@ class Crawler:
         cur, n_cur = done, len(urls)
         loc_frames: list[DataFrame] = []
         for _ in range(3):
-            fetched = self._do_fetch(cur, approx_rows=n_cur) \
+            fetched = self._do_fetch(cur, approx_rows=n_cur,
+                                     label="sitemap_fetch") \
                           .select("url", "body", "status")
             # cast, not decode: Spark 4's decode() THROWS on any invalid
             # UTF-8 byte (a .xml.gz sitemap or latin-1 bytes would abort
@@ -493,10 +507,12 @@ class Crawler:
                 fetched = self._fetch(frontier, epoch)
                 meta_lazy = None
                 if self.live or epoch == 0:
-                    # live: the checkpoint pins real network side effects (one
-                    # GET per URL).  epoch 0: one row; the depth-0 redirect
-                    # rebase (first()) needs a materialized frame.
-                    fetched = self._localckpt(fetched, "fetched")
+                    # live: the fetch already checkpointed the frontier rows
+                    # it returns (one GET per URL).  mock epoch 0: one row;
+                    # the depth-0 redirect rebase (first()) needs a
+                    # materialized frame.
+                    if not self.live:
+                        fetched = self._localckpt(fetched, "fetched")
                     if epoch == 0:
                         fetched = self._rebase_seed(fetched)
                     fetched_meta = fetched
@@ -619,10 +635,11 @@ class Crawler:
                                .withColumn("epoch", F.lit(epoch + 1))
 
                 def _assets_branch():
-                    af = self._localckpt(
-                        self._fetch_assets(assets_allowed, epoch,
-                                           deferred=assets_deferred),
-                        "asset_fetch")
+                    af = self._fetch_assets(assets_allowed, epoch,
+                                            deferred=assets_deferred)
+                    if not self.live:
+                        # live rounds are already checkpointed by the fetch
+                        af = self._localckpt(af, "asset_fetch")
                     # slim written-delta checkpoint: the lazy union chain used
                     # to reference the BODY-bearing asset_fetch blocks, so
                     # every later epoch's fileExists anti-join re-deserialized
@@ -639,20 +656,19 @@ class Crawler:
                     # next frontier: page survivors ordered by the composite
                     # key (W2).  global_sequence range-partitions + offsets
                     # instead of a single-task global window once the epoch is
-                    # wide enough; its scalable path already counted its
-                    # partitions — reuse instead of an extra count() job.
-                    from ..operators.ranking import global_sequence_with_total
-                    seq_df, seq_total = global_sequence_with_total(
+                    # wide enough.  The row count rides the checkpoint's job.
+                    from ..operators.ranking import global_sequence
+                    seq_df = global_sequence(
                         survivors.filter(~F.col("is_asset"))
                                  .select("url", "depth", *ORDER_COLS),
                         ORDER_COLS, start=next_seq, out_col="seq",
                         parts=parts)
-                    np_df = self._localckpt(
+                    np_df, obs = _observed(
                         seq_df.select("url",
                                       (F.col("depth") + 1).alias("depth"),
-                                      "seq"), "next_pages")
-                    return np_df, (seq_total if seq_total is not None
-                                   else np_df.count())
+                                      "seq"), F.count(F.lit(1)).alias("n"))
+                    np_df = self._localckpt(np_df, "next_pages")
+                    return np_df, obs.get["n"]
 
                 def _bloom_branch():
                     if self.bloom is not None:
@@ -707,12 +723,14 @@ class Crawler:
                         seed_row = local_frame(spark, [(self._seed_key, 0)],
                                                "dedup_key string, epoch int")
                         commit_delta = delta.unionByName(seed_row)
+                    # both row counts rode checkpoints that already ran
                     self.checkpoint.commit_epoch(
                         epoch, frontier=frontier, seen_delta=commit_delta,
                         metrics={"next_seq": next_seq,
                                  "seed_host": self.seed_host,
-                                 # already counted by the loop: no extra action
-                                 "frontier_rows": n_next},
+                                 "frontier_rows": n_next,
+                                 "seen_delta_rows": self._ins_obs.get["n"]
+                                 + (1 if epoch == 0 else 0)},
                         written_delta=written_delta)
                 # plan-depth compaction: seen/written are lazy unionByName
                 # chains over per-epoch checkpointed deltas — correct at BFS
@@ -859,19 +877,19 @@ class Crawler:
             print(f"    ckpt[{label}]: {dt:.2f}s", flush=True)
         return out
 
-    def _do_fetch_cached(self, urls: DataFrame) -> DataFrame:
+    def _do_fetch_cached(self, rows: DataFrame, label: str) -> DataFrame:
         """Live fetch that serves this epoch's css-discovery GETs from the
         in-epoch cache (one real GET per URL per epoch)."""
-        if not self.live or self._live_fetch_cache is None:
-            return self._do_fetch(urls)
+        if self._live_fetch_cache is None:
+            return self._do_fetch(rows, label=label)
         cache = self._live_fetch_cache
-        hit = urls.join(cache, on="url", how="inner")
-        miss = urls.join(cache.select("url"), on="url", how="left_anti")
-        fetched_miss = self._do_fetch(miss)
+        hit = rows.join(cache, on="url", how="inner")
+        miss = rows.join(cache.select("url"), on="url", how="left_anti")
+        fetched_miss = self._do_fetch(miss, label=label)
         return fetched_miss.unionByName(hit.select(*fetched_miss.columns))
 
-    def _do_fetch(self, urls: DataFrame,
-                  approx_rows: int | None = None) -> DataFrame:
+    def _do_fetch(self, urls: DataFrame, approx_rows: int | None = None,
+                  label: str = "fetched") -> DataFrame:
         """The fetch seam: (url) -> (url, body, resp_url, status, attempts).
 
         Mock mode: J2 fixture join + S2 retry outcome as columns (the
@@ -880,27 +898,34 @@ class Crawler:
         we compute them directly: ok when retry_after <= max_retries, else
         exhausted after max_retries+1 attempts).
         Live mode: per-host applyInPandas HTTP batches (sources/fetch.py)
-        with the same schema and real inline backoff + politeness sleeps."""
+        with the same schema and real inline backoff + politeness sleeps.
+        A live fetch returns its input rows (every column of ``urls``) with
+        the fetch columns added, materialized by ONE checkpoint under the
+        caller's ``label`` — it pins the real network side effects, so no
+        consumer re-runs the GETs and callers need no join back."""
         if self.live:
             import json as _json
 
             from ..sources.fetch import http_fetch_df
-            fetched = http_fetch_df(
-                urls, self.config,
-                session_cookies=list(self._session_cookies.values()),
-                host_delays_ms=self._host_delay_ms)
+            fetched, obs = _observed(
+                http_fetch_df(
+                    urls, self.config,
+                    session_cookies=list(self._session_cookies.values()),
+                    host_delays_ms=self._host_delay_ms),
+                F.collect_list(F.when(
+                    F.col("set_cookies").isNotNull(),
+                    F.struct("url", "set_cookies"))).alias("snaps"))
+            fetched = self._localckpt(fetched, label)
             # absorb the batches' final jar snapshots so cookies set in this
             # round (e.g. a login page's session id) are presented in later
-            # rounds/epochs, like the reference's shared jar.  The harvest
-            # is a tiny collect over one snapshot row per host batch; the
-            # checkpoint would happen downstream anyway and keeps the fetch
-            # from re-executing per consumer.
-            fetched = fetched.localCheckpoint(eager=True)
-            for r in fetched.select(
-                    F.explode("set_cookies").alias("c")).collect():
-                d = _json.loads(r.c)
-                self._session_cookies[
-                    (d["domain"], d["path"], d["name"])] = d
+            # rounds/epochs, like the reference's shared jar.  The snapshots
+            # (one row per host batch) rode the checkpoint's job; applying
+            # them in url order keeps the merge deterministic.
+            for snap in sorted(obs.get["snaps"], key=lambda r: r.url):
+                for c in snap.set_cookies:
+                    d = _json.loads(c)
+                    self._session_cookies[
+                        (d["domain"], d["path"], d["name"])] = d
             return fetched.drop("set_cookies")
         maxr = self.config.max_retries
         if self._mock_broadcastable(approx_rows):
@@ -966,24 +991,27 @@ class Crawler:
     def _pages_slim(self) -> DataFrame:
         """(url, has_body, retry_after): body-free fixture metadata,
         checkpointed once per crawl — per-epoch status joins broadcast this
-        tiny table instead of re-reading body-bearing fixture blocks."""
+        tiny table instead of re-reading body-bearing fixture blocks.  The
+        row count and url bytes (_pages_stats) ride the checkpoint's job."""
         if self._pages_slim_df is None:
-            self._pages_slim_df = self.pages.select(
-                "url", F.col("body").isNotNull().alias("has_body"),
-                "retry_after", "resp_url").localCheckpoint(eager=True)
+            slim, obs = _observed(
+                self.pages.select(
+                    "url", F.col("body").isNotNull().alias("has_body"),
+                    "retry_after", "resp_url"),
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.octet_length("url")).alias("url_bytes"))
+            self._pages_slim_df = slim.localCheckpoint(eager=True)
+            self._pages_count = int(obs.get["n"])
+            self._pages_url_bytes = int(obs.get["url_bytes"] or 0)
         return self._pages_slim_df
 
     def _pages_rows(self) -> int:
         return self._pages_stats()[0]
 
     def _pages_stats(self) -> tuple[int, int]:
-        """(row count, sum of url lengths) over the slim checkpoint — one
-        job, cached for the crawl; sizes the broadcast gate on BYTES."""
-        if self._pages_count is None:
-            row = self._pages_slim().agg(
-                F.count(F.lit(1)), F.sum(F.octet_length("url"))).first()
-            self._pages_count = int(row[0])
-            self._pages_url_bytes = int(row[1] or 0)
+        """(row count, sum of url lengths) of the fixture, cached for the
+        crawl; sizes the broadcast gate on BYTES."""
+        self._pages_slim()
         return self._pages_count, self._pages_url_bytes
 
     def _pages_broadcastable(self) -> bool:
@@ -1046,16 +1074,18 @@ class Crawler:
              .alias("attempts"))
 
     def _fetch(self, frontier: DataFrame, epoch: int) -> DataFrame:
-        fetched = self._do_fetch(frontier.select("url"),
-                                 approx_rows=self._n_frontier)
-        if (not self.live) and self._mock_broadcastable(self._n_frontier):
+        if self.live:
+            # the live fetch returns the frontier rows themselves
+            joined = self._do_fetch(frontier, label="fetched")
+        elif self._mock_broadcastable(self._n_frontier):
             # fetched covers exactly the frontier's url set (hit + miss
             # partition it), so the meta attach is an inner join and the
             # small frontier side can be the broadcast build
-            joined = fetched.join(F.broadcast(frontier), on="url",
-                                  how="inner")
+            joined = self._do_fetch(frontier.select("url")).join(
+                F.broadcast(frontier), on="url", how="inner")
         else:
-            joined = frontier.join(fetched, on="url", how="left")
+            joined = frontier.join(self._do_fetch(frontier.select("url")),
+                                   on="url", how="left")
         return joined.select(
             F.col("url").alias("req_url"),
             F.col("url").alias("page_url"), F.col("body"),
@@ -1263,6 +1293,10 @@ class Crawler:
             inserts, survivors = admit(all_cands, seen, self.seed_host,
                                        cfg.max_depth, cfg.includes,
                                        cfg.excludes, bloom=self.bloom)
+            # the inserted-key count (the epoch's seen delta) rides the
+            # checkpoint's job
+            inserts, self._ins_obs = _observed(
+                inserts, F.count(F.lit(1)).alias("n"))
             inserts = self._localckpt(inserts, "inserts")
             survivors = inserts.filter(F.col("survived"))
             if cfg.fetch_robots:
@@ -1341,14 +1375,16 @@ class Crawler:
         cannot know outcomes without fetching, so it optimistically keeps
         the first-considered candidate per path and defers the rest;
         ``_fetch_assets`` re-admits deferred candidates whose predecessors
-        all failed (the sequential chain, one wave per failure depth)."""
+        all failed (the sequential chain, one wave per failure depth).
+
+        Returns ``(allowed, deferred)``; ``deferred`` is None when no
+        candidate was deferred (always in mock mode)."""
         aw = self._with_asset_paths(assets)
-        if self.live or self._pages_rows() > 5_000_000:
-            # checkpoint: here aw feeds several consumers (live: dup agg +
-            # anti + semi; big-mock: the distinct url set + the status
-            # join) — the C8 path expressions + Python fallback union would
-            # otherwise recompute per consumer.  The small-mock fast path
-            # below consumes aw exactly once, so it skips the checkpoint.
+        if not self.live and self._pages_rows() > 5_000_000:
+            # checkpoint: big-mock aw feeds two consumers (the distinct url
+            # set + the status join) — the C8 path expressions + Python
+            # fallback union would otherwise recompute per consumer.  The
+            # small-mock fast path and the live window consume aw once.
             aw = self._localckpt(aw, "asset_paths")
         pos = self._pos()
         page_w = page_paths.select("file_path", self._page_pos().alias("pos"))
@@ -1420,56 +1456,57 @@ class Crawler:
             return (self._localckpt(self._observe_allowed(allowed),
                                     "assets_allowed"), None)
 
-        # live collision pre-filter: an asset can only be fileExists-blocked
-        # if its path (a) repeats within this epoch's admitted assets, (b)
-        # is also written by a page this epoch, or (c) was written in an
-        # earlier epoch.  Everything else is allowed outright — no chain
-        # logic; blockers are a tiny distinct-path set.
-        dup_paths = (aw.groupBy("file_path")
-                     .agg(F.count(F.lit(1)).alias("_n"))
-                     .filter(F.col("_n") > 1).select("file_path"))
-        blockers = (dup_paths
-                    .unionByName(page_w.select("file_path"))
-                    .unionByName(written))
-        clean = aw.join(blockers, "file_path", "left_anti")
-        cand = aw.join(blockers, "file_path", "left_semi")
+        # Live: ONE window over file_path on (assets whose path no earlier
+        # epoch wrote) ∪ (this epoch's ok page writes).  Per path, every
+        # asset considered after the first page write is dropped (that
+        # page wrote the file first); of the remaining assets the
+        # minimum-position one is allowed and the others are marked
+        # _defer for _fetch_assets' failure-chain waves.  If the path's
+        # first asset comes after its first page write, so do all the
+        # others — hence min over ALL the path's assets is the first
+        # remaining one.  Allowed and deferred are filters of the single
+        # assets_allowed checkpoint; its Observation counts both.
+        by_path = Window.partitionBy("file_path")
+        is_asset = F.col("_is_asset")
+        rows = (aw.join(written, "file_path", "left_anti")
+                .withColumn("_pos", pos).withColumn("_is_asset", F.lit(True))
+                .unionByName(page_w.select("file_path",
+                                           F.col("pos").alias("_pos"),
+                                           F.lit(False).alias("_is_asset")),
+                             allowMissingColumns=True))
+        first_page = F.min(F.when(~is_asset, F.col("_pos"))).over(by_path)
+        first_asset = F.min(F.when(is_asset, F.col("_pos"))).over(by_path)
+        ranked = (rows.withColumn("_first_page", first_page)
+                  .withColumn("_defer", F.col("_pos") != first_asset)
+                  .filter(is_asset & (F.col("_first_page").isNull()
+                                      | (F.col("_pos") < F.col("_first_page"))))
+                  .drop("_pos", "_is_asset", "_first_page"))
+        defer = F.col("_defer")
+        ranked = self._localckpt(self._observe_allowed(ranked, kept=~defer),
+                                 "assets_allowed")
+        deferred = None
+        if self._fs_obs.get["n_deferred"]:
+            deferred = ranked.filter(defer).drop("_defer")
+        return ranked.filter(~defer).drop("_defer"), deferred
 
-        # block on earlier epochs + earlier page writers, keep the first
-        # candidate per path, defer the rest for the failure-chain loop
-        pw_first = page_w.groupBy("file_path").agg(F.min("pos").alias("_pw"))
-        unblocked = (cand.join(written, "file_path", "left_anti")
-                     .join(pw_first, "file_path", "left")
-                     .filter(F.col("_pw").isNull() | (pos < F.col("_pw")))
-                     .drop("_pw"))
-        first_pos = unblocked.groupBy("file_path").agg(F.min(pos).alias("_first"))
-        j = unblocked.join(first_pos, "file_path", "left")
-        kept = j.filter(pos == F.col("_first")).drop("_first")
-        deferred = j.filter(pos != F.col("_first")).drop("_first")
-        deferred = self._localckpt(deferred, "assets_deferred")
-        if deferred.isEmpty():
-            deferred = None
-        allowed = clean.unionByName(kept)
-        return (self._localckpt(self._observe_allowed(allowed),
-                                "assets_allowed"), deferred)
-
-    def _observe_allowed(self, allowed: DataFrame) -> DataFrame:
+    def _observe_allowed(self, df: DataFrame, kept=None) -> DataFrame:
         """Attach free aggregate metrics to the assets_allowed checkpoint
-        (pyspark Observation rides the checkpoint's own job): total row
-        count (sizes the asset-fetch broadcast gate) and the fixpoint's
-        link-asset signature — previously two extra driver jobs per epoch.
+        (pyspark Observation rides the checkpoint's own job): the allowed
+        (``kept``) row count (sizes the asset-fetch broadcast gate), the
+        deferred row count (live: is there a failure chain to run?) and
+        the fixpoint's link-asset signature over the allowed rows.
         bit_xor, not sum: the signature only needs order-insensitivity,
         and summing xxhash64 values overflows under ANSI mode."""
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        link = F.col("stage_rank") == 1
-        out = allowed.observe(
-            obs,
-            F.count(F.lit(1)).alias("n_allowed"),
+        if kept is None:
+            kept = F.lit(True)
+        link = kept & (F.col("stage_rank") == 1)
+        out, self._fs_obs = _observed(
+            df,
+            F.count(F.when(kept, 1)).alias("n_allowed"),
+            F.count(F.when(~kept, 1)).alias("n_deferred"),
             F.count(F.when(link, 1)).alias("n_link"),
             F.bit_xor(F.when(link, F.xxhash64("parent_seq", "intra1",
                                               "url"))).alias("h_link"))
-        self._fs_obs = obs
         return out
 
     def _discover_css(self, link_surv: DataFrame) -> DataFrame | None:
@@ -1493,12 +1530,13 @@ class Crawler:
         if not self.live:
             approx = self._fs_obs.get["n_link"] if self._fs_obs is not None \
                 else link_urls.count()
-        link_fetch = self._do_fetch(link_urls, approx_rows=approx)
+        link_fetch = self._do_fetch(link_urls, approx_rows=approx,
+                                    label="css_fetch")
         if self.live:
-            # cache the real GETs so _fetch_assets reuses the bodies instead
-            # of re-fetching every stylesheet (the reference fetches a link
-            # asset once and runs the cssProcessor on that body)
-            link_fetch = self._localckpt(link_fetch, "css_fetch")
+            # cache the real GETs (checkpointed by the fetch) so
+            # _fetch_assets reuses the bodies instead of re-fetching every
+            # stylesheet (the reference fetches a link asset once and runs
+            # the cssProcessor on that body)
             cache = link_fetch if self._live_fetch_cache is None \
                 else self._live_fetch_cache.unionByName(link_fetch) \
                          .dropDuplicates(["url"])
@@ -1601,18 +1639,15 @@ class Crawler:
         rounds: list[DataFrame] = []
         cur = self._schedule(allowed)
         while True:
-            fetched = self._do_fetch_cached(cur.select("url").distinct())
-            joined = self._localckpt(
-                self._asset_log_select(
-                    cur.join(fetched.select("url", "body", "status",
-                                            "attempts"),
-                             on="url", how="left"), epoch),
-                "asset_round")
-            rounds.append(joined)
-            if deferred is None or deferred.isEmpty():
+            # the fetch returns (and checkpoints) the scheduled rows
+            # themselves: no join back, no second checkpoint
+            fetched = self._asset_log_select(
+                self._do_fetch_cached(cur, label="asset_round"), epoch)
+            rounds.append(fetched)
+            if deferred is None:
                 break
-            ok_paths = joined.filter(F.col("status") == "ok") \
-                             .select("file_path").distinct()
+            ok_paths = fetched.filter(F.col("status") == "ok") \
+                              .select("file_path").distinct()
             deferred = self._localckpt(
                 deferred.join(ok_paths, "file_path", "left_anti"),
                 "asset_deferred")
@@ -1671,6 +1706,15 @@ class Crawler:
                     F.lit(epoch).alias("epoch"), F.col("_pos").alias("pos")))
                 .drop("_pos")
                 .withColumn("epoch", F.lit(epoch)))
+
+
+def _observed(df: DataFrame, *aggs):
+    """``(df.observe(obs, *aggs), obs)``: the aggregates ride the job that
+    materializes ``df`` (read ``obs.get`` after that job ran)."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    return df.observe(obs, *aggs), obs
 
 
 def _union_all(dfs: list[DataFrame], empty: DataFrame) -> DataFrame:

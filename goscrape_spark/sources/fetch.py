@@ -14,7 +14,9 @@ way:
   (scraper/http.go:25-48; auth scraper/scraper.go:144-146).
 
 Output schema matches the mock path: (url, body, resp_url, status, attempts)
-with status ok/missing/exhausted ('missing' = request error or non-200/429).
+with status ok/missing/exhausted ('missing' = request error or non-200/429),
+followed by every other column of the input rows: a fetch returns the rows
+it was given, so the crawl needs no join to put outcomes back on them.
 
 This sandbox has no network egress; tests drive it against a localhost
 http.server (tests/test_http_fetch.py).
@@ -75,6 +77,11 @@ def http_fetch_df(frontier: DataFrame, config: CrawlConfig,
                   host_delays_ms: dict[str, int] | None = None) -> DataFrame:
     """Fetch every frontier URL over real HTTP, one batch per host.
 
+    Each input row comes back with the fetch columns added; the input's
+    other columns ride through the host batch unchanged.  A URL that
+    repeats in the input is requested once and its outcome shared by its
+    rows.
+
     Cookies ride a REAL per-batch http.cookiejar: the batch's jar starts
     from the configured cookies (+ ``session_cookies`` accumulated by the
     crawl loop from earlier epochs' Set-Cookie responses), absorbs
@@ -108,8 +115,13 @@ def http_fetch_df(frontier: DataFrame, config: CrawlConfig,
         base_cookies[(d["domain"], d.get("path", "/"), d["name"])] = d
     base_list = list(base_cookies.values())
 
-    src = frontier.select(F.col(url_col).alias("url")) \
-                  .withColumn("host", col_host(F.col("url")))
+    # the input's other columns (none may share a fetch column's name)
+    carried = [f for f in frontier.schema.fields if f.name != url_col]
+    carried_names = [f.name for f in carried]
+    schema = FETCHED_LIVE_SCHEMA + "".join(
+        f", `{f.name}` {f.dataType.simpleString()}" for f in carried)
+    src = frontier.select(F.col(url_col).alias("url"), *carried_names) \
+                  .withColumn("_fetch_host", col_host(F.col("url")))
 
     def fetch_host(key, pdf):
         import http.cookiejar
@@ -153,7 +165,7 @@ def http_fetch_df(frontier: DataFrame, config: CrawlConfig,
         # delay and this host's robots Crawl-delay (J5 + Crawl-delay ext.)
         batch_delay = max(politeness, host_delays.get(str(key[0]), 0.0))
         first = True
-        for url in sorted(pdf["url"]):
+        for url in sorted(set(pdf["url"])):
             if not first and batch_delay > 0:
                 _time.sleep(batch_delay)
             first = False
@@ -227,7 +239,11 @@ def http_fetch_df(frontier: DataFrame, config: CrawlConfig,
         if rows["set_cookies"]:
             rows["set_cookies"][0] = [_json.dumps(d, sort_keys=True)
                                       for d in deltas.values()]
-        return pd.DataFrame(rows)
+        # one row per input row: the outcome of its URL + its own columns
+        # (the jar snapshot stays on the first fetched URL's rows only)
+        out = pdf[["url", *carried_names]].merge(
+            pd.DataFrame(rows), on="url", how="left", sort=False)
+        return out[list(rows) + carried_names]
 
-    return src.groupBy("host").applyInPandas(fetch_host,
-                                             schema=FETCHED_LIVE_SCHEMA)
+    return src.groupBy("_fetch_host").applyInPandas(fetch_host,
+                                                    schema=schema)

@@ -59,8 +59,10 @@ class CrawlCheckpoint:
         # callers that already counted these frames pass the numbers in the
         # metrics dict; only recount what is missing (each count is an
         # extra Spark action per epoch otherwise)
-        m.setdefault("frontier_rows", frontier.count())
-        m.setdefault("seen_delta_rows", seen_delta.count())
+        if "frontier_rows" not in m:
+            m["frontier_rows"] = frontier.count()
+        if "seen_delta_rows" not in m:
+            m["seen_delta_rows"] = seen_delta.count()
         with open(os.path.join(tmp, "metrics.json"), "w") as f:
             json.dump({"epoch": epoch, **m}, f)
         if os.path.exists(edir):

@@ -69,6 +69,40 @@ def test_checkpoint_commit_and_resume_state(spark, tmp_path):
     assert frontier.count() == 0  # crawl finished; final frontier empty
     m = ckpt.metrics()
     assert len(m) == res.epochs and all("frontier_rows" in x for x in m)
+    # the row counts the crawl passes in (observed on its own checkpoints)
+    # match what was committed
+    for e, x in enumerate(m):
+        edir = f"{ckpt.path}/epoch={e}"
+        assert x["frontier_rows"] == \
+            spark.read.parquet(f"{edir}/frontier").count()
+        assert x["seen_delta_rows"] == \
+            spark.read.parquet(f"{edir}/seen_delta").count()
+
+
+def test_commit_epoch_counts_only_missing_metrics(spark, tmp_path,
+                                                  monkeypatch):
+    """commit_epoch recounts only the row counts its caller did not pass:
+    with both given it runs no count() job."""
+    from goscrape_spark.session import local_frame
+    from goscrape_spark.sources.storage import CrawlCheckpoint
+
+    frontier = local_frame(spark, [("https://x.org/a", 1, 1)],
+                           "url string, depth int, seq bigint")
+    delta = local_frame(spark, [("/a", 1), ("/b", 1)],
+                        "dedup_key string, epoch int")
+
+    def no_count(self):
+        raise AssertionError("commit_epoch ran a count() job")
+
+    ckpt = CrawlCheckpoint(path=str(tmp_path / "ckpt3"))
+    with monkeypatch.context() as mp:
+        mp.setattr(type(frontier), "count", no_count)
+        ckpt.commit_epoch(0, frontier=frontier, seen_delta=delta,
+                          metrics={"frontier_rows": 1, "seen_delta_rows": 2})
+    # without the numbers it counts them itself
+    ckpt.commit_epoch(1, frontier=frontier, seen_delta=delta)
+    assert [(x["frontier_rows"], x["seen_delta_rows"])
+            for x in ckpt.metrics()] == [(1, 2), (1, 2)]
 
 
 def test_killed_run_resumes_and_completes(spark, tmp_path):

@@ -73,3 +73,27 @@ def test_live_crawl_end_to_end(spark, server, tmp_path):
     # css file stored unrewritten (reference's dead cssProcessor rewrite)
     css = open(os.path.join(root, host, "site.css")).read()
     assert f"url({server}/bg.png)" in css
+
+
+# Spark jobs the end-to-end crawl above may run (three epochs, one CSS
+# discovery round).  It ran 41; the live path that re-joined fetch results
+# onto their input rows and counted with separate jobs ran 80-81.  Every
+# epoch stage is materialized once, and counts and driver-side harvests
+# ride Observations on those checkpoints, so a new count(), collect() or
+# re-checkpoint on the live path shows up here.
+LIVE_CRAWL_MAX_JOBS = 44
+
+
+def test_live_crawl_job_budget(spark, server):
+    sc = spark.sparkContext
+    group = "test-live-crawl-job-budget"
+    sc.setJobGroup(group, "live crawl job budget")
+    try:
+        crawl(spark, CrawlConfig(url=f"{server}/"), pages=None, live=True)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    print(f"live crawl ran {n_jobs} Spark jobs")
+    assert 0 < n_jobs <= LIVE_CRAWL_MAX_JOBS

@@ -2,7 +2,8 @@
 fingerprint and MinHash signatures must be value-identical to the
 column-expression reference implementations — including unicode-whitespace
 texts (tokenization stays JVM-side precisely because Java and Python
-``\\s`` differ), empty/short docs, and repeated shingles."""
+``\\s`` differ), empty/short docs, repeated shingles and null text (an
+array of NULLs for MinHash, NULL for the fingerprint)."""
 
 from pyspark.sql import functions as F
 
@@ -19,6 +20,7 @@ TEXTS = [
     (6, "unicode nbsp et em-space tokens mixed in"),
     (7, "tabs\tand\nnewlines   collapse to one split"),
     (8, "a b c d e f g h i j k l m n o p q r s t u v w x y z " * 8),
+    (9, None),                            # null text
 ]
 
 
