@@ -6,10 +6,12 @@ seen-set (SURVEY §3.4):
 
 * each **epoch** = one BFS level; the frontier is a DataFrame of pages with a
   global discovery sequence number;
-* fetching is a **mock-fetch join** against the ``pages`` fixture table (J2,
-  the reference's own test seam, scraper/scraper_test.go:35-42); a real
-  crawler would swap in an ``applyInPandas``-per-host HTTP fetcher with the
-  same output schema (S1/S2);
+* fetching has **one contract and two sources** (sources/fetch.py): rows
+  in, the same rows plus ``body, resp_url, status, attempts`` out, read
+  from a ``pages`` fixture table (J2, the reference's own test seam,
+  scraper/scraper_test.go:35-42) or fetched per host over HTTP (S1/S2).
+  The crawler picks the source once; every fetch, the fileExists check
+  and every checkpoint after it run the same way for both;
 * per-page candidates (assets + links) are exploded from the extracted span
   table, stage-ranked exactly like the sequential loop's consideration order
   — link -> script -> body -> style assets (each lexicographically sorted,
@@ -27,7 +29,7 @@ Scale design (north_rule): frontier/seen shuffles hash on ``dedup_key`` /
 ``host``; per-epoch state is checkpointed (localCheckpoint for tests,
 parquet snapshots + manifest via sources/storage.py for resumability); the
 optional Bloom pre-filter (operators/seen.py) keeps the 10^10-row seen table
-from being shuffled against small candidate sets; AQE handles residual skew.
+from being shuffled against small candidate sets.
 
 Driver-built frames (the seed ``seen`` row and frontier, the empty
 ``written`` table, the epoch-0 ``seed_row``, the empty result frames, the
@@ -43,12 +45,11 @@ An epoch stage is materialized once (``_localckpt``).  Counts and
 driver-side harvests ride a pyspark ``Observation`` on that checkpoint
 (``_observed``): the allowed/deferred asset counts and link signature on
 ``assets_allowed``, the inserted-key count on ``inserts``, the frontier
-count on ``next_pages``, the live Set-Cookie snapshots on the fetch
-checkpoint and the fixture size on the slim fixture table — never a
-separate ``count``/``isEmpty``/``first``/``collect`` job.  A live fetch
-returns its input rows with the fetch columns added (sources/fetch.py), so
-no join puts the outcomes back, and its one checkpoint carries the
-caller's label (``fetched``, ``asset_round``, ``css_fetch``).
+count on ``next_pages``, the Set-Cookie snapshots on the fetch checkpoint
+— never a separate ``count``/``isEmpty``/``first``/``collect`` job.  A
+fetch returns its input rows with the fetch columns added, so no join puts
+the outcomes back, and its one checkpoint carries the caller's label
+(``fetched``, ``asset_round``, ``css_fetch``, ``sitemap_fetch``).
 """
 
 from __future__ import annotations
@@ -84,8 +85,6 @@ CAND_SCHEMA = ("page_url string, parent_seq bigint, stage_rank int, "
                "is_asset boolean, depth int, stage string, "
                "dedup_key string")
 
-FETCH_SCHEMA = ("url string, body binary, resp_url string, retry_after int")
-
 
 @dataclass
 class CrawlResult:
@@ -115,9 +114,10 @@ class CrawlResult:
 
 
 class Crawler:
-    """Distributed crawler over a mock-web ``pages`` DataFrame (J2, the
-    reference's own test seam) or, with ``live=True``, the real per-host
-    HTTP fetch stage (sources/fetch.py) — same engine either way."""
+    """Distributed crawler.  One fetch contract, two sources
+    (sources/fetch.py): a mock-web ``pages`` DataFrame (J2, the reference's
+    own test seam) or, with ``live=True``, real per-host HTTP.  The source
+    is chosen here, once; the crawl loop never asks which it has."""
 
     def __init__(self, spark: SparkSession, config: CrawlConfig,
                  pages: DataFrame | None = None, use_bloom: bool = False,
@@ -128,21 +128,15 @@ class Crawler:
         self.live = live
         if pages is None and not live:
             raise ValueError("need a pages fixture or live=True")
-        self.pages = None
-        if pages is not None:
-            self.pages = pages.select(
-                F.col("url"), F.col("body"),
-                F.coalesce(F.col("resp_url"), F.col("url")).alias("resp_url"),
-                F.coalesce(F.col("retry_after"), F.lit(0)).alias("retry_after"))
+        self.pages = pages
+        if live:
+            self._source = self._http_source
+        else:
+            from ..sources.fetch import fixture_fetch_df
+            self._source = lambda rows: fixture_fetch_df(
+                rows, pages, config.max_retries)
         self.use_bloom = use_bloom
         self.bloom = None  # set in run()
-        # body-free fixture metadata (built lazily): per-epoch status joins
-        # broadcast this instead of shuffling/sorting the body-bearing
-        # fixture; see _pages_slim
-        self._pages_slim_df: DataFrame | None = None
-        self._pages_count: int | None = None
-        self._pages_url_bytes: int = 0
-        self._n_frontier = 0
         self.robots = None
         if config.robots_rules:
             from ..operators.politeness import robots_rules_df
@@ -178,6 +172,9 @@ class Crawler:
         # checkpoints
         self._fs_obs = None
         self._ins_obs = None
+        # this epoch's stylesheet fetches (_discover_css), reused by the
+        # asset fetch so a link asset is fetched once per epoch
+        self._css_fetch_cache: DataFrame | None = None
         # S4: session cookie jar state, keyed (domain, path, name); starts
         # from the configured cookies and absorbs live Set-Cookie snapshots
         # per fetch round (the reference's shared cookiejar.Jar,
@@ -296,7 +293,7 @@ class Crawler:
     def _sitemap_candidates(self) -> DataFrame | None:
         """Sitemap-seeded frontier bootstrap (sitemaps.org; no reference
         analog).  Sitemap files are fetched DISTRIBUTED through the normal
-        fetch seam (mock join or live per-host batches — politeness and
+        fetch seam (fixture or live per-host batches — politeness and
         cookies apply), ``<loc>`` extraction is a JVM-side column regex
         (functions/sitemap.py), and ``<sitemapindex>`` fan-out is followed
         for up to 3 rounds (urlset / index→urlset / index→index→urlset);
@@ -330,11 +327,10 @@ class Crawler:
             [f"{self.seed.scheme}://{self.seed_host}/sitemap.xml"]
         done = local_frame(spark, [(u,) for u in sorted(set(urls))],
                            "url string")
-        cur, n_cur = done, len(urls)
+        cur = done
         loc_frames: list[DataFrame] = []
         for _ in range(3):
-            fetched = self._do_fetch(cur, approx_rows=n_cur,
-                                     label="sitemap_fetch") \
+            fetched = self._do_fetch(cur, label="sitemap_fetch") \
                           .select("url", "body", "status")
             # cast, not decode: Spark 4's decode() THROWS on any invalid
             # UTF-8 byte (a .xml.gz sitemap or latin-1 bytes would abort
@@ -351,9 +347,9 @@ class Crawler:
             subs = (ok.filter(F.col("is_idx"))
                     .select(F.explode("locs").alias("url")).distinct()
                     .join(done, "url", "left_anti"))
+            subs, obs = _observed(subs, F.count(F.lit(1)).alias("n"))
             subs = self._localckpt(subs, "sitemap_index")
-            n_cur = subs.count()
-            if n_cur == 0:
+            if obs.get["n"] == 0:
                 break
             cur = subs
             done = done.unionByName(subs)
@@ -369,13 +365,14 @@ class Crawler:
                   # no host and cannot be resolved reliably — drop them
                   .filter(col_scheme_ok(F.col("scheme"))
                           & (F.col("host") != "")))
-        keyed = self._localckpt(
+        keyed, obs = _observed(
             parsed.withColumn(
                 "dedup_key", col_dedup_key(F.col("url"), F.col("host"),
                                            F.col("path"),
                                            F.lit(self.seed_host))),
-            "sitemap_locs")
-        n = keyed.count()
+            F.count(F.lit(1)).alias("n"))
+        keyed = self._localckpt(keyed, "sitemap_locs")
+        n = obs.get["n"]
         if n == 0:
             return None
         if n > 2**31 - 1:
@@ -408,9 +405,10 @@ class Crawler:
         cfg = self.config
         if cfg.fetch_robots or cfg.use_sitemaps:
             # --robots: fetch + honor; --sitemaps alone: fetch only to
-            # discover Sitemap: lines (rules are not installed).  Mock mode
-            # reads /robots.txt from the pages fixture (the reference's own
-            # test seam) so both fetch modes expose the same robots surface.
+            # discover Sitemap: lines (rules are not installed).  A fixture
+            # crawl reads /robots.txt from the pages fixture (the
+            # reference's own test seam) so both sources expose the same
+            # robots surface.
             self._fetch_seed_robots()
 
         resumed = None
@@ -440,7 +438,7 @@ class Crawler:
             last_metrics = self.checkpoint.metrics()[-1]
             next_seq = int(last_metrics["next_seq"])
             self.seed_host = last_metrics.get("seed_host", self.seed_host)
-            n_frontier = frontier.count()
+            n_frontier = int(last_metrics["frontier_rows"])
 
         self.bloom = SeenSet() if self.use_bloom else None
         if self.bloom is not None:
@@ -458,38 +456,28 @@ class Crawler:
         # their own shuffles (sitemap bootstrap) need the session default
         self._default_parts = default_parts
         # AQE is disabled for the LOOP's duration (restored after): the loop
-        # sizes every shuffle from per-epoch data volume itself, the
+        # sizes every shuffle from per-epoch data volume itself, and the
         # post-aggregation join keys are unique (first-wins/fileExists
-        # groups — nothing for AQE's skew split to do), and the mock joins
-        # are explicitly gated broadcasts — so AQE's per-query-stage job
-        # submissions only added driver latency (measured r6: 39.8 -> 18.3
-        # jobs/epoch, wall flat-to-better; OPTIMIZATION_r06.md).  At
-        # production scale per-epoch jobs amortize and AQE back on is fine:
-        # GOSCRAPE_LOOP_AQE=1 keeps it enabled.
-        aqe_prev = None
-        if os.environ.get("GOSCRAPE_LOOP_AQE", "0") == "0":
-            aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
+        # groups — nothing for AQE's skew split to do) — so AQE's
+        # per-query-stage job submissions only added driver latency
+        # (measured r6: 39.8 -> 18.3 jobs/epoch, wall flat-to-better;
+        # OPTIMIZATION_r06.md).
+        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
 
         try:
             # filesystem state for the fileExists asset skip
             # (scraper/download.go:76-79): one row per already-written path
             written = local_frame(spark, [], "file_path string")
-            # safe OVERestimate of written's row count (pages + allowed assets
-            # accumulated per epoch) — gates the broadcast fileExists anti-join
-            self._written_rows = 0
             if resumed is not None and self.checkpoint is not None:
                 w = self.checkpoint.resume_written(spark)
                 if w is not None:
                     written = w
-                    self._written_rows = written.count()
 
-            self._live_fetch_cache = None
             while epoch < self.max_epochs:
                 if n_frontier == 0:
                     break
-                self._live_fetch_cache = None  # css-fetch cache is per-epoch
-                self._n_frontier = n_frontier  # gates the broadcast mock plan
+                self._css_fetch_cache = None  # css-fetch cache is per-epoch
 
                 # Adaptive parallelism, sized by DATA not cores: shuffle stages
                 # in the loop move small metadata rows, so partition counts
@@ -504,26 +492,10 @@ class Crawler:
                 spark.conf.set("spark.sql.shuffle.partitions", str(parts))
                 frontier = frontier.repartition(parts, "url")
 
+                # the fetch checkpointed the frontier rows it returns
                 fetched = self._fetch(frontier, epoch)
-                meta_lazy = None
-                if self.live or epoch == 0:
-                    # live: the fetch already checkpointed the frontier rows
-                    # it returns (one GET per URL).  mock epoch 0: one row;
-                    # the depth-0 redirect rebase (first()) needs a
-                    # materialized frame.
-                    if not self.live:
-                        fetched = self._localckpt(fetched, "fetched")
-                    if epoch == 0:
-                        fetched = self._rebase_seed(fetched)
-                    fetched_meta = fetched
-                else:
-                    # mock: fetch outcomes are a pure fixture join — checkpoint
-                    # only body-FREE metadata (log/meta consumers) derived from
-                    # the slim fixture table (_fetch_meta) so the epoch never
-                    # re-reads body-bearing fixture blocks just to drop the
-                    # column; bodies flow lazily and are materialized once per
-                    # epoch (inside the processed checkpoint below)
-                    meta_lazy = self._fetch_meta(frontier)
+                if epoch == 0:
+                    fetched = self._rebase_seed(fetched)
 
                 pages_ok = fetched.filter(F.col("status") == "ok")
                 # FUSED per-page Arrow pass
@@ -541,20 +513,12 @@ class Crawler:
                     # parallelism (small epochs); at big epochs the fetch join
                     # already ran at the same width
                     page_bodies = page_bodies.repartition(cpu_parts, "url")
-                processed_lazy = process_pages_df(page_bodies, self.seed_host,
-                                                  self.config.output_directory)
-                if meta_lazy is not None:
-                    # the body-free meta checkpoint and the Arrow-heavy fused
-                    # pass share no lineage: overlap them (§2.6) so the tiny
-                    # meta job back-fills cores idled by the Arrow stage's tail
-                    processed, fetched_meta = self._parallel(
-                        lambda: self._localckpt(processed_lazy, "processed"),
-                        lambda: self._localckpt(meta_lazy, "fetched_meta"))
-                else:
-                    processed = self._localckpt(processed_lazy, "processed")
-                pages_ok_meta = fetched_meta.filter(F.col("status") == "ok")
+                processed = self._localckpt(
+                    process_pages_df(page_bodies, self.seed_host,
+                                     self.config.output_directory),
+                    "processed")
 
-                page_meta = pages_ok_meta.select(
+                page_meta = pages_ok.select(
                     F.col("page_url"), F.col("seq").alias("parent_seq"),
                     F.col("depth"))
                 full_spans = extract_spans_df(page_bodies, include_text=True)
@@ -615,7 +579,7 @@ class Crawler:
                                        * F.lit(page_delay_ms))
                 else:
                     page_not_before = F.lit(0).cast("long")
-                page_log = fetched_meta.select(
+                page_log = fetched.select(
                     F.col("req_url").alias("url"), F.lit("page").alias("kind"),
                     page_not_before.alias("not_before_ms"),
                     F.col("status"), F.col("attempts"),
@@ -635,11 +599,9 @@ class Crawler:
                                .withColumn("epoch", F.lit(epoch + 1))
 
                 def _assets_branch():
+                    # every round is checkpointed by its fetch
                     af = self._fetch_assets(assets_allowed, epoch,
                                             deferred=assets_deferred)
-                    if not self.live:
-                        # live rounds are already checkpointed by the fetch
-                        af = self._localckpt(af, "asset_fetch")
                     # slim written-delta checkpoint: the lazy union chain used
                     # to reference the BODY-bearing asset_fetch blocks, so
                     # every later epoch's fileExists anti-join re-deserialized
@@ -699,12 +661,6 @@ class Crawler:
                 # (built in _assets_branch) — duplicates are harmless for the
                 # anti-join, so no distinct shuffle.
                 written = written.unionByName(written_delta)
-                if self._fs_obs is not None:
-                    # overestimate: every frontier page + every allowed asset
-                    self._written_rows += n_frontier + \
-                        int(self._fs_obs.get["n_allowed"])
-                else:
-                    self._written_rows = self.WRITTEN_BROADCAST_MAX + 1
 
                 # seen append (insert-before-reject: ALL admitted keys).  The
                 # first-wins window already guarantees one row per key, so no
@@ -747,8 +703,7 @@ class Crawler:
         finally:
             # restored even when the loop raises: the session is shared
             spark.conf.set("spark.sql.shuffle.partitions", str(default_parts))
-            if aqe_prev is not None:
-                spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
 
         empty_log = local_frame(
             spark, [], "url string, kind string, not_before_ms bigint, "
@@ -878,222 +833,58 @@ class Crawler:
         return out
 
     def _do_fetch_cached(self, rows: DataFrame, label: str) -> DataFrame:
-        """Live fetch that serves this epoch's css-discovery GETs from the
-        in-epoch cache (one real GET per URL per epoch)."""
-        if self._live_fetch_cache is None:
+        """Fetch that serves this epoch's css-discovery fetches from the
+        in-epoch cache (one fetch per URL per epoch)."""
+        if self._css_fetch_cache is None:
             return self._do_fetch(rows, label=label)
-        cache = self._live_fetch_cache
+        cache = self._css_fetch_cache
         hit = rows.join(cache, on="url", how="inner")
         miss = rows.join(cache.select("url"), on="url", how="left_anti")
         fetched_miss = self._do_fetch(miss, label=label)
         return fetched_miss.unionByName(hit.select(*fetched_miss.columns))
 
-    def _do_fetch(self, urls: DataFrame, approx_rows: int | None = None,
-                  label: str = "fetched") -> DataFrame:
-        """The fetch seam: (url) -> (url, body, resp_url, status, attempts).
+    def _http_source(self, rows: DataFrame) -> DataFrame:
+        from ..sources.fetch import http_fetch_df
+        return http_fetch_df(
+            rows, self.config,
+            session_cookies=list(self._session_cookies.values()),
+            host_delays_ms=self._host_delay_ms)
 
-        Mock mode: J2 fixture join + S2 retry outcome as columns (the
-        reference retries 429s inline with linear backoff,
-        scraper/http.go:50-96, so retry outcomes never change crawl order —
-        we compute them directly: ok when retry_after <= max_retries, else
-        exhausted after max_retries+1 attempts).
-        Live mode: per-host applyInPandas HTTP batches (sources/fetch.py)
-        with the same schema and real inline backoff + politeness sleeps.
-        A live fetch returns its input rows (every column of ``urls``) with
-        the fetch columns added, materialized by ONE checkpoint under the
-        caller's ``label`` — it pins the real network side effects, so no
+    def _do_fetch(self, rows: DataFrame, label: str = "fetched") -> DataFrame:
+        """The fetch seam: ``rows`` in; the same rows plus (body, resp_url,
+        status, attempts) out, from the source chosen in ``__init__``
+        (sources/fetch.py).  S2 retries are the fetch's own: the reference
+        retries 429s inline with linear backoff (scraper/http.go:50-96),
+        so retry outcomes never change crawl order.
+
+        ONE checkpoint under the caller's ``label`` materializes the
+        result: it pins a live fetch's network side effects, so no
         consumer re-runs the GETs and callers need no join back."""
-        if self.live:
-            import json as _json
+        import json as _json
 
-            from ..sources.fetch import http_fetch_df
-            fetched, obs = _observed(
-                http_fetch_df(
-                    urls, self.config,
-                    session_cookies=list(self._session_cookies.values()),
-                    host_delays_ms=self._host_delay_ms),
-                F.collect_list(F.when(
-                    F.col("set_cookies").isNotNull(),
-                    F.struct("url", "set_cookies"))).alias("snaps"))
-            fetched = self._localckpt(fetched, label)
-            # absorb the batches' final jar snapshots so cookies set in this
-            # round (e.g. a login page's session id) are presented in later
-            # rounds/epochs, like the reference's shared jar.  The snapshots
-            # (one row per host batch) rode the checkpoint's job; applying
-            # them in url order keeps the merge deterministic.
-            for snap in sorted(obs.get["snaps"], key=lambda r: r.url):
-                for c in snap.set_cookies:
-                    d = _json.loads(c)
-                    self._session_cookies[
-                        (d["domain"], d["path"], d["name"])] = d
-            return fetched.drop("set_cookies")
-        maxr = self.config.max_retries
-        if self._mock_broadcastable(approx_rows):
-            # Broadcast plan: the frontier/asset url set is the SMALL side,
-            # but outer joins can only broadcast the build (non-preserved)
-            # side — so split into an inner join (bodies stream past a
-            # broadcast hash of the urls, no shuffle or sort of the
-            # body-bearing fixture) plus an anti-join for fixture misses
-            # against the body-free slim table.  Saves a full sort of the
-            # ~GB fixture per epoch; the legacy shuffle plan remains the
-            # fallback for oversized url sets.
-            hit = self.pages.join(F.broadcast(urls.select("url")),
-                                  on="url", how="inner")
-            hit_f = self._mock_fetch_select(hit, maxr)
-            miss = urls.select("url").join(
-                F.broadcast(self._pages_slim().select("url")),
-                on="url", how="left_anti")
-            miss_f = miss.select(
-                F.col("url"), F.lit(None).cast("binary").alias("body"),
-                F.col("url").alias("resp_url"),
-                F.lit("missing").alias("status"), F.lit(1).alias("attempts"))
-            return hit_f.unionByName(miss_f)
-        joined = urls.select("url").join(self.pages, on="url", how="left")
-        return self._mock_fetch_select(joined, maxr)
-
-    @staticmethod
-    def _mock_fetch_select(joined: DataFrame, maxr: int) -> DataFrame:
-        return joined.select(
-            F.col("url"),
-            F.when(F.col("retry_after") <= maxr, F.col("body")).alias("body"),
-            F.coalesce(F.col("resp_url"), F.col("url")).alias("resp_url"),
-            F.when(F.col("body").isNull(), F.lit("missing"))
-             .when(F.col("retry_after") > maxr, F.lit("exhausted"))
-             .otherwise(F.lit("ok")).alias("status"),
-            F.when(F.col("body").isNull(), F.lit(1))
-             .when(F.col("retry_after") > maxr, F.lit(maxr + 1))
-             .otherwise(F.coalesce(F.col("retry_after"), F.lit(0)) + 1)
-             .alias("attempts"))
-
-    # frontier rows above this fall back from the broadcast mock-fetch plan
-    # to the co-partitioned shuffle join (a broadcast hash of the epoch's
-    # url set must fit comfortably in every executor)
-    MOCK_BROADCAST_MAX = 2_000_000
-
-    # estimated in-memory cap for broadcasting the slim pages table: a
-    # broadcast is replicated to EVERY executor, so the gate must be sized
-    # on bytes, not rows — 5M rows of realistic (~60-120 B) URLs is a
-    # multi-hundred-MB build that can OOM small executors.  Estimate =
-    # raw url bytes + per-row hash-entry overhead.
-    PAGES_BROADCAST_MAX_BYTES = int(os.environ.get(
-        "GOSCRAPE_PAGES_BROADCAST_MAX_BYTES", 128 << 20))
-    _BROADCAST_ROW_OVERHEAD = 48
-
-    def _mock_broadcastable(self, approx_rows: int | None = None) -> bool:
-        # gate on the ACTUAL url-set size when the caller knows it (asset/
-        # css sets can be a fanout multiple of the page frontier); the
-        # frontier count is only the default for the page-fetch path
-        rows = self._n_frontier if approx_rows is None else approx_rows
-        return (not self.live
-                and rows <= self.MOCK_BROADCAST_MAX
-                and self._pages_broadcastable())
-
-    def _pages_slim(self) -> DataFrame:
-        """(url, has_body, retry_after): body-free fixture metadata,
-        checkpointed once per crawl — per-epoch status joins broadcast this
-        tiny table instead of re-reading body-bearing fixture blocks.  The
-        row count and url bytes (_pages_stats) ride the checkpoint's job."""
-        if self._pages_slim_df is None:
-            slim, obs = _observed(
-                self.pages.select(
-                    "url", F.col("body").isNotNull().alias("has_body"),
-                    "retry_after", "resp_url"),
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.octet_length("url")).alias("url_bytes"))
-            self._pages_slim_df = slim.localCheckpoint(eager=True)
-            self._pages_count = int(obs.get["n"])
-            self._pages_url_bytes = int(obs.get["url_bytes"] or 0)
-        return self._pages_slim_df
-
-    def _pages_rows(self) -> int:
-        return self._pages_stats()[0]
-
-    def _pages_stats(self) -> tuple[int, int]:
-        """(row count, sum of url lengths) of the fixture, cached for the
-        crawl; sizes the broadcast gate on BYTES."""
-        self._pages_slim()
-        return self._pages_count, self._pages_url_bytes
-
-    def _pages_broadcastable(self) -> bool:
-        rows, url_bytes = self._pages_stats()
-        est = url_bytes + rows * self._BROADCAST_ROW_OVERHEAD
-        return est <= self.PAGES_BROADCAST_MAX_BYTES
-
-    def _mock_status(self, urls: DataFrame) -> DataFrame:
-        """(url, status) for mock mode WITHOUT touching body blocks — the
-        fileExists collision check needs outcomes only."""
-        return self._attach_mock_status(urls).select("url", "status")
-
-    def _attach_mock_status(self, df: DataFrame) -> DataFrame:
-        """Append a ``status`` column to any url-keyed frame via the
-        body-free slim fixture table (broadcast when it fits — a left join
-        against the unique-url slim side never fans out)."""
-        maxr = self.config.max_retries
-        slim = self._pages_slim().select("url", "has_body", "retry_after")
-        if self._pages_broadcastable():
-            slim = F.broadcast(slim)
-        return (df.join(slim, on="url", how="left")
-                .withColumn(
-                    "status",
-                    F.when(~F.coalesce(F.col("has_body"), F.lit(False)),
-                           F.lit("missing"))
-                     .when(F.col("retry_after") > maxr, F.lit("exhausted"))
-                     .otherwise(F.lit("ok")))
-                .drop("has_body", "retry_after"))
-
-    def _fetch_meta(self, frontier: DataFrame) -> DataFrame:
-        """Body-FREE fetch metadata for the mock seam: the per-epoch
-        ``fetched_meta`` checkpoint only feeds the fetch log and the
-        candidate page_meta, yet it used to be derived from the full
-        body-bearing fetch join — materializing it re-read every fixture
-        body block each epoch just to drop the column (checkpoint blocks
-        don't support projection pushdown).  This joins the frontier
-        against the slim (url, has_body, retry_after, resp_url) table
-        instead: identical rows (same when-chains as _mock_fetch_select /
-        _fetch), ~KB-scale scan instead of the full fixture (guide §2.3:
-        project before you materialize).  Column order matches
-        ``_fetch(...).drop('body')`` exactly."""
-        maxr = self.config.max_retries
-        slim = self._pages_slim()
-        if self._pages_broadcastable():
-            slim = F.broadcast(slim)
-        joined = frontier.select("url", "depth", "seq").join(
-            slim, on="url", how="left")
-        has_body = F.coalesce(F.col("has_body"), F.lit(False))
-        return joined.select(
-            F.col("url").alias("req_url"),
-            F.col("url").alias("page_url"),
-            F.coalesce(F.col("resp_url"), F.col("url")).alias("resp_url"),
-            F.col("depth"), F.col("seq"),
-            F.when(~has_body, F.lit("missing"))
-             .when(F.col("retry_after") > maxr, F.lit("exhausted"))
-             .otherwise(F.lit("ok")).alias("status"),
-            F.when(~has_body, F.lit(1))
-             .when(F.col("retry_after") > maxr, F.lit(maxr + 1))
-             .otherwise(F.coalesce(F.col("retry_after"), F.lit(0)) + 1)
-             .alias("attempts"))
+        fetched, obs = _observed(
+            self._source(rows),
+            F.collect_list(F.when(
+                F.col("set_cookies").isNotNull(),
+                F.struct("url", "set_cookies"))).alias("snaps"))
+        fetched = self._localckpt(fetched, label)
+        # absorb the batches' final jar snapshots so cookies set in this
+        # round (e.g. a login page's session id) are presented in later
+        # rounds/epochs, like the reference's shared jar.  The snapshots
+        # (one row per host batch) rode the checkpoint's job; applying
+        # them in url order keeps the merge deterministic.
+        for snap in sorted(obs.get["snaps"], key=lambda r: r.url):
+            for c in snap.set_cookies:
+                d = _json.loads(c)
+                self._session_cookies[
+                    (d["domain"], d["path"], d["name"])] = d
+        return fetched.drop("set_cookies")
 
     def _fetch(self, frontier: DataFrame, epoch: int) -> DataFrame:
-        if self.live:
-            # the live fetch returns the frontier rows themselves
-            joined = self._do_fetch(frontier, label="fetched")
-        elif self._mock_broadcastable(self._n_frontier):
-            # fetched covers exactly the frontier's url set (hit + miss
-            # partition it), so the meta attach is an inner join and the
-            # small frontier side can be the broadcast build
-            joined = self._do_fetch(frontier.select("url")).join(
-                F.broadcast(frontier), on="url", how="inner")
-        else:
-            joined = frontier.join(self._do_fetch(frontier.select("url")),
-                                   on="url", how="left")
-        return joined.select(
-            F.col("url").alias("req_url"),
-            F.col("url").alias("page_url"), F.col("body"),
-            F.coalesce(F.col("resp_url"), F.col("url")).alias("resp_url"),
-            F.col("depth"), F.col("seq"),
-            F.coalesce(F.col("status"), F.lit("missing")).alias("status"),
-            F.coalesce(F.col("attempts"), F.lit(1)).alias("attempts"),
-        ).withColumn("body", F.when(F.col("status") == "ok", F.col("body")))
+        # the fetch returns the frontier rows themselves
+        return self._do_fetch(frontier, label="fetched").select(
+            F.col("url").alias("req_url"), F.col("url").alias("page_url"),
+            "body", "resp_url", "depth", "seq", "status", "attempts")
 
     def _rebase_seed(self, fetched: DataFrame) -> DataFrame:
         """Depth-0 redirect rebase (scraper/scraper.go:193-198): the seed's
@@ -1118,13 +909,6 @@ class Crawler:
     # frontier page, so the gate bounds executor memory like the mock gate
     CANDIDATES_BROADCAST_MAX = int(os.environ.get(
         "GOSCRAPE_CAND_BROADCAST_MAX", 2_000_000))
-
-    # written-path rows above this fall back from the broadcast fileExists
-    # anti-join (neither side shuffles) to the shuffle join; the loop
-    # tracks a safe overestimate (pages + allowed assets per epoch).  At
-    # production scale `written` is bucketed by file_path instead.
-    WRITTEN_BROADCAST_MAX = int(os.environ.get(
-        "GOSCRAPE_WRITTEN_BROADCAST_MAX", 1_000_000))
 
     def _candidates_fast(self, processed: DataFrame,
                          page_meta: DataFrame) -> DataFrame:
@@ -1369,94 +1153,19 @@ class Crawler:
         epoch.  Seen inserts are NOT affected — the reference adds the key
         in shouldURLBeDownloaded before the fileExists check.
 
-        Mock mode resolves (c) exactly in one pass because fetch outcomes
-        are a side-effect-free fixture join: an asset is fetched iff its
-        position <= the first ok writer's position for its path.  Live mode
-        cannot know outcomes without fetching, so it optimistically keeps
-        the first-considered candidate per path and defers the rest;
-        ``_fetch_assets`` re-admits deferred candidates whose predecessors
-        all failed (the sequential chain, one wave per failure depth).
+        A fetch's outcome is unknown before it runs, so the check
+        optimistically keeps the first-considered candidate per path and
+        defers the rest; ``_fetch_assets`` re-admits deferred candidates
+        whose predecessors all failed (the sequential chain, one wave per
+        failure depth).
 
         Returns ``(allowed, deferred)``; ``deferred`` is None when no
-        candidate was deferred (always in mock mode)."""
+        candidate was deferred."""
         aw = self._with_asset_paths(assets)
-        if not self.live and self._pages_rows() > 5_000_000:
-            # checkpoint: big-mock aw feeds two consumers (the distinct url
-            # set + the status join) — the C8 path expressions + Python
-            # fallback union would otherwise recompute per consumer.  The
-            # small-mock fast path and the live window consume aw once.
-            aw = self._localckpt(aw, "asset_paths")
         pos = self._pos()
         page_w = page_paths.select("file_path", self._page_pos().alias("pos"))
 
-        if not self.live:
-            # Mock mode resolves the whole check in TWO hash-partition
-            # passes (round 5; previously a dup-paths agg + blockers
-            # anti/semi + url distinct + first-ok agg — six shuffled stages
-            # per epoch):
-            #  (a) one anti-join blocks paths written by earlier epochs and
-            #      keeps the GROWING `written` table out of the in-epoch
-            #      window below (at production scale written is bucketed by
-            #      file_path so this join avoids reshuffling it);
-            #  (b) one window over file_path on (this epoch's assets ∪ this
-            #      epoch's ok page writes): an asset is fetched iff its
-            #      consideration position <= the first ok writer's position
-            #      for its path — the first ok writer itself must fetch to
-            #      write, and failed attempts before it also fetch.
-            #      Singleton paths (the overwhelming majority) pass through
-            #      with a null/self first_ok, preserving the old
-            #      collision-pre-filter fast path semantics without its
-            #      extra joins.  file_path groups are near-unique, so the
-            #      window has no skew.
-            # size-gated broadcast: while the written-path table is small
-            # its anti-join needs no exchange on either side (guide §3.1);
-            # past the gate the shuffle join stands (production: bucketed)
-            wr = written
-            if getattr(self, "_written_rows", None) is not None \
-                    and self._written_rows <= self.WRITTEN_BROADCAST_MAX:
-                wr = F.broadcast(written)
-            fresh = aw.join(wr, "file_path", "left_anti")
-            # Page writes only matter inside window groups that contain at
-            # least one asset row (the post-window filter keeps asset rows
-            # only), so page_w can be pre-filtered to paths colliding with
-            # an admitted asset.  Size-gated broadcast semi-join: the
-            # asset-path set is re-derived from the checkpointed inserts
-            # (cheap column exprs) and broadcast while the epoch is small
-            # enough; beyond the gate the full union shape stands.  This
-            # keeps the epoch's page-path volume (the larger side) out of
-            # the window exchange+sort entirely (guide §2.3).
-            if self._n_frontier <= 200_000:
-                page_w = page_w.join(F.broadcast(aw.select("file_path")),
-                                     "file_path", "left_semi")
-                # status via the body-free slim table (broadcast join — the
-                # collision logic never needs the payload bytes)
-                cs = self._attach_mock_status(fresh)
-            else:
-                st = (self._do_fetch(fresh.select("url").distinct())
-                      .select("url", "status"))
-                cs = (fresh.join(st, on="url", how="left")
-                      .withColumn("status", F.coalesce(F.col("status"),
-                                                       F.lit("missing"))))
-            rows = (cs.withColumn("_pos", pos)
-                    .withColumn("_is_asset", F.lit(True))
-                    .unionByName(
-                        page_w.select("file_path",
-                                      F.col("pos").alias("_pos"),
-                                      F.lit(False).alias("_is_asset"),
-                                      F.lit("ok").alias("status")),
-                        allowMissingColumns=True))
-            first_ok = F.min(
-                F.when(F.col("status") == "ok", F.col("_pos"))
-            ).over(Window.partitionBy("file_path"))
-            allowed = (rows.withColumn("_first_ok", first_ok)
-                       .filter(F.col("_is_asset")
-                               & (F.col("_first_ok").isNull()
-                                  | (F.col("_pos") <= F.col("_first_ok"))))
-                       .drop("_pos", "_is_asset", "_first_ok", "status"))
-            return (self._localckpt(self._observe_allowed(allowed),
-                                    "assets_allowed"), None)
-
-        # Live: ONE window over file_path on (assets whose path no earlier
+        # ONE window over file_path on (assets whose path no earlier
         # epoch wrote) ∪ (this epoch's ok page writes).  Per path, every
         # asset considered after the first page write is dropped (that
         # page wrote the file first); of the remaining assets the
@@ -1489,16 +1198,14 @@ class Crawler:
             deferred = ranked.filter(defer).drop("_defer")
         return ranked.filter(~defer).drop("_defer"), deferred
 
-    def _observe_allowed(self, df: DataFrame, kept=None) -> DataFrame:
+    def _observe_allowed(self, df: DataFrame, kept) -> DataFrame:
         """Attach free aggregate metrics to the assets_allowed checkpoint
         (pyspark Observation rides the checkpoint's own job): the allowed
-        (``kept``) row count (sizes the asset-fetch broadcast gate), the
-        deferred row count (live: is there a failure chain to run?) and
+        (``kept``) row count (sizes the politeness schedule), the
+        deferred row count (is there a failure chain to run?) and
         the fixpoint's link-asset signature over the allowed rows.
         bit_xor, not sum: the signature only needs order-insensitivity,
         and summing xxhash64 values overflows under ANSI mode."""
-        if kept is None:
-            kept = F.lit(True)
         link = kept & (F.col("stage_rank") == 1)
         out, self._fs_obs = _observed(
             df,
@@ -1521,26 +1228,16 @@ class Crawler:
         body+img image entries but before the next page's stages."""
         meta = link_surv.select("url", "page_url", "parent_seq",
                                 F.col("intra1").alias("link_intra"), "depth")
-        link_urls = meta.select("url").distinct()
-        # broadcast gate sizing: the observed link-row count (an upper
-        # bound on the distinct url set) rode the assets_allowed
-        # checkpoint's job — the count() here was one extra driver job
-        # per fixpoint round
-        approx = None
-        if not self.live:
-            approx = self._fs_obs.get["n_link"] if self._fs_obs is not None \
-                else link_urls.count()
-        link_fetch = self._do_fetch(link_urls, approx_rows=approx,
+        link_fetch = self._do_fetch(meta.select("url").distinct(),
                                     label="css_fetch")
-        if self.live:
-            # cache the real GETs (checkpointed by the fetch) so
-            # _fetch_assets reuses the bodies instead of re-fetching every
-            # stylesheet (the reference fetches a link asset once and runs
-            # the cssProcessor on that body)
-            cache = link_fetch if self._live_fetch_cache is None \
-                else self._live_fetch_cache.unionByName(link_fetch) \
-                         .dropDuplicates(["url"])
-            self._live_fetch_cache = cache
+        # cache the fetches (checkpointed by the fetch) so _fetch_assets
+        # reuses the bodies instead of re-fetching every stylesheet (the
+        # reference fetches a link asset once and runs the cssProcessor on
+        # that body)
+        self._css_fetch_cache = link_fetch \
+            if self._css_fetch_cache is None \
+            else self._css_fetch_cache.unionByName(link_fetch) \
+                     .dropDuplicates(["url"])
         fetched = meta.join(link_fetch.filter(F.col("status") == "ok")
                             .select("url", "body"),
                             on="url", how="inner")
@@ -1574,9 +1271,10 @@ class Crawler:
                                                    seed_host)))
                 yield pd.DataFrame(rows, columns=cols)
 
-        out = fetched.mapInPandas(run, schema=CAND_SCHEMA) \
-                     .localCheckpoint(eager=True)
-        return None if out.isEmpty() else out
+        out, obs = _observed(fetched.mapInPandas(run, schema=CAND_SCHEMA),
+                             F.count(F.lit(1)).alias("n"))
+        out = self._localckpt(out, "css_cands")
+        return out if obs.get["n"] else None
 
     # ------------------------------------------------------------------
     def _schedule(self, assets: DataFrame) -> DataFrame:
@@ -1604,9 +1302,7 @@ class Crawler:
     def _asset_log_select(self, joined: DataFrame, epoch: int) -> DataFrame:
         return joined.select(
             F.col("url"), F.lit("asset").alias("kind"),
-            F.col("not_before_ms"),
-            F.coalesce(F.col("status"), F.lit("missing")).alias("status"),
-            F.coalesce(F.col("attempts"), F.lit(1)).alias("attempts"),
+            F.col("not_before_ms"), F.col("status"), F.col("attempts"),
             F.col("parent_seq"), F.col("stage_rank"), F.col("sub_rank"),
             F.col("intra1"), F.col("intra2"), F.col("depth"),
             F.lit(epoch).alias("epoch"), F.col("stage"),
@@ -1614,28 +1310,9 @@ class Crawler:
 
     def _fetch_assets(self, allowed: DataFrame, epoch: int,
                       deferred: DataFrame | None = None) -> DataFrame:
-        """Fetch the fileExists-allowed assets.  Mock mode already knows
-        status/attempts (fixture join in _fs_admit) and only joins bodies.
-        Live mode performs the real fetch, then re-admits deferred same-path
-        candidates whose predecessors all failed, one wave per chain level —
-        the exact sequential fileExists semantics."""
-        if not self.live:
-            # the allowed row count (an upper bound on the distinct url
-            # set) sizes the broadcast gate; it was observed during the
-            # assets_allowed checkpoint — no count() job
-            n_allowed = self._fs_obs.get["n_allowed"] \
-                if self._fs_obs is not None else allowed.count()
-            # allowed urls are unique by construction: first-wins admission
-            # keeps one row per dedup_key and the key is a deterministic
-            # function of the url, so two rows can never share a url — the
-            # old .distinct() here was a pure extra shuffle (guide §2.4:
-            # "a distinct on data that is already unique")
-            fetched = self._do_fetch(allowed.select("url"),
-                                     approx_rows=n_allowed) \
-                          .select("url", "body", "status", "attempts")
-            joined = self._schedule(allowed).join(fetched, on="url", how="left")
-            return self._asset_log_select(joined, epoch)
-
+        """Fetch the fileExists-allowed assets, then re-admit deferred
+        same-path candidates whose predecessors all failed, one wave per
+        chain level — the exact sequential fileExists semantics."""
         rounds: list[DataFrame] = []
         cur = self._schedule(allowed)
         while True:
@@ -1648,10 +1325,11 @@ class Crawler:
                 break
             ok_paths = fetched.filter(F.col("status") == "ok") \
                               .select("file_path").distinct()
-            deferred = self._localckpt(
+            deferred, obs = _observed(
                 deferred.join(ok_paths, "file_path", "left_anti"),
-                "asset_deferred")
-            if deferred.isEmpty():
+                F.count(F.lit(1)).alias("n"))
+            deferred = self._localckpt(deferred, "asset_deferred")
+            if obs.get["n"] == 0:
                 break
             pos = self._pos()
             first = deferred.groupBy("file_path").agg(F.min(pos).alias("_first"))

@@ -1,8 +1,16 @@
-"""Real HTTP fetch stage (S1/S2): per-host Arrow batches over the frontier.
+"""The crawl's two fetch sources, behind one contract.
 
-The mock-fetch join (J2) is the test/bench seam; this module is the
-production fetcher with the same output schema, expressed the Spark-native
-way:
+Rows in; the same rows out with ``body, resp_url, status, attempts`` and a
+``set_cookies`` snapshot added.  ``status`` is ok/missing/exhausted
+('missing' = request error or non-200/429; 'exhausted' = a 429 on all
+``max_retries + 1`` attempts).  The input's other columns come back
+unchanged, so the crawl needs no join to put outcomes back on them.
+
+* :func:`fixture_fetch_df` reads a mock-web ``pages`` table (J2, the
+  reference's own test seam, scraper/scraper_test.go:35-42);
+* :func:`http_fetch_df` is the production fetcher over real HTTP.
+
+The HTTP fetcher is expressed the Spark-native way:
 
 * ``groupBy(host).applyInPandas`` — all URLs of one host land in ONE batch on
   one executor, so per-host politeness (J5) is enforced locally by sleeping
@@ -13,13 +21,8 @@ way:
 * session config (UA, basic auth, extra headers, timeout) from CrawlConfig
   (scraper/http.go:25-48; auth scraper/scraper.go:144-146).
 
-Output schema matches the mock path: (url, body, resp_url, status, attempts)
-with status ok/missing/exhausted ('missing' = request error or non-200/429),
-followed by every other column of the input rows: a fetch returns the rows
-it was given, so the crawl needs no join to put outcomes back on them.
-
-This sandbox has no network egress; tests drive it against a localhost
-http.server (tests/test_http_fetch.py).
+Tests drive the HTTP fetcher against a localhost http.server
+(tests/test_http_fetch.py).
 """
 
 from __future__ import annotations
@@ -33,11 +36,10 @@ from pyspark.sql import functions as F
 from ..config import CrawlConfig
 from ..functions.urlnorm import col_host
 
+# the live fetch fills set_cookies with each host batch's cookie-jar deltas
+# so the driver can accumulate Set-Cookie state across epochs (S4)
 FETCHED_SCHEMA = ("url string, body binary, resp_url string, status string, "
-                  "attempts int")
-# live fetch additionally surfaces the batch's final cookie-jar snapshot so
-# the driver can accumulate Set-Cookie state across epochs (S4)
-FETCHED_LIVE_SCHEMA = FETCHED_SCHEMA + ", set_cookies array<string>"
+                  "attempts int, set_cookies array<string>")
 
 
 def _jar_cookie(d: dict):
@@ -69,6 +71,39 @@ def config_cookie_dicts(config: CrawlConfig) -> list[dict]:
         out.append({"name": c.name, "value": c.value, "domain": host,
                     "path": "/", "expires": exp})
     return out
+
+
+def fixture_fetch_df(rows: DataFrame, pages: DataFrame,
+                     max_retries: int) -> DataFrame:
+    """Fetch every row's URL from the ``pages`` fixture
+    (url, body, resp_url, retry_after): one left join, whose plan Spark's
+    own size rule picks (a fixture below ``autoBroadcastJoinThreshold`` is
+    broadcast).  Same contract as :func:`http_fetch_df`; ``set_cookies``
+    is always null.
+
+    ``retry_after`` is the number of leading 429 responses.  The reference
+    retries them inline with linear backoff (scraper/http.go:50-96), so the
+    outcome is a column, not a wait: ok after ``retry_after + 1`` attempts
+    when ``retry_after <= max_retries``, else exhausted after
+    ``max_retries + 1``.  A URL the fixture lacks is missing after one."""
+    carried = [c for c in rows.columns if c != "url"]
+    fx = pages.select("url", F.col("body").alias("_fx_body"),
+                      F.col("resp_url").alias("_fx_resp_url"),
+                      F.coalesce("retry_after", F.lit(0)).alias("_fx_retry"))
+    missing = F.col("_fx_body").isNull()
+    exhausted = F.col("_fx_retry") > max_retries
+    return rows.join(fx, "url", "left").select(
+        "url",
+        F.when(~missing & ~exhausted, F.col("_fx_body")).alias("body"),
+        F.coalesce("_fx_resp_url", "url").alias("resp_url"),
+        F.when(missing, F.lit("missing"))
+         .when(exhausted, F.lit("exhausted"))
+         .otherwise(F.lit("ok")).alias("status"),
+        F.when(missing, F.lit(1))
+         .when(exhausted, F.lit(max_retries + 1))
+         .otherwise(F.col("_fx_retry") + 1).alias("attempts"),
+        F.lit(None).cast("array<string>").alias("set_cookies"),
+        *carried)
 
 
 def http_fetch_df(frontier: DataFrame, config: CrawlConfig,
@@ -118,7 +153,7 @@ def http_fetch_df(frontier: DataFrame, config: CrawlConfig,
     # the input's other columns (none may share a fetch column's name)
     carried = [f for f in frontier.schema.fields if f.name != url_col]
     carried_names = [f.name for f in carried]
-    schema = FETCHED_LIVE_SCHEMA + "".join(
+    schema = FETCHED_SCHEMA + "".join(
         f", `{f.name}` {f.dataType.simpleString()}" for f in carried)
     src = frontier.select(F.col(url_col).alias("url"), *carried_names) \
                   .withColumn("_fetch_host", col_host(F.col("url")))

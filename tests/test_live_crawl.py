@@ -11,6 +11,7 @@ import pytest
 from goscrape_spark.config import CrawlConfig
 from goscrape_spark.plans.crawl import crawl
 from goscrape_spark.sources.export import export_output_tree
+from goscrape_spark.sources.fixtures import pages_df
 
 PAGES = {
     "/": ('<html><head><link href="/site.css" rel="stylesheet"></head>'
@@ -76,24 +77,35 @@ def test_live_crawl_end_to_end(spark, server, tmp_path):
 
 
 # Spark jobs the end-to-end crawl above may run (three epochs, one CSS
-# discovery round).  It ran 41; the live path that re-joined fetch results
-# onto their input rows and counted with separate jobs ran 80-81.  Every
+# discovery round), read live or from a fixture of the same site.  Live
+# ran 40 and the fixture 43; the live path that re-joined fetch results
+# onto their input rows and counted with separate jobs ran 80-81, and the
+# fixture path with its own fetch plans and status tables ran 62.  Every
 # epoch stage is materialized once, and counts and driver-side harvests
 # ride Observations on those checkpoints, so a new count(), collect() or
-# re-checkpoint on the live path shows up here.
+# re-checkpoint shows up here.
 LIVE_CRAWL_MAX_JOBS = 44
+MOCK_ORIGIN = "http://mock.example"
 
 
-def test_live_crawl_job_budget(spark, server):
+@pytest.mark.parametrize("mode", ["live", "mock"])
+def test_live_crawl_job_budget(spark, server, mode):
+    if mode == "live":
+        base, pages = server, None
+    else:
+        base = MOCK_ORIGIN
+        pages = pages_df(spark, {base + path: body.replace("{BASE}", base)
+                                 for path, body in PAGES.items()})
     sc = spark.sparkContext
-    group = "test-live-crawl-job-budget"
-    sc.setJobGroup(group, "live crawl job budget")
+    group = f"test-crawl-job-budget-{mode}"
+    sc.setJobGroup(group, f"{mode} crawl job budget")
     try:
-        crawl(spark, CrawlConfig(url=f"{server}/"), pages=None, live=True)
+        crawl(spark, CrawlConfig(url=f"{base}/"), pages=pages,
+              live=pages is None)
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
-    print(f"live crawl ran {n_jobs} Spark jobs")
+    print(f"{mode} crawl ran {n_jobs} Spark jobs")
     assert 0 < n_jobs <= LIVE_CRAWL_MAX_JOBS

@@ -1,12 +1,13 @@
-"""Live fileExists admission (scraper/download.go:76-79) against the
-sequential oracle.
+"""fileExists admission (scraper/download.go:76-79) against the sequential
+oracle, for both fetch sources.
 
 Two localhost servers act as two hosts: the seed host serves the pages,
 the asset host serves images whose query strings make several URLs map
-to one output file.  The live crawl cannot know a fetch's outcome before
-it runs, so it fetches the first candidate per path and defers the rest
-to failure-chain waves; the seen set, the ordered fetch log and the
-output tree must still match ``crawl_sequential`` exactly."""
+to one output file.  The mock crawl reads the same site from a
+``pages_df`` fixture.  A crawl cannot know a fetch's outcome before it
+runs, so it fetches the first candidate per path and defers the rest to
+failure-chain waves; the seen set, the ordered fetch log and the output
+tree must still match ``crawl_sequential`` exactly."""
 
 import threading
 from http.server import BaseHTTPRequestHandler, HTTPServer
@@ -16,6 +17,7 @@ import pytest
 from goscrape_spark.config import CrawlConfig
 from goscrape_spark.plans.crawl import crawl
 from goscrape_spark.plans.simulator import crawl_sequential
+from goscrape_spark.sources.fixtures import pages_df
 
 
 class Handler(BaseHTTPRequestHandler):
@@ -53,7 +55,8 @@ def _serve(servers, pages: dict[str, str]) -> None:
                     if u.startswith(base + "/")}
 
 
-def test_live_file_exists_matches_oracle(spark, hosts):
+@pytest.mark.parametrize("mode", ["live", "mock"])
+def test_live_file_exists_matches_oracle(spark, hosts, mode):
     site, cdn = (f"http://127.0.0.1:{s.server_port}" for s in hosts)
     pages = {
         f"{site}/": (
@@ -81,7 +84,10 @@ def test_live_file_exists_matches_oracle(spark, hosts):
     _serve(hosts, pages)
     cfg = CrawlConfig(url=f"{site}/")
     sim = crawl_sequential(cfg, pages)
-    res = crawl(spark, cfg, pages=None, live=True)
+    if mode == "live":
+        res = crawl(spark, cfg, pages=None, live=True)
+    else:
+        res = crawl(spark, cfg, pages_df(spark, pages))
 
     assert res.seen_set() == sim.seen
     want = [(f.url, f.kind, f.status) for f in sim.fetches]

@@ -68,7 +68,6 @@ def test_crawl_seen_has_no_python_leaf(spark):
 
 
 def test_epoch_loop_restores_session_conf_when_it_raises(spark, monkeypatch):
-    monkeypatch.delenv("GOSCRAPE_LOOP_AQE", raising=False)
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     parts = spark.conf.get("spark.sql.shuffle.partitions")
     orig = Crawler._fetch

@@ -1,7 +1,5 @@
-"""Round-5 regression tests: broadcast gate sized on bytes, asset-output
-re-join hardening, and seen/written union-chain compaction."""
-
-from pyspark.sql import functions as F
+"""Round-5 regression tests: asset-output re-join hardening and
+seen/written union-chain compaction."""
 
 from goscrape_spark.config import CrawlConfig
 from goscrape_spark.plans.crawl import Crawler
@@ -10,46 +8,6 @@ from goscrape_spark.sources.fixtures import (
     SITE_LINKS_START,
     pages_df,
 )
-
-
-def _crawler(spark):
-    c = Crawler(spark, CrawlConfig(url=SITE_LINKS_START),
-                pages_df(spark, SITE_LINKS))
-    c._n_frontier = 10
-    return c
-
-
-def test_pages_broadcast_gate_is_byte_sized(spark):
-    """The slim-pages broadcast is replicated to every executor, so the
-    gate must consider estimated BYTES (urls can be 100+ B each), not just
-    the 5M row ceiling it had in round 4."""
-    c = _crawler(spark)
-    rows, url_bytes = c._pages_stats()
-    assert rows == c.pages.count()
-    assert url_bytes > 0
-    assert c._pages_broadcastable()          # tiny fixture: well under cap
-    # same table, zero byte budget -> not broadcastable, regardless of rows
-    c.PAGES_BROADCAST_MAX_BYTES = 0
-    assert not c._pages_broadcastable()
-    assert not c._mock_broadcastable()
-
-
-def test_mock_status_falls_back_without_broadcast(spark,
-                                                  no_auto_broadcast):
-    """With the byte gate closed, _mock_status must still produce the same
-    statuses through the shuffle join (no broadcast hint in the plan)."""
-    c = _crawler(spark)
-    urls = c.pages.select("url").unionByName(spark.createDataFrame(
-        [("https://example.org/missing-page",)], "url string"))
-    want = {r.url: r.status for r in c._mock_status(urls).collect()}
-
-    c2 = _crawler(spark)
-    c2.PAGES_BROADCAST_MAX_BYTES = 0
-    st = c2._mock_status(urls)
-    plan = st._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" not in plan
-    got = {r.url: r.status for r in st.collect()}
-    assert got == want
 
 
 def test_asset_outputs_no_fanout_on_duplicate_url(spark):
