@@ -196,12 +196,20 @@ def q_per_host_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_page_file_path(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """C7: page file naming as a column expression."""
-    from goscrape_spark.functions.urlmath import col_page_file_path
+    """C7: page file naming as a column expression (scraper/fileutil.go:
+    58-79): ''/'/' -> index.html; dir/ -> dir/index.html; no extension ->
+    +.html.  The extension test mirrors Go path.Ext: a dot in the final
+    segment."""
+    from goscrape_spark.functions.urlmath import PAGE_DIR_INDEX, PAGE_EXTENSION
 
     k = _keyed(_docs(spark, sf_dir))
-    return k.select("doc_id", "path",
-                    col_page_file_path(F.col("path")).alias("file_path"))
+    path = F.col("path")
+    file_path = (
+        F.when((path == "") | (path == "/"), F.lit(PAGE_DIR_INDEX))
+        .when(path.endswith("/"), F.concat(path, F.lit(PAGE_DIR_INDEX)))
+        .when(~path.rlike(r"\.[^/]*$"), F.concat(path, F.lit(PAGE_EXTENSION)))
+        .otherwise(path))
+    return k.select("doc_id", "path", file_path.alias("file_path"))
 
 
 def q_retry_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:

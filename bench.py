@@ -181,6 +181,7 @@ def _steady_run(spark, c, page_rows, shuffle_parts: int,
 
     from goscrape_spark.operators.admission import admit
     from goscrape_spark.operators.extract import process_pages_df
+    from goscrape_spark.plans.crawl import page_candidate_rows
 
     host = "bench.example.org"
     frontier = page_rows.select(
@@ -190,14 +191,11 @@ def _steady_run(spark, c, page_rows, shuffle_parts: int,
         .localCheckpoint(eager=True)
     fetched = c._fetch(frontier, 0)
     pages_ok = fetched.filter(F.col("status") == "ok")
-    bodies = pages_ok.select(F.col("page_url").alias("url"), "body", "seq")
-    page_meta = pages_ok.select("page_url", F.col("seq").alias("parent_seq"),
-                                "depth")
+    bodies = pages_ok.select(F.col("page_url").alias("url"), "body", "seq",
+                             "depth")
     seen = spark.createDataFrame([], "dedup_key string")
     processed = process_pages_df(bodies, host, "")
-    spans = (processed.select("url", F.explode("refs").alias("r"))
-             .select("url", "r.*"))
-    cands = c._base_candidates(spans, page_meta)
+    cands = page_candidate_rows(processed)
     inserts, _surv = admit(cands, seen, host, 0, [], [])
 
     n_inserts = inserts.count()        # untimed: codegen + JIT + plan
@@ -370,7 +368,7 @@ def _steady_worker(master: str, n_pages: int, shuffle_parts: int) -> None:
     from goscrape_spark.config import CrawlConfig
     from goscrape_spark.operators.admission import admit
     from goscrape_spark.operators.extract import process_pages_df
-    from goscrape_spark.plans.crawl import Crawler
+    from goscrape_spark.plans.crawl import Crawler, page_candidate_rows
     from goscrape_spark.session import get_spark
     from goscrape_spark.sources.synth import seed_url, synthetic_site
 
@@ -401,10 +399,7 @@ def _steady_worker(master: str, n_pages: int, shuffle_parts: int) -> None:
             # no repartition: the fetch join already distributed bodies by
             # url hash; a second full-body shuffle was pure IO
             bodies = pages_ok.select(F.col("page_url").alias("url"),
-                                     "body", "seq")
-            page_meta = pages_ok.select("page_url",
-                                        F.col("seq").alias("parent_seq"),
-                                        "depth")
+                                     "body", "seq", "depth")
             seen = spark.createDataFrame([], "dedup_key string")
             t0 = time.time()
             # the FUSED per-page pass (extract + sniff + rewrite + output
@@ -412,9 +407,7 @@ def _steady_worker(master: str, n_pages: int, shuffle_parts: int) -> None:
             # stage in the real loop; its checkpoint is the epoch state
             processed = process_pages_df(bodies, host, "") \
                 .localCheckpoint(eager=True)
-            spans = (processed.select("url", F.explode("refs").alias("r"))
-                     .select("url", "r.*"))
-            cands = c._base_candidates(spans, page_meta)
+            cands = page_candidate_rows(processed)
             inserts, _surv = admit(cands, seen, host, 0, [], [])
             n_inserts = inserts.count()
             dt = time.time() - t0

@@ -19,9 +19,6 @@ FNV-1a: output file names must be byte-identical to the reference's.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from .gopath import go_base, go_clean, go_dir, go_ext, go_join
 from .urlnorm import GoURL, parse_url, resolve_reference
 
@@ -188,82 +185,6 @@ def resolve_url(base: GoURL, reference: str, main_page_host: str,
     if out.startswith("/"):
         out = out[1:]
     return out
-
-
-def col_page_file_path(path: Column) -> Column:
-    """C7 as a pure column expression (scraper/fileutil.go:58-79):
-    ''/'/' -> index.html; dir/ -> dir/index.html; no extension -> +.html.
-    The extension test mirrors Go path.Ext: a dot in the final segment."""
-    return (
-        F.when((path == "") | (path == "/"), F.lit(PAGE_DIR_INDEX))
-        .when(path.endswith("/"), F.concat(path, F.lit(PAGE_DIR_INDEX)))
-        .when(~path.rlike(r"\.[^/]*$"), F.concat(path, F.lit(PAGE_EXTENSION)))
-        .otherwise(path)
-    )
-
-
-def attach_file_path(df, seed_host: str, outdir: str, is_page,
-                     url_col: str = "url", out_col: str = "file_path"):
-    """C8 as a two-tier column: a pure-expression fast path for "simple"
-    file names (clean absolute path, no dot segments, no %-escapes, base
-    <= 200 chars — i.e. go_clean and truncate_filename are identities) and
-    an Arrow fallback running the exact Python port for the rest.  Real
-    crawl URLs are overwhelmingly simple, so the hot path stays inside
-    whole-stage codegen.
-
-    ``is_page`` is a boolean Column (pages get the C7 naming first).
-    """
-    from pyspark.sql import functions as F
-
-    from .urlnorm import col_host, col_path, parse_url
-
-    u = F.col(url_col)
-    # each derived column references the PREVIOUS one via F.col so the
-    # optimizer never inlines an expensive expression (e.g. a magic-byte
-    # sniff passed as is_page) more than once
-    fname = F.when(F.col("_fp_page"),
-                   col_page_file_path(F.col("_fp_path"))) \
-             .otherwise(F.col("_fp_path"))
-    base = F.regexp_extract(F.col("_fp_name"), r"([^/]*)$", 1)
-    simple = ((F.col("_fp_name") != "") & (F.col("_fp_base") != "")
-              & ~F.col("_fp_name").contains("//")
-              & ~F.col("_fp_name").contains("%")
-              & ~F.col("_fp_name").rlike(r"(^|/)\.\.?(/|$)")
-              & (F.length(F.col("_fp_base")) <= MAX_FILENAME_LENGTH))
-    ext_host = F.when(F.col("_fp_host") != F.lit(seed_host),
-                      F.concat(F.lit("_"), F.col("_fp_host")))  # NULL same-host
-    parts = ([F.lit(outdir)] if outdir else []) + \
-        [F.lit(seed_host), ext_host,
-         F.regexp_replace(F.col("_fp_name"), "^/", "")]
-    fast = F.concat_ws("/", *parts)
-
-    marked = (df.withColumn("_fp_page", is_page)
-              .withColumn("_fp_host", col_host(u))
-              .withColumn("_fp_path", col_path(u))
-              .withColumn("_fp_name", fname)
-              .withColumn("_fp_base", base)
-              .withColumn("_fp_simple", simple))
-    aux = ["_fp_host", "_fp_path", "_fp_name", "_fp_base", "_fp_simple"]
-    fast_rows = (marked.filter(F.col("_fp_simple"))
-                 .withColumn(out_col, fast)
-                 .drop("_fp_page", *aux))
-
-    slow_src = marked.filter(~F.col("_fp_simple")).drop(*aux)
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in df.schema.fields) + f", {out_col} string"
-    names = [f.name for f in df.schema.fields]
-
-    def run(batches):
-        import pandas as pd
-        for pdf in batches:
-            out = pdf[names].copy()
-            out[out_col] = [
-                get_file_path(parse_url(u_), seed_host, outdir, bool(p))
-                for u_, p in zip(pdf[url_col], pdf["_fp_page"])]
-            yield out
-
-    slow_rows = slow_src.mapInPandas(run, schema=schema)
-    return fast_rows.unionByName(slow_rows)
 
 
 def split_srcset(value: str) -> list[str]:

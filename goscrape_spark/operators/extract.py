@@ -35,7 +35,7 @@ from typing import Iterator, NamedTuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.urlmath import split_srcset
+from ..functions.urlmath import get_file_path, split_srcset
 from ..functions.urlnorm import GoURL, parse_url, resolve_reference
 from .cssx import css_extract
 
@@ -278,8 +278,8 @@ def extract_media_refs(text: str, base_url: str) -> list[tuple]:
     host, path) tuples.
 
     Candidate generation needs just the tag-kind and the resolved reference —
-    per-tag lists get ``array_sort(collect_set(...))`` downstream, so span
-    offsets, text runs, and splice offsets are dead weight there.  The URL
+    per-tag lists are deduplicated and sorted by :func:`page_candidates`, so
+    span offsets, text runs, and splice offsets are dead weight there.  The URL
     components (scheme/host/path + fragment-stripped string) fall out of the
     resolver for free here, letting admission skip three JVM-side regex
     extractions per candidate row.
@@ -484,10 +484,23 @@ MINIMAL_SCHEMA = ("url string, kind string, media_ref string, "
                   "path string")
 
 PROCESSED_SCHEMA = (
-    "url string, seq bigint, file_path string, body binary, "
-    "is_page boolean, refs array<struct<kind:string, media_ref:string, "
-    "ref_no_frag:string, scheme:string, host:string, path:string, "
-    "dedup_key:string>>")
+    "url string, seq bigint, depth int, file_path string, body binary, "
+    "is_page boolean, cands array<struct<stage_rank:int, sub_rank:int, "
+    "intra1:int, intra2:int, url:string, scheme:string, host:string, "
+    "path:string, is_asset:boolean, stage:string, dedup_key:string, "
+    "file_path:string>>")
+
+# the per-page candidate stages in the sequential loop's consideration
+# order (scraper/download.go:19-65, scraper/scraper.go:219-233):
+# (tag, stage_rank, is_asset, stage).  Rank 5 carries ONLY the img refs,
+# although the sequential loop also re-enqueues the body-bg refs at the
+# head of the images queue (scraper/download.go:28-31): a body ref at
+# (P, rank 5) always loses first-wins to the SAME key at (P, rank 3), so
+# those rows are unobservable.  Rank 5's css-discovered refs come later,
+# at sub_rank 1 (plans/crawl._discover_css).
+CAND_STAGES = (("link", 1, True, "link"), ("script", 2, True, "script"),
+               ("body", 3, True, "body"), ("style", 4, True, "style"),
+               ("img", 5, True, "image"), ("a", 6, False, "a"))
 
 
 def ref_dedup_key(ref_no_frag: str, host: str, path: str,
@@ -504,60 +517,87 @@ def ref_dedup_key(ref_no_frag: str, host: str, path: str,
     return base
 
 
+def page_candidates(refs: list[tuple], seed_host: str,
+                    outdir: str) -> list[dict]:
+    """A page's admission candidates in consideration order, built from
+    its :func:`process_page` refs.
+
+    Per tag (CAND_STAGES), the distinct refs sorted by (media_ref,
+    ref_no_frag, scheme, host, path, dedup_key): htmlindex's distinct,
+    lexicographically sorted per-tag URL lists (htmlindex/htmlindex.go:
+    67-89, A2/O1).  media_ref leads, so refs sort by the full reference
+    WITH fragment like the index's sort.Strings; fragment duplicates stay
+    separate candidates for first-wins admission to collapse.  Python
+    orders str by code point, which is the UTF-8 byte order Spark uses to
+    sort strings.  ``intra1`` is the index in the tag's list.
+
+    Non-http(s) refs are dropped: the reference's scheme check precedes
+    the seen insert (scraper/checks.go:27-29), so they are observable
+    nowhere.  Each asset carries the output path its fileExists check
+    compares (scraper/fileutil.go:25-53, scraper/download.go:76-79); a
+    link's ``file_path`` is None."""
+    by_tag: dict[str, set] = {}
+    for kind, full, no_frag, scheme, host, path in refs:
+        if scheme in ("http", "https"):
+            by_tag.setdefault(TAG_BY_KIND[kind], set()).add(
+                (full, no_frag, scheme, host, path,
+                 ref_dedup_key(no_frag, host, path, seed_host)))
+    out = []
+    for tag, rank, is_asset, stage in CAND_STAGES:
+        for i, (_, url, scheme, host, path, key) in enumerate(
+                sorted(by_tag.get(tag, ()))):
+            out.append({
+                "stage_rank": rank, "sub_rank": 0, "intra1": i, "intra2": 0,
+                "url": url, "scheme": scheme, "host": host, "path": path,
+                "is_asset": is_asset, "stage": stage, "dedup_key": key,
+                "file_path": get_file_path(parse_url(url), seed_host,
+                                           outdir, False)
+                if is_asset else None})
+    return out
+
+
 def process_pages_df(pages: "DataFrame", seed_host: str,
                      outdir: str) -> "DataFrame":
     """FUSED per-page pass: media-ref extraction (C17/A1), binary sniff
-    (F11), offline rewrite (C4-C18), and output-path computation (C7/C8)
-    in ONE Arrow stage — each page body crosses the JVM->Python boundary
-    exactly once per epoch (separate extract/rewrite/path stages shipped
-    it three times; the boundary copy, not the parsing, dominates at
-    ~KB-sized pages).  Refs come back as an array<struct> column and are
-    exploded JVM-side for candidate generation — the same span-array
-    document shape as the input_hint table.
+    (F11), offline rewrite (C4-C18), output paths (C7/C8) and the page's
+    admission candidates in ONE Arrow stage — each page body crosses the
+    JVM->Python boundary exactly once per epoch (separate extract/rewrite/
+    path stages shipped it three times; the boundary copy, not the
+    parsing, dominates at ~KB-sized pages).
 
-    Refs arrive with their admission ``dedup_key`` precomputed (string ops
-    are ~free here; the JVM regex projection it replaces runs per candidate
-    at 10^10-row scale) and non-http(s) refs are dropped at the source: the
-    reference's scheme check precedes the seen insert
-    (scraper/checks.go:27-29), so such refs are observable nowhere —
-    not in the seen set, the fetch log, or the output tree.
+    ``cands`` is already in admission order (:func:`page_candidates`):
+    stage-ranked, per-tag distinct and sorted, each with its precomputed
+    ``dedup_key`` and, for assets, its output ``file_path``.  The crawl
+    turns it into candidate rows with one JVM-side ``explode``
+    (plans/crawl.page_candidate_rows); the work a UDF has already done is
+    not re-derived around its boundary.
 
-    Input: (url, body, seq).  Output: PROCESSED_SCHEMA, one row per page,
-    ``body`` already rewritten for pages / raw for binaries
+    Input: (url, body, seq, depth).  Output: PROCESSED_SCHEMA, one row per
+    page, ``body`` already rewritten for pages / raw for binaries
     (scraper/scraper.go:240-273 storeDownload semantics)."""
     from ..functions.filetype import sniff_extension
-    from ..functions.urlmath import get_file_path
 
     def run(batches) -> Iterator:
         import pandas as pd
 
         for pdf in batches:
-            urls, seqs, fps, outs, isp, refs_col = [], [], [], [], [], []
-            for url, body, seq in zip(pdf["url"], pdf["body"], pdf["seq"]):
+            fps, outs, isp, cands = [], [], [], []
+            for url, body in zip(pdf["url"], pdf["body"]):
                 raw = bytes(body) if body is not None else b""
                 is_page = sniff_extension(raw) == ""
-                text = _decode(raw)
-                raw_refs, new_text, changed = process_page(
-                    text, url, seed_host, do_rewrite=is_page)
-                refs = [
-                    {"kind": k, "media_ref": m, "ref_no_frag": nf,
-                     "scheme": s, "host": h, "path": p,
-                     "dedup_key": ref_dedup_key(nf, h, p, seed_host)}
-                    for k, m, nf, s, h, p in raw_refs
-                    if s in ("http", "https")]
-                out = new_text.encode("utf-8") if changed else raw
-                urls.append(url)
-                seqs.append(seq)
+                refs, new_text, changed = process_page(
+                    _decode(raw), url, seed_host, do_rewrite=is_page)
                 fps.append(get_file_path(parse_url(url), seed_host, outdir,
                                          is_page))
-                outs.append(out)
+                outs.append(new_text.encode("utf-8") if changed else raw)
                 isp.append(is_page)
-                refs_col.append(refs)
-            yield pd.DataFrame({"url": urls, "seq": seqs, "file_path": fps,
+                cands.append(page_candidates(refs, seed_host, outdir))
+            yield pd.DataFrame({"url": pdf["url"], "seq": pdf["seq"],
+                                "depth": pdf["depth"], "file_path": fps,
                                 "body": outs, "is_page": isp,
-                                "refs": refs_col})
+                                "cands": cands})
 
-    return pages.select("url", "body", "seq") \
+    return pages.select("url", "body", "seq", "depth") \
                 .mapInPandas(run, schema=PROCESSED_SCHEMA)
 
 

@@ -12,11 +12,13 @@ seen-set (SURVEY §3.4):
   scraper/scraper_test.go:35-42) or fetched per host over HTTP (S1/S2).
   The crawler picks the source once; every fetch, the fileExists check
   and every checkpoint after it run the same way for both;
-* per-page candidates (assets + links) are exploded from the extracted span
-  table, stage-ranked exactly like the sequential loop's consideration order
-  — link -> script -> body -> style assets (each lexicographically sorted,
-  A2/O1), then the images queue (body dups, img refs, CSS-discovered refs),
-  then a-links (scraper/download.go:19-65, scraper/scraper.go:219-233);
+* per-page candidates (assets + links) come out of the fused page pass
+  (operators/extract.process_pages_df) already stage-ranked in the
+  sequential loop's consideration order — link -> script -> body -> style
+  assets (each distinct and lexicographically sorted, A2/O1), then the
+  images queue (img refs, CSS-discovered refs), then a-links
+  (scraper/download.go:19-65, scraper/scraper.go:219-233) — with each
+  asset's output path; the crawl turns them into rows with one ``explode``;
 * admission is the first-wins window + seen anti-join (operators/admission);
 * CSS-discovered images (cssProcessor, scraper/download.go:104-131) create an
   in-epoch discovery dependency: link assets must be fetched before their
@@ -45,8 +47,9 @@ An epoch stage is materialized once (``_localckpt``).  Counts and
 driver-side harvests ride a pyspark ``Observation`` on that checkpoint
 (``_observed``): the allowed/deferred asset counts and link signature on
 ``assets_allowed``, the inserted-key count on ``inserts``, the frontier
-count on ``next_pages``, the Set-Cookie snapshots on the fetch checkpoint
-— never a separate ``count``/``isEmpty``/``first``/``collect`` job.  A
+count on ``next_pages``, the Set-Cookie snapshots on the fetch checkpoint,
+the seed's response URL (the depth-0 redirect rebase) on epoch 0's
+``fetched`` — never a separate ``count``/``isEmpty``/``first``/``collect`` job.  A
 fetch returns its input rows with the fetch columns added, so no join puts
 the outcomes back, and its one checkpoint carries the caller's label
 (``fetched``, ``asset_round``, ``css_fetch``, ``sitemap_fetch``).
@@ -64,6 +67,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..config import CrawlConfig
+from ..functions.urlmath import get_file_path
 from ..functions.urlnorm import GoURL, parse_url
 from ..operators.admission import ORDER_COLS, admit
 from ..operators.cssx import css_extract
@@ -75,15 +79,26 @@ from ..operators.extract import (
 from ..operators.seen import SeenSet
 from ..session import local_frame
 
-# stage ranks reproducing the sequential consideration order (SURVEY §3.4)
-STAGE_RANKS = {"page": 0, "link": 1, "script": 2, "body": 3, "style": 4,
-               "image": 5, "a": 6}
-
+# admission candidate rows; ``file_path`` is an asset's output path (the
+# fileExists key, scraper/download.go:76-79), NULL for links
 CAND_SCHEMA = ("page_url string, parent_seq bigint, stage_rank int, "
                "sub_rank int, intra1 int, intra2 int, url string, "
                "scheme string, host string, path string, "
                "is_asset boolean, depth int, stage string, "
-               "dedup_key string")
+               "dedup_key string, file_path string")
+
+
+def page_candidate_rows(processed: DataFrame) -> DataFrame:
+    """The fused pass's per-page ``cands`` arrays as CAND_SCHEMA rows: one
+    JVM-side ``explode``, no shuffle, no plan built per tag."""
+    return (processed
+            .select(F.col("url").alias("page_url"),
+                    F.col("seq").alias("parent_seq"), "depth",
+                    F.explode("cands").alias("c"))
+            .select("page_url", "parent_seq", "c.stage_rank", "c.sub_rank",
+                    "c.intra1", "c.intra2", "c.url", "c.scheme", "c.host",
+                    "c.path", "c.is_asset", "depth", "c.stage",
+                    "c.dedup_key", "c.file_path"))
 
 
 @dataclass
@@ -398,7 +413,8 @@ class Crawler:
             F.lit(0).alias("intra2"),
             "url", "scheme", "host", "path",
             F.lit(False).alias("is_asset"), F.lit(0).alias("depth"),
-            F.lit("sitemap").alias("stage"), "dedup_key")
+            F.lit("sitemap").alias("stage"), "dedup_key",
+            F.lit(None).cast("string").alias("file_path"))
 
     def run(self, resume: bool = False) -> CrawlResult:
         spark = self.spark
@@ -492,22 +508,22 @@ class Crawler:
                 spark.conf.set("spark.sql.shuffle.partitions", str(parts))
                 frontier = frontier.repartition(parts, "url")
 
-                # the fetch checkpointed the frontier rows it returns
+                # the fetch checkpointed the frontier rows it returns (and
+                # rebased the seed at epoch 0)
                 fetched = self._fetch(frontier, epoch)
-                if epoch == 0:
-                    fetched = self._rebase_seed(fetched)
 
                 pages_ok = fetched.filter(F.col("status") == "ok")
                 # FUSED per-page Arrow pass
                 # (operators/extract.process_pages_df): media-ref extraction +
-                # binary sniff + offline rewrite + output path in ONE stage, so
-                # each body crosses the JVM->Python boundary once per epoch;
-                # fanned out to all cores regardless of the (data-sized)
-                # shuffle partitioning.  The full interleaved span table (with
-                # text runs) stays lazy and is only computed if the caller
-                # materializes CrawlResult.documents.
+                # binary sniff + offline rewrite + output paths + the page's
+                # admission candidates in ONE stage, so each body crosses the
+                # JVM->Python boundary once per epoch; fanned out to all cores
+                # regardless of the (data-sized) shuffle partitioning.  The
+                # full interleaved span table (with text runs) stays lazy and
+                # is only computed if the caller materializes
+                # CrawlResult.documents.
                 page_bodies = pages_ok.select(
-                    F.col("page_url").alias("url"), "body", "seq")
+                    F.col("page_url").alias("url"), "body", "seq", "depth")
                 if cpu_parts != parts:
                     # only worth a body shuffle when it actually adds
                     # parallelism (small epochs); at big epochs the fetch join
@@ -518,13 +534,11 @@ class Crawler:
                                      self.config.output_directory),
                     "processed")
 
-                page_meta = pages_ok.select(
-                    F.col("page_url"), F.col("seq").alias("parent_seq"),
-                    F.col("depth"))
+                page_meta = pages_ok.select("page_url", "depth")
                 full_spans = extract_spans_df(page_bodies, include_text=True)
                 documents.append(full_spans.join(
-                    page_meta.select("page_url", "depth"),
-                    full_spans["url"] == page_meta["page_url"], "left")
+                    page_meta, full_spans["url"] == page_meta["page_url"],
+                    "left")
                     .drop("page_url")
                     .withColumn("epoch", F.lit(epoch)))
 
@@ -540,17 +554,7 @@ class Crawler:
                 page_paths_d = self._deferred(lambda: self._localckpt(
                     processed.select("file_path", "seq"), "page_paths"))
 
-                if n_frontier <= self.CANDIDATES_BROADCAST_MAX:
-                    # shuffle-free: per-tag arrays built on the page row, tiny
-                    # meta broadcast (see _candidates_fast)
-                    candidates = self._candidates_fast(processed, page_meta)
-                else:
-                    # beyond the broadcast gate: the explode + re-aggregate
-                    # shape (equivalent rows; shuffles on url)
-                    spans = (processed
-                             .select("url", F.explode("refs").alias("r"))
-                             .select("url", "r.*"))
-                    candidates = self._base_candidates(spans, page_meta)
+                candidates = page_candidate_rows(processed)
                 if epoch == 0 and cfg.use_sitemaps:
                     sm_cands = self._sitemap_candidates()
                     if sm_cands is not None:
@@ -851,6 +855,9 @@ class Crawler:
             host_delays_ms=self._host_delay_ms)
 
     def _do_fetch(self, rows: DataFrame, label: str = "fetched") -> DataFrame:
+        return self._fetch_observed(rows, label)[0]
+
+    def _fetch_observed(self, rows: DataFrame, label: str, *aggs):
         """The fetch seam: ``rows`` in; the same rows plus (body, resp_url,
         status, attempts) out, from the source chosen in ``__init__``
         (sources/fetch.py).  S2 retries are the fetch's own: the reference
@@ -859,14 +866,17 @@ class Crawler:
 
         ONE checkpoint under the caller's ``label`` materializes the
         result: it pins a live fetch's network side effects, so no
-        consumer re-runs the GETs and callers need no join back."""
+        consumer re-runs the GETs and callers need no join back.
+
+        Returns ``(fetched, obs)``: the caller's ``aggs`` over the fetched
+        rows ride the checkpoint's job into the Observation ``obs``."""
         import json as _json
 
         fetched, obs = _observed(
             self._source(rows),
             F.collect_list(F.when(
                 F.col("set_cookies").isNotNull(),
-                F.struct("url", "set_cookies"))).alias("snaps"))
+                F.struct("url", "set_cookies"))).alias("snaps"), *aggs)
         fetched = self._localckpt(fetched, label)
         # absorb the batches' final jar snapshots so cookies set in this
         # round (e.g. a login page's session id) are presented in later
@@ -878,178 +888,36 @@ class Crawler:
                 d = _json.loads(c)
                 self._session_cookies[
                     (d["domain"], d["path"], d["name"])] = d
-        return fetched.drop("set_cookies")
+        return fetched.drop("set_cookies"), obs
 
     def _fetch(self, frontier: DataFrame, epoch: int) -> DataFrame:
-        # the fetch returns the frontier rows themselves
-        return self._do_fetch(frontier, label="fetched").select(
+        # the fetch returns the frontier rows themselves; at epoch 0 the
+        # seed (the only row) rides the fetch's job for the rebase
+        seed = [F.first(F.struct("url", "resp_url", "status")).alias("seed")
+                ] if epoch == 0 else []
+        fetched, obs = self._fetch_observed(frontier, "fetched", *seed)
+        fetched = fetched.select(
             F.col("url").alias("req_url"), F.col("url").alias("page_url"),
             "body", "resp_url", "depth", "seq", "status", "attempts")
+        return self._rebase_seed(fetched, obs.get["seed"]) if epoch == 0 \
+            else fetched
 
-    def _rebase_seed(self, fetched: DataFrame) -> DataFrame:
+    def _rebase_seed(self, fetched: DataFrame, row) -> DataFrame:
         """Depth-0 redirect rebase (scraper/scraper.go:193-198): the seed's
-        response URL becomes the base URL and host for the whole crawl."""
-        row = fetched.select("page_url", "resp_url", "status").first()
+        response URL becomes the base URL and host for the whole crawl.
+        ``row`` is the seed's fetched (url, resp_url, status)."""
         if row is None or row.status != "ok":
             return fetched
-        if row.resp_url and row.resp_url != row.page_url:
+        if row.resp_url and row.resp_url != row.url:
             new_u = parse_url(row.resp_url)
             self.seed = GoURL(scheme=new_u.scheme, host=new_u.host,
                               path=new_u.path, query=new_u.query)
             self.seed_host = new_u.host
             return fetched.withColumn(
                 "page_url",
-                F.when(F.col("page_url") == row.page_url,
+                F.when(F.col("page_url") == row.url,
                        F.lit(row.resp_url)).otherwise(F.col("page_url")))
         return fetched
-
-    # frontier sizes above this fall back from the shuffle-free candidate
-    # fast path (per-page array ops + broadcast page-meta join) to the
-    # explode + re-aggregate shape: the broadcast side is one small row per
-    # frontier page, so the gate bounds executor memory like the mock gate
-    CANDIDATES_BROADCAST_MAX = int(os.environ.get(
-        "GOSCRAPE_CAND_BROADCAST_MAX", 2_000_000))
-
-    def _candidates_fast(self, processed: DataFrame,
-                         page_meta: DataFrame) -> DataFrame:
-        """_base_candidates without the explode + re-aggregate shuffle.
-
-        The fused pass already returns refs AS AN ARRAY PER PAGE;
-        _base_candidates explodes them into one row per ref and then
-        groupBy(url)s them straight back into per-tag arrays — at the
-        100k-page bench epoch that is a ~2M-row, every-ref-column shuffle
-        per epoch to recompute locality the data already had (guide §2.4:
-        remove shuffles outright).  This path builds the per-tag distinct
-        sorted arrays with array functions on the page row (no exchange)
-        and broadcast-joins the tiny (page_url, parent_seq, depth) meta.
-        Row-identical to _base_candidates (pinned by
-        tests/test_round6_candidates_fast.py): filter+array_distinct+
-        array_sort ≡ collect_set(when(...))+array_sort per tag, pages
-        with no refs contribute zero rows through either shape, and the
-        per-tag intra1 indices come from the same sorted arrays."""
-        from ..operators.extract import TAG_BY_KIND
-
-        tag_expr = F.create_map(*[F.lit(x) for kv in TAG_BY_KIND.items()
-                                  for x in kv])
-
-        def refs_for(tag: str):
-            return F.array_sort(F.array_distinct(F.transform(
-                F.filter(
-                    F.col("refs"),
-                    lambda r: (r["media_ref"] != "")
-                    & (tag_expr[r["kind"]] == F.lit(tag))),
-                lambda r: F.struct(
-                    r["media_ref"].alias("media_ref"),
-                    r["ref_no_frag"].alias("ref_no_frag"),
-                    r["scheme"].alias("scheme"),
-                    r["host"].alias("host"),
-                    r["path"].alias("path"),
-                    r["dedup_key"].alias("dedup_key")))))
-
-        per_page = processed.select(
-            "url",
-            refs_for("link").alias("link"), refs_for("script").alias("script"),
-            refs_for("body").alias("body"), refs_for("style").alias("style"),
-            refs_for("img").alias("img"), refs_for("a").alias("a"))
-        pm = F.broadcast(page_meta)
-        per_page = per_page.join(
-            pm, per_page["url"] == pm["page_url"], "inner").drop("url")
-        return self._stage_explode(per_page)
-
-    # ------------------------------------------------------------------
-    def _base_candidates(self, spans: DataFrame, page_meta: DataFrame) -> DataFrame:
-        """Ranks 1-4 (link/script/body/style assets), 5 (images: body dups +
-        img refs), 6 (a-links) from the span table.  Per-tag lists are
-        distinct + lexicographically sorted (A2, htmlindex.go:67-89).
-
-        Physical shape: ONE hash aggregate (conditional collect_set per tag),
-        one join to page metadata, one generate (explode of a concatenated
-        struct array) — no pivot, no 6-way union scan."""
-        from ..operators.extract import TAG_BY_KIND
-
-        tag_expr = F.create_map(*[F.lit(x) for kv in TAG_BY_KIND.items()
-                                  for x in kv])[F.col("kind")]
-        tagged = (spans.filter(F.col("media_ref") != "")
-                  .withColumn("tag", tag_expr)
-                  .filter(F.col("tag").isNotNull()))
-
-        # media_ref leads the struct so array_sort orders by the full
-        # reference string WITH fragment, exactly like the index's
-        # sort.Strings over resolved URLs (htmlindex.go:73-77)
-        ref_struct = F.struct("media_ref", "ref_no_frag", "scheme", "host",
-                              "path", "dedup_key")
-        empty = ("array<struct<media_ref:string,ref_no_frag:string,"
-                 "scheme:string,host:string,path:string,dedup_key:string>>")
-
-        def refs(tag: str):
-            return F.coalesce(
-                F.array_sort(F.collect_set(
-                    F.when(F.col("tag") == tag, ref_struct))),
-                F.array().cast(empty))
-
-        per_page = (tagged.groupBy("url")
-                    .agg(refs("link").alias("link"),
-                         refs("script").alias("script"),
-                         refs("body").alias("body"),
-                         refs("style").alias("style"),
-                         refs("img").alias("img"),
-                         refs("a").alias("a")))
-
-        pm = page_meta
-        per_page = per_page.join(
-            pm, per_page["url"] == pm["page_url"], "inner").drop("url")
-        return self._stage_explode(per_page)
-
-    @staticmethod
-    def _stage_explode(per_page: DataFrame) -> DataFrame:
-        """Shared tail of the two candidate builders: per-tag sorted arrays
-        -> one concatenated struct array -> JVM-side explode in stage-rank
-        order (CAND_SCHEMA columns)."""
-        def stage(col, rank: int, is_asset: bool, stage_name: str):
-            return F.transform(
-                col, lambda x, i: F.struct(
-                    F.lit(rank).alias("stage_rank"),
-                    F.lit(0).alias("sub_rank"),
-                    i.alias("intra1"),
-                    F.lit(0).alias("intra2"),
-                    x["ref_no_frag"].alias("url"),
-                    x["scheme"].alias("scheme"),
-                    x["host"].alias("host"),
-                    x["path"].alias("path"),
-                    F.lit(is_asset).alias("is_asset"),
-                    F.lit(stage_name).alias("stage"),
-                    x["dedup_key"].alias("dedup_key")))
-
-        # Rank 5 carries ONLY the img refs, although the sequential loop also
-        # re-enqueues the body-bg refs at the head of the images queue
-        # (scraper/download.go:28-31): a body ref at (P, rank5) always loses
-        # first-wins to the SAME key at (P, rank3) — the body stage of the
-        # same page — so those rows are provably unobservable; dropping them
-        # shrinks the admission shuffle.  5b/5c relative order is preserved
-        # via sub_rank (0 = queued images, 1 = css-discovered).
-        cands = F.concat(
-            stage(F.col("link"), 1, True, "link"),
-            stage(F.col("script"), 2, True, "script"),
-            stage(F.col("body"), 3, True, "body"),
-            stage(F.col("style"), 4, True, "style"),
-            stage(F.col("img"), 5, True, "image"),
-            stage(F.col("a"), 6, False, "a"))
-
-        return (per_page
-                .select("page_url", "parent_seq", "depth",
-                        F.explode(cands).alias("c"))
-                .select("page_url", "parent_seq",
-                        F.col("c.stage_rank").alias("stage_rank"),
-                        F.col("c.sub_rank").alias("sub_rank"),
-                        F.col("c.intra1").alias("intra1"),
-                        F.col("c.intra2").alias("intra2"),
-                        F.col("c.url").alias("url"),
-                        F.col("c.scheme").alias("scheme"),
-                        F.col("c.host").alias("host"),
-                        F.col("c.path").alias("path"),
-                        F.col("c.is_asset").alias("is_asset"), F.col("depth"),
-                        F.col("c.stage").alias("stage"),
-                        F.col("c.dedup_key").alias("dedup_key")))
 
     # ------------------------------------------------------------------
     def _admission_fixpoint(self, candidates: DataFrame, seen: DataFrame,
@@ -1120,14 +988,6 @@ class Crawler:
         return inserts, survivors, allowed, deferred
 
     # ------------------------------------------------------------------
-    def _with_asset_paths(self, assets: DataFrame) -> DataFrame:
-        """Output file path per admitted asset (C8) — needed BEFORE the
-        fetch, because the fileExists check gates the fetch itself.
-        Column-expression fast path, Python fallback for odd paths."""
-        from ..functions.urlmath import attach_file_path
-        return attach_file_path(assets, self.seed_host,
-                                self.config.output_directory, F.lit(False))
-
     @staticmethod
     def _pos():
         """Consideration-order position of an asset row (comparable struct)."""
@@ -1159,9 +1019,10 @@ class Crawler:
         whose predecessors all failed (the sequential chain, one wave per
         failure depth).
 
-        Returns ``(allowed, deferred)``; ``deferred`` is None when no
-        candidate was deferred."""
-        aw = self._with_asset_paths(assets)
+        Every asset row carries its output ``file_path`` from the pass
+        that emitted it (operators/extract.page_candidates,
+        ``_discover_css``).  Returns ``(allowed, deferred)``; ``deferred``
+        is None when no candidate was deferred."""
         pos = self._pos()
         page_w = page_paths.select("file_path", self._page_pos().alias("pos"))
 
@@ -1177,7 +1038,7 @@ class Crawler:
         # assets_allowed checkpoint; its Observation counts both.
         by_path = Window.partitionBy("file_path")
         is_asset = F.col("_is_asset")
-        rows = (aw.join(written, "file_path", "left_anti")
+        rows = (assets.join(written, "file_path", "left_anti")
                 .withColumn("_pos", pos).withColumn("_is_asset", F.lit(True))
                 .unionByName(page_w.select("file_path",
                                            F.col("pos").alias("_pos"),
@@ -1243,12 +1104,11 @@ class Crawler:
                             on="url", how="inner")
 
         seed_host = self.seed_host
+        outdir = self.config.output_directory
 
         def run(batches) -> Iterator:
             import pandas as pd
-            cols = ["page_url", "parent_seq", "stage_rank", "sub_rank",
-                    "intra1", "intra2", "url", "scheme", "host", "path",
-                    "is_asset", "depth", "stage", "dedup_key"]
+            cols = [c.split()[0] for c in CAND_SCHEMA.split(", ")]
             for pdf in batches:
                 rows = []
                 for url, page_url, pseq, lintra, depth, body in zip(
@@ -1268,7 +1128,9 @@ class Crawler:
                                      no_frag, ru.scheme, ru.host, ru.path,
                                      True, int(depth), "css-image",
                                      ref_dedup_key(no_frag, ru.host, ru.path,
-                                                   seed_host)))
+                                                   seed_host),
+                                     get_file_path(parse_url(no_frag),
+                                                   seed_host, outdir, False)))
                 yield pd.DataFrame(rows, columns=cols)
 
         out, obs = _observed(fetched.mapInPandas(run, schema=CAND_SCHEMA),

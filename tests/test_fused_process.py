@@ -1,5 +1,6 @@
 """Fused per-page pass (process_pages_df) must agree with the separate
-extract / rewrite / sniff / path operators it replaces."""
+extract / rewrite / sniff / path operators it replaces, and emit each
+page's admission candidates from the refs those operators extract."""
 
 from pyspark.sql import functions as F
 
@@ -7,6 +8,7 @@ from goscrape_spark.functions.filetype import sniff_extension
 from goscrape_spark.functions.urlmath import get_file_path
 from goscrape_spark.functions.urlnorm import parse_url
 from goscrape_spark.operators.extract import (
+    TAG_BY_KIND,
     extract_media_refs,
     process_pages_df,
     ref_dedup_key,
@@ -19,34 +21,55 @@ PAGES = [
     (f"https://{HOST}/", b'<html><a href="/p1">x</a>'
      b'<img src="/i.png" srcset="/s1.png 480w, /s2.png 800w">'
      b'<link href="/css/a.css" rel="stylesheet">'
-     b'<style>h1 { background: url(/bg.png); }</style></html>', 0),
+     b'<style>h1 { background: url(/bg.png); }</style></html>', 0, 0),
     (f"https://{HOST}/p1", b'<html><body background="b.gif">'
-     b'<a href="https://other.net/ext">e</a></body></html>', 1),
-    (f"https://{HOST}/logo.png", b"\x89PNG\r\n\x1a\nrawbytes", 2),
-    (f"https://{HOST}/empty", b"", 3),
+     b'<a href="https://other.net/ext">e</a><a href="/z#2">z</a>'
+     b'<a href="/z#1">z</a><a href="mailto:a@b.c">m</a></body></html>',
+     1, 1),
+    (f"https://{HOST}/logo.png", b"\x89PNG\r\n\x1a\nrawbytes", 2, 1),
+    (f"https://{HOST}/empty", b"", 3, 2),
 ]
+
+# (tag, stage_rank, is_asset, stage) in consideration order
+STAGES = [("link", 1, True, "link"), ("script", 2, True, "script"),
+          ("body", 3, True, "body"), ("style", 4, True, "style"),
+          ("img", 5, True, "image"), ("a", 6, False, "a")]
+
+
+def want_cands(text, url):
+    """Per tag, the distinct http(s) refs sorted with their fragment, then
+    stage-ranked and numbered within the tag."""
+    refs = [r for r in extract_media_refs(text, url)
+            if r[3] in ("http", "https")]
+    out = []
+    for tag, rank, is_asset, stage in STAGES:
+        tagged = sorted({r[1:] for r in refs if TAG_BY_KIND[r[0]] == tag})
+        for i, (_, nf, s, h, p) in enumerate(tagged):
+            out.append({
+                "stage_rank": rank, "sub_rank": 0, "intra1": i, "intra2": 0,
+                "url": nf, "scheme": s, "host": h, "path": p,
+                "is_asset": is_asset, "stage": stage,
+                "dedup_key": ref_dedup_key(nf, h, p, HOST),
+                "file_path": get_file_path(parse_url(nf), HOST, "out", False)
+                if is_asset else None})
+    return out
 
 
 def test_fused_matches_components(spark):
-    df = spark.createDataFrame(PAGES, "url string, body binary, seq bigint")
+    df = spark.createDataFrame(
+        PAGES, "url string, body binary, seq bigint, depth int")
     got = {r.url: r for r in
            process_pages_df(df, HOST, "out").collect()}
-    assert set(got) == {u for u, _, _ in PAGES}
-    for url, body, seq in PAGES:
+    assert set(got) == {u for u, _, _, _ in PAGES}
+    for url, body, seq, depth in PAGES:
         r = got[url]
         text = body.decode("utf-8", errors="replace")
         is_page = sniff_extension(body) == ""
-        assert r.seq == seq
+        assert (r.seq, r.depth) == (seq, depth)
         assert r.is_page == is_page
         assert r.file_path == get_file_path(parse_url(url), HOST, "out",
                                             is_page)
-        want_refs = [
-            {"kind": k, "media_ref": m, "ref_no_frag": nf,
-             "scheme": s, "host": h, "path": p,
-             "dedup_key": ref_dedup_key(nf, h, p, HOST)}
-            for k, m, nf, s, h, p in extract_media_refs(text, url)
-            if s in ("http", "https")]
-        assert [row.asDict() for row in r.refs] == want_refs
+        assert [row.asDict() for row in r.cands] == want_cands(text, url)
         if is_page:
             new_text, changed = rewrite_document(text, url, HOST)
             want = new_text.encode("utf-8") if changed else body
@@ -57,3 +80,4 @@ def test_fused_matches_components(spark):
     png = got[f"https://{HOST}/logo.png"]
     assert not png.is_page and bytes(png.body).startswith(b"\x89PNG")
     assert png.file_path.endswith("/logo.png")
+

@@ -109,3 +109,34 @@ def test_live_crawl_job_budget(spark, server, mode):
     n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     print(f"{mode} crawl ran {n_jobs} Spark jobs")
     assert 0 < n_jobs <= LIVE_CRAWL_MAX_JOBS
+
+
+# py4j round trips (driver -> JVM commands) the mock crawl of the job-budget
+# test may make.  The crawl runs the same jobs either way, so the job budget
+# cannot see plan-building cost; this can.  The crawl that rebuilt each
+# epoch's candidates around the page pass, with PySpark's per-call
+# DataFrame debugging on, made 32,606-32,999 (two runs); candidates
+# emitted by the page pass with debugging off make 9,044-9,639 (three).
+MOCK_CRAWL_MAX_PY4J = 12_000
+
+
+def test_mock_crawl_py4j_budget(spark, monkeypatch):
+    import itertools
+
+    from py4j.clientserver import ClientServerConnection
+
+    pages = pages_df(spark, {MOCK_ORIGIN + path: body.replace(
+        "{BASE}", MOCK_ORIGIN) for path, body in PAGES.items()})
+    calls = itertools.count()  # next() is atomic: branch threads send too
+    send = ClientServerConnection.send_command
+
+    def counted(self, command, *a, **kw):
+        next(calls)
+        return send(self, command, *a, **kw)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    crawl(spark, CrawlConfig(url=f"{MOCK_ORIGIN}/"), pages=pages)
+    monkeypatch.undo()
+    n = next(calls)
+    print(f"mock crawl made {n} py4j round trips")
+    assert 0 < n <= MOCK_CRAWL_MAX_PY4J
