@@ -53,6 +53,35 @@ the seed's response URL (the depth-0 redirect rebase) on epoch 0's
 fetch returns its input rows with the fetch columns added, so no join puts
 the outcomes back, and its one checkpoint carries the caller's label
 (``fetched``, ``asset_round``, ``css_fetch``, ``sitemap_fetch``).
+
+Overlap.  ``Crawler.run`` starts helper threads (``_deferred``, a pyspark
+``InheritableThread``, so their jobs keep the caller's job group) for work
+whose result is needed later, and joins each one:
+
+* the **warm-up**, started on run()'s first line: one job of ``n``
+  one-row partitions through a ``mapInPandas`` that imports the page pass's
+  module, with ``n`` the first epoch's page-pass width
+  (``page_pass_width``).  The Python workers start while the driver runs the
+  prologue and the first fetch.  Nothing takes its result; run()'s final
+  join waits for it;
+* **page_paths**, the slim ``(file_path, seq)`` checkpoint of the epoch's
+  page pass, taken by the fileExists admission and the written delta;
+* the three **post-admission branches** (asset fetch + written delta, the
+  next frontier's sequence, the Bloom build), taken before the epoch ends;
+* the **commit** of epoch N (``CrawlCheckpoint.commit_epoch``), which runs
+  while epoch N+1 runs.  Its arguments are bound when it is scheduled, and
+  commit N is joined before commit N+1 starts, so commits run one at a time
+  in epoch order.  A commit writes its epoch directory under a temporary
+  name and then replaces MANIFEST.json, so the manifest only ever names a
+  fully written epoch: a driver killed while commit N is in flight resumes
+  from epoch N-1 or N, and both are committed states the crawl can go on
+  from.
+
+run() joins every helper whose result was not taken in its ``finally``,
+before it restores the session's AQE and shuffle partitions, so no job of
+the crawl runs under the restored conf.  A helper's failure surfaces from
+run(); when the loop raised too, the loop's error is raised with the
+helper's as its cause.
 """
 
 from __future__ import annotations
@@ -60,6 +89,7 @@ from __future__ import annotations
 import os
 import time
 from dataclasses import dataclass, field
+from functools import partial
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -99,6 +129,26 @@ def page_candidate_rows(processed: DataFrame) -> DataFrame:
                     "c.intra1", "c.intra2", "c.url", "c.scheme", "c.host",
                     "c.path", "c.is_asset", "depth", "c.stage",
                     "c.dedup_key", "c.file_path"))
+
+
+def page_pass_width(n_frontier: int, default_parts: int) -> int:
+    """Tasks an epoch's page pass fans out to: one per 50 frontier pages,
+    at least 2, at most the session's shuffle partitions."""
+    return max(2, min(default_parts, n_frontier // 50 + 1))
+
+
+def _warm_python_workers(spark: SparkSession, n: int) -> None:
+    """Start ``n`` Python workers with the page pass's modules imported: one
+    job of ``n`` one-row partitions through a ``mapInPandas``.  Spark reuses
+    idle workers, so the first page pass (and a live crawl's first fetch)
+    finds them running instead of starting them cold."""
+    def run(batches) -> Iterator:
+        import goscrape_spark.operators.extract  # noqa: F401
+        for _ in batches:
+            pass
+        return iter(())
+
+    spark.range(n, numPartitions=n).mapInPandas(run, "id long").collect()
 
 
 @dataclass
@@ -183,6 +233,9 @@ class Crawler:
         # materialized through _localckpt, so this doubles as a stage-level
         # attribution table (bench.py emits it into BENCH_FULL)
         self.stage_secs: dict[str, float] = {}
+        # helper threads started by _deferred whose results nobody has taken
+        # yet; run() joins them before it returns or raises
+        self._helpers: list = []
         # metrics observed during the latest assets_allowed and inserts
         # checkpoints
         self._fs_obs = None
@@ -418,6 +471,35 @@ class Crawler:
 
     def run(self, resume: bool = False) -> CrawlResult:
         spark = self.spark
+        # the first epoch's page pass finds its Python workers running: they
+        # start while the driver runs the prologue and the first fetch
+        committed = (self.checkpoint.metrics()
+                     if resume and self.checkpoint is not None else [])
+        n_frontier = int(committed[-1]["frontier_rows"]) if committed else 1
+        default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+        self._deferred(lambda: _warm_python_workers(
+            spark, page_pass_width(n_frontier, default_parts)))
+        loop_err = None
+        try:
+            return self._crawl(resume, default_parts)
+        except BaseException as e:
+            loop_err = e
+            raise
+        finally:
+            # every helper's jobs end before the shared session's conf is
+            # restored, also when the loop raised; a helper's failure
+            # surfaces here, chained to the loop's own when there is one
+            helper_err = self._join_helpers()
+            spark.conf.set("spark.sql.shuffle.partitions", str(default_parts))
+            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+            if helper_err is not None:
+                if loop_err is None:
+                    raise helper_err
+                raise loop_err from helper_err
+
+    def _crawl(self, resume: bool, default_parts: int) -> CrawlResult:
+        spark = self.spark
         cfg = self.config
         if cfg.fetch_robots or cfg.use_sitemaps:
             # --robots: fetch + honor; --sitemaps alone: fetch only to
@@ -467,247 +549,249 @@ class Crawler:
         fetch_logs: list[DataFrame] = []
         documents: list[DataFrame] = []
         outputs: list[DataFrame] = []
-        default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         # the loop re-sets shuffle.partitions per epoch; stages that size
         # their own shuffles (sitemap bootstrap) need the session default
         self._default_parts = default_parts
-        # AQE is disabled for the LOOP's duration (restored after): the loop
-        # sizes every shuffle from per-epoch data volume itself, and the
+        # AQE is disabled for the LOOP's duration: the loop sizes every
+        # shuffle from per-epoch data volume itself, and the
         # post-aggregation join keys are unique (first-wins/fileExists
         # groups — nothing for AQE's skew split to do) — so AQE's
         # per-query-stage job submissions only added driver latency
         # (measured r6: 39.8 -> 18.3 jobs/epoch, wall flat-to-better;
-        # OPTIMIZATION_r06.md).
-        aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+        # OPTIMIZATION_r06.md).  run() restores AQE and the shuffle
+        # partitions after the loop, also when it raises.
         spark.conf.set("spark.sql.adaptive.enabled", "false")
+        commit = None  # the in-flight commit_epoch helper
+        # filesystem state for the fileExists asset skip
+        # (scraper/download.go:76-79): one row per already-written path
+        written = local_frame(spark, [], "file_path string")
+        if resumed is not None and self.checkpoint is not None:
+            w = self.checkpoint.resume_written(spark)
+            if w is not None:
+                written = w
 
-        try:
-            # filesystem state for the fileExists asset skip
-            # (scraper/download.go:76-79): one row per already-written path
-            written = local_frame(spark, [], "file_path string")
-            if resumed is not None and self.checkpoint is not None:
-                w = self.checkpoint.resume_written(spark)
-                if w is not None:
-                    written = w
+        while epoch < self.max_epochs:
+            if n_frontier == 0:
+                break
+            self._css_fetch_cache = None  # css-fetch cache is per-epoch
 
-            while epoch < self.max_epochs:
-                if n_frontier == 0:
-                    break
-                self._css_fetch_cache = None  # css-fetch cache is per-epoch
+            # Adaptive parallelism, sized by DATA not cores: shuffle stages
+            # in the loop move small metadata rows, so partition counts
+            # follow row volume (per-task overhead otherwise dominates — a
+            # 32-partition shuffle of 1k rows is pure scheduling cost).
+            # The Python-heavy stages (extract/rewrite mapInPandas) are
+            # fanned out separately to all cores below.  The frontier is
+            # explicitly repartitioned because W2's global sequence window
+            # necessarily emitted a single partition.
+            parts = max(2, min(default_parts, n_frontier // 2000 + 1))
+            cpu_parts = page_pass_width(n_frontier, default_parts)
+            spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+            frontier = frontier.repartition(parts, "url")
 
-                # Adaptive parallelism, sized by DATA not cores: shuffle stages
-                # in the loop move small metadata rows, so partition counts
-                # follow row volume (per-task overhead otherwise dominates — a
-                # 32-partition shuffle of 1k rows is pure scheduling cost).
-                # The Python-heavy stages (extract/rewrite mapInPandas) are
-                # fanned out separately to all cores below.  The frontier is
-                # explicitly repartitioned because W2's global sequence window
-                # necessarily emitted a single partition.
-                parts = max(2, min(default_parts, n_frontier // 2000 + 1))
-                cpu_parts = max(2, min(default_parts, n_frontier // 50 + 1))
-                spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-                frontier = frontier.repartition(parts, "url")
+            # the fetch checkpointed the frontier rows it returns (and
+            # rebased the seed at epoch 0)
+            fetched = self._fetch(frontier, epoch)
 
-                # the fetch checkpointed the frontier rows it returns (and
-                # rebased the seed at epoch 0)
-                fetched = self._fetch(frontier, epoch)
+            pages_ok = fetched.filter(F.col("status") == "ok")
+            # FUSED per-page Arrow pass
+            # (operators/extract.process_pages_df): media-ref extraction +
+            # binary sniff + offline rewrite + output paths + the page's
+            # admission candidates in ONE stage, so each body crosses the
+            # JVM->Python boundary once per epoch; fanned out to all cores
+            # regardless of the (data-sized) shuffle partitioning.  The
+            # full interleaved span table (with text runs) stays lazy and
+            # is only computed if the caller materializes
+            # CrawlResult.documents.
+            page_bodies = pages_ok.select(
+                F.col("page_url").alias("url"), "body", "seq", "depth")
+            if cpu_parts != parts:
+                # only worth a body shuffle when it actually adds
+                # parallelism (small epochs); at big epochs the fetch join
+                # already ran at the same width
+                page_bodies = page_bodies.repartition(cpu_parts, "url")
+            processed = self._localckpt(
+                process_pages_df(page_bodies, self.seed_host,
+                                 self.config.output_directory),
+                "processed")
 
-                pages_ok = fetched.filter(F.col("status") == "ok")
-                # FUSED per-page Arrow pass
-                # (operators/extract.process_pages_df): media-ref extraction +
-                # binary sniff + offline rewrite + output paths + the page's
-                # admission candidates in ONE stage, so each body crosses the
-                # JVM->Python boundary once per epoch; fanned out to all cores
-                # regardless of the (data-sized) shuffle partitioning.  The
-                # full interleaved span table (with text runs) stays lazy and
-                # is only computed if the caller materializes
-                # CrawlResult.documents.
-                page_bodies = pages_ok.select(
-                    F.col("page_url").alias("url"), "body", "seq", "depth")
-                if cpu_parts != parts:
-                    # only worth a body shuffle when it actually adds
-                    # parallelism (small epochs); at big epochs the fetch join
-                    # already ran at the same width
-                    page_bodies = page_bodies.repartition(cpu_parts, "url")
-                processed = self._localckpt(
-                    process_pages_df(page_bodies, self.seed_host,
-                                     self.config.output_directory),
-                    "processed")
+            page_meta = pages_ok.select("page_url", "depth")
+            full_spans = extract_spans_df(page_bodies, include_text=True)
+            documents.append(full_spans.join(
+                page_meta, full_spans["url"] == page_meta["page_url"],
+                "left")
+                .drop("page_url")
+                .withColumn("epoch", F.lit(epoch)))
 
-                page_meta = pages_ok.select("page_url", "depth")
-                full_spans = extract_spans_df(page_bodies, include_text=True)
-                documents.append(full_spans.join(
-                    page_meta, full_spans["url"] == page_meta["page_url"],
-                    "left")
-                    .drop("page_url")
-                    .withColumn("epoch", F.lit(epoch)))
+            # file paths the ok pages of this epoch write (the "filesystem
+            # state" the fileExists check consults, download.go:76-79) fall
+            # out of the fused pass for free.  Slim checkpoint: the several
+            # consumers (blockers union, first-ok agg, written delta) would
+            # otherwise each re-scan the body-bearing processed blocks to
+            # project two tiny columns.
+            # deferred: the first consumer (the fileExists admission) is
+            # several actions downstream, so this tiny checkpoint overlaps
+            # the admission chain instead of serializing before it
+            page_paths_d = self._deferred(lambda: self._localckpt(
+                processed.select("file_path", "seq"), "page_paths"))
 
-                # file paths the ok pages of this epoch write (the "filesystem
-                # state" the fileExists check consults, download.go:76-79) fall
-                # out of the fused pass for free.  Slim checkpoint: the several
-                # consumers (blockers union, first-ok agg, written delta) would
-                # otherwise each re-scan the body-bearing processed blocks to
-                # project two tiny columns.
-                # deferred: the first consumer (the fileExists admission) is
-                # several actions downstream, so this tiny checkpoint overlaps
-                # the admission chain instead of serializing before it
-                page_paths_d = self._deferred(lambda: self._localckpt(
-                    processed.select("file_path", "seq"), "page_paths"))
+            candidates = page_candidate_rows(processed)
+            if epoch == 0 and cfg.use_sitemaps:
+                sm_cands = self._sitemap_candidates()
+                if sm_cands is not None:
+                    candidates = candidates.unionByName(sm_cands)
 
-                candidates = page_candidate_rows(processed)
-                if epoch == 0 and cfg.use_sitemaps:
-                    sm_cands = self._sitemap_candidates()
-                    if sm_cands is not None:
-                        candidates = candidates.unionByName(sm_cands)
+            inserts, survivors, assets_allowed, assets_deferred = \
+                self._admission_fixpoint(candidates, seen, page_paths_d,
+                                         written)
 
-                inserts, survivors, assets_allowed, assets_deferred = \
-                    self._admission_fixpoint(candidates, seen, page_paths_d,
-                                             written)
+            # record fetches: the page fetches of this epoch + admitted
+            # assets.  Pages are all seed-host (F5), so the robots
+            # Crawl-delay merge collapses to one scalar max here
+            page_delay_ms = max(cfg.politeness_delay_ms,
+                                self._host_delay_ms.get(self.seed_host, 0))
+            if page_delay_ms > 0:
+                # epoch seqs are dense [epoch_base, epoch_base + n): W2's
+                # global_sequence assigned start=next_seq-n_frontier..-1,
+                # so the politeness offset is pure column arithmetic — no
+                # window, no shuffle.  (Was row_number() OVER (ORDER BY
+                # seq): a single-task sort of the whole epoch whenever
+                # politeness_delay_ms > 0 — the exact W2 scale-killer
+                # shape.)
+                epoch_base = next_seq - n_frontier
+                page_not_before = ((F.col("seq") - F.lit(epoch_base))
+                                   .cast("long")
+                                   * F.lit(page_delay_ms))
+            else:
+                page_not_before = F.lit(0).cast("long")
+            page_log = fetched.select(
+                F.col("req_url").alias("url"), F.lit("page").alias("kind"),
+                page_not_before.alias("not_before_ms"),
+                F.col("status"), F.col("attempts"),
+                F.col("seq").alias("parent_seq"),
+                F.lit(0).alias("stage_rank"), F.lit(0).alias("sub_rank"),
+                F.lit(0).alias("intra1"), F.lit(0).alias("intra2"),
+                F.col("depth"), F.lit(epoch).alias("epoch"),
+                F.lit("").alias("stage"))
 
-                # record fetches: the page fetches of this epoch + admitted
-                # assets.  Pages are all seed-host (F5), so the robots
-                # Crawl-delay merge collapses to one scalar max here
-                page_delay_ms = max(cfg.politeness_delay_ms,
-                                    self._host_delay_ms.get(self.seed_host, 0))
-                if page_delay_ms > 0:
-                    # epoch seqs are dense [epoch_base, epoch_base + n): W2's
-                    # global_sequence assigned start=next_seq-n_frontier..-1,
-                    # so the politeness offset is pure column arithmetic — no
-                    # window, no shuffle.  (Was row_number() OVER (ORDER BY
-                    # seq): a single-task sort of the whole epoch whenever
-                    # politeness_delay_ms > 0 — the exact W2 scale-killer
-                    # shape.)
-                    epoch_base = next_seq - n_frontier
-                    page_not_before = ((F.col("seq") - F.lit(epoch_base))
-                                       .cast("long")
-                                       * F.lit(page_delay_ms))
-                else:
-                    page_not_before = F.lit(0).cast("long")
-                page_log = fetched.select(
-                    F.col("req_url").alias("url"), F.lit("page").alias("kind"),
-                    page_not_before.alias("not_before_ms"),
-                    F.col("status"), F.col("attempts"),
-                    F.col("seq").alias("parent_seq"),
-                    F.lit(0).alias("stage_rank"), F.lit(0).alias("sub_rank"),
-                    F.lit(0).alias("intra1"), F.lit(0).alias("intra2"),
-                    F.col("depth"), F.lit(epoch).alias("epoch"),
-                    F.lit("").alias("stage"))
+            # Three independent post-admission branches (all consume the
+            # just-checkpointed inserts/assets_allowed): the asset fetch,
+            # the next-frontier sequence assignment, and the Bloom build.
+            # Overlapped (§2.6) so each branch's driver latency and stage
+            # tails back-fill the others.
+            delta = inserts.select("dedup_key") \
+                           .withColumn("epoch", F.lit(epoch + 1))
 
-                # Three independent post-admission branches (all consume the
-                # just-checkpointed inserts/assets_allowed): the asset fetch,
-                # the next-frontier sequence assignment, and the Bloom build.
-                # Overlapped (§2.6) so each branch's driver latency and stage
-                # tails back-fill the others; sequential under
-                # GOSCRAPE_PARALLEL=0.
-                delta = inserts.select("dedup_key") \
-                               .withColumn("epoch", F.lit(epoch + 1))
+            def _assets_branch():
+                # every round is checkpointed by its fetch
+                af = self._fetch_assets(assets_allowed, epoch,
+                                        deferred=assets_deferred)
+                # slim written-delta checkpoint: the lazy union chain used
+                # to reference the BODY-bearing asset_fetch blocks, so
+                # every later epoch's fileExists anti-join re-deserialized
+                # all prior epochs' asset payloads just to read file_path.
+                # One tiny checkpoint per epoch keeps the chain body-free.
+                wd = self._localckpt(
+                    page_paths_d.get().select("file_path").unionByName(
+                        af.filter(F.col("status") == "ok")
+                          .select("file_path")),
+                    "written_delta")
+                return af, wd
 
-                def _assets_branch():
-                    # every round is checkpointed by its fetch
-                    af = self._fetch_assets(assets_allowed, epoch,
-                                            deferred=assets_deferred)
-                    # slim written-delta checkpoint: the lazy union chain used
-                    # to reference the BODY-bearing asset_fetch blocks, so
-                    # every later epoch's fileExists anti-join re-deserialized
-                    # all prior epochs' asset payloads just to read file_path.
-                    # One tiny checkpoint per epoch keeps the chain body-free.
-                    wd = self._localckpt(
-                        page_paths_d.get().select("file_path").unionByName(
-                            af.filter(F.col("status") == "ok")
-                              .select("file_path")),
-                        "written_delta")
-                    return af, wd
+            def _seq_branch():
+                # next frontier: page survivors ordered by the composite
+                # key (W2).  global_sequence range-partitions + offsets
+                # instead of a single-task global window once the epoch is
+                # wide enough.  The row count rides the checkpoint's job.
+                from ..operators.ranking import global_sequence
+                seq_df = global_sequence(
+                    survivors.filter(~F.col("is_asset"))
+                             .select("url", "depth", *ORDER_COLS),
+                    ORDER_COLS, start=next_seq, out_col="seq",
+                    parts=parts)
+                np_df, obs = _observed(
+                    seq_df.select("url",
+                                  (F.col("depth") + 1).alias("depth"),
+                                  "seq"), F.count(F.lit(1)).alias("n"))
+                np_df = self._localckpt(np_df, "next_pages")
+                return np_df, obs.get["n"]
 
-                def _seq_branch():
-                    # next frontier: page survivors ordered by the composite
-                    # key (W2).  global_sequence range-partitions + offsets
-                    # instead of a single-task global window once the epoch is
-                    # wide enough.  The row count rides the checkpoint's job.
-                    from ..operators.ranking import global_sequence
-                    seq_df = global_sequence(
-                        survivors.filter(~F.col("is_asset"))
-                                 .select("url", "depth", *ORDER_COLS),
-                        ORDER_COLS, start=next_seq, out_col="seq",
-                        parts=parts)
-                    np_df, obs = _observed(
-                        seq_df.select("url",
-                                      (F.col("depth") + 1).alias("depth"),
-                                      "seq"), F.count(F.lit(1)).alias("n"))
-                    np_df = self._localckpt(np_df, "next_pages")
-                    return np_df, obs.get["n"]
+            def _bloom_branch():
+                if self.bloom is not None:
+                    # distributed per-partition build, OR-merged
+                    # driver-side
+                    self.bloom.add_keys_df(delta)
 
-                def _bloom_branch():
-                    if self.bloom is not None:
-                        # distributed per-partition build, OR-merged
-                        # driver-side
-                        self.bloom.add_keys_df(delta)
+            branches = [self._deferred(b) for b in
+                        (_assets_branch, _seq_branch, _bloom_branch)]
+            (asset_fetch, written_delta), (next_pages, n_next), _ = \
+                [b.get() for b in branches]
+            fetch_logs.append(page_log)
+            fetch_logs.append(asset_fetch.drop("body", "file_path"))
 
-                (asset_fetch, written_delta), (next_pages, n_next), _ = \
-                    self._parallel(_assets_branch, _seq_branch, _bloom_branch)
-                fetch_logs.append(page_log)
-                fetch_logs.append(asset_fetch.drop("body", "file_path"))
+            # output table: pages (already rewritten in the fused pass) +
+            # fetched assets
+            outputs.append(
+                processed.select("url", "file_path", "body", "is_page",
+                                 "seq")
+                .withColumn("wpos", F.struct(
+                    F.lit(epoch).alias("epoch"),
+                    self._page_pos().alias("pos")))
+                .drop("seq")
+                .withColumn("epoch", F.lit(epoch)))
+            outputs.append(self._asset_outputs(asset_fetch, epoch))
 
-                # output table: pages (already rewritten in the fused pass) +
-                # fetched assets
-                outputs.append(
-                    processed.select("url", "file_path", "body", "is_page",
-                                     "seq")
-                    .withColumn("wpos", F.struct(
-                        F.lit(epoch).alias("epoch"),
-                        self._page_pos().alias("pos")))
-                    .drop("seq")
-                    .withColumn("epoch", F.lit(epoch)))
-                outputs.append(self._asset_outputs(asset_fetch, epoch))
+            # filesystem-state accumulation: every ok page write + every ok
+            # (unblocked) asset write becomes an existing file for later
+            # epochs' fileExists admission.  Slim per-epoch checkpoints
+            # (built in _assets_branch) — duplicates are harmless for the
+            # anti-join, so no distinct shuffle.
+            written = written.unionByName(written_delta)
 
-                # filesystem-state accumulation: every ok page write + every ok
-                # (unblocked) asset write becomes an existing file for later
-                # epochs' fileExists admission.  Slim per-epoch checkpoints
-                # (built in _assets_branch) — duplicates are harmless for the
-                # anti-join, so no distinct shuffle.
-                written = written.unionByName(written_delta)
-
-                # seen append (insert-before-reject: ALL admitted keys).  The
-                # first-wins window already guarantees one row per key, so no
-                # distinct; the union stays lazy — every branch is a
-                # checkpoint, so lineage is shallow and nothing recomputes.
-                seen = seen.unionByName(delta)
-                next_seq += n_next
-                frontier = next_pages
-                n_frontier = n_next
-                if self.checkpoint is not None:
-                    commit_delta = delta
-                    if epoch == 0:
-                        # epoch-0 delta must carry the driver-inserted seed key
-                        # (computed BEFORE any depth-0 redirect rebase) so a
-                        # resume can reconstruct seen purely from deltas
-                        seed_row = local_frame(spark, [(self._seed_key, 0)],
-                                               "dedup_key string, epoch int")
-                        commit_delta = delta.unionByName(seed_row)
-                    # both row counts rode checkpoints that already ran
-                    self.checkpoint.commit_epoch(
-                        epoch, frontier=frontier, seen_delta=commit_delta,
-                        metrics={"next_seq": next_seq,
-                                 "seed_host": self.seed_host,
-                                 "frontier_rows": n_next,
-                                 "seen_delta_rows": self._ins_obs.get["n"]
-                                 + (1 if epoch == 0 else 0)},
-                        written_delta=written_delta)
-                # plan-depth compaction: seen/written are lazy unionByName
-                # chains over per-epoch checkpointed deltas — correct at BFS
-                # depths, but the union tree (and Catalyst analysis time per
-                # epoch) grows linearly with epochs.  Every K epochs collapse
-                # the chain into ONE checkpointed table so a deep/continuous
-                # crawl's per-epoch plan stays O(K), not O(epoch).  Children
-                # are already materialized, so this re-reads checkpoint blocks
-                # once per K epochs and recomputes nothing.
-                if (epoch + 1) % self.compact_every == 0:
-                    seen = self._localckpt(seen, "seen_compact")
-                    written = self._localckpt(written, "written_compact")
-                epoch += 1
-        finally:
-            # restored even when the loop raises: the session is shared
-            spark.conf.set("spark.sql.shuffle.partitions", str(default_parts))
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+            # seen append (insert-before-reject: ALL admitted keys).  The
+            # first-wins window already guarantees one row per key, so no
+            # distinct; the union stays lazy — every branch is a
+            # checkpoint, so lineage is shallow and nothing recomputes.
+            seen = seen.unionByName(delta)
+            next_seq += n_next
+            frontier = next_pages
+            n_frontier = n_next
+            if self.checkpoint is not None:
+                commit_delta = delta
+                if epoch == 0:
+                    # epoch-0 delta must carry the driver-inserted seed key
+                    # (computed BEFORE any depth-0 redirect rebase) so a
+                    # resume can reconstruct seen purely from deltas
+                    seed_row = local_frame(spark, [(self._seed_key, 0)],
+                                           "dedup_key string, epoch int")
+                    commit_delta = delta.unionByName(seed_row)
+                # the commit runs on a helper while the next epoch runs.
+                # Its arguments are bound here (both row counts rode
+                # checkpoints that already ran), and commits run one at a
+                # time in epoch order, so MANIFEST.json only ever names a
+                # fully written epoch.
+                if commit is not None:
+                    commit.get()
+                commit = self._deferred(partial(
+                    self.checkpoint.commit_epoch,
+                    epoch, frontier=frontier, seen_delta=commit_delta,
+                    metrics={"next_seq": next_seq,
+                             "seed_host": self.seed_host,
+                             "frontier_rows": n_next,
+                             "seen_delta_rows": self._ins_obs.get["n"]
+                             + (1 if epoch == 0 else 0)},
+                    written_delta=written_delta))
+            # plan-depth compaction: seen/written are lazy unionByName
+            # chains over per-epoch checkpointed deltas — correct at BFS
+            # depths, but the union tree (and Catalyst analysis time per
+            # epoch) grows linearly with epochs.  Every K epochs collapse
+            # the chain into ONE checkpointed table so a deep/continuous
+            # crawl's per-epoch plan stays O(K), not O(epoch).  Children
+            # are already materialized, so this re-reads checkpoint blocks
+            # once per K epochs and recomputes nothing.
+            if (epoch + 1) % self.compact_every == 0:
+                seen = self._localckpt(seen, "seen_compact")
+                written = self._localckpt(written, "written_compact")
+            epoch += 1
 
         empty_log = local_frame(
             spark, [], "url string, kind string, not_before_ms bigint, "
@@ -757,26 +841,15 @@ class Crawler:
     _TIMING = os.environ.get("GOSCRAPE_TIMING", "") == "1"
 
     # Overlap INDEPENDENT epoch actions (guide §2.6: actions are only
-    # sequential because driver code calls them sequentially): each thunk's
+    # sequential because driver code calls them sequentially): each helper's
     # jobs back-fill executors freed by the others' stage tails, and the
     # ~50-100 ms per-job driver latency of the epoch's bookkeeping actions
     # overlaps instead of summing.  InheritableThread propagates the JVM
-    # thread-locals (job group), so bench job accounting still sees every
-    # job.  GOSCRAPE_PARALLEL=0 restores the sequential loop.
-    _PARALLEL = os.environ.get("GOSCRAPE_PARALLEL", "1") == "1"
-
+    # thread-locals (job group), so job accounting still sees every job.
     def _deferred(self, fn):
         """Start ``fn`` on an InheritableThread now; ``.get()`` joins and
-        returns its result (re-raising any failure).  Used to overlap a
-        checkpoint whose consumer is several actions downstream."""
-        if not self._PARALLEL:
-            class _Now:
-                def __init__(self, v):
-                    self._v = v
-
-                def get(self):
-                    return self._v
-            return _Now(fn())
+        returns its result (re-raising any failure).  run() joins every
+        helper whose result nobody took before it returns or raises."""
         from pyspark import InheritableThread
 
         box: dict = {}
@@ -791,38 +864,32 @@ class Crawler:
         t.start()
 
         class _Pending:
+            taken = False
+
             def get(self):
                 t.join()
+                self.taken = True
                 if "e" in box:
                     raise box["e"]
                 return box["v"]
-        return _Pending()
 
-    def _parallel(self, *thunks):
-        """Run callables concurrently in InheritableThreads; return their
-        results in order.  Falls back to sequential execution when disabled
-        or for a single thunk."""
-        if not self._PARALLEL or len(thunks) == 1:
-            return [t() for t in thunks]
-        from pyspark import InheritableThread
-        results: list = [None] * len(thunks)
-        errors: list = []
+        p = _Pending()
+        self._helpers = [h for h in self._helpers if not h.taken] + [p]
+        return p
 
-        def work(i, fn):
+    def _join_helpers(self) -> BaseException | None:
+        """Join every helper whose result nobody took; return the first
+        failure among them."""
+        err = None
+        for h in self._helpers:
+            if h.taken:
+                continue
             try:
-                results[i] = fn()
-            except BaseException as e:  # surface the first failure
-                errors.append(e)
-
-        threads = [InheritableThread(target=work, args=(i, fn))
-                   for i, fn in enumerate(thunks)]
-        for t in threads:
-            t.start()
-        for t in threads:
-            t.join()
-        if errors:
-            raise errors[0]
-        return results
+                h.get()
+            except BaseException as e:
+                err = e if err is None else err
+        self._helpers = []
+        return err
 
     def _localckpt(self, df: DataFrame, label: str = "") -> DataFrame:
         # eager: truncate lineage AND materialize once — every epoch state is
