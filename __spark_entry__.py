@@ -252,13 +252,16 @@ def q_sorted_refs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4: robots disallow-prefix exclusion (broadcast rules join)."""
-    from goscrape_spark.operators.politeness import apply_robots, robots_rules_df
+    from goscrape_spark.operators.politeness import (
+        apply_robots_rfc,
+        rfc_rules_df,
+    )
 
     k = _keyed(_docs(spark, sf_dir))
     hosts = [r.host for r in k.select("host").distinct().collect()
              if r.host != "cdn.external.net"]
-    rules = robots_rules_df(spark, {h: ["/c1"] for h in hosts})
-    return (apply_robots(k, rules)
+    rules = rfc_rules_df(spark, {h: [("/c1", False)] for h in hosts})
+    return (apply_robots_rfc(k, rules)
             .select("doc_id", "host", "path"))
 
 

@@ -45,7 +45,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--politeness-ms", type=int, default=0,
                    help="per-host politeness delay (rebuild extension)")
     p.add_argument("--robots", action="store_true",
-                   help="fetch and honor the seed host's robots.txt "
+                   help="fetch and honor each crawled host's robots.txt "
                         "(RFC 9309; rebuild extension)")
     p.add_argument("--sitemaps", action="store_true",
                    help="seed the frontier from the site's sitemaps "

@@ -1,10 +1,11 @@
 """Crawl configuration (port of scraper.Config, scraper/scraper.go:25-42).
 
-Network/session knobs of the reference (auth, cookies, proxy, user agent,
-timeout) configure the fetch session; in this sandbox every fetch is a mock
-join against a ``pages`` fixture table (the reference's own test seam,
-scraper/scraper_test.go:35-42), so they are carried but unused by the mock
-fetcher.
+The reference's network/session settings (auth, cookies, proxy, user
+agent, headers, timeout) configure the live fetcher (sources/fetch.py
+``http_fetch_df``), which sends every request of a crawl with them: pages,
+assets, stylesheets, sitemaps and robots.txt alike.  A crawl over a
+``pages`` fixture table (the reference's own test seam,
+scraper/scraper_test.go:35-42) reads the fixture instead and ignores them.
 """
 
 from __future__ import annotations
@@ -36,11 +37,11 @@ class CrawlConfig:
     max_retries: int = 10               # scraper/http.go:19
     retry_delay_ms: int = 1500          # scraper/http.go:20
     politeness_delay_ms: int = 0        # per-host minimum fetch spacing (J5)
-    robots_rules: dict[str, list[str]] = field(default_factory=dict)  # host -> disallow path prefixes (J4)
-    # RFC 9309 robots (J4 full form): host -> raw robots.txt text, parsed
-    # with functions.robotstxt.parse_robots for the crawler's product token
+    # RFC 9309 robots (J4): host -> raw robots.txt text, parsed with
+    # functions.robotstxt.parse_robots for the crawler's product token
     # (user_agent's first word, or '*').  fetch_robots=True additionally
-    # fetches the seed host's /robots.txt live at crawl start.
+    # fetches the /robots.txt of the seed host at crawl start and of every
+    # other host when its first URL is admitted.
     robots_txt: dict[str, str] = field(default_factory=dict)
     fetch_robots: bool = False
     # sitemap-seeded frontier: at crawl start, fetch the seed host's

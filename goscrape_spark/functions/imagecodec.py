@@ -27,7 +27,6 @@ when importable and falls back here.
 
 from __future__ import annotations
 
-import os
 import struct
 import zlib
 
@@ -45,8 +44,7 @@ _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
 # large photo PNG could otherwise pin an executor core for minutes, so the
 # vendored tier bails out (-> caller keeps original bytes, like any decode
 # failure) once the slow-filtered rows exceed this byte budget.
-_SLOW_FILTER_BYTE_CAP = int(os.environ.get(
-    "GOSCRAPE_PNG_SLOW_FILTER_CAP", 1 << 23))  # Average/Paeth row budget;
+_SLOW_FILTER_BYTE_CAP = 1 << 23  # 8 MB Average/Paeth row budget;
 # capped images keep their ORIGINAL bytes — a documented size-only
 # divergence from Go image/png (see operators/images.py docstring)
 

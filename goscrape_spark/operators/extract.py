@@ -63,7 +63,6 @@ TAG_BY_KIND = {"a": "a", "img": "img", "img-srcset": "img", "link": "link",
 _RAW_TEXT_TAGS = {"script", "style", "textarea", "title", "xmp", "iframe",
                   "noembed", "noframes"}
 
-_TAG_OPEN_RE = re.compile(r"<([a-zA-Z][a-zA-Z0-9:-]*)")
 _ATTR_RE = re.compile(
     r"""\s*([^\s/>=]+)(?:\s*=\s*(?:"([^"]*)"|'([^']*)'|([^\s>]*)))?"""
 )
@@ -467,9 +466,6 @@ SPAN_FIELDS = ("kind string, text string, media_ref string, offset int, "
 
 EXPLODED_SCHEMA = "url string, " + SPAN_FIELDS
 
-DOCUMENTS_SCHEMA = ("doc_id string, spans array<struct<kind:string,"
-                    "text:string,media_ref:string,offset:int>>")
-
 
 def _decode(body) -> str:
     if body is None:
@@ -478,10 +474,6 @@ def _decode(body) -> str:
         return bytes(body).decode("utf-8", errors="replace")
     return str(body)
 
-
-MINIMAL_SCHEMA = ("url string, kind string, media_ref string, "
-                  "ref_no_frag string, scheme string, host string, "
-                  "path string")
 
 PROCESSED_SCHEMA = (
     "url string, seq bigint, depth int, file_path string, body binary, "
@@ -603,35 +595,14 @@ def process_pages_df(pages: "DataFrame", seed_host: str,
 
 def extract_spans_df(fetched: DataFrame, url_col: str = "url",
                      body_col: str = "body",
-                     include_text: bool = True,
-                     minimal: bool = False) -> DataFrame:
+                     include_text: bool = True) -> DataFrame:
     """url+body rows -> exploded span rows, one Arrow batch at a time.
 
     Input: DataFrame with (url string, body binary).  Output: one row per
     span with the internal schema (url, kind, text, media_ref, offset,
-    tag_idx, attr, vstart, vend, token) — or, with ``minimal=True``, the
-    3-column (url, kind, media_ref) fast path used by the crawl loop
-    (columns built as flat lists: no per-row tuple boxing).
+    tag_idx, attr, vstart, vend, token).
     """
     src = fetched.select(F.col(url_col).alias("url"), F.col(body_col).alias("body"))
-
-    if minimal:
-        def run_min(batches) -> Iterator:
-            import pandas as pd
-
-            cols = ("kind", "media_ref", "ref_no_frag", "scheme", "host",
-                    "path")
-            for pdf in batches:
-                urls: list[str] = []
-                data: dict[str, list] = {c: [] for c in cols}
-                for url, body in zip(pdf["url"], pdf["body"]):
-                    for tup in extract_media_refs(_decode(body), url):
-                        urls.append(url)
-                        for c, v in zip(cols, tup):
-                            data[c].append(v)
-                yield pd.DataFrame({"url": urls, **data})
-
-        return src.mapInPandas(run_min, schema=MINIMAL_SCHEMA)
 
     def run(batches) -> Iterator:
         import pandas as pd

@@ -18,7 +18,7 @@ Documented vendored-tier divergences from Go image/png (both are
 keep-original-bytes pass-throughs, so output differs from the reference
 only in SIZE, never in correctness of served content):
 
-* PNGs with > ``GOSCRAPE_PNG_SLOW_FILTER_CAP`` (default 8 MB) of
+* PNGs with > 8 MB (``functions.imagecodec._SLOW_FILTER_BYTE_CAP``) of
   Average/Paeth-filtered scanlines are NOT recoded (the per-byte Python
   unfilter would pin an executor core); the reference would recode them.
   Large photographic PNGs commonly use Paeth, so offline-mirror sizes can

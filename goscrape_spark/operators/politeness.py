@@ -12,11 +12,11 @@ support.  Design constraints:
   inside its per-host ``applyInPandas`` batch (fetches for one host land in
   one group, sorted by schedule, slept between).
 
-* Robots rules ride a **broadcast** join on ``host`` (the rules table is tiny
-  relative to the frontier) and reject candidates whose path matches a
-  disallow prefix.  Like the include/exclude filters (F7/F8), robots
-  rejection happens AFTER seen-set insertion — a robots-blocked URL never
-  gets reconsidered.
+* Robots rules (RFC 9309, parsed by functions/robotstxt.py) ride a
+  **broadcast** join on ``host`` (the rules table is tiny relative to the
+  frontier); the most specific matching rule decides each path.  Like the
+  include/exclude filters (F7/F8), robots rejection happens AFTER seen-set
+  insertion — a robots-blocked URL never gets reconsidered.
 """
 
 from __future__ import annotations
@@ -70,44 +70,6 @@ def retry_backoff_ms(attempts: Column, retry_delay_ms: int = 1500) -> Column:
     waits."""
     n = attempts - F.lit(1)  # number of sleeps
     return (n * (n + 1) / 2).cast("long") * F.lit(retry_delay_ms)
-
-
-def parse_robots_txt(text: str) -> list[str]:
-    """Minimal robots.txt: Disallow prefixes for User-agent: * groups."""
-    disallows: list[str] = []
-    applies = False
-    for line in text.splitlines():
-        line = line.split("#", 1)[0].strip()
-        if not line or ":" not in line:
-            continue
-        field, value = line.split(":", 1)
-        field = field.strip().lower()
-        value = value.strip()
-        if field == "user-agent":
-            applies = value == "*"
-        elif field == "disallow" and applies and value:
-            disallows.append(value)
-    return disallows
-
-
-def robots_rules_df(spark, rules: dict[str, list[str]]) -> DataFrame:
-    rows = [(host, prefix) for host, prefixes in rules.items()
-            for prefix in prefixes]
-    return local_frame(spark, rows, "host string, disallow string")
-
-
-def apply_robots(candidates: DataFrame, rules: DataFrame,
-                 host_col: str = "host",
-                 path_col: str = "path") -> DataFrame:
-    """Drop candidates whose path starts with a disallow prefix for their
-    host.  Broadcast join: rules are tiny, candidates are huge."""
-    hits = (candidates.join(
-        F.broadcast(rules.withColumnRenamed("host", "_r_host")),
-        (F.col(host_col) == F.col("_r_host"))
-        & F.col(path_col).startswith(F.col("disallow")),
-        "inner")
-        .select(host_col, path_col).distinct())
-    return candidates.join(hits, on=[host_col, path_col], how="left_anti")
 
 
 def rfc_rules_df(spark, parsed: dict[str, list[tuple[str, bool]]]) -> DataFrame:

@@ -20,27 +20,22 @@ is knowingly dead code: it keys its rewrite map by the full ``url(...)``
 token and ``replaceCSSUrls`` wraps the key in ``url(...)`` again, so no
 replacement ever matches.  Downloaded CSS assets are therefore stored
 byte-identical; only asset DISCOVERY works.  We reproduce that (see
-plans/simulator.py and plans/crawl.py), and offer the obvious fix behind
-``rewrite_css_file`` for users who want working offline CSS.
+plans/simulator.py and plans/crawl.py).
 
-Spark surface: :func:`rewrite_documents_df` — an Arrow-batched ``mapInPandas``
-over (url, body) rows; one scanner pass + splice per document, no per-row
-Python dispatch.
+The crawl does not call :func:`rewrite_document` directly: the fused page
+pass (operators/extract.process_page) runs the same rewrite over its one
+tag scan, inside the crawl's Arrow batches; this module is its reference
+(tests/test_fused_process.py) and the simulator's rewrite.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
-
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..functions.urlmath import (
     resolve_srcset_urls,
     resolve_url,
     url_relative_to_root,
 )
-from ..functions.urlnorm import GoURL, parse_url
+from ..functions.urlnorm import parse_url
 from .cssx import css_extract, rewrite_style_content
 from .extract import NODES, SRCSET_ATTRIBUTES, scan_tags
 
@@ -129,50 +124,3 @@ def rewrite_document(text: str, page_url: str, main_page_host: str) -> tuple[str
         pos = end
     out.append(text[pos:])
     return "".join(out), changed
-
-
-def rewrite_css_file(css_text: str, css_url: str, main_page_host: str) -> str:
-    """The FIXED version of the reference's dead cssProcessor rewrite
-    (scraper/download.go:104-131): rewrite each url() ref relative to the CSS
-    file's directory.  NOT used on the parity path."""
-    u = parse_url(css_url)
-    dir_path = u.path[: u.path.rfind("/") + 1] if "/" in u.path else "/"
-    css_dir = GoURL(scheme=u.scheme, host=u.host, path=dir_path)
-    rewrites: dict[str, str] = {}
-    for ref in css_extract(css_text, u):
-        adjusted = resolve_url(css_dir, ref.src, main_page_host, False, "")
-        if adjusted != ref.src:
-            rewrites[ref.src] = adjusted
-    return rewrite_style_content(css_text, rewrites)
-
-
-# ---------------------------------------------------------------------------
-# Spark surface
-# ---------------------------------------------------------------------------
-
-REWRITTEN_SCHEMA = "url string, body binary, changed boolean"
-
-
-def rewrite_documents_df(fetched: DataFrame, main_page_host: str,
-                         url_col: str = "url",
-                         body_col: str = "body") -> DataFrame:
-    """Arrow-batched page rewrite: (url, body) -> (url, rewritten body,
-    changed)."""
-    src = fetched.select(F.col(url_col).alias("url"),
-                         F.col(body_col).alias("body"))
-
-    def run(batches) -> Iterator:
-        import pandas as pd
-
-        for pdf in batches:
-            urls, bodies, flags = [], [], []
-            for url, body in zip(pdf["url"], pdf["body"]):
-                raw = bytes(body) if body is not None else b""
-                text = raw.decode("utf-8", errors="replace")
-                new_text, changed = rewrite_document(text, url, main_page_host)
-                urls.append(url)
-                bodies.append(new_text.encode("utf-8") if changed else raw)
-                flags.append(changed)
-            yield pd.DataFrame({"url": urls, "body": bodies, "changed": flags})
-
-    return src.mapInPandas(run, schema=REWRITTEN_SCHEMA)

@@ -138,21 +138,14 @@ class SeenSet:
         parts = df.select(key_col).mapInPandas(build, schema="bits binary")
         n_words = m // 64
 
-        # merge strategy (GOSCRAPE_BLOOM_MERGE): 'tree' (default) reduces
-        # on executors, driver receives O(sqrt(P)) bitmaps — right at
-        # cluster scale / large filters; 'collect' pulls all P bitmaps to
-        # the driver in one job — fewer stages, fine while P*m/8 is small
-        import os
-        mode = os.environ.get("GOSCRAPE_BLOOM_MERGE", "auto")
-        if mode == "auto":
-            # gate on the merge volume P*m/8 like the mock-fetch broadcast
-            # gate: single-host, collect is measured ~5% faster per crawl
-            # (treeAggregate's extra stages buy nothing when driver and
-            # executors share one JVM); past ~128 MB of bitmaps the driver
-            # becomes the merge bottleneck and the tree wins
-            est = parts.rdd.getNumPartitions() * (m // 8)
-            mode = "tree" if est > (128 << 20) else "collect"
-        if mode == "collect":
+        # merge strategy, gated on the merge volume P*m/8: 'collect' pulls
+        # all P bitmaps to the driver in one job — fewer stages, measured
+        # ~5% faster per crawl single-host (treeAggregate's extra stages
+        # buy nothing when driver and executors share one JVM); past
+        # ~128 MB of bitmaps the driver becomes the merge bottleneck and
+        # 'tree' (reduce on executors, driver receives O(sqrt(P))
+        # bitmaps) wins
+        if parts.rdd.getNumPartitions() * (m // 8) <= (128 << 20):
             for row in parts.collect():
                 self.bloom.bits |= np.frombuffer(row.bits, dtype=np.uint64)
             return

@@ -35,7 +35,7 @@ from being shuffled against small candidate sets.
 
 Driver-built frames (the seed ``seen`` row and frontier, the empty
 ``written`` table, the epoch-0 ``seed_row``, the empty result frames, the
-sitemap ``done`` set, the robots rules) are built with
+sitemap ``done`` set, the robots.txt URLs and rules) are built with
 ``session.local_frame``, never from a Python list: a list-built frame is a
 PythonRDD leaf, and every scan of it runs one Python-worker task per core
 even with zero rows.  A warm ``count()`` of a one-row list-built frame took
@@ -52,7 +52,8 @@ the seed's response URL (the depth-0 redirect rebase) on epoch 0's
 ``fetched`` — never a separate ``count``/``isEmpty``/``first``/``collect`` job.  A
 fetch returns its input rows with the fetch columns added, so no join puts
 the outcomes back, and its one checkpoint carries the caller's label
-(``fetched``, ``asset_round``, ``css_fetch``, ``sitemap_fetch``).
+(``fetched``, ``asset_round``, ``css_fetch``, ``sitemap_fetch``,
+``robots_fetch``).
 
 Overlap.  ``Crawler.run`` starts helper threads (``_deferred``, a pyspark
 ``InheritableThread``, so their jobs keep the caller's job group) for work
@@ -86,7 +87,6 @@ helper's as its cause.
 
 from __future__ import annotations
 
-import os
 import time
 from dataclasses import dataclass, field
 from functools import partial
@@ -182,7 +182,13 @@ class Crawler:
     """Distributed crawler.  One fetch contract, two sources
     (sources/fetch.py): a mock-web ``pages`` DataFrame (J2, the reference's
     own test seam) or, with ``live=True``, real per-host HTTP.  The source
-    is chosen here, once; the crawl loop never asks which it has."""
+    is chosen here, once; the crawl loop never asks which it has: page,
+    asset, stylesheet, sitemap and robots.txt requests all go through
+    ``_fetch_observed``."""
+
+    # collapse the seen/written union chains into one checkpointed table
+    # every K epochs (bounded per-epoch plan depth)
+    COMPACT_EVERY = 16
 
     def __init__(self, spark: SparkSession, config: CrawlConfig,
                  pages: DataFrame | None = None, use_bloom: bool = False,
@@ -190,10 +196,8 @@ class Crawler:
                  live: bool = False):
         self.spark = spark
         self.config = config
-        self.live = live
         if pages is None and not live:
             raise ValueError("need a pages fixture or live=True")
-        self.pages = pages
         if live:
             self._source = self._http_source
         else:
@@ -202,13 +206,9 @@ class Crawler:
                 rows, pages, config.max_retries)
         self.use_bloom = use_bloom
         self.bloom = None  # set in run()
-        self.robots = None
-        if config.robots_rules:
-            from ..operators.politeness import robots_rules_df
-            self.robots = robots_rules_df(spark, config.robots_rules)
         # RFC 9309 robots (full Allow/Disallow/wildcard form): rules table
-        # built from configured robots.txt texts; live crawls may add the
-        # seed host's fetched robots.txt in run() (fetch_robots=True)
+        # built from configured robots.txt texts; fetch_robots=True adds
+        # each crawled host's fetched robots.txt (_ingest_host_robots)
         self.robots_rfc = None
         self._robots_parsed: dict[str, list] = {}
         # robots Crawl-delay per host (ms), merged max-wise with the
@@ -225,10 +225,7 @@ class Crawler:
             self._rebuild_rfc_rules()
         self.checkpoint = checkpoint
         self.max_epochs = max_epochs
-        # collapse the seen/written union chains into one checkpointed
-        # table every K epochs (bounded per-epoch plan depth)
-        self.compact_every = int(os.environ.get(
-            "GOSCRAPE_COMPACT_EVERY", "16"))
+        self.compact_every = self.COMPACT_EVERY
         # per-label cumulative checkpoint wall times: every epoch stage is
         # materialized through _localckpt, so this doubles as a stage-level
         # attribution table (bench.py emits it into BENCH_FULL)
@@ -272,7 +269,6 @@ class Crawler:
             parse_robots,
             parse_sitemap_urls,
         )
-        from ..operators.politeness import rfc_rules_df
         sm = parse_sitemap_urls(text)
         if sm:
             self._sitemap_lines.setdefault(host, []).extend(sm)
@@ -296,66 +292,39 @@ class Crawler:
         if self._robots_parsed:
             self.robots_rfc = rfc_rules_df(self.spark, self._robots_parsed)
 
-    def _fetch_seed_robots(self) -> None:
-        self._ingest_host_robots([(self.seed_host, self.seed.scheme)])
-
-    def _get_robots_text(self, host: str, scheme: str) -> str | None:
-        """One driver-side GET of a host's /robots.txt.  RFC 9309 §2.3.1:
-        any fetch error means "no restrictions" (None); §2.5: parse at
-        most the first 500 KiB."""
-        import http.client
-        import urllib.error
-        import urllib.request
-        url = f"{scheme or 'http'}://{host}/robots.txt"
-        headers = dict(self.config.headers)
-        if self.config.user_agent:
-            headers["User-Agent"] = self.config.user_agent
-        handlers = []
-        if self.config.proxy:
-            handlers.append(urllib.request.ProxyHandler(
-                {"http": self.config.proxy, "https": self.config.proxy}))
-        opener = urllib.request.build_opener(*handlers)
-        try:
-            req = urllib.request.Request(url, headers=headers)
-            with opener.open(req, timeout=self.config.timeout or 30) as r:
-                return r.read(500 * 1024).decode("utf-8", "replace")
-        except (urllib.error.URLError, OSError, ValueError,
-                http.client.HTTPException):
-            # BadStatusLine/IncompleteRead subclass HTTPException, NOT
-            # OSError — a malformed robots response must also mean "no
-            # restrictions", not a dead crawl
-            return None
-
     def _ingest_host_robots(self, hosts: list[tuple[str, str]]) -> None:
         """Fetch + install robots.txt for a batch of (host, scheme), each
-        host AT MOST ONCE per crawl (failures included).  Live hosts fetch
-        CONCURRENTLY (a page whose assets span N dead third-party hosts
-        must stall one timeout, not N); mock mode reads every wanted
-        /robots.txt row from the pages fixture in ONE filter+collect.  The
-        broadcast rules table is rebuilt once per batch, not per host."""
-        wanted = [(h, sc) for h, sc in hosts
-                  if h and h not in self._robots_fetched]
+        host AT MOST ONCE per crawl (failures included).  The /robots.txt
+        URLs go through the fetch seam like every other URL: one fetch
+        for the batch, with the crawl's auth, headers, proxy, cookie jar
+        and 429 retries (a mock crawl reads the fixture's rows).  Its
+        Observation brings the first 500 KiB (RFC 9309 §2.5, cut in the
+        JVM) of each ok body to the driver; any other outcome means "no
+        restrictions" (§2.3.1).  A live fetch runs one batch per host, so
+        a dead host's robots.txt costs what that host's asset fetch costs
+        right after it, in the same per-host group.  The broadcast rules
+        table is rebuilt once per batch, not per host."""
+        wanted: dict[str, str] = {}
+        for h, sc in sorted(hosts):
+            if h and h not in self._robots_fetched:
+                wanted.setdefault(h, sc)
         if not wanted:
             return
-        self._robots_fetched.update(h for h, _ in wanted)
-        texts: list[tuple[str, str]] = []
-        if self.live:
-            from concurrent.futures import ThreadPoolExecutor
-            with ThreadPoolExecutor(max_workers=min(8, len(wanted))) as ex:
-                fetched = ex.map(lambda p: self._get_robots_text(*p), wanted)
-                texts = [(h, t) for (h, _), t in zip(wanted, fetched)
-                         if t is not None]
-        elif self.pages is not None:
-            urls = {f"{sc or 'http'}://{h}/robots.txt": h
-                    for h, sc in wanted}
-            rows = self.pages.filter(F.col("url").isin(list(urls))) \
-                             .select("url", "body").collect()
-            texts = [(urls[r.url],
-                      bytes(r.body)[:500 * 1024].decode("utf-8", "replace"))
-                     for r in rows if r.body is not None]
-        apply_rules = self.config.fetch_robots
-        for host, text in sorted(texts):
-            self._add_robots_txt(host, text, apply_rules=apply_rules)
+        self._robots_fetched.update(wanted)
+        rows = local_frame(self.spark,
+                           [(f"{sc}://{h}/robots.txt", h)
+                            for h, sc in wanted.items()],
+                           "url string, robots_host string")
+        _, obs = self._fetch_observed(
+            rows, "robots_fetch", F.collect_list(F.when(
+                F.col("status") == "ok",
+                F.struct("robots_host",
+                         F.substring("body", 1, 500 * 1024).alias("body"))
+            )).alias("robots"))
+        for r in sorted(obs.get["robots"], key=lambda r: r.robots_host):
+            self._add_robots_txt(r.robots_host,
+                                 bytes(r.body).decode("utf-8", "replace"),
+                                 apply_rules=self.config.fetch_robots)
         self._rebuild_rfc_rules()
 
     def _sitemap_candidates(self) -> DataFrame | None:
@@ -503,11 +472,8 @@ class Crawler:
         cfg = self.config
         if cfg.fetch_robots or cfg.use_sitemaps:
             # --robots: fetch + honor; --sitemaps alone: fetch only to
-            # discover Sitemap: lines (rules are not installed).  A fixture
-            # crawl reads /robots.txt from the pages fixture (the
-            # reference's own test seam) so both sources expose the same
-            # robots surface.
-            self._fetch_seed_robots()
+            # discover Sitemap: lines (rules are not installed)
+            self._ingest_host_robots([(self.seed_host, self.seed.scheme)])
 
         resumed = None
         if resume and self.checkpoint is not None:
@@ -838,8 +804,6 @@ class Crawler:
         sim = Simulator(config=self.config, pages={})
         return sim.should_download(self.seed, 0, False)
 
-    _TIMING = os.environ.get("GOSCRAPE_TIMING", "") == "1"
-
     # Overlap INDEPENDENT epoch actions (guide §2.6: actions are only
     # sequential because driver code calls them sequentially): each helper's
     # jobs back-fill executors freed by the others' stage tails, and the
@@ -899,8 +863,6 @@ class Crawler:
         out = df.localCheckpoint(eager=True)
         dt = time.time() - t0
         self.stage_secs[label] = self.stage_secs.get(label, 0.0) + dt
-        if self._TIMING:
-            print(f"    ckpt[{label}]: {dt:.2f}s", flush=True)
         return out
 
     def _do_fetch_cached(self, rows: DataFrame, label: str) -> DataFrame:
@@ -1020,19 +982,14 @@ class Crawler:
             survivors = inserts.filter(F.col("survived"))
             if cfg.fetch_robots:
                 # cross-host assets (and CSS-discovered refs) are gated by
-                # THEIR host's robots.txt in BOTH fetch modes: each
-                # newly-seen host's file is ingested once (live: concurrent
-                # driver GETs; mock: one fixture filter).  The distinct
+                # THEIR host's robots.txt: each newly-seen host's file is
+                # fetched once, all of them in one fetch.  The distinct
                 # scan reads the just-checkpointed inserts (cheap) and the
                 # collect is bounded by the crawl's distinct host count —
                 # the same budget class as the per-epoch cookie harvest.
-                self._ingest_host_robots(sorted(
-                    (r.host, r.scheme) for r in survivors
-                    .select("host", "scheme").distinct().collect()
-                    if r.host and r.host not in self._robots_fetched))
-            if self.robots is not None:
-                from ..operators.politeness import apply_robots
-                survivors = apply_robots(survivors, self.robots)
+                self._ingest_host_robots(
+                    [(r.host, r.scheme) for r in survivors
+                     .select("host", "scheme").distinct().collect()])
             if self.robots_rfc is not None:
                 from ..operators.politeness import apply_robots_rfc
                 survivors = apply_robots_rfc(survivors, self.robots_rfc)

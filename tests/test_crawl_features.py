@@ -25,7 +25,8 @@ def test_robots_blocks_and_poisons(spark):
         "https://example.org/pub": '<a href="/private/x">again</a>',
     }
     cfg = CrawlConfig(url="https://example.org/",
-                      robots_rules={"example.org": ["/private"]})
+                      robots_txt={"example.org":
+                                  "User-agent: *\nDisallow: /private\n"})
     res = crawl(spark, cfg, pages_df(spark, pages))
     urls = [r.url for r in res.ordered_fetches()]
     assert "https://example.org/private/x" not in urls

@@ -14,7 +14,7 @@ import pytest
 from pyspark.sql.types import StructType
 
 from goscrape_spark.config import CrawlConfig
-from goscrape_spark.operators.politeness import robots_rules_df, rfc_rules_df
+from goscrape_spark.operators.politeness import rfc_rules_df
 from goscrape_spark.plans.crawl import Crawler, crawl
 from goscrape_spark.session import local_frame
 from goscrape_spark.sources.fixtures import (
@@ -48,9 +48,7 @@ def test_local_frame_is_jvm_only_with_ddl_schema(spark, rows, ddl):
 
 
 def test_robots_and_pages_frames_are_jvm_only(spark):
-    frames = [robots_rules_df(spark, {"h": ["/a", "/b"]}),
-              robots_rules_df(spark, {}),
-              rfc_rules_df(spark, {"h": [("/a*", False), ("/a/b", True)]}),
+    frames = [rfc_rules_df(spark, {"h": [("/a*", False), ("/a/b", True)]}),
               rfc_rules_df(spark, {}),
               pages_df(spark, SITE_LINKS)]
     for df in frames:

@@ -1,0 +1,85 @@
+"""Source guards for the package's configuration and fetch surfaces.
+
+Behaviour is set through ``CrawlConfig`` and the CLI, never through
+``GOSCRAPE_*`` environment variables; and the crawl plan sends no request
+of its own: every URL, robots.txt included, goes through the fetch sources
+in sources/fetch.py."""
+
+import ast
+import os
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
+    __file__))), "goscrape_spark")
+
+
+def _package_files() -> list[str]:
+    return sorted(os.path.join(root, n)
+                  for root, _, names in os.walk(PKG)
+                  for n in names if n.endswith(".py"))
+
+
+def _parse(path: str) -> ast.AST:
+    with open(path, encoding="utf-8") as f:
+        return ast.parse(f.read(), path)
+
+
+def _is_environ(node: ast.AST) -> bool:
+    """``os.environ`` or a bare ``environ``."""
+    return (isinstance(node, ast.Attribute) and node.attr == "environ") \
+        or (isinstance(node, ast.Name) and node.id == "environ")
+
+
+def _env_names(tree: ast.AST) -> list[tuple[int, str]]:
+    """(line, name) of every constant variable name read through
+    ``os.environ[...]``, ``os.environ.get(...)`` or ``os.getenv(...)``."""
+    out = []
+    for n in ast.walk(tree):
+        key = None
+        if isinstance(n, ast.Subscript) and _is_environ(n.value):
+            key = n.slice
+        elif isinstance(n, ast.Call) and n.args and (
+                (isinstance(n.func, ast.Attribute)
+                 and n.func.attr == "get"
+                 and _is_environ(n.func.value))
+                or (isinstance(n.func, ast.Attribute)
+                    and n.func.attr == "getenv")
+                or (isinstance(n.func, ast.Name) and n.func.id == "getenv")):
+            key = n.args[0]
+        if isinstance(key, ast.Constant) and isinstance(key.value, str):
+            out.append((n.lineno, key.value))
+    return out
+
+
+def test_env_name_scan_sees_every_read_form():
+    tree = ast.parse("import os\nfrom os import environ, getenv\n"
+                     "a = os.environ.get('GOSCRAPE_A', '1')\n"
+                     "b = os.environ['GOSCRAPE_B']\n"
+                     "c = os.getenv('GOSCRAPE_C')\n"
+                     "d = environ.get('GOSCRAPE_D')\n"
+                     "e = getenv('OTHER')\n")
+    assert [v for _, v in _env_names(tree)] == \
+        ["GOSCRAPE_A", "GOSCRAPE_B", "GOSCRAPE_C", "GOSCRAPE_D", "OTHER"]
+
+
+def test_no_goscrape_env_knobs_in_package():
+    offenders = [f"{os.path.relpath(p, PKG)}:{line} {name}"
+                 for p in _package_files()
+                 for line, name in _env_names(_parse(p))
+                 if name.startswith("GOSCRAPE_")]
+    assert offenders == []
+
+
+def test_crawl_plan_imports_no_http_client():
+    """The crawl plan fetches only through sources/fetch.py: a second
+    client in plans/crawl.py would send requests without the crawl's auth,
+    cookie jar or retries."""
+    tree = _parse(os.path.join(PKG, "plans", "crawl.py"))
+    mods = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            mods += [a.name for a in n.names]
+        elif isinstance(n, ast.ImportFrom) and n.level == 0 and n.module:
+            mods.append(n.module)
+    assert [m for m in mods
+            if m.split(".")[0] == "urllib" or m.startswith("http.client")
+            or m == "http"] == []

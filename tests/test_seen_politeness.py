@@ -1,11 +1,6 @@
-"""Bloom seen-set pre-filter + politeness/robots operator tests."""
+"""Bloom seen-set pre-filter + politeness schedule operator tests."""
 
-from goscrape_spark.operators.politeness import (
-    apply_robots,
-    parse_robots_txt,
-    robots_rules_df,
-    schedule_politeness,
-)
+from goscrape_spark.operators.politeness import schedule_politeness
 from goscrape_spark.operators.seen import BloomFilter, SeenSet
 
 
@@ -52,25 +47,3 @@ def test_schedule_politeness(spark):
     sched = sorted((r.host, r.intra1, r.not_before_ms) for r in out.collect())
     assert sched == [("a.com", 0, 0), ("a.com", 1, 1000), ("a.com", 2, 2000),
                      ("a.com", 3, 3000), ("b.com", 0, 0), ("b.com", 1, 1000)]
-
-
-def test_parse_robots():
-    txt = """
-# comment
-User-agent: *
-Disallow: /private
-Disallow: /tmp/
-
-User-agent: evilbot
-Disallow: /
-"""
-    assert parse_robots_txt(txt) == ["/private", "/tmp/"]
-
-
-def test_apply_robots(spark):
-    cands = spark.createDataFrame(
-        [("a.com", "/public/x"), ("a.com", "/private/x"), ("b.com", "/private/x")],
-        "host string, path string")
-    rules = robots_rules_df(spark, {"a.com": ["/private"]})
-    kept = {(r.host, r.path) for r in apply_robots(cands, rules).collect()}
-    assert kept == {("a.com", "/public/x"), ("b.com", "/private/x")}
