@@ -123,14 +123,11 @@ def run(argv: list[str], spark=None) -> int:
                 politeness_delay_ms=args.politeness_ms,
                 fetch_robots=args.robots, use_sitemaps=args.sitemaps,
                 headers=parse_headers(args.header), cookies=cookies)
-            pages, live = None, True
-            if args.pages_parquet:
-                pages = spark.read.parquet(args.pages_parquet)
-                live = False
+            pages = spark.read.parquet(args.pages_parquet) \
+                if args.pages_parquet else None
             ckpt = CrawlCheckpoint(args.checkpoint) if args.checkpoint else None
             res = crawl(spark, cfg, pages, use_bloom=args.bloom,
-                        checkpoint=ckpt,
-                        resume=args.resume, live=live)
+                        checkpoint=ckpt, resume=args.resume)
             n = export_output_tree(res.output, args.output or ".")
             if args.savecookiefile:
                 # S4 save-back (main.go:183,231-246): persist the seed

@@ -3,11 +3,11 @@ encode/decode, pure stdlib-zlib + NumPy.
 
 Why this exists: the reference's image recode (C19,
 scraper/images.go:17-99) decodes JPEG/PNG and re-encodes as JPEG at a
-configured quality, keeping the result only if smaller.  Pillow is not
-installed in this sandbox, so without a codec that logic could never
-execute against real bytes.  This module implements just enough of both
-formats — from the public PNG (RFC 2083) and JPEG (ITU T.81, JFIF) specs —
-to make the recode path real:
+configured quality, keeping the result only if smaller.  This is the
+package's one image codec (operators/images.py has no other tier), so
+the recoded bytes are the same on every executor.  It implements just
+enough of both formats — from the public PNG (RFC 2083) and JPEG (ITU
+T.81, JFIF) specs — to make the recode path real:
 
 * PNG: 8-bit depth, color types 0/2/3/4/6, all five scanline filters,
   non-interlaced (Adam7 returns None -> caller keeps the original bytes,
@@ -19,10 +19,6 @@ to make the recode path real:
 
 Alpha is premultiplied onto black exactly like Go's image/jpeg encoder
 sees NRGBA pixels through RGBA() (the reference's recodePNG path).
-
-Production note: this is the correctness tier — a real deployment drops
-Pillow/libjpeg-turbo into the image; `operators/images.py` prefers PIL
-when importable and falls back here.
 """
 
 from __future__ import annotations

@@ -66,6 +66,23 @@ def _regex_filter(path: Column, includes: list[str], excludes: list[str]) -> Col
     return cond
 
 
+def should_download(seed_host: str, max_depth: int, includes: list[str],
+                    excludes: list[str]) -> Column:
+    """shouldURLBeDownloaded's checks apart from the seen lookup
+    (scraper/checks.go:26-72) over ``scheme, host, path, is_asset, depth``
+    columns: F1 http(s) only; F5/F6 a page must be on the seed host and
+    its parent not at the depth limit; F7/F8 the include/exclude regexes
+    over the path.  ``admit`` drops scheme failures before the seen insert
+    and applies the rest after it; the crawl filters the seed's frontier
+    row with all of it."""
+    page_ok = (F.col("host") == F.lit(seed_host))
+    if max_depth != 0:
+        page_ok = page_ok & (F.col("depth") != F.lit(max_depth))
+    return (col_scheme_ok(F.col("scheme"))
+            & F.when(F.col("is_asset"), F.lit(True)).otherwise(page_ok)
+            & _regex_filter(F.col("path"), includes, excludes))
+
+
 def admit(candidates: DataFrame, seen: DataFrame, seed_host: str,
           max_depth: int, includes: list[str],
           excludes: list[str], bloom=None) -> tuple[DataFrame, DataFrame]:
@@ -139,12 +156,7 @@ def admit(candidates: DataFrame, seen: DataFrame, seed_host: str,
                 & probed["might_contain"],
             "left_anti").drop("might_contain")
 
-    page_ok = (F.col("host") == F.lit(seed_host))
-    if max_depth != 0:
-        page_ok = page_ok & (F.col("depth") < F.lit(max_depth))
-    action_ok = F.when(F.col("is_asset"), F.lit(True)).otherwise(page_ok)
-    action_ok = action_ok & _regex_filter(F.col("path"), includes, excludes)
-
-    inserts = inserts.withColumn("survived", action_ok)
+    inserts = inserts.withColumn(
+        "survived", should_download(seed_host, max_depth, includes, excludes))
     survivors = inserts.filter(F.col("survived"))
     return inserts, survivors

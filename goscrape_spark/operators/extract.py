@@ -489,7 +489,7 @@ PROCESSED_SCHEMA = (
 # head of the images queue (scraper/download.go:28-31): a body ref at
 # (P, rank 5) always loses first-wins to the SAME key at (P, rank 3), so
 # those rows are unobservable.  Rank 5's css-discovered refs come later,
-# at sub_rank 1 (plans/crawl._discover_css).
+# at sub_rank 1 (plans/crawl._css_candidates).
 CAND_STAGES = (("link", 1, True, "link"), ("script", 2, True, "script"),
                ("body", 3, True, "body"), ("style", 4, True, "style"),
                ("img", 5, True, "image"), ("a", 6, False, "a"))

@@ -7,22 +7,21 @@ decode error keeps the original bytes (images.go:66-68 returns nil -> keep
 data), and the recoded bytes replace the original only when strictly
 smaller ("only use the new file if it is smaller", images.go:70-79).
 
-Codec: Pillow when importable (the production tier), else the vendored
-pure-NumPy codec (functions/imagecodec.py — PNG + baseline JPEG, built
-from the public T.81/RFC-2083 specs) so the recode logic executes against
-real bytes even in this Pillow-less sandbox.  Progressive JPEG / exotic
-PNG variants decode to None under the vendored tier and pass through,
+Codec: one, the vendored pure-NumPy codec (functions/imagecodec.py — PNG
++ baseline JPEG, built from the public T.81/RFC-2083 specs), so the
+recoded bytes do not depend on what an executor has installed.
+Progressive JPEG / exotic PNG variants decode to None and pass through,
 exactly the reference's decode-error behavior.
 
-Documented vendored-tier divergences from Go image/png (both are
-keep-original-bytes pass-throughs, so output differs from the reference
-only in SIZE, never in correctness of served content):
+Documented divergences from Go image/png (both are keep-original-bytes
+pass-throughs, so output differs from the reference only in SIZE, never
+in correctness of served content):
 
 * PNGs with > 8 MB (``functions.imagecodec._SLOW_FILTER_BYTE_CAP``) of
   Average/Paeth-filtered scanlines are NOT recoded (the per-byte Python
   unfilter would pin an executor core); the reference would recode them.
   Large photographic PNGs commonly use Paeth, so offline-mirror sizes can
-  exceed the reference's until Pillow is installed (PIL tier has no cap).
+  exceed the reference's.
 * PNGs whose IHDR implies > 256 MB of raw scanline data are refused, and
   IDAT inflation is hard-bounded at the IHDR-derived size (zlib-bomb
   guard; untrusted crawl payloads must not allocate GBs in an executor).
@@ -30,40 +29,12 @@ only in SIZE, never in correctness of served content):
 
 from __future__ import annotations
 
-import io
 from typing import Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.filetype import sniff_extension
-
-try:  # pragma: no cover - environment probe
-    from PIL import Image  # noqa: F401
-    PIL_AVAILABLE = True
-except ImportError:
-    PIL_AVAILABLE = False
-
-
-def _recode_pil(data: bytes, quality: int) -> bytes | None:
-    from PIL import Image as _Image
-
-    try:
-        img = _Image.open(io.BytesIO(data))
-        buf = io.BytesIO()
-        img.convert("RGB").save(buf, format="JPEG", quality=quality)
-        return buf.getvalue()
-    except Exception:
-        return None
-
-
-def _recode_vendored(data: bytes, quality: int, ext: str) -> bytes | None:
-    from ..functions.imagecodec import jpeg_decode, jpeg_encode, png_decode
-
-    arr = png_decode(data) if ext == "png" else jpeg_decode(data)
-    if arr is None:
-        return None
-    return jpeg_encode(arr, quality)
 
 
 def recode_image_bytes(data: bytes, quality: int) -> bytes:
@@ -75,12 +46,11 @@ def recode_image_bytes(data: bytes, quality: int) -> bytes:
     ext = sniff_extension(data)
     if ext not in ("jpg", "png"):
         return data
-    if PIL_AVAILABLE:
-        recoded = _recode_pil(data, quality)
-    else:
-        recoded = _recode_vendored(data, quality, ext)
-    if recoded is None:
+    from ..functions.imagecodec import jpeg_decode, jpeg_encode, png_decode
+    arr = png_decode(data) if ext == "png" else jpeg_decode(data)
+    if arr is None:
         return data
+    recoded = jpeg_encode(arr, quality)
     return recoded if len(recoded) < len(data) else data
 
 

@@ -138,8 +138,8 @@ def extract_media_features(media: DataFrame, dim: int = 16,
 
     decode='real': image payloads decode through the vendored PNG/JPEG
     codec and audio payloads through the vendored RIFF/WAV PCM codec,
-    yielding REAL pixel/signal statistics (status 'real'; operators/
-    images.py prefers PIL upstream when importable); images/audio the
+    yielding REAL pixel/signal statistics (status 'real', the codec
+    operators/images.py recodes with); images/audio the
     vendored tiers can't decode (progressive JPEG, mp3/ogg/flac) fall
     back to the hash features with status 'undecodable'; video stays
     hash-featured with status 'stub' — ffmpeg is absent from this

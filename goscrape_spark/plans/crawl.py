@@ -22,10 +22,13 @@ seen-set (SURVEY §3.4):
 * admission is the first-wins window + seen anti-join (operators/admission);
 * CSS-discovered images (cssProcessor, scraper/download.go:104-131) create an
   in-epoch discovery dependency: link assets must be fetched before their
-  ``url()`` refs become candidates.  A short fixpoint loop re-runs admission
-  with the discovered candidates added; it converges immediately unless a
-  css-discovered image steals a dedup key from a later page's link asset
-  (possible but degenerate; the loop handles it exactly).
+  ``url()`` refs become candidates.  As the reference's cssProcessor runs
+  on the bytes ``downloadAsset`` fetched, discovery reads the ok link rows
+  of the fileExists chain, run first for the paths that hold a link asset.
+  A short fixpoint loop re-runs admission with the discovered candidates
+  added; it converges immediately unless a css-discovered image steals a
+  dedup key from a later page's link asset (possible but degenerate; the
+  loop handles it exactly).
 
 Scale design (north_rule): frontier/seen shuffles hash on ``dedup_key`` /
 ``host``; per-epoch state is checkpointed (localCheckpoint for tests,
@@ -46,14 +49,14 @@ for ``local_frame``.  tests/test_local_frames.py fails on any other
 An epoch stage is materialized once (``_localckpt``).  Counts and
 driver-side harvests ride a pyspark ``Observation`` on that checkpoint
 (``_observed``): the allowed/deferred asset counts and link signature on
-``assets_allowed``, the inserted-key count on ``inserts``, the frontier
-count on ``next_pages``, the Set-Cookie snapshots on the fetch checkpoint,
-the seed's response URL (the depth-0 redirect rebase) on epoch 0's
-``fetched`` — never a separate ``count``/``isEmpty``/``first``/``collect`` job.  A
-fetch returns its input rows with the fetch columns added, so no join puts
-the outcomes back, and its one checkpoint carries the caller's label
-(``fetched``, ``asset_round``, ``css_fetch``, ``sitemap_fetch``,
-``robots_fetch``).
+``assets_allowed``, the inserted-key and surviving-page counts on
+``inserts``, the frontier count on ``next_pages``, the Set-Cookie snapshots
+on the fetch checkpoint, the seed's response URL (the depth-0 redirect
+rebase) on epoch 0's ``fetched`` — never a separate
+``count``/``isEmpty``/``first``/``collect`` job.  A fetch returns its input
+rows with the fetch columns added, so no join puts the outcomes back, and
+its one checkpoint carries the caller's label (``fetched``,
+``asset_round``, ``sitemap_fetch``, ``robots_fetch``).
 
 Overlap.  ``Crawler.run`` starts helper threads (``_deferred``, a pyspark
 ``InheritableThread``, so their jobs keep the caller's job group) for work
@@ -89,7 +92,7 @@ from __future__ import annotations
 
 import time
 from dataclasses import dataclass, field
-from functools import partial
+from functools import partial, reduce
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -99,7 +102,7 @@ from pyspark.sql.window import Window
 from ..config import CrawlConfig
 from ..functions.urlmath import get_file_path
 from ..functions.urlnorm import GoURL, parse_url
-from ..operators.admission import ORDER_COLS, admit
+from ..operators.admission import ORDER_COLS, admit, should_download
 from ..operators.cssx import css_extract
 from ..operators.extract import (
     extract_spans_df,
@@ -181,7 +184,7 @@ class CrawlResult:
 class Crawler:
     """Distributed crawler.  One fetch contract, two sources
     (sources/fetch.py): a mock-web ``pages`` DataFrame (J2, the reference's
-    own test seam) or, with ``live=True``, real per-host HTTP.  The source
+    own test seam) or, when none is given, real per-host HTTP.  The source
     is chosen here, once; the crawl loop never asks which it has: page,
     asset, stylesheet, sitemap and robots.txt requests all go through
     ``_fetch_observed``."""
@@ -192,13 +195,10 @@ class Crawler:
 
     def __init__(self, spark: SparkSession, config: CrawlConfig,
                  pages: DataFrame | None = None, use_bloom: bool = False,
-                 checkpoint=None, max_epochs: int = 1000,
-                 live: bool = False):
+                 checkpoint=None, max_epochs: int = 1000):
         self.spark = spark
         self.config = config
-        if pages is None and not live:
-            raise ValueError("need a pages fixture or live=True")
-        if live:
+        if pages is None:
             self._source = self._http_source
         else:
             from ..sources.fetch import fixture_fetch_df
@@ -237,9 +237,6 @@ class Crawler:
         # checkpoints
         self._fs_obs = None
         self._ins_obs = None
-        # this epoch's stylesheet fetches (_discover_css), reused by the
-        # asset fetch so a link asset is fetched once per epoch
-        self._css_fetch_cache: DataFrame | None = None
         # S4: session cookie jar state, keyed (domain, path, name); starts
         # from the configured cookies and absorbs live Set-Cookie snapshots
         # per fetch round (the reference's shared cookiejar.Jar,
@@ -480,17 +477,23 @@ class Crawler:
             resumed = self.checkpoint.resume_state(spark)
 
         if resumed is None:
-            # seed admission, driver-side (scraper/scraper.go:157): the seed
-            # is one row; its key is inserted before everything else.
+            # seed admission (scraper/scraper.go:157): the seed is one row;
+            # its key is inserted before everything else.
             from ..functions.urlnorm import dedup_key as py_dedup_key
             seed_key = py_dedup_key(self.seed, self.seed_host)
             self._seed_key = seed_key  # pre-rebase key, needed at commit time
-            if not self._seed_admitted():
-                raise ValueError("start page is excluded from downloading")
             seen = local_frame(spark, [(seed_key, 0)],
                                "dedup_key string, epoch int")
-            frontier = local_frame(spark, [(self.seed.string(), 0, 0)],
-                                   "url string, depth int, seq bigint")
+            # the seed passes every candidate's checks (Java regex
+            # included): an excluded seed reaches the first fetch as no
+            # row, and _fetch raises
+            u = self.seed
+            frontier = local_frame(
+                spark, [(u.string(), 0, 0, u.scheme, u.host, u.path, False)],
+                "url string, depth int, seq bigint, scheme string, "
+                "host string, path string, is_asset boolean").filter(
+                should_download(self.seed_host, cfg.max_depth, cfg.includes,
+                                cfg.excludes)).select("url", "depth", "seq")
             epoch = 0
             next_seq = 1
             n_frontier = 1
@@ -539,7 +542,6 @@ class Crawler:
         while epoch < self.max_epochs:
             if n_frontier == 0:
                 break
-            self._css_fetch_cache = None  # css-fetch cache is per-epoch
 
             # Adaptive parallelism, sized by DATA not cores: shuffle stages
             # in the loop move small metadata rows, so partition counts
@@ -606,9 +608,9 @@ class Crawler:
                 if sm_cands is not None:
                     candidates = candidates.unionByName(sm_cands)
 
-            inserts, survivors, assets_allowed, assets_deferred = \
+            inserts, survivors, ranked, link_chain = \
                 self._admission_fixpoint(candidates, seen, page_paths_d,
-                                         written)
+                                         written, epoch)
 
             # record fetches: the page fetches of this epoch + admitted
             # assets.  Pages are all seed-host (F5), so the robots
@@ -648,9 +650,11 @@ class Crawler:
                            .withColumn("epoch", F.lit(epoch + 1))
 
             def _assets_branch():
-                # every round is checkpointed by its fetch
-                af = self._fetch_assets(assets_allowed, epoch,
-                                        deferred=assets_deferred)
+                # every round is checkpointed by its fetch; the paths that
+                # hold a link asset were fetched by CSS discovery
+                af = self._fetch_assets(ranked, False, epoch)
+                if link_chain is not None:
+                    af = link_chain.unionByName(af)
                 # slim written-delta checkpoint: the lazy union chain used
                 # to reference the BODY-bearing asset_fetch blocks, so
                 # every later epoch's fileExists anti-join re-deserialized
@@ -666,14 +670,16 @@ class Crawler:
             def _seq_branch():
                 # next frontier: page survivors ordered by the composite
                 # key (W2).  global_sequence range-partitions + offsets
-                # instead of a single-task global window once the epoch is
-                # wide enough.  The row count rides the checkpoint's job.
+                # instead of a single-task global window once the pages it
+                # orders (counted by inserts) are many.  The row count
+                # rides the checkpoint's job.
                 from ..operators.ranking import global_sequence
+                n_pages = self._ins_obs.get["n_pages"]
                 seq_df = global_sequence(
                     survivors.filter(~F.col("is_asset"))
                              .select("url", "depth", *ORDER_COLS),
                     ORDER_COLS, start=next_seq, out_col="seq",
-                    parts=parts)
+                    parts=min(default_parts, n_pages // 2000 + 1))
                 np_df, obs = _observed(
                     seq_df.select("url",
                                   (F.col("depth") + 1).alias("depth"),
@@ -799,11 +805,6 @@ class Crawler:
                 if d.get("expires") is None or d["expires"] > now]
 
     # ------------------------------------------------------------------
-    def _seed_admitted(self) -> bool:
-        from ..plans.simulator import Simulator
-        sim = Simulator(config=self.config, pages={})
-        return sim.should_download(self.seed, 0, False)
-
     # Overlap INDEPENDENT epoch actions (guide §2.6: actions are only
     # sequential because driver code calls them sequentially): each helper's
     # jobs back-fill executors freed by the others' stage tails, and the
@@ -865,17 +866,6 @@ class Crawler:
         self.stage_secs[label] = self.stage_secs.get(label, 0.0) + dt
         return out
 
-    def _do_fetch_cached(self, rows: DataFrame, label: str) -> DataFrame:
-        """Fetch that serves this epoch's css-discovery fetches from the
-        in-epoch cache (one fetch per URL per epoch)."""
-        if self._css_fetch_cache is None:
-            return self._do_fetch(rows, label=label)
-        cache = self._css_fetch_cache
-        hit = rows.join(cache, on="url", how="inner")
-        miss = rows.join(cache.select("url"), on="url", how="left_anti")
-        fetched_miss = self._do_fetch(miss, label=label)
-        return fetched_miss.unionByName(hit.select(*fetched_miss.columns))
-
     def _http_source(self, rows: DataFrame) -> DataFrame:
         from ..sources.fetch import http_fetch_df
         return http_fetch_df(
@@ -934,8 +924,11 @@ class Crawler:
     def _rebase_seed(self, fetched: DataFrame, row) -> DataFrame:
         """Depth-0 redirect rebase (scraper/scraper.go:193-198): the seed's
         response URL becomes the base URL and host for the whole crawl.
-        ``row`` is the seed's fetched (url, resp_url, status)."""
-        if row is None or row.status != "ok":
+        ``row`` is the seed's fetched (url, resp_url, status), None when
+        the seed failed its admission checks."""
+        if row is None:
+            raise ValueError("start page is excluded from downloading")
+        if row.status != "ok":
             return fetched
         if row.resp_url and row.resp_url != row.url:
             new_u = parse_url(row.resp_url)
@@ -950,34 +943,38 @@ class Crawler:
 
     # ------------------------------------------------------------------
     def _admission_fixpoint(self, candidates: DataFrame, seen: DataFrame,
-                            page_paths_d, written: DataFrame):
+                            page_paths_d, written: DataFrame, epoch: int):
         """Admission + in-epoch CSS discovery fixpoint (see module doc).
 
-        Returns ``(inserts, survivors, assets_allowed, assets_deferred)``:
-        survivors drive the seen inserts and the next frontier;
-        ``assets_allowed`` are the asset survivors that pass the fileExists
-        check (scraper/download.go:76-79) and are actually fetched.  CSS
-        discovery runs from the ALLOWED link assets only — a link asset
-        skipped because its file already exists is never fetched, so its
-        url() refs are never discovered, exactly like the reference.
+        Returns ``(inserts, survivors, ranked, link_chain)``: survivors
+        drive the seen inserts and the next frontier; ``ranked`` is the
+        fileExists check of the asset survivors (``_fs_admit``) and
+        ``link_chain`` the fetched chain of its link-bearing paths (None
+        when there are none), whose ok link rows CSS discovery reads: a
+        stylesheet is fetched once, in the wave where the reference
+        fetches it, and not at all when its file exists.
 
-        Stability is detected by an order-insensitive signature of the
-        allowed link-asset set (count + bit_xor of row hashes), observed
-        during the assets_allowed checkpoint — no extra job and no
-        driver-side materialization of the set itself."""
+        Stability is detected by an order-insensitive signature of every
+        row on a link-bearing path, allowed or deferred (count + bit_xor
+        of row hashes), observed during the assets_allowed checkpoint — no
+        extra job and no driver-side materialization of the set itself.
+        Paths do not interact in the chain, so when the signature repeats,
+        the previous round's chain is the chain for these rows."""
         cfg = self.config
-        css_cands = None
-        prev_sig: tuple | None = None
+        css_cands = link_chain = prev_sig = None
         for _ in range(10):
             all_cands = candidates if css_cands is None \
                 else candidates.unionByName(css_cands)
             inserts, survivors = admit(all_cands, seen, self.seed_host,
                                        cfg.max_depth, cfg.includes,
                                        cfg.excludes, bloom=self.bloom)
-            # the inserted-key count (the epoch's seen delta) rides the
-            # checkpoint's job
+            # the inserted-key count (the epoch's seen delta) and the
+            # surviving page count (sizes the next frontier's sequence)
+            # ride the checkpoint's job
             inserts, self._ins_obs = _observed(
-                inserts, F.count(F.lit(1)).alias("n"))
+                inserts, F.count(F.lit(1)).alias("n"),
+                F.count(F.when(F.col("survived") & ~F.col("is_asset"), 1))
+                .alias("n_pages"))
             inserts = self._localckpt(inserts, "inserts")
             survivors = inserts.filter(F.col("survived"))
             if cfg.fetch_robots:
@@ -993,23 +990,22 @@ class Crawler:
             if self.robots_rfc is not None:
                 from ..operators.politeness import apply_robots_rfc
                 survivors = apply_robots_rfc(survivors, self.robots_rfc)
-            allowed, deferred = self._fs_admit(
-                survivors.filter(F.col("is_asset")), page_paths_d.get(),
-                written)
-            link_surv = allowed.filter(F.col("stage_rank") == 1)
+            ranked = self._fs_admit(survivors.filter(F.col("is_asset")),
+                                    page_paths_d.get(), written)
             # the signature rode the assets_allowed checkpoint's job
             # (Observation) — no extra driver action here
             m = self._fs_obs.get
             sig = (m["n_link"], m["h_link"])
-            if sig[0] == 0 and css_cands is None:
-                return inserts, survivors, allowed, deferred
-            if prev_sig == sig:
-                return inserts, survivors, allowed, deferred
+            if sig[0] == 0:
+                return inserts, survivors, ranked, None
+            if sig == prev_sig:
+                break
             prev_sig = sig
-            css_cands = self._discover_css(link_surv)
+            link_chain = self._fetch_assets(ranked, True, epoch)
+            css_cands = self._css_candidates(link_chain)
             if css_cands is None:
-                return inserts, survivors, allowed, deferred
-        return inserts, survivors, allowed, deferred
+                break
+        return inserts, survivors, ranked, link_chain
 
     # ------------------------------------------------------------------
     @staticmethod
@@ -1029,7 +1025,7 @@ class Crawler:
                         F.lit(0).alias("intra2"))
 
     def _fs_admit(self, assets: DataFrame, page_paths: DataFrame,
-                  written: DataFrame):
+                  written: DataFrame) -> DataFrame:
         """fileExists admission (scraper/download.go:76-79): drop admitted
         assets whose output path was already written by (a) any earlier
         epoch, (b) an ok page of this epoch stored before the asset's
@@ -1045,8 +1041,9 @@ class Crawler:
 
         Every asset row carries its output ``file_path`` from the pass
         that emitted it (operators/extract.page_candidates,
-        ``_discover_css``).  Returns ``(allowed, deferred)``; ``deferred``
-        is None when no candidate was deferred."""
+        ``_css_candidates``).  Returns the ``assets_allowed`` checkpoint
+        of the kept candidates, flagged ``_defer`` (not first on its path)
+        and ``_link_path`` (its path keeps a link asset)."""
         pos = self._pos()
         page_w = page_paths.select("file_path", self._page_pos().alias("pos"))
 
@@ -1058,8 +1055,8 @@ class Crawler:
         # _defer for _fetch_assets' failure-chain waves.  If the path's
         # first asset comes after its first page write, so do all the
         # others — hence min over ALL the path's assets is the first
-        # remaining one.  Allowed and deferred are filters of the single
-        # assets_allowed checkpoint; its Observation counts both.
+        # remaining one, and likewise the path keeps a link asset iff its
+        # first link asset precedes the first page write.
         by_path = Window.partitionBy("file_path")
         is_asset = F.col("_is_asset")
         rows = (assets.join(written, "file_path", "left_anti")
@@ -1068,42 +1065,46 @@ class Crawler:
                                            F.col("pos").alias("_pos"),
                                            F.lit(False).alias("_is_asset")),
                              allowMissingColumns=True))
-        first_page = F.min(F.when(~is_asset, F.col("_pos"))).over(by_path)
-        first_asset = F.min(F.when(is_asset, F.col("_pos"))).over(by_path)
-        ranked = (rows.withColumn("_first_page", first_page)
-                  .withColumn("_defer", F.col("_pos") != first_asset)
-                  .filter(is_asset & (F.col("_first_page").isNull()
-                                      | (F.col("_pos") < F.col("_first_page"))))
-                  .drop("_pos", "_is_asset", "_first_page"))
-        defer = F.col("_defer")
-        ranked = self._localckpt(self._observe_allowed(ranked, kept=~defer),
-                                 "assets_allowed")
-        deferred = None
-        if self._fs_obs.get["n_deferred"]:
-            deferred = ranked.filter(defer).drop("_defer")
-        return ranked.filter(~defer).drop("_defer"), deferred
+        def first(cond):
+            return F.min(F.when(cond, F.col("_pos"))).over(by_path)
 
-    def _observe_allowed(self, df: DataFrame, kept) -> DataFrame:
-        """Attach free aggregate metrics to the assets_allowed checkpoint
-        (pyspark Observation rides the checkpoint's own job): the allowed
-        (``kept``) row count (sizes the politeness schedule), the
-        deferred row count (is there a failure chain to run?) and
-        the fixpoint's link-asset signature over the allowed rows.
-        bit_xor, not sum: the signature only needs order-insensitivity,
-        and summing xxhash64 values overflows under ANSI mode."""
-        link = kept & (F.col("stage_rank") == 1)
-        out, self._fs_obs = _observed(
-            df,
-            F.count(F.when(kept, 1)).alias("n_allowed"),
-            F.count(F.when(~kept, 1)).alias("n_deferred"),
+        def before_page(c):
+            return F.col("_first_page").isNull() | (c < F.col("_first_page"))
+
+        # one select, so the three minima share one Window operator
+        ranked = (rows.select(
+                      "*", first(~is_asset).alias("_first_page"),
+                      first(is_asset).alias("_first_asset"),
+                      first(is_asset & (F.col("stage_rank") == 1))
+                      .alias("_first_link"))
+                  .withColumn("_defer", F.col("_pos") != F.col("_first_asset"))
+                  .withColumn("_link_path",
+                              F.col("_first_link").isNotNull()
+                              & before_page(F.col("_first_link")))
+                  .filter(is_asset & before_page(F.col("_pos")))
+                  .drop("_pos", "_is_asset", "_first_page", "_first_asset",
+                        "_first_link"))
+        # free aggregates on the checkpoint's own job: the allowed row
+        # count (sizes the politeness schedule), the deferred counts (is
+        # there a failure chain to run in each part?) and the fixpoint's
+        # signature over every row on a link-bearing path.  bit_xor, not
+        # sum: the signature only needs order-insensitivity, and summing
+        # xxhash64 values overflows under ANSI mode.
+        defer, link = F.col("_defer"), F.col("_link_path")
+        ranked, self._fs_obs = _observed(
+            ranked,
+            F.count(F.when(~defer, 1)).alias("n_allowed"),
+            F.count(F.when(defer & link, 1)).alias("n_deferred_link"),
+            F.count(F.when(defer & ~link, 1)).alias("n_deferred_rest"),
             F.count(F.when(link, 1)).alias("n_link"),
-            F.bit_xor(F.when(link, F.xxhash64("parent_seq", "intra1",
-                                              "url"))).alias("h_link"))
-        return out
+            F.bit_xor(F.when(link, F.xxhash64(*ORDER_COLS, "url")))
+            .alias("h_link"))
+        return self._localckpt(ranked, "assets_allowed")
 
-    def _discover_css(self, link_surv: DataFrame) -> DataFrame | None:
-        """cssProcessor discovery (scraper/download.go:104-131): fetch each
-        surviving link asset and emit its url() refs as image candidates.
+    def _css_candidates(self, chain: DataFrame) -> DataFrame | None:
+        """cssProcessor discovery (scraper/download.go:104-131): the url()
+        refs of every link asset the fileExists chain fetched ok, as image
+        candidates.
 
         The reference enqueues the RAW parsed src (css/css.go:44-52 passes
         url.Parse(src), never resolved against the css file), so relative
@@ -1111,21 +1112,11 @@ class Crawler:
         WITHOUT a seen insert — only absolute http(s) url() refs are ever
         fetched.  Candidates get sub_rank 1 so they sort after the page's
         body+img image entries but before the next page's stages."""
-        meta = link_surv.select("url", "page_url", "parent_seq",
-                                F.col("intra1").alias("link_intra"), "depth")
-        link_fetch = self._do_fetch(meta.select("url").distinct(),
-                                    label="css_fetch")
-        # cache the fetches (checkpointed by the fetch) so _fetch_assets
-        # reuses the bodies instead of re-fetching every stylesheet (the
-        # reference fetches a link asset once and runs the cssProcessor on
-        # that body)
-        self._css_fetch_cache = link_fetch \
-            if self._css_fetch_cache is None \
-            else self._css_fetch_cache.unionByName(link_fetch) \
-                     .dropDuplicates(["url"])
-        fetched = meta.join(link_fetch.filter(F.col("status") == "ok")
-                            .select("url", "body"),
-                            on="url", how="inner")
+        fetched = (chain.filter((F.col("status") == "ok")
+                                & (F.col("stage_rank") == 1))
+                   .select("url", "page_url", "parent_seq",
+                           F.col("intra1").alias("link_intra"), "depth",
+                           "body"))
 
         seed_host = self.seed_host
         outdir = self.config.output_directory
@@ -1192,20 +1183,29 @@ class Crawler:
             F.col("parent_seq"), F.col("stage_rank"), F.col("sub_rank"),
             F.col("intra1"), F.col("intra2"), F.col("depth"),
             F.lit(epoch).alias("epoch"), F.col("stage"),
-            F.col("body"), F.col("file_path"))
+            F.col("body"), F.col("file_path"), F.col("page_url"))
 
-    def _fetch_assets(self, allowed: DataFrame, epoch: int,
-                      deferred: DataFrame | None = None) -> DataFrame:
-        """Fetch the fileExists-allowed assets, then re-admit deferred
+    def _fetch_assets(self, ranked: DataFrame, part: bool,
+                      epoch: int) -> DataFrame:
+        """Run the fileExists chain for the paths of ``ranked``
+        (``_fs_admit``) that hold a kept link asset (``part`` True) or for
+        the others: fetch the allowed assets, then re-admit deferred
         same-path candidates whose predecessors all failed, one wave per
-        chain level — the exact sequential fileExists semantics."""
+        chain level — the exact sequential fileExists semantics.  The
+        first wave is scheduled over every allowed row, so a row's
+        ``not_before_ms`` does not depend on the part that fetches it."""
+        defer = F.col("_defer")
+        in_part = F.col("_link_path") if part else ~F.col("_link_path")
+        n_deferred = self._fs_obs.get[
+            "n_deferred_link" if part else "n_deferred_rest"]
+        deferred = ranked.filter(in_part & defer) if n_deferred else None
         rounds: list[DataFrame] = []
-        cur = self._schedule(allowed)
+        cur = self._schedule(ranked.filter(~defer)).filter(in_part)
         while True:
             # the fetch returns (and checkpoints) the scheduled rows
             # themselves: no join back, no second checkpoint
             fetched = self._asset_log_select(
-                self._do_fetch_cached(cur, label="asset_round"), epoch)
+                self._do_fetch(cur, label="asset_round"), epoch)
             rounds.append(fetched)
             if deferred is None:
                 break
@@ -1222,10 +1222,7 @@ class Crawler:
             j = deferred.join(first, "file_path", "left")
             cur = self._schedule(j.filter(pos == F.col("_first")).drop("_first"))
             deferred = j.filter(pos != F.col("_first")).drop("_first")
-        out = rounds[0]
-        for r in rounds[1:]:
-            out = out.unionByName(r)
-        return out
+        return reduce(DataFrame.unionByName, rounds)
 
     def _asset_outputs(self, asset_fetch: DataFrame, epoch: int) -> DataFrame:
         quality = self.config.image_quality
@@ -1288,8 +1285,9 @@ def _union_all(dfs: list[DataFrame], empty: DataFrame) -> DataFrame:
     return out
 
 
-def crawl(spark: SparkSession, config: CrawlConfig, pages: DataFrame,
-          resume: bool = False, **kwargs) -> CrawlResult:
+def crawl(spark: SparkSession, config: CrawlConfig,
+          pages: DataFrame | None, resume: bool = False,
+          **kwargs) -> CrawlResult:
     """Library entry point (SURVEY §3.2): the Spark equivalent of
-    ``scraper.New(...)`` + ``Start``."""
+    ``scraper.New(...)`` + ``Start``.  ``pages=None`` crawls over HTTP."""
     return Crawler(spark, config, pages, **kwargs).run(resume=resume)

@@ -11,9 +11,8 @@ iterator, different root).
 
 Resume note: the reference re-run skips an asset whose file exists
 (download.go:76-79) but always overwrites pages ("always update",
-scraper.go:266).  ``overwrite_pages_only=True`` reproduces that; the engine's
-checkpoint resume makes it mostly moot (previously-seen URLs are never
-refetched at all).
+scraper.go:266), and so does this export; the engine's checkpoint resume
+makes it mostly moot (previously-seen URLs are never refetched at all).
 
 Serve note (S9, scraper/server.go): the exported tree is plain static files —
 ``python -m http.server --directory <root>`` covers the reference's
@@ -27,15 +26,12 @@ import os
 from pyspark.sql import DataFrame
 
 
-def export_output_tree(output: DataFrame, root: str,
-                       overwrite_pages_only: bool = True) -> int:
+def export_output_tree(output: DataFrame, root: str) -> int:
     """Write the output table to ``root``; returns files written."""
     written = 0
     for row in output.select("file_path", "body", "is_page").toLocalIterator():
         path = os.path.join(root, row.file_path)
-        if not row.is_page and not overwrite_pages_only and os.path.exists(path):
-            continue
-        if row.is_page is False and os.path.exists(path) and overwrite_pages_only:
+        if not row.is_page and os.path.exists(path):
             continue  # assets keep the existing file (download.go:76-79)
         os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
         with open(path, "wb") as f:

@@ -112,7 +112,7 @@ def test_live_crawl_carries_session_across_epochs(spark, server):
     """Epoch 0 fetches '/', which sets the session cookie; epoch 1's fetch
     of '/gated' must present it (reference: one shared jar on the client)."""
     COOKIES_SEEN.clear()
-    res = crawl(spark, CrawlConfig(url=f"{server}/"), pages=None, live=True)
+    res = crawl(spark, CrawlConfig(url=f"{server}/"), pages=None)
     assert res.seen_set() == {"/", "/gated"}
     assert COOKIES_SEEN["/gated"] == "session=tok123"
     # the gated page's SAVED body proves the cookie was on the wire

@@ -124,6 +124,29 @@ def test_parity_css_discovered_images(spark):
                         "https://cdn.other.net/far.png"}
 
 
+def test_parity_css_behind_failed_same_path_stylesheet(spark):
+    # two stylesheet links share one output path: ?v=1 is missing, so the
+    # fileExists chain (download.go:76-79) fetches ?v=2, and the reference
+    # runs the cssProcessor on the bytes it just fetched
+    # (download.go:104-131): the ref in ?v=2 is fetched in the images stage
+    pages = {
+        "https://example.org/": (
+            '<link href="https://cdn.x/s.css?v=1" rel="stylesheet">'
+            '<link href="https://cdn.x/s.css?v=2" rel="stylesheet">'),
+        "https://cdn.x/s.css?v=2":
+            "body { background: url(https://cdn.x/bg.png); }",
+        "https://cdn.x/bg.png": "BG",
+    }
+    sim, res = assert_parity(spark, CrawlConfig(url="https://example.org/"),
+                             pages)
+    assert [(f.url, f.status) for f in sim.fetches] == [
+        ("https://example.org/", "ok"),
+        ("https://cdn.x/s.css?v=1", "missing"),
+        ("https://cdn.x/s.css?v=2", "ok"),
+        ("https://cdn.x/bg.png", "ok"),
+    ]
+
+
 def test_parity_file_exists_skip(spark):
     """fileExists admission (scraper/download.go:76-79): an admitted asset
     whose output path was already written is neither fetched nor logged.

@@ -53,7 +53,7 @@ def server():
 
 def test_live_crawl_end_to_end(spark, server, tmp_path):
     host = server.split("//")[1]
-    res = crawl(spark, CrawlConfig(url=f"{server}/"), pages=None, live=True)
+    res = crawl(spark, CrawlConfig(url=f"{server}/"), pages=None)
     assert res.seen_set() == {"/", "/page2", "/page3", "/site.css",
                               "/logo.png", "/bg.png"}
     order = [(r.url, r.kind) for r in res.ordered_fetches()]
@@ -100,8 +100,7 @@ def test_live_crawl_job_budget(spark, server, mode):
     group = f"test-crawl-job-budget-{mode}"
     sc.setJobGroup(group, f"{mode} crawl job budget")
     try:
-        crawl(spark, CrawlConfig(url=f"{base}/"), pages=pages,
-              live=pages is None)
+        crawl(spark, CrawlConfig(url=f"{base}/"), pages=pages)
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description",
                     "spark.job.interruptOnCancel"):

@@ -85,7 +85,7 @@ def test_live_file_exists_matches_oracle(spark, hosts, mode):
     cfg = CrawlConfig(url=f"{site}/")
     sim = crawl_sequential(cfg, pages)
     if mode == "live":
-        res = crawl(spark, cfg, pages=None, live=True)
+        res = crawl(spark, cfg, pages=None)
     else:
         res = crawl(spark, cfg, pages_df(spark, pages))
 

@@ -1,9 +1,10 @@
 """Source guards for the package's configuration and fetch surfaces.
 
 Behaviour is set through ``CrawlConfig`` and the CLI, never through
-``GOSCRAPE_*`` environment variables; and the crawl plan sends no request
-of its own: every URL, robots.txt included, goes through the fetch sources
-in sources/fetch.py."""
+``GOSCRAPE_*`` environment variables; the crawl plan sends no request of
+its own: every URL, robots.txt included, goes through the fetch sources in
+sources/fetch.py; and it does not import the sequential oracle it is
+tested against."""
 
 import ast
 import os
@@ -83,3 +84,22 @@ def test_crawl_plan_imports_no_http_client():
     assert [m for m in mods
             if m.split(".")[0] == "urllib" or m.startswith("http.client")
             or m == "http"] == []
+
+
+def test_crawl_plan_does_not_import_the_oracle():
+    """plans/simulator.py is the sequential model the crawl is checked
+    against; a production check borrowed from it (the seed's include and
+    exclude patterns once went through its Python ``re``) would judge
+    with different rules than the crawl's Java ``rlike``."""
+    tree = _parse(os.path.join(PKG, "plans", "crawl.py"))
+    mods = []
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            mods += [a.name for a in n.names]
+        elif isinstance(n, ast.ImportFrom):
+            # resolve relative imports against goscrape_spark.plans
+            base = ["goscrape_spark", "plans"][:max(0, 3 - n.level)] \
+                if n.level else []
+            mod = ".".join(base + ([n.module] if n.module else []))
+            mods += [mod] + [f"{mod}.{a.name}" for a in n.names]
+    assert [m for m in mods if m.endswith("plans.simulator")] == []

@@ -62,7 +62,7 @@ def test_robots_txt_request_carries_basic_auth(spark):
         base = f"http://127.0.0.1:{srv.server_port}"
         cfg = CrawlConfig(url=f"{base}/", username=USER, password=PASSWORD,
                           fetch_robots=True)
-        res = crawl(spark, cfg, pages=None, live=True)
+        res = crawl(spark, cfg, pages=None)
         paths = [p for p, _ in log]
         assert paths.count("/robots.txt") == 1
         assert not any(p.startswith("/private/") for p in paths), log

@@ -155,7 +155,7 @@ def test_live_crawl_fetches_and_honors_robots(spark, robots_server):
 
     cfg = CrawlConfig(url=f"{robots_server}/",
                       user_agent="goscrape/6.6", fetch_robots=True)
-    res = crawl(spark, cfg, pages=None, live=True)
+    res = crawl(spark, cfg, pages=None)
     fetched = {r.url.split(robots_server)[1] for r in res.ordered_fetches()}
     assert fetched == {"/", "/private/ok.html", "/pub.html"}
     # robots-blocked URLs are still inserted before rejection
@@ -330,7 +330,7 @@ def test_live_crawl_delay_spacing_measured():
         spark = get_spark("robots-delay-test")
         cfg = CrawlConfig(url=f"http://127.0.0.1:{srv.server_port}/",
                           fetch_robots=True)
-        res = crawl(spark, cfg, pages=None, live=True)
+        res = crawl(spark, cfg, pages=None)
         assert len(res.ordered_fetches()) == 4
         # epoch 2 fetches a,b,c in one host batch: two consecutive gaps
         epoch2 = sorted(stamps)[1:]
@@ -392,7 +392,7 @@ def test_live_cross_host_assets_honor_their_hosts_robots(spark):
     try:
         cfg = CrawlConfig(url=f"http://127.0.0.1:{seed.server_port}/",
                           fetch_robots=True)
-        res = crawl(spark, cfg, pages=None, live=True)
+        res = crawl(spark, cfg, pages=None)
         cdn_log = logs[cdn.server_port]
         # robots fetched exactly once despite the host reappearing in
         # epoch 2's candidates
@@ -481,7 +481,7 @@ def test_malformed_robots_response_means_no_restrictions(spark):
     try:
         cfg = CrawlConfig(url=f"http://127.0.0.1:{port}/",
                           fetch_robots=True, timeout=10)
-        res = crawl(spark, cfg, pages=None, live=True)
+        res = crawl(spark, cfg, pages=None)
         assert len(res.ordered_fetches()) == 1  # the seed crawled fine
     finally:
         srv.close()

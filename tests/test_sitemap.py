@@ -171,7 +171,7 @@ def test_live_sitemap_seeding_without_robots_rules(spark):
     })
     try:
         cfg = CrawlConfig(url=f"{base}/", use_sitemaps=True)
-        res = crawl(spark, cfg, pages=None, live=True)
+        res = crawl(spark, cfg, pages=None)
         pages = {r.url for r in res.ordered_fetches() if r.kind == "page"}
         # Disallow /deep/ was NOT applied (no --robots): the page crawls
         assert pages == {f"{base}/", f"{base}/deep/hidden.html"}

@@ -3,7 +3,7 @@
 import time
 
 from goscrape_spark.config import CrawlConfig
-from goscrape_spark.operators.images import PIL_AVAILABLE, recode_image_bytes, recode_images_df
+from goscrape_spark.operators.images import recode_image_bytes, recode_images_df
 from goscrape_spark.sources.fixtures import SITE_LINKS, pages_df
 from goscrape_spark.streaming.continuous import ContinuousCrawl
 
@@ -12,8 +12,8 @@ def test_recode_passthrough_without_pil(spark):
     png = b"\x89PNG\r\n\x1a\n" + b"x" * 100
     # quality 0 disables recoding always (scraper/scraper.go:132-135)
     assert recode_image_bytes(png, 0) == png
-    if not PIL_AVAILABLE:
-        assert recode_image_bytes(png, 80) == png
+    # an undecodable PNG passes through unchanged
+    assert recode_image_bytes(png, 80) == png
     df = spark.createDataFrame([("u", bytearray(png))], "url string, body binary")
     out = recode_images_df(df, quality=80).collect()
     assert len(out) == 1 and len(bytes(out[0].body)) <= len(png)
