@@ -179,12 +179,9 @@ def q_frontier_seq(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _keyed(_docs(spark, sf_dir)).select("doc_id", "host")
     j = base.join(k, base["winner_doc"] == k["doc_id"], "inner") \
             .withColumn("depth", (F.col("winner_doc") % 4).cast("int"))
-    # parts=8 forces the scalable two-pass (range shuffle + offsets) so the
-    # oracle compare exercises the SAME code path production epochs use —
-    # not the small-input plain-window fallback
     return global_sequence(j.select("dedup_key", "depth", "host"),
                            ["depth", "host", "dedup_key"], start=1,
-                           out_col="seq", parts=8)
+                           out_col="seq")
 
 
 def q_per_host_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -232,11 +229,8 @@ def q_politeness_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events(spark, sf_dir).select(
         "event_id", F.col("event_type").alias("host"))
-    # parts=8 forces the skew-proof grouped two-pass (range shuffle +
-    # boundary carry) so the oracle compare exercises the SAME code path
-    # production epochs use — not the small-input per-host window fallback
     out = schedule_politeness(ev, delay_ms=1500, host_col="host",
-                              order_cols=["event_id"], parts=8)
+                              order_cols=["event_id"])
     return out.select("event_id", "host", "not_before_ms")
 
 

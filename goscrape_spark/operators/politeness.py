@@ -7,10 +7,11 @@ support.  Design constraints:
 * Politeness must not change crawl ORDER (the reference's backoff blocks
   inline, preserving order), so it is expressed as a ``not_before`` schedule:
   the i-th fetch of a host within an epoch (in consideration order) may start
-  no earlier than ``i * delay``.  Pure column expressions — a rank per host
-  times the delay — no Python.  A real HTTP fetcher consumes the schedule
-  inside its per-host ``applyInPandas`` batch (fetches for one host land in
-  one group, sorted by schedule, slept between).
+  no earlier than ``i * delay``.  One JVM window — a rank per host times
+  the delay — no Python.  The schedule is logged, not yet executed: the
+  live fetcher's per-host ``applyInPandas`` batch sends its requests in
+  ``sorted(set(urls))`` order with a fixed ``batch_delay`` sleep between
+  them (ROADMAP open item 4 makes it send in schedule order).
 
 * Robots rules (RFC 9309, parsed by functions/robotstxt.py) ride a
   **broadcast** join on ``host`` (the rules table is tiny relative to the
@@ -21,7 +22,7 @@ support.  Design constraints:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..session import local_frame
@@ -31,8 +32,8 @@ def schedule_politeness(df: DataFrame, delay_ms: int,
                         host_col: str = "host",
                         order_cols: list[str] | None = None,
                         out_col: str = "not_before_ms",
-                        host_delays_ms: dict[str, int] | None = None,
-                        parts: int | None = None) -> DataFrame:
+                        host_delays_ms: dict[str, int] | None = None
+                        ) -> DataFrame:
     """Assign per-host fetch offsets: 0, delay, 2*delay, ... in consideration
     order.
 
@@ -42,16 +43,13 @@ def schedule_politeness(df: DataFrame, delay_ms: int,
     column expression (bounded: one entry per robots-bearing host), so the
     multiply stays inside whole-stage codegen — no extra join.
 
-    ``parts`` engages the skew-proof rank path (ranking.grouped_sequence):
-    a plain per-host window puts each host's whole row set into ONE task,
-    and a goscrape-style crawl is overwhelmingly single-host — i.e. the
-    entire epoch in one task.  The grouped two-pass keeps a hot host
-    spanning many range partitions with only O(partitions) driver data."""
+    The rank is ``row_number() OVER (PARTITION BY host ORDER BY ...) - 1``:
+    a same-host crawl ranks its whole asset set in one task, as the live
+    fetch already sends all of a host's requests from one task."""
     order_cols = order_cols or ["parent_seq", "stage_rank", "sub_rank",
                                 "intra1", "intra2"]
-    from .ranking import grouped_sequence
-    ranked = grouped_sequence(df, host_col, order_cols,
-                              out_col="_host_rank", parts=parts)
+    w = Window.partitionBy(host_col).orderBy(*[F.col(c) for c in order_cols])
+    rank = (F.row_number().over(w) - 1).cast("long")
     delay = F.lit(delay_ms).cast("long")
     if host_delays_ms:
         mapping = F.create_map(*[F.lit(x) for kv in host_delays_ms.items()
@@ -59,8 +57,7 @@ def schedule_politeness(df: DataFrame, delay_ms: int,
         delay = F.greatest(
             delay, F.coalesce(mapping[F.col(host_col)].cast("long"),
                               F.lit(0).cast("long")))
-    return ranked.withColumn(out_col, F.col("_host_rank") * delay) \
-                 .drop("_host_rank")
+    return df.withColumn(out_col, rank * delay)
 
 
 def retry_backoff_ms(attempts: Column, retry_delay_ms: int = 1500) -> Column:

@@ -1,196 +1,24 @@
-"""W2: global total-order sequence assignment without a single-task sort.
+"""W2: global total-order sequence assignment.
 
 The reference's BFS queue implies one global discovery order
-(scraper/scraper.go:165-175).  A naive ``row_number() OVER (ORDER BY ...)``
-funnels the whole epoch through ONE task — at the 10^7-10^8 pages/epoch the
-BASELINE.md model projects, that is the scale-killer.  ``global_sequence``
-is the two-pass zipWithIndex shape on DataFrames:
-
-1. range-partition on the order key (order-preserving across partitions)
-   and sort within partitions — a normal parallel shuffle+sort;
-2. count rows per partition (tiny aggregate -> driver: one int per
-   partition) to derive per-partition starting offsets;
-3. assign ``offset + local running index`` inside each partition with an
-   Arrow ``mapInPandas`` pass — zero additional shuffle, order preserved.
-
-The result is bit-identical to the global window (order keys are unique),
-but the heaviest stage is an ordinary range shuffle that scales with
-executors.  Small inputs keep the plain window: one small task beats three
-jobs.
+(scraper/scraper.go:165-175).  ``global_sequence`` assigns it with one JVM
+window per epoch, ``row_number() OVER (ORDER BY ...)``, as SURVEY's W2 row
+prescribes: it runs on the epoch's deduped delta, not the full frontier.
+The window's single ordered task was timed against a range shuffle with
+per-partition offsets and an Arrow assign pass, and was faster at every
+size from 10^3 to 10^6 rows (4 cores), so it is the only path.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-# below this many partitions the plain window wins on job-launch overhead
-SCALABLE_MIN_PARTS = 4
 
-
-def _window_sequence(df: DataFrame, order_cols: list[str], start: int,
-                     out_col: str) -> DataFrame:
+def global_sequence(df: DataFrame, order_cols: list[str], start: int = 0,
+                    out_col: str = "seq") -> DataFrame:
+    """Append ``out_col`` = start, start+1, ... in the total order of
+    ``order_cols`` (which must be unique per row for determinism)."""
     w = Window.orderBy(*[F.col(c) for c in order_cols])
     return df.withColumn(
         out_col, (F.row_number().over(w) + F.lit(start - 1)).cast("long"))
-
-
-def global_sequence(df: DataFrame, order_cols: list[str], start: int = 0,
-                    out_col: str = "seq", parts: int | None = None) -> DataFrame:
-    """Append ``out_col`` = start, start+1, ... in the total order of
-    ``order_cols`` (which must be unique per row for determinism)."""
-    return global_sequence_with_total(df, order_cols, start, out_col,
-                                      parts)[0]
-
-
-def global_sequence_with_total(
-        df: DataFrame, order_cols: list[str], start: int = 0,
-        out_col: str = "seq",
-        parts: int | None = None) -> tuple[DataFrame, int | None]:
-    """global_sequence plus the row count when the scalable path already
-    collected it (its per-partition offsets sum to the total, so callers
-    can skip a separate count() action); None on the small window path."""
-    if parts is None or parts < SCALABLE_MIN_PARTS:
-        return _window_sequence(df, order_cols, start, out_col), None
-
-    ranged = (df.repartitionByRange(parts, *[F.col(c) for c in order_cols])
-              .sortWithinPartitions(*order_cols)
-              .withColumn("_pid", F.spark_partition_id())
-              .localCheckpoint(eager=True))  # pin partitions for both passes
-    counts = {r._pid: r.n for r in
-              ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("n"))
-              .collect()}
-    offsets = {}
-    acc = start
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    in_cols = [f for f in ranged.schema.fields if f.name != "_pid"]
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in in_cols) + f", {out_col} bigint"
-    names = [f.name for f in in_cols]
-
-    def run(batches) -> Iterator:
-        local = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            base = offsets[int(pdf["_pid"].iloc[0])]
-            out = pdf[names].copy()
-            out[out_col] = range(base + local, base + local + len(pdf))
-            local += len(pdf)
-            yield out
-
-    return ranged.mapInPandas(run, schema=schema), acc - start
-
-
-def grouped_sequence(df: DataFrame, group_col: str, order_cols: list[str],
-                     out_col: str = "grank",
-                     parts: int | None = None) -> DataFrame:
-    """Per-group 0-based rank in the order of ``order_cols`` — the grouped
-    analogue of :func:`global_sequence`.
-
-    A plain ``row_number() OVER (PARTITION BY group ...)`` puts each
-    group's ENTIRE row set into one task.  For a goscrape-style same-host
-    crawl that is the whole epoch in one task — the J5 politeness schedule
-    was the last window with this shape on the hot path.  The scalable
-    path instead:
-
-    1. range-partitions on ``(group, *order_cols)`` and sorts within
-       partitions — groups are contiguous, a hot group simply SPANS
-       several partitions;
-    2. summarizes each partition in one Arrow pass to a single driver row
-       (the group at each end and its row count) — only boundary groups
-       can span partitions, so O(partitions) driver data regardless of
-       group cardinality or skew;
-    3. threads the boundary carry through the partitions driver-side and
-       assigns ``carry + local per-group running count`` in a second
-       Arrow pass — zero additional shuffle, no join, no window.
-
-    Bit-identical to the window (order keys unique per row).  Small
-    inputs keep the plain window (``parts=None`` or < SCALABLE_MIN_PARTS).
-    """
-    if parts is None or parts < SCALABLE_MIN_PARTS:
-        w = Window.partitionBy(group_col).orderBy(
-            *[F.col(c) for c in order_cols])
-        return df.withColumn(
-            out_col, (F.row_number().over(w) - 1).cast("long"))
-
-    ranged = (df.repartitionByRange(
-                  parts, F.col(group_col),
-                  *[F.col(c) for c in order_cols])
-              .sortWithinPartitions(group_col, *order_cols)
-              .withColumn("_pid", F.spark_partition_id())
-              .localCheckpoint(eager=True))  # pin partitions for both passes
-
-    def summarize(batches) -> Iterator:
-        import numpy as np
-        import pandas as pd
-        # the carry thread needs only the boundary groups: the partition's
-        # FIRST group (to receive a carry) and its LAST group + trailing
-        # run length (to pass one on); when first == last the partition is
-        # a single group and n_last is its full count
-        pid = first = last = None
-        n_last = 0
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if pid is None:
-                pid = int(pdf["_pid"].iloc[0])
-                first = pdf[group_col].iloc[0]
-            vals = pdf[group_col].to_numpy(dtype=object)
-            change = np.flatnonzero(vals[1:] != vals[:-1]) + 1
-            starts = np.concatenate([[0], change]).astype(int)
-            ends = np.concatenate([change, [len(vals)]]).astype(int)
-            for s, e in zip(starts, ends):
-                val, cnt = vals[s], int(e - s)
-                if last is not None and val == last:
-                    n_last += cnt
-                else:
-                    last, n_last = val, cnt
-        if pid is not None:
-            yield pd.DataFrame({"pid": [pid], "first": [first],
-                                "last": [last], "n_last": [n_last]})
-
-    gtype = ranged.schema[group_col].dataType.simpleString()
-    summary = {int(r.pid): r for r in ranged.mapInPandas(
-        summarize, schema=f"pid int, first {gtype}, "
-                          f"last {gtype}, n_last long").collect()}
-    carry: dict[int, int] = {}
-    prev_last, prev_total = None, 0
-    for pid in sorted(summary):
-        r = summary[pid]
-        c = prev_total if r.first == prev_last else 0
-        carry[pid] = c
-        prev_total = (c + r.n_last) if r.last == r.first else r.n_last
-        prev_last = r.last
-
-    in_cols = [f for f in ranged.schema.fields if f.name != "_pid"]
-    schema = ", ".join(f"`{f.name}` {f.dataType.simpleString()}"
-                       for f in in_cols) + f", {out_col} bigint"
-    names = [f.name for f in in_cols]
-
-    def run(batches) -> Iterator:
-        seen: dict = {}
-        started = False
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            if not started:
-                started = True
-                pid = int(pdf["_pid"].iloc[0])
-                # the first group continues a run from earlier partitions
-                seen[pdf[group_col].iloc[0]] = carry.get(pid, 0)
-            g = pdf[group_col]
-            bases = g.map(seen).fillna(0).astype("int64")
-            out = pdf[names].copy()
-            out[out_col] = (pdf.groupby(group_col, sort=False).cumcount()
-                            .astype("int64") + bases)
-            for v, c in g.value_counts().items():
-                seen[v] = seen.get(v, 0) + int(c)
-            yield out
-
-    return ranged.mapInPandas(run, schema=schema)

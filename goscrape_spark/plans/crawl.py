@@ -48,11 +48,11 @@ for ``local_frame``.  tests/test_local_frames.py fails on any other
 
 An epoch stage is materialized once (``_localckpt``).  Counts and
 driver-side harvests ride a pyspark ``Observation`` on that checkpoint
-(``_observed``): the allowed/deferred asset counts and link signature on
-``assets_allowed``, the inserted-key and surviving-page counts on
-``inserts``, the frontier count on ``next_pages``, the Set-Cookie snapshots
-on the fetch checkpoint, the seed's response URL (the depth-0 redirect
-rebase) on epoch 0's ``fetched`` — never a separate
+(``_observed``): the deferred asset counts and link signature on
+``assets_allowed``, the inserted-key count on ``inserts``, the frontier
+count on ``next_pages``, the Set-Cookie snapshots on the fetch checkpoint,
+the seed's response URL (the depth-0 redirect rebase) on epoch 0's
+``fetched`` — never a separate
 ``count``/``isEmpty``/``first``/``collect`` job.  A fetch returns its input
 rows with the fetch columns added, so no join puts the outcomes back, and
 its one checkpoint carries the caller's label (``fetched``,
@@ -338,8 +338,8 @@ class Crawler:
         protocol caps one index level at 50k×50k = 2.5e9 only in theory).
 
         Page locs become candidate rows at ``stage_rank 7`` (after the seed
-        page's own 'a' refs, rank 6), ordered lexicographically via the
-        scalable global_sequence — deterministic like every other stage.
+        page's own 'a' refs, rank 6), ordered lexicographically via
+        global_sequence — deterministic like every other stage.
         Cross-host / non-http locs are NOT special-cased: normal admission
         (F1/F5, insert-before-reject) drops them exactly like link
         candidates.  Sitemap fetches themselves are bootstrap machinery and
@@ -417,13 +417,7 @@ class Crawler:
             raise ValueError(
                 f"sitemap loc set ({n} rows) exceeds the 2^31-1 intra1 "
                 "ordering capacity; widen CAND_SCHEMA intra1 to bigint")
-        # size from the SESSION default, not the epoch-loop's data-sized
-        # shuffle.partitions (epoch 0 is one frontier row -> ~2 parts,
-        # which would bottleneck a million-loc sitemap sequence)
-        default_parts = getattr(self, "_default_parts", None) or \
-            int(spark.conf.get("spark.sql.shuffle.partitions"))
-        seqd = global_sequence(keyed, ["url"], out_col="_i",
-                               parts=min(default_parts, n // 2000 + 1))
+        seqd = global_sequence(keyed, ["url"], out_col="_i")
         return seqd.select(
             F.lit(self.seed.string()).alias("page_url"),
             F.lit(0).cast("bigint").alias("parent_seq"),
@@ -518,9 +512,6 @@ class Crawler:
         fetch_logs: list[DataFrame] = []
         documents: list[DataFrame] = []
         outputs: list[DataFrame] = []
-        # the loop re-sets shuffle.partitions per epoch; stages that size
-        # their own shuffles (sitemap bootstrap) need the session default
-        self._default_parts = default_parts
         # AQE is disabled for the LOOP's duration: the loop sizes every
         # shuffle from per-epoch data volume itself, and the
         # post-aggregation join keys are unique (first-wins/fileExists
@@ -669,17 +660,13 @@ class Crawler:
 
             def _seq_branch():
                 # next frontier: page survivors ordered by the composite
-                # key (W2).  global_sequence range-partitions + offsets
-                # instead of a single-task global window once the pages it
-                # orders (counted by inserts) are many.  The row count
-                # rides the checkpoint's job.
+                # key in one window (W2).  The row count rides the
+                # checkpoint's job.
                 from ..operators.ranking import global_sequence
-                n_pages = self._ins_obs.get["n_pages"]
                 seq_df = global_sequence(
                     survivors.filter(~F.col("is_asset"))
                              .select("url", "depth", *ORDER_COLS),
-                    ORDER_COLS, start=next_seq, out_col="seq",
-                    parts=min(default_parts, n_pages // 2000 + 1))
+                    ORDER_COLS, start=next_seq, out_col="seq")
                 np_df, obs = _observed(
                     seq_df.select("url",
                                   (F.col("depth") + 1).alias("depth"),
@@ -968,13 +955,10 @@ class Crawler:
             inserts, survivors = admit(all_cands, seen, self.seed_host,
                                        cfg.max_depth, cfg.includes,
                                        cfg.excludes, bloom=self.bloom)
-            # the inserted-key count (the epoch's seen delta) and the
-            # surviving page count (sizes the next frontier's sequence)
-            # ride the checkpoint's job
+            # the inserted-key count (the epoch's seen delta) rides the
+            # checkpoint's job
             inserts, self._ins_obs = _observed(
-                inserts, F.count(F.lit(1)).alias("n"),
-                F.count(F.when(F.col("survived") & ~F.col("is_asset"), 1))
-                .alias("n_pages"))
+                inserts, F.count(F.lit(1)).alias("n"))
             inserts = self._localckpt(inserts, "inserts")
             survivors = inserts.filter(F.col("survived"))
             if cfg.fetch_robots:
@@ -1084,16 +1068,14 @@ class Crawler:
                   .filter(is_asset & before_page(F.col("_pos")))
                   .drop("_pos", "_is_asset", "_first_page", "_first_asset",
                         "_first_link"))
-        # free aggregates on the checkpoint's own job: the allowed row
-        # count (sizes the politeness schedule), the deferred counts (is
-        # there a failure chain to run in each part?) and the fixpoint's
+        # free aggregates on the checkpoint's own job: the deferred counts
+        # (is there a failure chain to run in each part?) and the fixpoint's
         # signature over every row on a link-bearing path.  bit_xor, not
         # sum: the signature only needs order-insensitivity, and summing
         # xxhash64 values overflows under ANSI mode.
         defer, link = F.col("_defer"), F.col("_link_path")
         ranked, self._fs_obs = _observed(
             ranked,
-            F.count(F.when(~defer, 1)).alias("n_allowed"),
             F.count(F.when(defer & link, 1)).alias("n_deferred_link"),
             F.count(F.when(defer & ~link, 1)).alias("n_deferred_rest"),
             F.count(F.when(link, 1)).alias("n_link"),
@@ -1156,24 +1138,15 @@ class Crawler:
     # ------------------------------------------------------------------
     def _schedule(self, assets: DataFrame) -> DataFrame:
         if self.config.politeness_delay_ms > 0 or self._host_delay_ms:
-            # J5: per-host politeness schedule; a real fetcher executes each
-            # host group in one applyInPandas batch honoring not_before_ms.
-            # Robots Crawl-delay hosts override the global delay where
-            # larger (literal-map column expr inside schedule_politeness).
-            # parts engages the skew-proof grouped two-pass once the epoch's
-            # asset set is wide — a same-host crawl would otherwise put the
-            # WHOLE epoch into one per-host window task (the last W2-shape
-            # hazard on the hot path); sized like the epoch shuffle parts.
+            # J5: per-host politeness schedule, logged with each fetch (the
+            # live fetcher spaces a host's requests by a fixed delay instead;
+            # ROADMAP open item 4).  Robots Crawl-delay hosts override the
+            # global delay where larger (literal-map column expr inside
+            # schedule_politeness).
             from ..operators.politeness import schedule_politeness
-            n = self._fs_obs.get["n_allowed"] if self._fs_obs is not None \
-                else 0
-            default_parts = int(self.spark.conf.get(
-                "spark.sql.shuffle.partitions"))
-            parts = min(default_parts, n // 2000 + 1) if n else 0
             return schedule_politeness(assets,
                                        self.config.politeness_delay_ms,
-                                       host_delays_ms=self._host_delay_ms,
-                                       parts=parts if parts >= 4 else None)
+                                       host_delays_ms=self._host_delay_ms)
         return assets.withColumn("not_before_ms", F.lit(0).cast("long"))
 
     def _asset_log_select(self, joined: DataFrame, epoch: int) -> DataFrame:
@@ -1218,8 +1191,8 @@ class Crawler:
             if obs.get["n"] == 0:
                 break
             pos = self._pos()
-            first = deferred.groupBy("file_path").agg(F.min(pos).alias("_first"))
-            j = deferred.join(first, "file_path", "left")
+            j = deferred.withColumn(
+                "_first", F.min(pos).over(Window.partitionBy("file_path")))
             cur = self._schedule(j.filter(pos == F.col("_first")).drop("_first"))
             deferred = j.filter(pos != F.col("_first")).drop("_first")
         return reduce(DataFrame.unionByName, rounds)

@@ -1,9 +1,13 @@
-"""W2 global sequence: the scalable two-pass path must be bit-identical to
-the single-task window."""
+"""W2 global sequence and the J5 per-host rank: one JVM window each."""
 
 from pyspark.sql import functions as F
 
+from goscrape_spark.operators import politeness, ranking
+from goscrape_spark.operators.politeness import schedule_politeness
 from goscrape_spark.operators.ranking import global_sequence
+
+PYTHON_NODES = ("MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+                "FlatMapGroupsInPandas")
 
 
 def _df(spark, n=5000):
@@ -14,134 +18,98 @@ def _df(spark, n=5000):
         (F.col("id") % 7).alias("k2"))
 
 
-def test_scalable_matches_window(spark):
+def test_sequence_is_start_plus_rank(spark):
     df = _df(spark)
-    win = {r.id: r.seq for r in
-           global_sequence(df, ["k1"], start=10, parts=None).collect()}
-    par = {r.id: r.seq for r in
-           global_sequence(df, ["k1"], start=10, parts=8).collect()}
-    assert par == win
-    # seq is exactly start + rank(k1)
+    seq = {r.id: r.seq for r in
+           global_sequence(df, ["k1"], start=10).collect()}
     k1_of = {r.id: r.k1 for r in df.collect()}
-    assert all(par[i] == 10 + k1_of[i] for i in par)
+    assert len(seq) == 5000
+    assert all(seq[i] == 10 + k1_of[i] for i in seq)
 
 
-def test_scalable_composite_key_and_empty(spark):
+def test_sequence_is_dense_from_start(spark):
+    df = spark.range(100).select(F.col("id").cast("long").alias("k"))
+    out = global_sequence(df, ["k"], start=7)
+    assert [r.seq for r in out.orderBy("k").collect()] == list(range(7, 107))
+
+
+def test_sequence_composite_key_and_empty(spark):
     df = _df(spark, 997)
-    win = {(r.k2, r.k1): r.seq for r in
-           global_sequence(df, ["k2", "k1"], parts=None).collect()}
-    par = {(r.k2, r.k1): r.seq for r in
-           global_sequence(df, ["k2", "k1"], parts=6).collect()}
-    assert par == win and len(par) == 997
+    got = {(r.k2, r.k1): r.seq for r in
+           global_sequence(df, ["k2", "k1"]).collect()}
+    want = {key: i for i, key in enumerate(sorted(got))}
+    assert got == want and len(got) == 997
     empty = spark.createDataFrame([], "id long, k1 long")
-    assert global_sequence(empty, ["k1"], parts=8).count() == 0
+    assert global_sequence(empty, ["k1"]).count() == 0
 
 
-def test_no_single_partition_exchange_in_scalable_plan(spark):
-    """The scalable plan must not contain the single-partition window
-    exchange (docs/PLANS.md evidence for the 100x scale-up)."""
-    df = _df(spark)
-    plan = global_sequence(df, ["k1"], parts=8)._jdf \
-        .queryExecution().executedPlan().toString()
-    assert "SinglePartition" not in plan
+def _ranks(df):
+    """Per-host rank through schedule_politeness: a 1 ms delay makes
+    ``not_before_ms`` the rank itself."""
+    out = schedule_politeness(df, 1, host_col="host", order_cols=["ord"])
+    return {r.id: r.not_before_ms for r in out.collect()}
 
 
-# --- grouped_sequence (per-group rank without a per-group window task) ------
-
-
-def _gdf(spark, n=6000, hosts=5):
-    """hosts distinct groups; one (host 0) owns ~60% of rows — a hot group
-    that must span several range partitions."""
-    return spark.range(n).select(
-        F.col("id"),
-        F.when(F.col("id") % 10 < 6, F.lit("hot.example"))
-         .otherwise(F.concat(F.lit("h"), (F.col("id") % hosts)
-                             .cast("string"))).alias("host"),
-        ((F.col("id") * 6007) % n).alias("ord"))
-
-
-def _window_ranks(spark, df):
-    from pyspark.sql import Window
-    w = Window.partitionBy("host").orderBy("ord")
-    return {r.id: r.g for r in
-            df.withColumn("g", F.row_number().over(w) - 1).collect()}
-
-
-def test_grouped_sequence_matches_window(spark):
-    from goscrape_spark.operators.ranking import grouped_sequence
-
-    df = _gdf(spark)
-    want = _window_ranks(spark, df)
-    got = {r.id: r.grank for r in
-           grouped_sequence(df, "host", ["ord"], parts=8).collect()}
-    assert got == want
-
-
-def test_grouped_sequence_single_hot_group(spark):
-    """The motivating case: ONE group owning every row (a same-host crawl
-    epoch) — ranks must still be 0..n-1 and the plan must have no Window
-    and no SinglePartition exchange."""
-    from goscrape_spark.operators.ranking import grouped_sequence
-
+def test_politeness_rank_single_hot_host(spark):
+    # one host owning every row: a same-host crawl epoch
     n = 5000
     df = spark.range(n).select(
         F.col("id"), F.lit("only.example").alias("host"),
         ((F.col("id") * 7919) % n).alias("ord"))
-    out = grouped_sequence(df, "host", ["ord"], parts=8)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan and "SinglePartition" not in plan
-    got = {r.ord: r.grank for r in out.collect()}
-    assert got == {i: i for i in range(n)}
+    ords = {r.id: r.ord for r in df.collect()}
+    assert _ranks(df) == ords
 
 
-def test_grouped_sequence_small_and_empty(spark):
-    from goscrape_spark.operators.ranking import grouped_sequence
-
-    df = _gdf(spark, 200)
-    want = _window_ranks(spark, df)
-    got = {r.id: r.grank for r in
-           grouped_sequence(df, "host", ["ord"], parts=None).collect()}
-    assert got == want
-    empty = spark.createDataFrame([], "id long, host string, ord long")
-    assert grouped_sequence(empty, "host", ["ord"], parts=8).count() == 0
-
-
-def test_schedule_politeness_scalable_matches_window(spark):
-    """J5 hot-path shape: schedule_politeness(parts=...) must emit the
-    same offsets as the window path, including Crawl-delay overrides."""
-    from goscrape_spark.operators.politeness import schedule_politeness
-
-    df = _gdf(spark, 3000).select(
-        "id", "host", F.col("ord").alias("parent_seq"),
-        F.lit(0).alias("stage_rank"), F.lit(0).alias("sub_rank"),
-        F.lit(0).alias("intra1"), F.lit(0).alias("intra2"))
-    delays = {"hot.example": 900}
-    win = {r.id: r.not_before_ms for r in
-           schedule_politeness(df, 250, host_delays_ms=delays,
-                               parts=None).collect()}
-    par = {r.id: r.not_before_ms for r in
-           schedule_politeness(df, 250, host_delays_ms=delays,
-                               parts=8).collect()}
-    assert par == win
-
-
-def test_grouped_sequence_randomized_parts_sweep(spark):
-    """Seeded random groups/orders, several partition counts including
-    parts > groups and parts close to n — every configuration must match
-    the window exactly (exercises empty partitions, single-row runs, and
-    multi-partition boundary carries)."""
-    from goscrape_spark.operators.ranking import grouped_sequence
-
-    n = 2003
-    # deterministic pseudo-random group sizes: group = id*2654435761 % 13,
-    # order = bijective scramble (unique)
+def test_politeness_rank_several_hosts(spark):
+    # five hosts; hot.example owns ~60% of the rows
+    n = 3000
     df = spark.range(n).select(
         F.col("id"),
-        F.concat(F.lit("g"), ((F.col("id") * 2654435761) % 13)
-                 .cast("string")).alias("host"),
-        ((F.col("id") * 4999) % n).alias("ord"))
-    want = _window_ranks(spark, df)
-    for parts in (4, 7, 16, 64):
-        got = {r.id: r.grank for r in
-               grouped_sequence(df, "host", ["ord"], parts=parts).collect()}
-        assert got == want, f"parts={parts}"
+        F.when(F.col("id") % 10 < 6, F.lit("hot.example"))
+         .otherwise(F.concat(F.lit("h"), (F.col("id") % 5)
+                             .cast("string"))).alias("host"),
+        ((F.col("id") * 6007) % n).alias("ord"))
+    by_host: dict = {}
+    for r in sorted(df.collect(), key=lambda r: r.ord):
+        by_host.setdefault(r.host, []).append(r.id)
+    want = {i: k for ids in by_host.values() for k, i in enumerate(ids)}
+    assert len(by_host) == 5
+    assert _ranks(df) == want
+    empty = spark.createDataFrame([], "id long, host string, ord long")
+    assert _ranks(empty) == {}
+
+
+def test_crawl_sequence_and_rank_run_no_python(spark, monkeypatch):
+    # a seed linking 6,000 same-host pages, each with one same-host image,
+    # and politeness on: epoch 0 sequences the 6,000 pages, epoch 1 ranks
+    # their 6,000 images.  Both must plan as JVM windows, with no Python
+    # evaluation stage, at the partition counts such epochs get.
+    from goscrape_spark.config import CrawlConfig
+    from goscrape_spark.plans.crawl import crawl
+    from goscrape_spark.sources.fixtures import pages_df
+
+    seed, n = "https://example.org/", 6000
+    site = {seed: "".join(f'<a href="/p{i:05d}">x</a>' for i in range(n))}
+    site.update({f"{seed}p{i:05d}": f'<img src="/i{i:05d}.png">'
+                 for i in range(n)})
+    plans: dict = {}
+
+    def spy(module, name):
+        real = getattr(module, name)
+
+        def wrapped(*args, **kw):
+            out = real(*args, **kw)
+            plans.setdefault(name, []).append(
+                out._jdf.queryExecution().executedPlan().toString())
+            return out
+        monkeypatch.setattr(module, name, wrapped)
+
+    spy(ranking, "global_sequence")
+    spy(politeness, "schedule_politeness")
+    res = crawl(spark, CrawlConfig(url=seed, politeness_delay_ms=1),
+                pages_df(spark, site), max_epochs=2)
+    assert res.fetch_log.filter(F.col("kind") == "asset").count() == n
+    assert set(plans) == {"global_sequence", "schedule_politeness"}
+    for name, found in plans.items():
+        for plan in found:
+            assert not [p for p in PYTHON_NODES if p in plan], (name, plan)

@@ -5,8 +5,6 @@ re-sorting the ~GB body fixture every epoch.  These tests pin the fixed
 plan shapes so a regression is caught structurally, without timing.
 """
 
-from pyspark.sql import functions as F
-
 from goscrape_spark.config import CrawlConfig
 from goscrape_spark.plans.crawl import Crawler
 from goscrape_spark.sources.fixtures import (
@@ -26,16 +24,3 @@ def test_mock_fetch_broadcasts_small_frontier(spark):
     plan = c._source(urls)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_global_sequence_with_total_counts(spark):
-    from goscrape_spark.operators.ranking import global_sequence_with_total
-
-    df = spark.range(100).select(F.col("id").cast("long").alias("k"))
-    out, total = global_sequence_with_total(df, ["k"], start=7, parts=8)
-    assert total == 100
-    seqs = [r.seq for r in out.orderBy("k").collect()]
-    assert seqs == list(range(7, 107))
-    # small path: window, no total
-    out2, total2 = global_sequence_with_total(df, ["k"], start=0, parts=2)
-    assert total2 is None and out2.count() == 100

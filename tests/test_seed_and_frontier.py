@@ -2,13 +2,11 @@
 
 The seed passes the same checks as every other candidate, with the same
 (Java) regex engine and depth rule; and the next frontier's global
-sequence is sized from the pages it orders, not from the frontier that
-linked them."""
+sequence numbers the pages it orders densely, in crawl order."""
 
 import pytest
 
 from goscrape_spark.config import CrawlConfig
-from goscrape_spark.operators import ranking
 from goscrape_spark.plans.crawl import Crawler, crawl
 from goscrape_spark.plans.simulator import crawl_sequential
 from goscrape_spark.sources.fixtures import pages_df
@@ -49,30 +47,21 @@ def test_negative_depth_matches_the_oracle(spark):
         [f.url for f in sim.fetches] == [SEED, SEED + "a", SEED + "b"]
 
 
-def test_wide_next_frontier_takes_the_range_sequence(spark, monkeypatch):
-    # one seed page linking 6,000 pages: the sequence of the next frontier
-    # orders 6,000 rows, so it takes global_sequence's range path (parts of
-    # at least SCALABLE_MIN_PARTS at 4 shuffle partitions), not one window
+def test_wide_next_frontier_is_sequenced_in_crawl_order(spark, monkeypatch):
+    # one seed page linking 6,000 pages: the next frontier's sequence
+    # numbers all of them 1..6000 in link order, at depth 1
     n = 6000
     links = "".join(f'<a href="/p{i:05d}">x</a>' for i in range(n))
-    parts: list = []
     frames: dict = {}
-    sequence, ckpt = ranking.global_sequence, Crawler._localckpt
-
-    def spy(df, order_cols, **kw):
-        parts.append(kw["parts"])
-        return sequence(df, order_cols, **kw)
+    ckpt = Crawler._localckpt
 
     def keep(self, df, label=""):
         frames[label] = ckpt(self, df, label)
         return frames[label]
 
-    monkeypatch.setattr(ranking, "global_sequence", spy)
     monkeypatch.setattr(Crawler, "_localckpt", keep)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
     crawl(spark, CrawlConfig(url=SEED), pages_df(spark, {SEED: links}),
           max_epochs=1)
-    assert len(parts) == 1 and parts[0] >= ranking.SCALABLE_MIN_PARTS
     rows = frames["next_pages"].orderBy("seq").collect()
     assert [r.seq for r in rows] == list(range(1, n + 1))
     assert [r.url for r in rows] == [f"{SEED}p{i:05d}" for i in range(n)]
