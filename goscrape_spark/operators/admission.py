@@ -5,23 +5,25 @@ This is the distributed re-expression of ``shouldURLBeDownloaded``
 (scraper/checks.go:26-72).  The sequential loop considers candidates one at a
 time and mutates the seen set as it goes; the epoch-synchronous equivalent is
 
-1. scheme filter (F1) — candidates failing it never touch the seen set;
-2. dedup-key projection (F2+F3) as column expressions;
-3. within-epoch first-wins (W1): ``row_number() over (partition by dedup_key
-   order by <consideration order>) == 1`` where the consideration order is
-   the composite key (parent_seq, stage_rank, sub_rank, intra1, intra2) that
-   totally orders the sequential loop's candidate considerations (SURVEY
-   §3.4);
-4. cross-epoch dedup (J1): left_anti join against the global ``seen`` table
-   (optionally pre-filtered by a Bloom filter, operators/seen.py);
-5. ALL rows surviving 1-4 become seen-set inserts — including rows that the
+1. scheme filter (F1) and dedup-key projection (F2+F3), done upstream by
+   the passes that emit candidates: a non-http(s) ref never becomes a
+   candidate row, so it never touches the seen set;
+2. within-epoch first-wins (W1): the first-considered row per
+   ``dedup_key``, where the consideration order is the composite key
+   (parent_seq, stage_rank, sub_rank, intra1, intra2) that totally orders
+   the sequential loop's candidate considerations (SURVEY §3.4);
+3. cross-epoch dedup (J1): left_anti join against the global ``seen`` table,
+   with an optional Bloom probe (operators/seen.py) as a residual condition
+   of that join;
+4. ALL rows surviving 1-3 become seen-set inserts — including rows that the
    action filters then reject (host/depth/include/exclude), reproducing the
    reference's insert-before-reject semantics (scraper/checks.go:42-60).
 
-Scale notes: the first-wins window and the anti-join both shuffle on
+Scale notes: the first-wins aggregate and the anti-join both shuffle on
 ``dedup_key`` — the natural partitioning for a 10^10-key seen table.  The
-candidate side is typically orders of magnitude smaller than ``seen``; with
-the Bloom pre-filter only probable-duplicates reach the join.
+Bloom probe does not change that: with broadcast off, every candidate and
+every seen key goes through the anti-join's exchange, and the probe only
+spares certified-new rows the key comparison.
 """
 
 from __future__ import annotations
@@ -29,26 +31,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.urlnorm import (
-    col_dedup_key,
-    col_host,
-    col_path,
-    col_scheme,
-    col_scheme_ok,
-)
+from ..functions.urlnorm import col_scheme_ok
 
 # composite consideration-order key (SURVEY §3.4)
 ORDER_COLS = ["parent_seq", "stage_rank", "sub_rank", "intra1", "intra2"]
-
-
-def with_url_parts(candidates: DataFrame, url_col: str = "url") -> DataFrame:
-    """Derive scheme/host/path columns from a fragment-free URL column.
-    Pure column expressions — stays inside whole-stage codegen."""
-    u = F.col(url_col)
-    return (candidates
-            .withColumn("scheme", col_scheme(u))
-            .withColumn("host", col_host(u))
-            .withColumn("path", col_path(u)))
 
 
 def _regex_filter(path: Column, includes: list[str], excludes: list[str]) -> Column:
@@ -88,9 +74,11 @@ def admit(candidates: DataFrame, seen: DataFrame, seed_host: str,
           excludes: list[str], bloom=None) -> tuple[DataFrame, DataFrame]:
     """Run epoch admission.
 
-    ``candidates`` needs columns: url (fragment-free), is_asset boolean,
-    depth int (the parent page's processing depth for a-links; anything for
-    assets) + ORDER_COLS.
+    ``candidates`` needs columns: url (fragment-free), dedup_key,
+    scheme, host, path, is_asset boolean, depth int (the parent page's
+    processing depth for a-links; anything for assets) + ORDER_COLS.
+    Every row must already be http(s): the scheme check precedes the seen
+    insert (checks.go:27-29), so the emitting pass drops the others.
 
     Returns ``(inserts, survivors)``:
       - inserts: rows whose dedup_key is appended to ``seen`` this epoch
@@ -115,23 +103,6 @@ def admit(candidates: DataFrame, seen: DataFrame, seed_host: str,
     inserts on the ``survived`` flag) so callers can checkpoint ``inserts``
     once and derive both.
     """
-    if "dedup_key" in candidates.columns:
-        # fully precomputed upstream (the fused extraction pass computes the
-        # key and drops non-http(s) refs at the source — the scheme check
-        # precedes the seen insert, checks.go:27-29, so they are observable
-        # nowhere): zero per-candidate JVM regex work here
-        keyed = candidates
-    else:
-        if {"scheme", "host", "path"} <= set(candidates.columns):
-            parts = candidates  # components precomputed upstream
-        else:
-            parts = with_url_parts(candidates)
-        valid = parts.filter(col_scheme_ok(F.col("scheme")))
-        keyed = valid.withColumn(
-            "dedup_key",
-            col_dedup_key(F.col("url"), F.col("host"), F.col("path"),
-                          F.lit(seed_host)))
-
     # W1 first-wins as min_by hash aggregation, NOT a row_number window: a
     # window piles every row of a hot dedup_key (think: the one logo/css
     # every page references) into a single sort task, while a hash aggregate
@@ -140,8 +111,8 @@ def admit(candidates: DataFrame, seen: DataFrame, seed_host: str,
     # skew handling the frontier needs at web scale; composite consideration
     # keys are unique per candidate, so min_by is deterministic.
     ord_col = F.struct(*[F.col(c) for c in ORDER_COLS])
-    row_col = F.struct(*[F.col(c) for c in keyed.columns])
-    first = (keyed.groupBy("dedup_key")
+    row_col = F.struct(*[F.col(c) for c in candidates.columns])
+    first = (candidates.groupBy("dedup_key")
              .agg(F.min_by(row_col, ord_col).alias("_row"))
              .select("_row.*"))
 

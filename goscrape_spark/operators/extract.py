@@ -199,7 +199,7 @@ def scan_tags(text: str) -> tuple[list[Tag], list[tuple[int, int]]]:
     return tags, text_runs
 
 
-def extract_spans(text: str, base_url: str, include_text: bool = True) -> list[Span]:
+def extract_spans(text: str, base_url: str) -> list[Span]:
     """C17: document text -> span sequence in document order.
 
     ``media_ref`` is the reference resolved against ``base_url`` exactly as
@@ -248,14 +248,13 @@ def extract_spans(text: str, base_url: str, include_text: bool = True) -> list[S
                     kind=_KIND_BY_TAG[tag.name], text=value, media_ref=ref,
                     offset=-1, tag_idx=tag.tag_idx, attr=attr.name,
                     vstart=attr.vstart, vend=attr.vend)))
-    if include_text:
-        for rs, re_ in text_runs:
-            raw = text[rs:re_]
-            if raw.strip() == "":
-                continue
-            events.append(((rs, 0), Span(kind="text", text=_htmlmod.unescape(raw),
-                                    media_ref="", offset=-1,
-                                    vstart=rs, vend=re_)))
+    for rs, re_ in text_runs:
+        raw = text[rs:re_]
+        if raw.strip() == "":
+            continue
+        events.append(((rs, 0), Span(kind="text", text=_htmlmod.unescape(raw),
+                                     media_ref="", offset=-1,
+                                     vstart=rs, vend=re_)))
     events.sort(key=lambda e: e[0])
     out = []
     for offset, (_, sp) in enumerate(events):
@@ -593,16 +592,13 @@ def process_pages_df(pages: "DataFrame", seed_host: str,
                 .mapInPandas(run, schema=PROCESSED_SCHEMA)
 
 
-def extract_spans_df(fetched: DataFrame, url_col: str = "url",
-                     body_col: str = "body",
-                     include_text: bool = True) -> DataFrame:
+def extract_spans_df(fetched: DataFrame) -> DataFrame:
     """url+body rows -> exploded span rows, one Arrow batch at a time.
 
     Input: DataFrame with (url string, body binary).  Output: one row per
     span with the internal schema (url, kind, text, media_ref, offset,
     tag_idx, attr, vstart, vend, token).
     """
-    src = fetched.select(F.col(url_col).alias("url"), F.col(body_col).alias("body"))
 
     def run(batches) -> Iterator:
         import pandas as pd
@@ -613,7 +609,7 @@ def extract_spans_df(fetched: DataFrame, url_col: str = "url",
             data: dict[str, list] = {c: [] for c in cols}
             for url, body in zip(pdf["url"], pdf["body"]):
                 text = _decode(body)
-                for s in extract_spans(text, url, include_text=include_text):
+                for s in extract_spans(text, url):
                     data["url"].append(url)
                     data["kind"].append(s.kind)
                     data["text"].append(s.text)
@@ -626,13 +622,13 @@ def extract_spans_df(fetched: DataFrame, url_col: str = "url",
                     data["token"].append(s.token)
             yield pd.DataFrame(data)
 
-    return src.mapInPandas(run, schema=EXPLODED_SCHEMA)
+    return fetched.select("url", "body").mapInPandas(
+        run, schema=EXPLODED_SCHEMA)
 
 
-def documents_table(fetched: DataFrame, url_col: str = "url",
-                    body_col: str = "body") -> DataFrame:
+def documents_table(fetched: DataFrame) -> DataFrame:
     """The BASELINE.json:input_hint table: (doc_id, spans array<struct>)."""
-    exploded = extract_spans_df(fetched, url_col, body_col)
+    exploded = extract_spans_df(fetched)
     return (
         exploded
         .groupBy(F.col("url").alias("doc_id"))

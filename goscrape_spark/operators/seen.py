@@ -3,16 +3,19 @@ r"""Distributed URL-seen set: exact table + Bloom pre-filter (A3/U2/J1).
 The reference's seen set is an in-memory Go hash set (scraper/checks.go:42-49,
 gotokit/set).  At 10^10 URLs that is ~1 TB of keys — far beyond one node.  The
 rebuild keeps the AUTHORITATIVE set as a ``seen`` table partitioned by
-``dedup_key`` hash (exactness comes from the left_anti join, J1) and layers a
-Bloom filter in front so that the overwhelmingly-common case — a candidate
-that has never been seen — never shuffles against the big table:
+``dedup_key`` hash (exactness comes from the left_anti join, J1) and adds a
+Bloom probe to that join as a residual condition:
 
-    candidates --bloom probe--> {definitely-new}  ---------------------\
-                           \--> {maybe-seen} --anti-join vs seen--> new }--> union
+    candidates --bloom probe--> exchange(dedup_key) --\
+                                                       left_anti on key-equal
+    seen ---------------------> exchange(dedup_key) --/  AND might_contain
 
-False positives only cost a join probe; false negatives cannot occur, so the
-result is exact.  The filter is built per-partition inside Arrow batches and
-merged with a bitwise OR (a ``treeAggregate``-shaped reduction done driver-side
+Every candidate and every seen key still goes through the join's exchange
+(with broadcast off, a sort-merge join); the probe only spares
+definitely-new rows the key comparison.  False positives only cost that
+comparison; false negatives cannot occur, so the result is exact.  The
+filter is built per-partition inside Arrow batches and merged with a
+bitwise OR (a ``treeAggregate``-shaped reduction done driver-side
 over per-partition bitmaps; at 10^10 keys you shard the filter by host-hash so
 each executor holds only its shard — see SURVEY §4.2 sizing).
 
@@ -164,8 +167,8 @@ class SeenSet:
 
     def probe_df(self, df: DataFrame, key_col: str = "dedup_key",
                  out_col: str = "might_contain") -> DataFrame:
-        """Add a boolean column: False rows are DEFINITELY new and can skip
-        the anti-join against the big seen table."""
+        """Add a boolean column: False rows are DEFINITELY new and skip the
+        key comparison in the anti-join against the seen table."""
         m, k = self.bloom.m, self.bloom.k
         payload = self.bloom.bits.tobytes()
         spark = df.sparkSession

@@ -32,19 +32,22 @@ seen-set (SURVEY §3.4):
 
 Scale design (north_rule): frontier/seen shuffles hash on ``dedup_key`` /
 ``host``; per-epoch state is checkpointed (localCheckpoint for tests,
-parquet snapshots + manifest via sources/storage.py for resumability); the
-optional Bloom pre-filter (operators/seen.py) keeps the 10^10-row seen table
-from being shuffled against small candidate sets.
+parquet snapshots + manifest via sources/storage.py for resumability).  The
+optional Bloom pre-filter (operators/seen.py) does not keep the seen table
+out of the shuffle: its probe is only a residual condition of the same
+``dedup_key`` anti-join, so every candidate and every seen key still goes
+through the join's exchange; it only spares certified-new rows the key
+comparison.
 
 Driver-built frames (the seed ``seen`` row and frontier, the empty
-``written`` table, the epoch-0 ``seed_row``, the empty result frames, the
-sitemap ``done`` set, the robots.txt URLs and rules) are built with
-``session.local_frame``, never from a Python list: a list-built frame is a
-PythonRDD leaf, and every scan of it runs one Python-worker task per core
-even with zero rows.  A warm ``count()`` of a one-row list-built frame took
-~0.35 s and ~0.85 Python CPU-s on a 4-core host, against ~0.1 s and none
-for ``local_frame``.  tests/test_local_frames.py fails on any other
-``createDataFrame`` call in plans/, sources/ or operators/politeness.py.
+``written`` table, the empty result frames, the sitemap ``done`` set, the
+robots.txt URLs and rules) are built with ``session.local_frame``, never
+from a Python list: a list-built frame is a PythonRDD leaf, and every scan
+of it runs one Python-worker task per core even with zero rows.  A warm
+``count()`` of a one-row list-built frame took ~0.35 s and ~0.85 Python
+CPU-s on a 4-core host, against ~0.1 s and none for ``local_frame``.
+tests/test_local_frames.py fails on any other ``createDataFrame`` call in
+plans/, sources/ or operators/politeness.py.
 
 An epoch stage is materialized once (``_localckpt``).  Counts and
 driver-side harvests ride a pyspark ``Observation`` on that checkpoint
@@ -431,18 +434,19 @@ class Crawler:
 
     def run(self, resume: bool = False) -> CrawlResult:
         spark = self.spark
+        # the last committed epoch's record, read once (None: a fresh crawl)
+        record = (self.checkpoint.resume(spark)
+                  if resume and self.checkpoint is not None else None)
         # the first epoch's page pass finds its Python workers running: they
         # start while the driver runs the prologue and the first fetch
-        committed = (self.checkpoint.metrics()
-                     if resume and self.checkpoint is not None else [])
-        n_frontier = int(committed[-1]["frontier_rows"]) if committed else 1
+        n_frontier = record[0]["frontier_rows"] if record else 1
         default_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         aqe_prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
         self._deferred(lambda: _warm_python_workers(
             spark, page_pass_width(n_frontier, default_parts)))
         loop_err = None
         try:
-            return self._crawl(resume, default_parts)
+            return self._crawl(record, default_parts)
         except BaseException as e:
             loop_err = e
             raise
@@ -458,7 +462,9 @@ class Crawler:
                     raise helper_err
                 raise loop_err from helper_err
 
-    def _crawl(self, resume: bool, default_parts: int) -> CrawlResult:
+    def _crawl(self, record, default_parts: int) -> CrawlResult:
+        """The epoch loop, from the seed or from ``record``, the last
+        committed epoch's ``CrawlCheckpoint.resume``."""
         spark = self.spark
         cfg = self.config
         if cfg.fetch_robots or cfg.use_sitemaps:
@@ -466,16 +472,11 @@ class Crawler:
             # discover Sitemap: lines (rules are not installed)
             self._ingest_host_robots([(self.seed_host, self.seed.scheme)])
 
-        resumed = None
-        if resume and self.checkpoint is not None:
-            resumed = self.checkpoint.resume_state(spark)
-
-        if resumed is None:
+        if record is None:
             # seed admission (scraper/scraper.go:157): the seed is one row;
             # its key is inserted before everything else.
             from ..functions.urlnorm import dedup_key as py_dedup_key
             seed_key = py_dedup_key(self.seed, self.seed_host)
-            self._seed_key = seed_key  # pre-rebase key, needed at commit time
             seen = local_frame(spark, [(seed_key, 0)],
                                "dedup_key string, epoch int")
             # the seed passes every candidate's checks (Java regex
@@ -488,23 +489,25 @@ class Crawler:
                 "host string, path string, is_asset boolean").filter(
                 should_download(self.seed_host, cfg.max_depth, cfg.includes,
                                 cfg.excludes)).select("url", "depth", "seq")
-            epoch = 0
-            next_seq = 1
-            n_frontier = 1
+            # filesystem state for the fileExists asset skip
+            # (scraper/download.go:76-79): one row per already-written path
+            written = local_frame(spark, [], "file_path string")
+            epoch, next_seq, n_frontier = 0, 1, 1
         else:
-            # north_rule: resume at the last committed frontier epoch; the
-            # seen table is the union of committed deltas (the epoch-0 delta
-            # includes the seed key), Bloom is rebuilt from it below.
-            epoch, frontier, seen = resumed
-            last_metrics = self.checkpoint.metrics()[-1]
-            next_seq = int(last_metrics["next_seq"])
-            self.seed_host = last_metrics.get("seed_host", self.seed_host)
-            n_frontier = int(last_metrics["frontier_rows"])
+            # north_rule: resume at the last committed frontier epoch; seen
+            # and written are the unions of the committed deltas (the
+            # epoch-0 seen delta holds the seed key), Bloom is rebuilt from
+            # seen below.
+            metrics, frontier, seen, written = record
+            epoch = metrics["epoch"] + 1
+            next_seq = metrics["next_seq"]
+            n_frontier = metrics["frontier_rows"]
+            self.seed_host = metrics["seed_host"]
 
         self.bloom = SeenSet() if self.use_bloom else None
         if self.bloom is not None:
             self.bloom.enable_stats(spark.sparkContext)
-            if resumed is None:
+            if record is None:
                 self.bloom.add_keys([seed_key])  # seen's one row, no job
             else:
                 self.bloom.add_keys_df(seen)  # rebuild from committed table
@@ -522,13 +525,6 @@ class Crawler:
         # partitions after the loop, also when it raises.
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         commit = None  # the in-flight commit_epoch helper
-        # filesystem state for the fileExists asset skip
-        # (scraper/download.go:76-79): one row per already-written path
-        written = local_frame(spark, [], "file_path string")
-        if resumed is not None and self.checkpoint is not None:
-            w = self.checkpoint.resume_written(spark)
-            if w is not None:
-                written = w
 
         while epoch < self.max_epochs:
             if n_frontier == 0:
@@ -574,7 +570,7 @@ class Crawler:
                 "processed")
 
             page_meta = pages_ok.select("page_url", "depth")
-            full_spans = extract_spans_df(page_bodies, include_text=True)
+            full_spans = extract_spans_df(page_bodies)
             documents.append(full_spans.join(
                 page_meta, full_spans["url"] == page_meta["page_url"],
                 "left")
@@ -715,30 +711,24 @@ class Crawler:
             frontier = next_pages
             n_frontier = n_next
             if self.checkpoint is not None:
-                commit_delta = delta
-                if epoch == 0:
-                    # epoch-0 delta must carry the driver-inserted seed key
-                    # (computed BEFORE any depth-0 redirect rebase) so a
-                    # resume can reconstruct seen purely from deltas
-                    seed_row = local_frame(spark, [(self._seed_key, 0)],
-                                           "dedup_key string, epoch int")
-                    commit_delta = delta.unionByName(seed_row)
                 # the commit runs on a helper while the next epoch runs.
                 # Its arguments are bound here (both row counts rode
                 # checkpoints that already ran), and commits run one at a
                 # time in epoch order, so MANIFEST.json only ever names a
-                # fully written epoch.
+                # fully written epoch.  Epoch 0's seen delta is the whole
+                # seen table: the seed's pre-rebase key plus the inserts,
+                # so a resume rebuilds seen purely from deltas.
                 if commit is not None:
                     commit.get()
                 commit = self._deferred(partial(
-                    self.checkpoint.commit_epoch,
-                    epoch, frontier=frontier, seen_delta=commit_delta,
+                    self.checkpoint.commit_epoch, epoch, frontier=frontier,
+                    seen_delta=seen if epoch == 0 else delta,
+                    written_delta=written_delta,
                     metrics={"next_seq": next_seq,
                              "seed_host": self.seed_host,
                              "frontier_rows": n_next,
                              "seen_delta_rows": self._ins_obs.get["n"]
-                             + (1 if epoch == 0 else 0)},
-                    written_delta=written_delta))
+                             + (1 if epoch == 0 else 0)}))
             # plan-depth compaction: seen/written are lazy unionByName
             # chains over per-epoch checkpointed deltas — correct at BFS
             # depths, but the union tree (and Catalyst analysis time per
@@ -1198,48 +1188,31 @@ class Crawler:
         return reduce(DataFrame.unionByName, rounds)
 
     def _asset_outputs(self, asset_fetch: DataFrame, epoch: int) -> DataFrame:
+        """One output row per ok asset fetch, written at its consideration
+        position.  A url occurs at most once in an epoch's asset fetch:
+        admission keeps one row per ``dedup_key``, and a url has one key."""
         quality = self.config.image_quality
-        ok = asset_fetch.filter(F.col("status") == "ok")
-
-        def run(batches) -> Iterator:
-            import pandas as pd
-
-            from ..operators.images import recode_image_bytes
-            for pdf in batches:
-                bodies = []
-                for body, stage in zip(pdf["body"], pdf["stage"]):
-                    data = bytes(body) if body is not None else b""
-                    # C19: only the images-queue stage recodes
-                    # (scraper/download.go:58-63); quality 0 disables
-                    if stage in ("image", "css-image") and 1 <= quality <= 99:
-                        data = recode_image_bytes(data, quality)
-                    bodies.append(data)
-                yield pd.DataFrame({"url": pdf["url"],
-                                    "file_path": pdf["file_path"],
-                                    "body": bodies})
-
-        out = ok.select("url", "file_path", "body", "stage",
-                        self._pos().alias("_pos"))
+        body = F.col("body")
         if 1 <= quality <= 99:
-            # Re-join guard: `allowed` is first-wins-per-path today, so a
-            # url appears at ONE consideration position per epoch — but if
-            # that invariant ever relaxed, an on="url" re-join would fan
-            # out.  Dedupe bodies per url (rows for one url share
-            # file_path/body; stage tie-break is arbitrary) and keep the
-            # MIN position (first consideration, the write that wins).
-            pos_by_url = out.groupBy("url").agg(F.min("_pos").alias("_pos"))
-            recoded = (out.drop("_pos").dropDuplicates(["url"])
-                       .mapInPandas(run, schema="url string, "
-                                                "file_path string, body binary")
-                       .join(pos_by_url, on="url", how="inner"))
-        else:
-            recoded = out.drop("stage")
-        return (recoded
-                .withColumn("is_page", F.lit(False))
-                .withColumn("wpos", F.struct(
-                    F.lit(epoch).alias("epoch"), F.col("_pos").alias("pos")))
-                .drop("_pos")
-                .withColumn("epoch", F.lit(epoch)))
+            @F.pandas_udf("binary")
+            def recode(bodies, stages):
+                import pandas as pd
+
+                from ..operators.images import recode_image_bytes
+                # C19: only the images-queue stage recodes
+                # (scraper/download.go:58-63); quality 0 disables
+                return pd.Series([
+                    recode_image_bytes(bytes(b), quality)
+                    if s in ("image", "css-image") else b
+                    for b, s in zip(bodies, stages)])
+
+            body = recode(body, F.col("stage"))
+        return (asset_fetch.filter(F.col("status") == "ok")
+                .select("url", "file_path", body.alias("body"),
+                        F.lit(False).alias("is_page"),
+                        F.struct(F.lit(epoch).alias("epoch"),
+                                 self._pos().alias("pos")).alias("wpos"),
+                        F.lit(epoch).alias("epoch")))
 
 
 def _observed(df: DataFrame, *aggs):

@@ -19,6 +19,7 @@ from ..functions.urlmath import get_file_path
 from ..functions.urlnorm import GoURL, dedup_key, parse_url
 from ..operators.cssx import css_extract
 from ..operators.extract import extract_spans, tag_urls
+from ..operators.images import recode_image_bytes
 from ..operators.rewrite import rewrite_document
 
 
@@ -221,10 +222,8 @@ class Simulator:
 
     def _recode_processor(self, u: GoURL, data: bytes) -> bytes:
         # checkImageForRecode (scraper/images.go): recode only when
-        # image_quality in [1,99]; recode-if-smaller. Image decoding is
-        # unavailable in this sandbox — quality 0 (the default) bypasses it,
-        # matching the reference's default path.
-        return data
+        # image_quality in [1,99]; keep the recoded bytes only if smaller
+        return recode_image_bytes(data, self.config.image_quality)
 
 
 def crawl_sequential(config: CrawlConfig, pages: dict) -> SimResult:

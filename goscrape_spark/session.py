@@ -2,8 +2,10 @@
 
 Local defaults target the sandbox (local[N], 32 cores); the same builder
 settings are what a spark-submit deployment would carry in --conf flags.
-AQE is on so skewed hosts get runtime-split shuffle partitions (the salting
-in plans/crawl.py is the explicit first line of defense; AQE is the backstop).
+AQE is on for the session's other queries.  The crawl loop turns it off
+while it runs (``Crawler.run`` restores it): the loop sizes its own
+shuffles, and its skew handling is the map-side combine of admission's
+first-wins aggregate (operators/admission.py), not AQE's skew split.
 
 PySpark's DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
 is off.  With it on, PySpark 4.1 captures the Python call site of every

@@ -107,7 +107,6 @@ def fixture_fetch_df(rows: DataFrame, pages: DataFrame,
 
 
 def http_fetch_df(frontier: DataFrame, config: CrawlConfig,
-                  url_col: str = "url",
                   session_cookies: list[dict] | None = None,
                   host_delays_ms: dict[str, int] | None = None) -> DataFrame:
     """Fetch every frontier URL over real HTTP, one batch per host.
@@ -151,11 +150,11 @@ def http_fetch_df(frontier: DataFrame, config: CrawlConfig,
     base_list = list(base_cookies.values())
 
     # the input's other columns (none may share a fetch column's name)
-    carried = [f for f in frontier.schema.fields if f.name != url_col]
+    carried = [f for f in frontier.schema.fields if f.name != "url"]
     carried_names = [f.name for f in carried]
     schema = FETCHED_SCHEMA + "".join(
         f", `{f.name}` {f.dataType.simpleString()}" for f in carried)
-    src = frontier.select(F.col(url_col).alias("url"), *carried_names) \
+    src = frontier.select("url", *carried_names) \
                   .withColumn("_fetch_host", col_host(F.col("url")))
 
     def fetch_host(key, pdf):

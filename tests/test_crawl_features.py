@@ -1,5 +1,6 @@
 """Crawler feature coverage: bloom pre-filter parity, robots, politeness
-schedule, checkpoint commit + resume state."""
+schedule, the checkpoint's epoch record, and crawls killed after epoch 0
+and resumed from it."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -56,34 +57,43 @@ def test_politeness_schedule_in_fetch_log(spark):
 
 
 def test_checkpoint_commit_and_resume_state(spark, tmp_path):
+    import json
+
     from goscrape_spark.sources.storage import CrawlCheckpoint
 
     ckpt = CrawlCheckpoint(path=str(tmp_path / "ckpt"))
+    assert ckpt.resume(spark) is None  # nothing committed yet
     res = crawl(spark, CrawlConfig(url=SITE_LINKS_START),
                 pages_df(spark, SITE_LINKS), checkpoint=ckpt)
     last = ckpt.max_committed_epoch()
     assert last == res.epochs - 1
-    state = ckpt.resume_state(spark)
-    assert state is not None
-    next_epoch, frontier, seen = state
-    assert next_epoch == res.epochs
+    metrics, frontier, seen, written = ckpt.resume(spark)
+    assert metrics["epoch"] == last
     assert frontier.count() == 0  # crawl finished; final frontier empty
-    m = ckpt.metrics()
-    assert len(m) == res.epochs and all("frontier_rows" in x for x in m)
+    assert {r.dedup_key for r in seen.collect()} == res.seen_set()
+    assert {r.file_path for r in written.collect()} == \
+        {r.file_path for r in res.output.collect()}
     # the row counts the crawl passes in (observed on its own checkpoints)
     # match what was committed
-    for e, x in enumerate(m):
+    for e in range(res.epochs):
         edir = f"{ckpt.path}/epoch={e}"
+        with open(f"{edir}/metrics.json") as f:
+            x = json.load(f)
+        assert list(x) == ["epoch", "next_seq", "seed_host",
+                           "frontier_rows", "seen_delta_rows"]
+        assert x["epoch"] == e
         assert x["frontier_rows"] == \
             spark.read.parquet(f"{edir}/frontier").count()
         assert x["seen_delta_rows"] == \
             spark.read.parquet(f"{edir}/seen_delta").count()
+    assert metrics == x
 
 
-def test_commit_epoch_counts_only_missing_metrics(spark, tmp_path,
-                                                  monkeypatch):
-    """commit_epoch recounts only the row counts its caller did not pass:
-    with both given it runs no count() job."""
+def test_commit_epoch_runs_no_count(spark, tmp_path, monkeypatch):
+    """commit_epoch takes its row counts from the caller, which observed
+    them on its own checkpoints: it runs no count() job."""
+    import json
+
     from goscrape_spark.session import local_frame
     from goscrape_spark.sources.storage import CrawlCheckpoint
 
@@ -91,6 +101,8 @@ def test_commit_epoch_counts_only_missing_metrics(spark, tmp_path,
                            "url string, depth int, seq bigint")
     delta = local_frame(spark, [("/a", 1), ("/b", 1)],
                         "dedup_key string, epoch int")
+    written = local_frame(spark, [("x.org/a",), ("x.org/a",)],
+                          "file_path string")
 
     def no_count(self):
         raise AssertionError("commit_epoch ran a count() job")
@@ -99,11 +111,14 @@ def test_commit_epoch_counts_only_missing_metrics(spark, tmp_path,
     with monkeypatch.context() as mp:
         mp.setattr(type(frontier), "count", no_count)
         ckpt.commit_epoch(0, frontier=frontier, seen_delta=delta,
+                          written_delta=written,
                           metrics={"frontier_rows": 1, "seen_delta_rows": 2})
-    # without the numbers it counts them itself
-    ckpt.commit_epoch(1, frontier=frontier, seen_delta=delta)
-    assert [(x["frontier_rows"], x["seen_delta_rows"])
-            for x in ckpt.metrics()] == [(1, 2), (1, 2)]
+    with open(f"{ckpt.path}/epoch=0/metrics.json") as f:
+        assert json.load(f) == {"epoch": 0, "frontier_rows": 1,
+                                "seen_delta_rows": 2}
+    # the written delta is stored once per path
+    assert [r.file_path for r in spark.read.parquet(
+        f"{ckpt.path}/epoch=0/written_delta").collect()] == ["x.org/a"]
 
 
 def test_killed_run_resumes_and_completes(spark, tmp_path):
@@ -129,3 +144,78 @@ def test_killed_run_resumes_and_completes(spark, tmp_path):
     resumed_urls = [r.url for r in resumed.ordered_fetches()]
     full_urls = [r.url for r in full.ordered_fetches()]
     assert resumed_urls == full_urls[len([r for r in partial.ordered_fetches()]):]
+
+
+def _resumed_after_epoch_0(spark, tmp_path, cfg, pages):
+    """A crawl killed after epoch 0 (``max_epochs=1``) and resumed from
+    its checkpoint: ``(partial, resumed)``."""
+    from goscrape_spark.sources.storage import CrawlCheckpoint
+
+    ckpt = CrawlCheckpoint(path=str(tmp_path / "ckpt"))
+    partial = crawl(spark, cfg, pages_df(spark, pages), checkpoint=ckpt,
+                    max_epochs=1)
+    assert ckpt.max_committed_epoch() == 0
+    resumed = crawl(spark, cfg, pages_df(spark, pages), checkpoint=ckpt,
+                    resume=True)
+    return partial, resumed
+
+
+def _order(res):
+    return [(r.url, r.kind, r.status) for r in res.ordered_fetches()]
+
+
+def test_resume_after_depth0_redirect(spark, tmp_path):
+    """The seed redirects to another host: the resumed crawl keys and
+    admits pages against the rebased host, like the uninterrupted one."""
+    from goscrape_spark.plans.simulator import PageFixture
+
+    pages = {
+        "https://old.org/": PageFixture(
+            body=b'<a href="https://new.org/p">p</a><img src="/i.png">',
+            resp_url="https://new.org/"),
+        "https://new.org/p": PageFixture(
+            body=b'<a href="/q">q</a><a href="/">home</a>'
+                 b'<img src="https://new.org/i.png">'),
+        "https://new.org/q": PageFixture(
+            body=b'<a href="https://old.org/r">r</a><a href="/p">p</a>'),
+        "https://new.org/i.png": PageFixture(body=b"img"),
+    }
+    cfg = CrawlConfig(url="https://old.org/")
+    sim = crawl_sequential(cfg, pages)
+    full = crawl(spark, cfg, pages_df(spark, pages))
+    partial, resumed = _resumed_after_epoch_0(spark, tmp_path, cfg, pages)
+    assert resumed.seed_host == "new.org"
+    assert resumed.seen_set() == full.seen_set() == sim.seen
+    sim_order = [(f.url, f.kind, f.status) for f in sim.fetches]
+    assert _order(partial) + _order(resumed) == _order(full) == sim_order
+    assert ("https://new.org/q", "page", "ok") in _order(resumed)
+
+
+def test_file_exists_after_resume(spark, tmp_path):
+    """Epoch 0 writes the stylesheet's output path; epoch 1 links the same
+    path under another query.  The resumed crawl starts from the committed
+    written paths, so it never fetches ``?v=2``."""
+    pages = {
+        "https://example.org/": ('<link href="https://cdn.x/s.css?v=1" '
+                                 'rel="stylesheet"><a href="/p">p</a>'),
+        "https://example.org/p": ('<link href="https://cdn.x/s.css?v=2" '
+                                  'rel="stylesheet">'),
+        "https://cdn.x/s.css?v=1": "h1 { color: red; }",
+        "https://cdn.x/s.css?v=2": "h1 { color: blue; }",
+    }
+    cfg = CrawlConfig(url="https://example.org/")
+    full = crawl(spark, cfg, pages_df(spark, pages))
+    partial, resumed = _resumed_after_epoch_0(spark, tmp_path, cfg, pages)
+    fetched = [u for u, _, _ in _order(partial) + _order(resumed)]
+    assert "https://cdn.x/s.css?v=1" in fetched
+    assert "https://cdn.x/s.css?v=2" not in fetched
+    assert _order(partial) + _order(resumed) == _order(full)
+
+    def tree(*results):
+        files = {}
+        for res in results:  # later epochs overwrite, as on disk
+            files.update((r.file_path, bytes(r.body))
+                         for r in res.output.collect())
+        return files
+
+    assert tree(partial, resumed) == tree(full)

@@ -34,9 +34,13 @@ def _crawl(spark, ckpt=None, **kw):
 
 def _committed(ckpt):
     """MANIFEST.json and every epoch's metrics.json, as parsed JSON."""
-    with open(os.path.join(ckpt.path, "MANIFEST.json")) as f:
-        manifest = json.load(f)
-    return manifest, ckpt.metrics()
+    def load(*parts):
+        with open(os.path.join(ckpt.path, *parts)) as f:
+            return json.load(f)
+
+    manifest = load("MANIFEST.json")
+    return manifest, [load(f"epoch={e}", "metrics.json")
+                      for e in range(manifest["max_committed_epoch"] + 1)]
 
 
 def test_failed_loop_joins_page_paths_before_restoring_conf(spark,

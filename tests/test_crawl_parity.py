@@ -198,3 +198,37 @@ def test_parity_asset_vs_page_conflict(spark):
                              pages)
     kinds = {(f.url, f.kind) for f in sim.fetches}
     assert ("https://example.org/style.css", "asset") in kinds
+
+
+def test_parity_image_recode(spark):
+    # image_quality=75 recodes the images queue (scraper/download.go:58-63):
+    # an <img> and an absolute url() in a linked stylesheet.  The
+    # <body background> is fetched by the earlier body stage, which does
+    # not recode.  Each url appears once per epoch, so each output file
+    # is one fetch's (recoded) bytes.
+    import numpy as np
+
+    from goscrape_spark.functions.imagecodec import png_encode
+
+    png = png_encode(np.random.default_rng(0).integers(
+        0, 256, (32, 32, 3), dtype=np.uint8))
+    pages = {
+        "https://example.org/": ('<link href="/s.css" rel="stylesheet">'
+                                 '<body background="/bg.png">'
+                                 '<img src="/img.png"></body>'),
+        "https://example.org/s.css":
+            "h1 { background: url(https://example.org/css.png); }",
+        "https://example.org/img.png": png,
+        "https://example.org/bg.png": png,
+        "https://example.org/css.png": png,
+    }
+    sim, res = assert_parity(
+        spark, CrawlConfig(url="https://example.org/", image_quality=75),
+        pages)
+    assert {f.url.rsplit("/", 1)[1] for f in sim.fetches
+            if f.url.endswith(".png")} == {"img.png", "bg.png", "css.png"}
+    out = {r.file_path.rsplit("/", 1)[1]: bytes(r.body)
+           for r in res.output.collect()}
+    assert out["img.png"] != png and out["img.png"][:2] == b"\xff\xd8"
+    assert out["css.png"] != png
+    assert out["bg.png"] == png

@@ -1,5 +1,5 @@
-"""Round-5 regression tests: asset-output re-join hardening and
-seen/written union-chain compaction."""
+"""Round-5 regression tests: seen/written union-chain compaction, the
+fixpoint signature and the stage-time table."""
 
 from goscrape_spark.config import CrawlConfig
 from goscrape_spark.plans.crawl import Crawler
@@ -8,33 +8,6 @@ from goscrape_spark.sources.fixtures import (
     SITE_LINKS_START,
     pages_df,
 )
-
-
-def test_asset_outputs_no_fanout_on_duplicate_url(spark):
-    """A crafted epoch where one asset url appears at TWO consideration
-    positions must still write exactly one row, at the MIN position
-    (first-wins) — the recode re-join may not fan out."""
-    c = Crawler(spark, CrawlConfig(url=SITE_LINKS_START, image_quality=75),
-                pages_df(spark, SITE_LINKS))
-    rows = [
-        ("https://example.org/a.gif", "example.org/a.gif", b"GIF89a data",
-         "image", "ok", 1, 2, 0, 0, 0),
-        ("https://example.org/a.gif", "example.org/a.gif", b"GIF89a data",
-         "image", "ok", 5, 2, 0, 0, 0),     # later position, same url
-        ("https://example.org/b.css", "example.org/b.css", b"body{}",
-         "css", "ok", 1, 1, 0, 0, 0),
-    ]
-    schema = ("url string, file_path string, body binary, stage string, "
-              "status string, parent_seq long, stage_rank int, sub_rank "
-              "int, intra1 int, intra2 int")
-    fetched = spark.createDataFrame(rows, schema)
-    got = c._asset_outputs(fetched, epoch=0).collect()
-    by_url = {r.url: r for r in got}
-    assert len(got) == 2 and len(by_url) == 2
-    a = by_url["https://example.org/a.gif"]
-    assert a.wpos.pos.parent_seq == 1          # min position wins
-    assert bytes(a.body) == b"GIF89a data"     # non-PNG/JPEG: pass-through
-    assert bytes(by_url["https://example.org/b.css"].body) == b"body{}"
 
 
 def test_union_chain_compaction_bounds_plan_depth(spark):
