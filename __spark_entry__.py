@@ -229,8 +229,7 @@ def q_politeness_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = _events(spark, sf_dir).select(
         "event_id", F.col("event_type").alias("host"))
-    out = schedule_politeness(ev, delay_ms=1500, host_col="host",
-                              order_cols=["event_id"])
+    out = schedule_politeness(ev, delay_ms=1500, order_cols=["event_id"])
     return out.select("event_id", "host", "not_before_ms")
 
 

@@ -8,10 +8,11 @@ support.  Design constraints:
   inline, preserving order), so it is expressed as a ``not_before`` schedule:
   the i-th fetch of a host within an epoch (in consideration order) may start
   no earlier than ``i * delay``.  One JVM window — a rank per host times
-  the delay — no Python.  The schedule is logged, not yet executed: the
-  live fetcher's per-host ``applyInPandas`` batch sends its requests in
-  ``sorted(set(urls))`` order with a fixed ``batch_delay`` sleep between
-  them (ROADMAP open item 4 makes it send in schedule order).
+  the delay — no Python.  Every page and asset fetch is scheduled here, and
+  this is the only place a host's robots ``Crawl-delay`` meets the global
+  delay.  The schedule is logged and executed: the live fetcher's per-host
+  batch sends its requests in the same order and spaces consecutive starts
+  by their ``not_before_ms`` difference (sources/fetch.http_fetch_df).
 
 * Robots rules (RFC 9309, parsed by functions/robotstxt.py) ride a
   **broadcast** join on ``host`` (the rules table is tiny relative to the
@@ -29,13 +30,11 @@ from ..session import local_frame
 
 
 def schedule_politeness(df: DataFrame, delay_ms: int,
-                        host_col: str = "host",
                         order_cols: list[str] | None = None,
-                        out_col: str = "not_before_ms",
                         host_delays_ms: dict[str, int] | None = None
                         ) -> DataFrame:
-    """Assign per-host fetch offsets: 0, delay, 2*delay, ... in consideration
-    order.
+    """Assign per-host fetch offsets ``not_before_ms``: 0, delay, 2*delay,
+    ... in consideration order, per ``host`` column value.
 
     ``host_delays_ms`` (robots.txt ``Crawl-delay`` per host) overrides the
     global delay where LARGER: the effective per-row delay is
@@ -44,20 +43,20 @@ def schedule_politeness(df: DataFrame, delay_ms: int,
     multiply stays inside whole-stage codegen — no extra join.
 
     The rank is ``row_number() OVER (PARTITION BY host ORDER BY ...) - 1``:
-    a same-host crawl ranks its whole asset set in one task, as the live
-    fetch already sends all of a host's requests from one task."""
+    a same-host crawl ranks an epoch's whole frontier or asset set in one
+    task, as the live fetch sends all of a host's requests from one task."""
     order_cols = order_cols or ["parent_seq", "stage_rank", "sub_rank",
                                 "intra1", "intra2"]
-    w = Window.partitionBy(host_col).orderBy(*[F.col(c) for c in order_cols])
+    w = Window.partitionBy("host").orderBy(*[F.col(c) for c in order_cols])
     rank = (F.row_number().over(w) - 1).cast("long")
     delay = F.lit(delay_ms).cast("long")
     if host_delays_ms:
         mapping = F.create_map(*[F.lit(x) for kv in host_delays_ms.items()
                                  for x in kv])
         delay = F.greatest(
-            delay, F.coalesce(mapping[F.col(host_col)].cast("long"),
+            delay, F.coalesce(mapping[F.col("host")].cast("long"),
                               F.lit(0).cast("long")))
-    return df.withColumn(out_col, rank * delay)
+    return df.withColumn("not_before_ms", rank * delay)
 
 
 def retry_backoff_ms(attempts: Column, retry_delay_ms: int = 1500) -> Column:
@@ -82,10 +81,9 @@ def rfc_rules_df(spark, parsed: dict[str, list[tuple[str, bool]]]) -> DataFrame:
                        "is_allow boolean, rule_len int")
 
 
-def apply_robots_rfc(candidates: DataFrame, rules: DataFrame,
-                     host_col: str = "host",
-                     path_col: str = "path") -> DataFrame:
-    """RFC 9309 matcher over a candidates frame: most-specific rule wins
+def apply_robots_rfc(candidates: DataFrame, rules: DataFrame) -> DataFrame:
+    """RFC 9309 matcher over a candidates frame's ``host`` and ``path``
+    columns: most-specific rule wins
     (longest pattern), Allow wins length ties, no matching rule allows.
 
     Distributed shape: the per-host rules table broadcasts (a robots file
@@ -96,15 +94,15 @@ def apply_robots_rfc(candidates: DataFrame, rules: DataFrame,
     map-side combine, no window, no skew pile-up on hot hosts.  Must agree
     exactly with functions.robotstxt.match_allowed (unit-tested)."""
     verdict_key = F.struct(F.col("rule_len"), F.col("is_allow"))
-    blocked = (candidates.select(host_col, path_col).distinct()
+    blocked = (candidates.select("host", "path").distinct()
                .join(F.broadcast(rules.withColumnRenamed("host", "_r_host")),
-                     (F.col(host_col) == F.col("_r_host"))
+                     (F.col("host") == F.col("_r_host"))
                      # column-valued regex: RLIKE via expr (Column.rlike
                      # only takes a literal pattern)
-                     & F.expr(f"{path_col} RLIKE regex"),
+                     & F.expr("path RLIKE regex"),
                      "inner")
-               .groupBy(host_col, path_col)
+               .groupBy("host", "path")
                .agg(F.max_by(F.col("is_allow"), verdict_key).alias("_allow"))
                .filter(~F.col("_allow"))
-               .select(host_col, path_col))
-    return candidates.join(blocked, on=[host_col, path_col], how="left_anti")
+               .select("host", "path"))
+    return candidates.join(blocked, on=["host", "path"], how="left_anti")

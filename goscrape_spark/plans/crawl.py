@@ -11,7 +11,14 @@ seen-set (SURVEY §3.4):
   from a ``pages`` fixture table (J2, the reference's own test seam,
   scraper/scraper_test.go:35-42) or fetched per host over HTTP (S1/S2).
   The crawler picks the source once; every fetch, the fileExists check
-  and every checkpoint after it run the same way for both;
+  and every checkpoint after it run the same way for both.  Every fetch
+  input carries its J5 politeness slot ``not_before_ms``
+  (``Crawler._schedule``) and a crawl order (PAGE_ORDER, ORDER_COLS for
+  assets, BOOT_ORDER for robots.txt and sitemaps); the live source sends
+  each host's requests in that order, spaced by those slots, so the wire
+  runs the schedule the fetch log records.  An epoch still fetches all
+  its pages before their assets, where the reference fetches page i's
+  assets before page i+1;
 * per-page candidates (assets + links) come out of the fused page pass
   (operators/extract.process_pages_df) already stage-ranked in the
   sequential loop's consideration order — link -> script -> body -> style
@@ -123,6 +130,10 @@ CAND_SCHEMA = ("page_url string, parent_seq bigint, stage_rank int, "
                "is_asset boolean, depth int, stage string, "
                "dedup_key string, file_path string")
 
+# each fetch kind's crawl order, to schedule and to send (assets: ORDER_COLS)
+PAGE_ORDER = ["seq"]
+BOOT_ORDER = ["url"]  # robots.txt and sitemaps
+
 
 def page_candidate_rows(processed: DataFrame) -> DataFrame:
     """The fused pass's per-page ``cands`` arrays as CAND_SCHEMA rows: one
@@ -205,7 +216,7 @@ class Crawler:
             self._source = self._http_source
         else:
             from ..sources.fetch import fixture_fetch_df
-            self._source = lambda rows: fixture_fetch_df(
+            self._source = lambda rows, order: fixture_fetch_df(
                 rows, pages, config.max_retries)
         self.use_bloom = use_bloom
         self.bloom = None  # set in run()
@@ -215,7 +226,7 @@ class Crawler:
         self.robots_rfc = None
         self._robots_parsed: dict[str, list] = {}
         # robots Crawl-delay per host (ms), merged max-wise with the
-        # configured politeness_delay_ms by the schedulers (J5)
+        # configured politeness_delay_ms by _schedule (J5)
         self._host_delay_ms: dict[str, int] = {}
         # hosts whose robots.txt has been fetched (or failed) this crawl —
         # each host is contacted for robots at most once
@@ -312,11 +323,12 @@ class Crawler:
             return
         self._robots_fetched.update(wanted)
         rows = local_frame(self.spark,
-                           [(f"{sc}://{h}/robots.txt", h)
+                           [(f"{sc}://{h}/robots.txt", h, 0)
                             for h, sc in wanted.items()],
-                           "url string, robots_host string")
+                           "url string, robots_host string, "
+                           "not_before_ms bigint")
         _, obs = self._fetch_observed(
-            rows, "robots_fetch", F.collect_list(F.when(
+            rows, "robots_fetch", BOOT_ORDER, F.collect_list(F.when(
                 F.col("status") == "ok",
                 F.struct("robots_host",
                          F.substring("body", 1, 500 * 1024).alias("body"))
@@ -367,8 +379,10 @@ class Crawler:
         cur = done
         loc_frames: list[DataFrame] = []
         for _ in range(3):
-            fetched = self._do_fetch(cur, label="sitemap_fetch") \
-                          .select("url", "body", "status")
+            fetched = self._fetch_observed(
+                self._schedule(cur.withColumn("host", col_host(F.col("url"))),
+                               BOOT_ORDER),
+                "sitemap_fetch", BOOT_ORDER)[0].select("url", "body", "status")
             # cast, not decode: Spark 4's decode() THROWS on any invalid
             # UTF-8 byte (a .xml.gz sitemap or latin-1 bytes would abort
             # the crawl); binary->string cast substitutes U+FFFD like the
@@ -541,7 +555,10 @@ class Crawler:
             parts = max(2, min(default_parts, n_frontier // 2000 + 1))
             cpu_parts = page_pass_width(n_frontier, default_parts)
             spark.conf.set("spark.sql.shuffle.partitions", str(parts))
-            frontier = frontier.repartition(parts, "url")
+            # pages are all on the seed host (F5)
+            frontier = self._schedule(
+                frontier.withColumn("host", F.lit(self.seed_host)), PAGE_ORDER
+            ).repartition(parts, "url")
 
             # the fetch checkpointed the frontier rows it returns (and
             # rebased the seed at epoch 0)
@@ -599,29 +616,10 @@ class Crawler:
                 self._admission_fixpoint(candidates, seen, page_paths_d,
                                          written, epoch)
 
-            # record fetches: the page fetches of this epoch + admitted
-            # assets.  Pages are all seed-host (F5), so the robots
-            # Crawl-delay merge collapses to one scalar max here
-            page_delay_ms = max(cfg.politeness_delay_ms,
-                                self._host_delay_ms.get(self.seed_host, 0))
-            if page_delay_ms > 0:
-                # epoch seqs are dense [epoch_base, epoch_base + n): W2's
-                # global_sequence assigned start=next_seq-n_frontier..-1,
-                # so the politeness offset is pure column arithmetic — no
-                # window, no shuffle.  (Was row_number() OVER (ORDER BY
-                # seq): a single-task sort of the whole epoch whenever
-                # politeness_delay_ms > 0 — the exact W2 scale-killer
-                # shape.)
-                epoch_base = next_seq - n_frontier
-                page_not_before = ((F.col("seq") - F.lit(epoch_base))
-                                   .cast("long")
-                                   * F.lit(page_delay_ms))
-            else:
-                page_not_before = F.lit(0).cast("long")
+            # record fetches: this epoch's page fetches + admitted assets
             page_log = fetched.select(
                 F.col("req_url").alias("url"), F.lit("page").alias("kind"),
-                page_not_before.alias("not_before_ms"),
-                F.col("status"), F.col("attempts"),
+                "not_before_ms", F.col("status"), F.col("attempts"),
                 F.col("seq").alias("parent_seq"),
                 F.lit(0).alias("stage_rank"), F.lit(0).alias("sub_rank"),
                 F.lit(0).alias("intra1"), F.lit(0).alias("intra2"),
@@ -843,20 +841,19 @@ class Crawler:
         self.stage_secs[label] = self.stage_secs.get(label, 0.0) + dt
         return out
 
-    def _http_source(self, rows: DataFrame) -> DataFrame:
+    def _http_source(self, rows: DataFrame, order: list[str]) -> DataFrame:
         from ..sources.fetch import http_fetch_df
         return http_fetch_df(
-            rows, self.config,
-            session_cookies=list(self._session_cookies.values()),
-            host_delays_ms=self._host_delay_ms)
+            rows, self.config, order,
+            session_cookies=list(self._session_cookies.values()))
 
-    def _do_fetch(self, rows: DataFrame, label: str = "fetched") -> DataFrame:
-        return self._fetch_observed(rows, label)[0]
-
-    def _fetch_observed(self, rows: DataFrame, label: str, *aggs):
+    def _fetch_observed(self, rows: DataFrame, label: str, order: list[str],
+                        *aggs):
         """The fetch seam: ``rows`` in; the same rows plus (body, resp_url,
         status, attempts) out, from the source chosen in ``__init__``
-        (sources/fetch.py).  S2 retries are the fetch's own: the reference
+        (sources/fetch.py).  Every row carries its ``not_before_ms``; a
+        live fetch sends each host's rows in ``order`` (crawl order), spaced
+        by that schedule.  S2 retries are the fetch's own: the reference
         retries 429s inline with linear backoff (scraper/http.go:50-96),
         so retry outcomes never change crawl order.
 
@@ -869,7 +866,7 @@ class Crawler:
         import json as _json
 
         fetched, obs = _observed(
-            self._source(rows),
+            self._source(rows, order),
             F.collect_list(F.when(
                 F.col("set_cookies").isNotNull(),
                 F.struct("url", "set_cookies"))).alias("snaps"), *aggs)
@@ -891,10 +888,12 @@ class Crawler:
         # seed (the only row) rides the fetch's job for the rebase
         seed = [F.first(F.struct("url", "resp_url", "status")).alias("seed")
                 ] if epoch == 0 else []
-        fetched, obs = self._fetch_observed(frontier, "fetched", *seed)
+        fetched, obs = self._fetch_observed(frontier, "fetched", PAGE_ORDER,
+                                            *seed)
         fetched = fetched.select(
             F.col("url").alias("req_url"), F.col("url").alias("page_url"),
-            "body", "resp_url", "depth", "seq", "status", "attempts")
+            "body", "resp_url", "depth", "seq", "not_before_ms", "status",
+            "attempts")
         return self._rebase_seed(fetched, obs.get["seed"]) if epoch == 0 \
             else fetched
 
@@ -1126,18 +1125,16 @@ class Crawler:
         return out if obs.get["n"] else None
 
     # ------------------------------------------------------------------
-    def _schedule(self, assets: DataFrame) -> DataFrame:
+    def _schedule(self, rows: DataFrame, order: list[str]) -> DataFrame:
+        """``rows`` (with a ``host`` column) plus ``not_before_ms``: J5's
+        per-host politeness schedule in ``order``, which the fetch logs and
+        a live fetch executes.  No delay configured and no robots
+        Crawl-delay known: every row is 0, and no window runs."""
         if self.config.politeness_delay_ms > 0 or self._host_delay_ms:
-            # J5: per-host politeness schedule, logged with each fetch (the
-            # live fetcher spaces a host's requests by a fixed delay instead;
-            # ROADMAP open item 4).  Robots Crawl-delay hosts override the
-            # global delay where larger (literal-map column expr inside
-            # schedule_politeness).
             from ..operators.politeness import schedule_politeness
-            return schedule_politeness(assets,
-                                       self.config.politeness_delay_ms,
-                                       host_delays_ms=self._host_delay_ms)
-        return assets.withColumn("not_before_ms", F.lit(0).cast("long"))
+            return schedule_politeness(rows, self.config.politeness_delay_ms,
+                                       order, self._host_delay_ms)
+        return rows.withColumn("not_before_ms", F.lit(0).cast("long"))
 
     def _asset_log_select(self, joined: DataFrame, epoch: int) -> DataFrame:
         return joined.select(
@@ -1163,12 +1160,14 @@ class Crawler:
             "n_deferred_link" if part else "n_deferred_rest"]
         deferred = ranked.filter(in_part & defer) if n_deferred else None
         rounds: list[DataFrame] = []
-        cur = self._schedule(ranked.filter(~defer)).filter(in_part)
+        cur = self._schedule(ranked.filter(~defer), ORDER_COLS) \
+                  .filter(in_part)
         while True:
             # the fetch returns (and checkpoints) the scheduled rows
             # themselves: no join back, no second checkpoint
             fetched = self._asset_log_select(
-                self._do_fetch(cur, label="asset_round"), epoch)
+                self._fetch_observed(cur, "asset_round", ORDER_COLS)[0],
+                epoch)
             rounds.append(fetched)
             if deferred is None:
                 break
@@ -1183,7 +1182,8 @@ class Crawler:
             pos = self._pos()
             j = deferred.withColumn(
                 "_first", F.min(pos).over(Window.partitionBy("file_path")))
-            cur = self._schedule(j.filter(pos == F.col("_first")).drop("_first"))
+            cur = self._schedule(
+                j.filter(pos == F.col("_first")).drop("_first"), ORDER_COLS)
             deferred = j.filter(pos != F.col("_first")).drop("_first")
         return reduce(DataFrame.unionByName, rounds)
 

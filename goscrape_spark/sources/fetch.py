@@ -13,8 +13,10 @@ unchanged, so the crawl needs no join to put outcomes back on them.
 The HTTP fetcher is expressed the Spark-native way:
 
 * ``groupBy(host).applyInPandas`` — all URLs of one host land in ONE batch on
-  one executor, so per-host politeness (J5) is enforced locally by sleeping
-  between requests, and connections/cookies are reused per host;
+  one executor, which sends them one at a time in the caller's crawl order
+  and spaces them by the rows' logged ``not_before_ms`` schedule (J5,
+  operators/politeness.schedule_politeness), so the wire sees what the
+  fetch log records, and the cookie jar is shared along the batch;
 * 429 retry with the reference's LINEAR backoff ``(retries+1) x 1500ms``, max
   10 retries (scraper/http.go:18-23,50-96), inline within the batch — crawl
   order is unaffected, exactly like the reference's blocking sleep;
@@ -107,14 +109,17 @@ def fixture_fetch_df(rows: DataFrame, pages: DataFrame,
 
 
 def http_fetch_df(frontier: DataFrame, config: CrawlConfig,
-                  session_cookies: list[dict] | None = None,
-                  host_delays_ms: dict[str, int] | None = None) -> DataFrame:
+                  order: list[str],
+                  session_cookies: list[dict] | None = None) -> DataFrame:
     """Fetch every frontier URL over real HTTP, one batch per host.
 
     Each input row comes back with the fetch columns added; the input's
-    other columns ride through the host batch unchanged.  A URL that
-    repeats in the input is requested once and its outcome shared by its
-    rows.
+    other columns ride through the host batch unchanged.  A batch sends
+    its URLs in ``order`` (columns of the input), each distinct URL once,
+    its outcome shared by its rows.  Every row carries ``not_before_ms``:
+    a request starts no earlier than the previous request's start plus the
+    difference of their ``not_before_ms``, so no two requests are sent
+    closer together than the schedule logs them.
 
     Cookies ride a REAL per-batch http.cookiejar: the batch's jar starts
     from the configured cookies (+ ``session_cookies`` accumulated by the
@@ -125,12 +130,6 @@ def http_fetch_df(frontier: DataFrame, config: CrawlConfig,
     can carry the session forward and persist it (main.go:183,231-246)."""
     max_retries = config.max_retries
     retry_delay = config.retry_delay_ms / 1000.0
-    politeness = config.politeness_delay_ms / 1000.0
-    # robots.txt Crawl-delay per host (seconds), merged max-wise with the
-    # configured global delay inside each host batch; tiny driver-built
-    # dict, captured in the closure (ships once per task, like headers)
-    host_delays = {h: ms / 1000.0
-                   for h, ms in (host_delays_ms or {}).items()}
     timeout = config.timeout or 30
     proxy = config.proxy
     headers = dict(config.headers)
@@ -195,14 +194,15 @@ def http_fetch_df(frontier: DataFrame, config: CrawlConfig,
 
         rows = {"url": [], "body": [], "resp_url": [], "status": [],
                 "attempts": []}
-        # effective per-host spacing: the larger of the configured global
-        # delay and this host's robots Crawl-delay (J5 + Crawl-delay ext.)
-        batch_delay = max(politeness, host_delays.get(str(key[0]), 0.0))
-        first = True
-        for url in sorted(set(pdf["url"])):
-            if not first and batch_delay > 0:
-                _time.sleep(batch_delay)
-            first = False
+        sends = pdf.sort_values(order).drop_duplicates("url")
+        prev = None  # (start, not_before_ms) of the previous request
+        for url, not_before in zip(sends["url"], sends["not_before_ms"]):
+            if prev is not None:
+                wait = prev[0] + (not_before - prev[1]) / 1000.0 \
+                    - _time.monotonic()
+                if wait > 0:
+                    _time.sleep(wait)
+            prev = (_time.monotonic(), not_before)
             body, resp_url, status, attempts = None, url, "missing", 0
             for retries in range(max_retries + 2):
                 if retries == max_retries + 1:

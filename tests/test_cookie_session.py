@@ -54,12 +54,14 @@ def server():
 
 def test_set_cookie_absorbed_mid_batch(spark, server):
     """Within one per-host batch, a cookie set by an earlier response is
-    presented on later requests (URLs are fetched in sorted order, so '/'
-    precedes '/gated')."""
+    presented on later requests (URLs are fetched in the given order, so
+    '/' precedes '/gated')."""
     COOKIES_SEEN.clear()
     frontier = spark.createDataFrame(
-        [(f"{server}/",), (f"{server}/gated",)], "url string")
-    rows = http_fetch_df(frontier, CrawlConfig(url=server)).collect()
+        [(f"{server}/", 0), (f"{server}/gated", 0)],
+        "url string, not_before_ms long")
+    rows = http_fetch_df(frontier, CrawlConfig(url=server),
+                         ["url"]).collect()
     assert COOKIES_SEEN["/"] is None
     assert COOKIES_SEEN["/gated"] == "session=tok123"
     # the batch's final jar snapshot rides the set_cookies column
@@ -81,8 +83,9 @@ def test_snapshot_is_delta_only(spark, server):
         {"name": "tok", "value": "v1", "domain": "other.example.org",
          "path": "/", "expires": None},
     ]
-    frontier = spark.createDataFrame([(f"{server}/gated",)], "url string")
-    rows = http_fetch_df(frontier, CrawlConfig(url=server),
+    frontier = spark.createDataFrame([(f"{server}/gated", 0)],
+                                     "url string, not_before_ms long")
+    rows = http_fetch_df(frontier, CrawlConfig(url=server), ["url"],
                          session_cookies=base).collect()
     snaps = [json.loads(s) for r in rows if r.set_cookies
              for s in r.set_cookies]
@@ -99,8 +102,9 @@ def test_deletion_tombstone_only_from_contacted_host(spark, server):
         {"name": "tok", "value": "v1", "domain": "other.example.org",
          "path": "/", "expires": None},
     ]
-    frontier = spark.createDataFrame([(f"{server}/logout",)], "url string")
-    rows = http_fetch_df(frontier, CrawlConfig(url=server),
+    frontier = spark.createDataFrame([(f"{server}/logout", 0)],
+                                     "url string, not_before_ms long")
+    rows = http_fetch_df(frontier, CrawlConfig(url=server), ["url"],
                          session_cookies=base).collect()
     snaps = [json.loads(s) for r in rows if r.set_cookies
              for s in r.set_cookies]
@@ -139,7 +143,8 @@ def test_cli_savecookiefile_roundtrip(spark, server, tmp_path):
 
     # and a pre-loaded jar reaches the wire on the very first request
     COOKIES_SEEN.clear()
-    frontier = spark.createDataFrame([(f"{server}/gated",)], "url string")
-    http_fetch_df(frontier,
-                  CrawlConfig(url=server, cookies=back)).collect()
+    frontier = spark.createDataFrame([(f"{server}/gated", 0)],
+                                     "url string, not_before_ms long")
+    http_fetch_df(frontier, CrawlConfig(url=server, cookies=back),
+                  ["url"]).collect()
     assert COOKIES_SEEN["/gated"] == "session=tok123"

@@ -6,6 +6,7 @@ from http.server import BaseHTTPRequestHandler, HTTPServer
 import pytest
 
 from goscrape_spark.config import CrawlConfig
+from goscrape_spark.operators.politeness import schedule_politeness
 from goscrape_spark.sources.fetch import http_fetch_df
 
 HITS = {}
@@ -47,12 +48,12 @@ def server():
 
 
 def test_http_fetch(spark, server):
-    urls = [(f"{server}/a",), (f"{server}/b",), (f"{server}/flaky",),
-            (f"{server}/missing",)]
-    frontier = spark.createDataFrame(urls, "url string")
+    urls = [(f"{server}/a", 0), (f"{server}/b", 0), (f"{server}/flaky", 0),
+            (f"{server}/missing", 0)]
+    frontier = spark.createDataFrame(urls, "url string, not_before_ms long")
     cfg = CrawlConfig(url=server, user_agent="goscrape-spark-test",
                       retry_delay_ms=10)
-    out = {r.url: r for r in http_fetch_df(frontier, cfg).collect()}
+    out = {r.url: r for r in http_fetch_df(frontier, cfg, ["url"]).collect()}
     assert out[f"{server}/a"].status == "ok"
     assert b"page /a" in bytes(out[f"{server}/a"].body)
     assert b"ua=goscrape-spark-test" in bytes(out[f"{server}/a"].body)
@@ -68,7 +69,8 @@ def test_http_fetch_cookies_reach_the_wire(spark, server):
 
     from goscrape_spark.functions.cookies import Cookie
 
-    frontier = spark.createDataFrame([(f"{server}/cookiepage",)], "url string")
+    frontier = spark.createDataFrame([(f"{server}/cookiepage", 0)],
+                                     "url string, not_before_ms long")
     cfg = CrawlConfig(url=server, cookies=[
         Cookie(name="sid", value="s3cr3t"),
         Cookie(name="fresh", value="1",
@@ -76,7 +78,7 @@ def test_http_fetch_cookies_reach_the_wire(spark, server):
         Cookie(name="stale", value="0",
                expires=datetime.now(timezone.utc) - timedelta(days=1)),
     ])
-    body = bytes(http_fetch_df(frontier, cfg).first().body)
+    body = bytes(http_fetch_df(frontier, cfg, ["url"]).first().body)
     assert b"cookie=sid=s3cr3t; fresh=1" in body
     assert b"stale" not in body
 
@@ -84,9 +86,10 @@ def test_http_fetch_cookies_reach_the_wire(spark, server):
 def test_http_fetch_exhausted_attempts(spark, server):
     """S2: retry exhaustion reports max_retries+1 attempts (the number of
     requests actually made), matching the mock join and the oracle."""
-    frontier = spark.createDataFrame([(f"{server}/always429",)], "url string")
+    frontier = spark.createDataFrame([(f"{server}/always429", 0)],
+                                     "url string, not_before_ms long")
     cfg = CrawlConfig(url=server, max_retries=2, retry_delay_ms=1)
-    row = http_fetch_df(frontier, cfg).first()
+    row = http_fetch_df(frontier, cfg, ["url"]).first()
     assert row.status == "exhausted"
     assert row.attempts == 3
 
@@ -112,10 +115,11 @@ def test_http_fetch_proxy_routing(spark, server):
     t.start()
     try:
         target = "http://upstream.invalid/page"
-        frontier = spark.createDataFrame([(target,)], "url string")
+        frontier = spark.createDataFrame([(target, 0)],
+                                         "url string, not_before_ms long")
         cfg = CrawlConfig(url=target,
                           proxy=f"http://127.0.0.1:{psrv.server_port}")
-        row = http_fetch_df(frontier, cfg).first()
+        row = http_fetch_df(frontier, cfg, ["url"]).first()
         assert row.status == "ok"
         assert bytes(row.body) == b"<html>via-proxy</html>"
         assert proxied == [target]  # absolute URL = proxied request
@@ -125,7 +129,8 @@ def test_http_fetch_proxy_routing(spark, server):
 
 def test_politeness_spacing_measured_per_host(spark):
     """J5 timing, asserted from the WIRE: under concurrent multi-host fetch
-    with politeness_delay_ms, consecutive requests to the same host must be
+    of rows scheduled by schedule_politeness, consecutive requests to the
+    same host must be
     spaced >= the delay (the reference sleeps between requests,
     scraper/scraper.go:165-172); distinct hosts run concurrently and are
     not cross-delayed."""
@@ -153,13 +158,14 @@ def test_politeness_spacing_measured_per_host(spark):
     s1, s2 = make_server(), make_server()
     try:
         delay_ms = 300
-        urls = [(f"http://127.0.0.1:{s.server_port}/p{i}",)
+        urls = [(f"http://127.0.0.1:{s.server_port}/p{i}",
+                 f"127.0.0.1:{s.server_port}")
                 for s in (s1, s2) for i in range(4)]
-        frontier = spark.createDataFrame(urls, "url string") \
-            .repartition(4)
-        cfg = CrawlConfig(url=f"http://127.0.0.1:{s1.server_port}",
-                          politeness_delay_ms=delay_ms)
-        rows = http_fetch_df(frontier, cfg).collect()
+        frontier = schedule_politeness(
+            spark.createDataFrame(urls, "url string, host string"),
+            delay_ms, order_cols=["url"]).repartition(4)
+        cfg = CrawlConfig(url=f"http://127.0.0.1:{s1.server_port}")
+        rows = http_fetch_df(frontier, cfg, ["url"]).collect()
         assert all(r.status == "ok" for r in rows)
         for port in (s1.server_port, s2.server_port):
             ts = sorted(stamps[port])

@@ -46,7 +46,7 @@ def test_sequence_composite_key_and_empty(spark):
 def _ranks(df):
     """Per-host rank through schedule_politeness: a 1 ms delay makes
     ``not_before_ms`` the rank itself."""
-    out = schedule_politeness(df, 1, host_col="host", order_cols=["ord"])
+    out = schedule_politeness(df, 1, order_cols=["ord"])
     return {r.id: r.not_before_ms for r in out.collect()}
 
 

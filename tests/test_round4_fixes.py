@@ -21,6 +21,7 @@ def test_mock_fetch_broadcasts_small_frontier(spark):
     c = Crawler(spark, CrawlConfig(url=SITE_LINKS_START),
                 pages_df(spark, SITE_LINKS))
     urls = spark.createDataFrame([(SITE_LINKS_START,)], "url string")
-    plan = c._source(urls)._jdf.queryExecution().executedPlan().toString()
+    plan = c._source(urls, ["url"])._jdf.queryExecution() \
+        .executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan

@@ -28,7 +28,8 @@ def test_excluded_seed_raises_before_any_request(spark):
                 pages_df(spark, {SEED: ""}))
     requested = []
     source = c._source
-    c._source = lambda rows: requested.append(rows) or source(rows)
+    c._source = lambda rows, order: (requested.append(rows)
+                                     or source(rows, order))
     with pytest.raises(ValueError,
                        match="start page is excluded from downloading"):
         c.run()

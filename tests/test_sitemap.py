@@ -182,6 +182,62 @@ def test_live_sitemap_seeding_without_robots_rules(spark):
         srv.shutdown()
 
 
+def test_live_sitemaps_keep_politeness_spacing(spark):
+    """Two ``Sitemap:`` lines on one host with politeness on: the sitemap
+    fetch is scheduled like every other fetch, so the second sitemap is
+    requested no sooner than the delay after the first (20 ms slack)."""
+    import threading
+    import time
+    from http.server import BaseHTTPRequestHandler, HTTPServer
+
+    from goscrape_spark.config import CrawlConfig
+    from goscrape_spark.plans.crawl import crawl
+
+    delay_ms = 300
+    log: list = []
+    site: dict[str, bytes] = {}
+
+    class H(BaseHTTPRequestHandler):
+        def do_GET(self):
+            log.append((self.path, time.monotonic()))
+            body = site.get(self.path)
+            if body is None:
+                self.send_response(404)
+                self.end_headers()
+                return
+            self.send_response(200)
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *a):
+            pass
+
+    srv = HTTPServer(("127.0.0.1", 0), H)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    base = f"http://127.0.0.1:{srv.server_port}"
+    site.update({
+        "/robots.txt": (f"User-agent: *\nSitemap: {base}/sm1.xml\n"
+                        f"Sitemap: {base}/sm2.xml\n").encode(),
+        "/": b"<html>no links</html>",
+        "/sm1.xml": f"<urlset><url><loc>{base}/p1.html</loc></url>"
+                    "</urlset>".encode(),
+        "/sm2.xml": f"<urlset><url><loc>{base}/p2.html</loc></url>"
+                    "</urlset>".encode(),
+        "/p1.html": b"<html>p1</html>", "/p2.html": b"<html>p2</html>",
+    })
+    try:
+        cfg = CrawlConfig(url=f"{base}/", use_sitemaps=True,
+                          politeness_delay_ms=delay_ms)
+        res = crawl(spark, cfg, pages=None)
+    finally:
+        srv.shutdown()
+    pages = {r.url for r in res.ordered_fetches() if r.kind == "page"}
+    assert pages == {f"{base}/", f"{base}/p1.html", f"{base}/p2.html"}
+    maps = [(p, t) for p, t in log if p.endswith(".xml")]
+    assert [p for p, _ in maps] == ["/sm1.xml", "/sm2.xml"]
+    assert maps[1][1] - maps[0][1] >= delay_ms / 1000 - 0.02, maps
+
+
 def test_mock_crawl_sitemap_discovered_from_fixture_robots(spark):
     """use_sitemaps in MOCK mode discovers Sitemap: lines from the
     fixture's /robots.txt (no robots_txt config needed) — and without
