@@ -52,31 +52,31 @@ def _regex_filter(path: Column, includes: list[str], excludes: list[str]) -> Col
     return cond
 
 
-def should_download(seed_host: str, max_depth: int, includes: list[str],
-                    excludes: list[str]) -> Column:
+def should_download(seed_host: str, depth: int, max_depth: int,
+                    includes: list[str], excludes: list[str]) -> Column:
     """shouldURLBeDownloaded's checks apart from the seen lookup
-    (scraper/checks.go:26-72) over ``scheme, host, path, is_asset, depth``
-    columns: F1 http(s) only; F5/F6 a page must be on the seed host and
-    its parent not at the depth limit; F7/F8 the include/exclude regexes
-    over the path.  ``admit`` drops scheme failures before the seen insert
-    and applies the rest after it; the crawl filters the seed's frontier
-    row with all of it."""
+    (scraper/checks.go:26-72) over ``scheme, host, path, is_asset``
+    columns of rows whose parent pages are at ``depth`` (the epoch): F1
+    http(s) only; F5/F6 a page must be on the seed host and its parent not
+    at the depth limit; F7/F8 the include/exclude regexes over the path.
+    ``admit`` drops scheme failures before the seen insert and applies the
+    rest after it; the crawl filters the seed's frontier row, at depth 0,
+    with all of it."""
     page_ok = (F.col("host") == F.lit(seed_host))
-    if max_depth != 0:
-        page_ok = page_ok & (F.col("depth") != F.lit(max_depth))
+    if max_depth != 0 and depth == max_depth:
+        page_ok = F.lit(False)
     return (col_scheme_ok(F.col("scheme"))
             & F.when(F.col("is_asset"), F.lit(True)).otherwise(page_ok)
             & _regex_filter(F.col("path"), includes, excludes))
 
 
 def admit(candidates: DataFrame, seen: DataFrame, seed_host: str,
-          max_depth: int, includes: list[str],
+          depth: int, max_depth: int, includes: list[str],
           excludes: list[str], bloom=None) -> tuple[DataFrame, DataFrame]:
-    """Run epoch admission.
+    """Run epoch admission; the candidates' parent pages are at ``depth``.
 
     ``candidates`` needs columns: url (fragment-free), dedup_key,
-    scheme, host, path, is_asset boolean, depth int (the parent page's
-    processing depth for a-links; anything for assets) + ORDER_COLS.
+    scheme, host, path, is_asset boolean + ORDER_COLS.
     Every row must already be http(s): the scheme check precedes the seen
     insert (checks.go:27-29), so the emitting pass drops the others.
 
@@ -128,6 +128,7 @@ def admit(candidates: DataFrame, seen: DataFrame, seed_host: str,
             "left_anti").drop("might_contain")
 
     inserts = inserts.withColumn(
-        "survived", should_download(seed_host, max_depth, includes, excludes))
+        "survived",
+        should_download(seed_host, depth, max_depth, includes, excludes))
     survivors = inserts.filter(F.col("survived"))
     return inserts, survivors

@@ -475,7 +475,7 @@ def _decode(body) -> str:
 
 
 PROCESSED_SCHEMA = (
-    "url string, seq bigint, depth int, file_path string, body binary, "
+    "url string, seq bigint, file_path string, body binary, "
     "is_page boolean, cands array<struct<stage_rank:int, sub_rank:int, "
     "intra1:int, intra2:int, url:string, scheme:string, host:string, "
     "path:string, is_asset:boolean, stage:string, dedup_key:string, "
@@ -563,7 +563,7 @@ def process_pages_df(pages: "DataFrame", seed_host: str,
     (plans/crawl.page_candidate_rows); the work a UDF has already done is
     not re-derived around its boundary.
 
-    Input: (url, body, seq, depth).  Output: PROCESSED_SCHEMA, one row per
+    Input: (url, body, seq).  Output: PROCESSED_SCHEMA, one row per
     page, ``body`` already rewritten for pages / raw for binaries
     (scraper/scraper.go:240-273 storeDownload semantics)."""
     from ..functions.filetype import sniff_extension
@@ -584,11 +584,10 @@ def process_pages_df(pages: "DataFrame", seed_host: str,
                 isp.append(is_page)
                 cands.append(page_candidates(refs, seed_host, outdir))
             yield pd.DataFrame({"url": pdf["url"], "seq": pdf["seq"],
-                                "depth": pdf["depth"], "file_path": fps,
-                                "body": outs, "is_page": isp,
-                                "cands": cands})
+                                "file_path": fps, "body": outs,
+                                "is_page": isp, "cands": cands})
 
-    return pages.select("url", "body", "seq", "depth") \
+    return pages.select("url", "body", "seq") \
                 .mapInPandas(run, schema=PROCESSED_SCHEMA)
 
 

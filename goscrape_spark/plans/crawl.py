@@ -5,7 +5,10 @@ as a DataFrame iteration that provably reproduces its crawl order and URL
 seen-set (SURVEY §3.4):
 
 * each **epoch** = one BFS level; the frontier is a DataFrame of pages with a
-  global discovery sequence number;
+  global discovery sequence number (``url, seq``).  A page's depth is its
+  epoch, so no frame carries a depth column: admission's depth rule (F6)
+  is a literal per epoch (operators/admission.should_download), and the
+  fetch log and documents tables get their ``depth`` as the epoch;
 * fetching has **one contract and two sources** (sources/fetch.py): rows
   in, the same rows plus ``body, resp_url, status, attempts`` out, read
   from a ``pages`` fixture table (J2, the reference's own test seam,
@@ -47,14 +50,14 @@ through the join's exchange; it only spares certified-new rows the key
 comparison.
 
 Driver-built frames (the seed ``seen`` row and frontier, the empty
-``written`` table, the empty result frames, the sitemap ``done`` set, the
-robots.txt URLs and rules) are built with ``session.local_frame``, never
-from a Python list: a list-built frame is a PythonRDD leaf, and every scan
-of it runs one Python-worker task per core even with zero rows.  A warm
-``count()`` of a one-row list-built frame took ~0.35 s and ~0.85 Python
-CPU-s on a 4-core host, against ~0.1 s and none for ``local_frame``.
-tests/test_local_frames.py fails on any other ``createDataFrame`` call in
-plans/, sources/ or operators/politeness.py.
+``written`` table, the empty result tables when no epoch ran, the sitemap
+``done`` set, the robots.txt URLs and rules) are built with
+``session.local_frame``, never from a Python list: a list-built frame is a
+PythonRDD leaf, and every scan of it runs one Python-worker task per core
+even with zero rows.  A warm ``count()`` of a one-row list-built frame took
+~0.35 s and ~0.85 Python CPU-s on a 4-core host, against ~0.1 s and none
+for ``local_frame``.  tests/test_local_frames.py fails on any other
+``createDataFrame`` call in plans/, sources/ or operators/politeness.py.
 
 An epoch stage is materialized once (``_localckpt``).  Counts and
 driver-side harvests ride a pyspark ``Observation`` on that checkpoint
@@ -127,8 +130,23 @@ from ..session import local_frame
 CAND_SCHEMA = ("page_url string, parent_seq bigint, stage_rank int, "
                "sub_rank int, intra1 int, intra2 int, url string, "
                "scheme string, host string, path string, "
-               "is_asset boolean, depth int, stage string, "
+               "is_asset boolean, stage string, "
                "dedup_key string, file_path string")
+
+# the result tables (CrawlResult): every epoch appends frames in exactly
+# these columns; the DDL builds a table only when no epoch ran
+FETCH_LOG_SCHEMA = ("url string, kind string, not_before_ms bigint, "
+                    "status string, attempts int, parent_seq bigint, "
+                    "stage_rank int, sub_rank int, intra1 int, intra2 int, "
+                    "depth int, epoch int, stage string")
+DOCUMENTS_SCHEMA = ("url string, kind string, text string, "
+                    "media_ref string, offset int, tag_idx int, "
+                    "attr string, vstart int, vend int, token string, "
+                    "depth int, epoch int")
+OUTPUT_SCHEMA = ("url string, file_path string, body binary, "
+                 "is_page boolean, epoch int, wpos struct<epoch:int, "
+                 "pos:struct<parent_seq:bigint, stage_rank:int, "
+                 "sub_rank:int, intra1:int, intra2:int>>")
 
 # each fetch kind's crawl order, to schedule and to send (assets: ORDER_COLS)
 PAGE_ORDER = ["seq"]
@@ -140,11 +158,11 @@ def page_candidate_rows(processed: DataFrame) -> DataFrame:
     JVM-side ``explode``, no shuffle, no plan built per tag."""
     return (processed
             .select(F.col("url").alias("page_url"),
-                    F.col("seq").alias("parent_seq"), "depth",
+                    F.col("seq").alias("parent_seq"),
                     F.explode("cands").alias("c"))
             .select("page_url", "parent_seq", "c.stage_rank", "c.sub_rank",
                     "c.intra1", "c.intra2", "c.url", "c.scheme", "c.host",
-                    "c.path", "c.is_asset", "depth", "c.stage",
+                    "c.path", "c.is_asset", "c.stage",
                     "c.dedup_key", "c.file_path"))
 
 
@@ -239,7 +257,6 @@ class Crawler:
             self._rebuild_rfc_rules()
         self.checkpoint = checkpoint
         self.max_epochs = max_epochs
-        self.compact_every = self.COMPACT_EVERY
         # per-label cumulative checkpoint wall times: every epoch stage is
         # materialized through _localckpt, so this doubles as a stage-level
         # attribution table (bench.py emits it into BENCH_FULL)
@@ -442,7 +459,7 @@ class Crawler:
             F.col("_i").cast("int").alias("intra1"),
             F.lit(0).alias("intra2"),
             "url", "scheme", "host", "path",
-            F.lit(False).alias("is_asset"), F.lit(0).alias("depth"),
+            F.lit(False).alias("is_asset"),
             F.lit("sitemap").alias("stage"), "dedup_key",
             F.lit(None).cast("string").alias("file_path"))
 
@@ -498,11 +515,12 @@ class Crawler:
             # row, and _fetch raises
             u = self.seed
             frontier = local_frame(
-                spark, [(u.string(), 0, 0, u.scheme, u.host, u.path, False)],
-                "url string, depth int, seq bigint, scheme string, "
-                "host string, path string, is_asset boolean").filter(
-                should_download(self.seed_host, cfg.max_depth, cfg.includes,
-                                cfg.excludes)).select("url", "depth", "seq")
+                spark, [(u.string(), 0, u.scheme, u.host, u.path, False)],
+                "url string, seq bigint, scheme string, host string, "
+                "path string, is_asset boolean").filter(
+                should_download(self.seed_host, 0, cfg.max_depth,
+                                cfg.includes, cfg.excludes)
+            ).select("url", "seq")
             # filesystem state for the fileExists asset skip
             # (scraper/download.go:76-79): one row per already-written path
             written = local_frame(spark, [], "file_path string")
@@ -570,29 +588,24 @@ class Crawler:
             # binary sniff + offline rewrite + output paths + the page's
             # admission candidates in ONE stage, so each body crosses the
             # JVM->Python boundary once per epoch; fanned out to all cores
-            # regardless of the (data-sized) shuffle partitioning.  The
-            # full interleaved span table (with text runs) stays lazy and
-            # is only computed if the caller materializes
+            # regardless of the (data-sized) shuffle partitioning, always:
+            # a live fetch returns each host's rows in one partition, and
+            # an epoch's pages are all on the seed host.  The full
+            # interleaved span table (with text runs) stays lazy and is
+            # only computed if the caller materializes
             # CrawlResult.documents.
             page_bodies = pages_ok.select(
-                F.col("page_url").alias("url"), "body", "seq", "depth")
-            if cpu_parts != parts:
-                # only worth a body shuffle when it actually adds
-                # parallelism (small epochs); at big epochs the fetch join
-                # already ran at the same width
-                page_bodies = page_bodies.repartition(cpu_parts, "url")
+                F.col("page_url").alias("url"), "body", "seq"
+            ).repartition(cpu_parts, "url")
             processed = self._localckpt(
                 process_pages_df(page_bodies, self.seed_host,
                                  self.config.output_directory),
                 "processed")
 
-            page_meta = pages_ok.select("page_url", "depth")
-            full_spans = extract_spans_df(page_bodies)
-            documents.append(full_spans.join(
-                page_meta, full_spans["url"] == page_meta["page_url"],
-                "left")
-                .drop("page_url")
-                .withColumn("epoch", F.lit(epoch)))
+            # a page's depth is its epoch (one BFS level per epoch)
+            documents.append(extract_spans_df(page_bodies).select(
+                "*", F.lit(epoch).alias("depth"),
+                F.lit(epoch).alias("epoch")))
 
             # file paths the ok pages of this epoch write (the "filesystem
             # state" the fileExists check consults, download.go:76-79) fall
@@ -623,7 +636,7 @@ class Crawler:
                 F.col("seq").alias("parent_seq"),
                 F.lit(0).alias("stage_rank"), F.lit(0).alias("sub_rank"),
                 F.lit(0).alias("intra1"), F.lit(0).alias("intra2"),
-                F.col("depth"), F.lit(epoch).alias("epoch"),
+                F.lit(epoch).alias("depth"), F.lit(epoch).alias("epoch"),
                 F.lit("").alias("stage"))
 
             # Three independent post-admission branches (all consume the
@@ -659,12 +672,10 @@ class Crawler:
                 from ..operators.ranking import global_sequence
                 seq_df = global_sequence(
                     survivors.filter(~F.col("is_asset"))
-                             .select("url", "depth", *ORDER_COLS),
+                             .select("url", *ORDER_COLS),
                     ORDER_COLS, start=next_seq, out_col="seq")
-                np_df, obs = _observed(
-                    seq_df.select("url",
-                                  (F.col("depth") + 1).alias("depth"),
-                                  "seq"), F.count(F.lit(1)).alias("n"))
+                np_df, obs = _observed(seq_df.select("url", "seq"),
+                                       F.count(F.lit(1)).alias("n"))
                 np_df = self._localckpt(np_df, "next_pages")
                 return np_df, obs.get["n"]
 
@@ -679,18 +690,16 @@ class Crawler:
             (asset_fetch, written_delta), (next_pages, n_next), _ = \
                 [b.get() for b in branches]
             fetch_logs.append(page_log)
-            fetch_logs.append(asset_fetch.drop("body", "file_path"))
+            fetch_logs.append(
+                asset_fetch.drop("body", "file_path", "page_url"))
 
             # output table: pages (already rewritten in the fused pass) +
             # fetched assets
-            outputs.append(
-                processed.select("url", "file_path", "body", "is_page",
-                                 "seq")
-                .withColumn("wpos", F.struct(
-                    F.lit(epoch).alias("epoch"),
-                    self._page_pos().alias("pos")))
-                .drop("seq")
-                .withColumn("epoch", F.lit(epoch)))
+            outputs.append(processed.select(
+                "url", "file_path", "body", "is_page",
+                F.lit(epoch).alias("epoch"),
+                F.struct(F.lit(epoch).alias("epoch"),
+                         self._page_pos().alias("pos")).alias("wpos")))
             outputs.append(self._asset_outputs(asset_fetch, epoch))
 
             # filesystem-state accumulation: every ok page write + every ok
@@ -735,40 +744,28 @@ class Crawler:
             # crawl's per-epoch plan stays O(K), not O(epoch).  Children
             # are already materialized, so this re-reads checkpoint blocks
             # once per K epochs and recomputes nothing.
-            if (epoch + 1) % self.compact_every == 0:
+            if (epoch + 1) % self.COMPACT_EVERY == 0:
                 seen = self._localckpt(seen, "seen_compact")
                 written = self._localckpt(written, "written_compact")
             epoch += 1
 
-        empty_log = local_frame(
-            spark, [], "url string, kind string, not_before_ms bigint, "
-                       "status string, attempts int, parent_seq bigint, "
-                       "stage_rank int, sub_rank int, intra1 int, intra2 int, "
-                       "depth int, epoch int, stage string")
-        empty_doc = local_frame(
-            spark, [], "url string, kind string, text string, "
-                       "media_ref string, offset int, tag_idx int, "
-                       "attr string, vstart int, vend int, token string, "
-                       "depth int, epoch int")
-        empty_out = local_frame(
-            spark, [], "url string, file_path string, body binary, "
-                       "is_page boolean, epoch int, wpos struct<epoch:int, "
-                       "pos:struct<parent_seq:bigint, stage_rank:int, "
-                       "sub_rank:int, intra1:int, intra2:int>>")
-        fetch_log = _union_all(fetch_logs, empty_log)
-        docs = _union_all(documents, empty_doc)
+        def table(frames: list[DataFrame], schema: str) -> DataFrame:
+            return reduce(DataFrame.unionByName, frames) if frames \
+                else local_frame(spark, [], schema)
+
         # final filesystem state: the LAST writer per path in sequential
         # write order wins, exactly like the reference's overwriting file
         # sink (pages always overwrite; assets only write unseen paths) —
         # one row per output file, order-insensitive.
-        out_log = _union_all(outputs, empty_out)
         row = F.struct(*[F.col(c) for c in
                          ("url", "file_path", "body", "is_page", "epoch")])
-        out = (out_log.groupBy("file_path")
+        out = (table(outputs, OUTPUT_SCHEMA).groupBy("file_path")
                .agg(F.max_by(row, F.col("wpos")).alias("_r"))
                .select("_r.url", "file_path", "_r.body", "_r.is_page",
                        "_r.epoch"))
-        return CrawlResult(seen=seen, fetch_log=fetch_log, documents=docs,
+        return CrawlResult(seen=seen,
+                           fetch_log=table(fetch_logs, FETCH_LOG_SCHEMA),
+                           documents=table(documents, DOCUMENTS_SCHEMA),
                            output=out, epochs=epoch, seed_host=self.seed_host,
                            cookies=self._final_cookies())
 
@@ -892,7 +889,7 @@ class Crawler:
                                             *seed)
         fetched = fetched.select(
             F.col("url").alias("req_url"), F.col("url").alias("page_url"),
-            "body", "resp_url", "depth", "seq", "not_before_ms", "status",
+            "body", "resp_url", "seq", "not_before_ms", "status",
             "attempts")
         return self._rebase_seed(fetched, obs.get["seed"]) if epoch == 0 \
             else fetched
@@ -942,7 +939,7 @@ class Crawler:
             all_cands = candidates if css_cands is None \
                 else candidates.unionByName(css_cands)
             inserts, survivors = admit(all_cands, seen, self.seed_host,
-                                       cfg.max_depth, cfg.includes,
+                                       epoch, cfg.max_depth, cfg.includes,
                                        cfg.excludes, bloom=self.bloom)
             # the inserted-key count (the epoch's seen delta) rides the
             # checkpoint's job
@@ -1086,8 +1083,7 @@ class Crawler:
         fetched = (chain.filter((F.col("status") == "ok")
                                 & (F.col("stage_rank") == 1))
                    .select("url", "page_url", "parent_seq",
-                           F.col("intra1").alias("link_intra"), "depth",
-                           "body"))
+                           F.col("intra1").alias("link_intra"), "body"))
 
         seed_host = self.seed_host
         outdir = self.config.output_directory
@@ -1097,9 +1093,9 @@ class Crawler:
             cols = [c.split()[0] for c in CAND_SCHEMA.split(", ")]
             for pdf in batches:
                 rows = []
-                for url, page_url, pseq, lintra, depth, body in zip(
+                for url, page_url, pseq, lintra, body in zip(
                         pdf["url"], pdf["page_url"], pdf["parent_seq"],
-                        pdf["link_intra"], pdf["depth"], pdf["body"]):
+                        pdf["link_intra"], pdf["body"]):
                     text = (bytes(body) if body is not None else b"") \
                         .decode("utf-8", errors="replace")
                     base = parse_url(url)
@@ -1112,7 +1108,7 @@ class Crawler:
                         no_frag = ref.src.split("#", 1)[0]
                         rows.append((page_url, pseq, 5, 1, int(lintra), k,
                                      no_frag, ru.scheme, ru.host, ru.path,
-                                     True, int(depth), "css-image",
+                                     True, "css-image",
                                      ref_dedup_key(no_frag, ru.host, ru.path,
                                                    seed_host),
                                      get_file_path(parse_url(no_frag),
@@ -1136,15 +1132,6 @@ class Crawler:
                                        order, self._host_delay_ms)
         return rows.withColumn("not_before_ms", F.lit(0).cast("long"))
 
-    def _asset_log_select(self, joined: DataFrame, epoch: int) -> DataFrame:
-        return joined.select(
-            F.col("url"), F.lit("asset").alias("kind"),
-            F.col("not_before_ms"), F.col("status"), F.col("attempts"),
-            F.col("parent_seq"), F.col("stage_rank"), F.col("sub_rank"),
-            F.col("intra1"), F.col("intra2"), F.col("depth"),
-            F.lit(epoch).alias("epoch"), F.col("stage"),
-            F.col("body"), F.col("file_path"), F.col("page_url"))
-
     def _fetch_assets(self, ranked: DataFrame, part: bool,
                       epoch: int) -> DataFrame:
         """Run the fileExists chain for the paths of ``ranked``
@@ -1164,10 +1151,14 @@ class Crawler:
                   .filter(in_part)
         while True:
             # the fetch returns (and checkpoints) the scheduled rows
-            # themselves: no join back, no second checkpoint
-            fetched = self._asset_log_select(
-                self._fetch_observed(cur, "asset_round", ORDER_COLS)[0],
-                epoch)
+            # themselves: no join back, no second checkpoint.  Fetch log
+            # columns, plus what the outputs and CSS discovery read.
+            fetched = self._fetch_observed(
+                cur, "asset_round", ORDER_COLS)[0].select(
+                "url", F.lit("asset").alias("kind"), "not_before_ms",
+                "status", "attempts", *ORDER_COLS,
+                F.lit(epoch).alias("depth"), F.lit(epoch).alias("epoch"),
+                "stage", "body", "file_path", "page_url")
             rounds.append(fetched)
             if deferred is None:
                 break
@@ -1210,9 +1201,9 @@ class Crawler:
         return (asset_fetch.filter(F.col("status") == "ok")
                 .select("url", "file_path", body.alias("body"),
                         F.lit(False).alias("is_page"),
+                        F.lit(epoch).alias("epoch"),
                         F.struct(F.lit(epoch).alias("epoch"),
-                                 self._pos().alias("pos")).alias("wpos"),
-                        F.lit(epoch).alias("epoch")))
+                                 self._pos().alias("pos")).alias("wpos")))
 
 
 def _observed(df: DataFrame, *aggs):
@@ -1222,13 +1213,6 @@ def _observed(df: DataFrame, *aggs):
 
     obs = Observation()
     return df.observe(obs, *aggs), obs
-
-
-def _union_all(dfs: list[DataFrame], empty: DataFrame) -> DataFrame:
-    out = empty
-    for df in dfs:
-        out = out.unionByName(df.select(*empty.columns), allowMissingColumns=False)
-    return out
 
 
 def crawl(spark: SparkSession, config: CrawlConfig,

@@ -6,7 +6,7 @@ The rebuild's resume unit is the EPOCH (north_rule: "resumable from the last
 committed frontier epoch with per-partition lineage + metrics"): after each
 epoch we atomically commit one record,
 
-    <dir>/epoch=N/frontier/      — the next frontier: url, depth, seq
+    <dir>/epoch=N/frontier/      — the next frontier: url, seq
     <dir>/epoch=N/seen_delta/    — keys first seen this epoch: dedup_key, epoch
     <dir>/epoch=N/written_delta/ — paths written this epoch: file_path
     <dir>/epoch=N/metrics.json   — next_seq, seed_host and the row counts
@@ -22,6 +22,10 @@ is one config, same schemas; SURVEY §7 step 6).
 
 Write atomicity: parquet dirs are written to a temp path then renamed;
 MANIFEST.json is replaced via os.replace (atomic on POSIX).
+
+The frontier stores no depth: its pages are at depth N+1, the epoch that
+fetches them.  A frontier committed with a ``depth`` column by an older
+build still resumes; the crawl reads only its ``url`` and ``seq``.
 """
 
 from __future__ import annotations

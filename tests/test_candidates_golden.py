@@ -63,12 +63,11 @@ def site(spark):
 
 
 def page_bodies(pages):
-    """(url, body, seq, depth) of every seed-host page, seq in url order."""
+    """(url, body, seq) of every seed-host page, seq in url order."""
     rows = (pages.filter(F.col("url").startswith(f"https://{HOST}"))
-            .select("url", F.lit(1).alias("depth"),
-                    F.row_number().over(Window.orderBy("url"))
-                     .cast("long").alias("seq")))
-    return rows.join(pages, "url").select("url", "body", "seq", "depth")
+            .select("url", F.row_number().over(Window.orderBy("url"))
+                           .cast("long").alias("seq")))
+    return rows.join(pages, "url").select("url", "body", "seq")
 
 
 def order_key(row):
@@ -86,13 +85,17 @@ def test_candidates_match_golden(spark):
 
     golden = load_golden()
     cols = [c.split()[0] for c in CAND_SCHEMA.split(", ")]
-    assert golden["columns"] == cols
+    # the golden rows were built with a depth column, from pages at depth
+    # 1; a candidate's depth is now its epoch, so the column goes
+    d = golden["columns"].index("depth")
+    assert {r[d] for r in golden["rows"]} == {1}
+    assert golden["columns"][:d] + golden["columns"][d + 1:] == cols
 
     processed = process_pages_df(page_bodies(site(spark)), HOST, OUTDIR)
     cands = page_candidate_rows(processed)
     assert cands.columns == cols
     got = sorted((list(r) for r in cands.collect()), key=order_key)
-    want = golden["rows"]
+    want = [r[:d] + r[d + 1:] for r in golden["rows"]]
     assert len(got) == len(want) > 2000
     for g, w in zip(got, want):
         assert g == w

@@ -22,8 +22,9 @@ def assert_parity(spark, config, pages, check_files=True):
 
     assert res.seen_set() == sim.seen, "URL-seen-set mismatch"
 
-    sim_order = [(f.url, f.kind, f.status) for f in sim.fetches]
-    spark_order = [(r.url, r.kind, r.status) for r in res.ordered_fetches()]
+    sim_order = [(f.url, f.kind, f.status, f.depth) for f in sim.fetches]
+    spark_order = [(r.url, r.kind, r.status, r.depth)
+                   for r in res.ordered_fetches()]
     assert spark_order == sim_order, "crawl-order mismatch"
 
     if check_files:

@@ -21,13 +21,13 @@ PAGES = [
     (f"https://{HOST}/", b'<html><a href="/p1">x</a>'
      b'<img src="/i.png" srcset="/s1.png 480w, /s2.png 800w">'
      b'<link href="/css/a.css" rel="stylesheet">'
-     b'<style>h1 { background: url(/bg.png); }</style></html>', 0, 0),
+     b'<style>h1 { background: url(/bg.png); }</style></html>', 0),
     (f"https://{HOST}/p1", b'<html><body background="b.gif">'
      b'<a href="https://other.net/ext">e</a><a href="/z#2">z</a>'
      b'<a href="/z#1">z</a><a href="mailto:a@b.c">m</a></body></html>',
-     1, 1),
-    (f"https://{HOST}/logo.png", b"\x89PNG\r\n\x1a\nrawbytes", 2, 1),
-    (f"https://{HOST}/empty", b"", 3, 2),
+     1),
+    (f"https://{HOST}/logo.png", b"\x89PNG\r\n\x1a\nrawbytes", 2),
+    (f"https://{HOST}/empty", b"", 3),
 ]
 
 # (tag, stage_rank, is_asset, stage) in consideration order
@@ -57,15 +57,16 @@ def want_cands(text, url):
 
 def test_fused_matches_components(spark):
     df = spark.createDataFrame(
-        PAGES, "url string, body binary, seq bigint, depth int")
-    got = {r.url: r for r in
-           process_pages_df(df, HOST, "out").collect()}
-    assert set(got) == {u for u, _, _, _ in PAGES}
-    for url, body, seq, depth in PAGES:
+        PAGES, "url string, body binary, seq bigint")
+    out = process_pages_df(df, HOST, "out")
+    assert "depth" not in out.columns
+    got = {r.url: r for r in out.collect()}
+    assert set(got) == {u for u, _, _ in PAGES}
+    for url, body, seq in PAGES:
         r = got[url]
         text = body.decode("utf-8", errors="replace")
         is_page = sniff_extension(body) == ""
-        assert (r.seq, r.depth) == (seq, depth)
+        assert r.seq == seq
         assert r.is_page == is_page
         assert r.file_path == get_file_path(parse_url(url), HOST, "out",
                                             is_page)

@@ -126,16 +126,69 @@ def test_mock_crawl_py4j_budget(spark, monkeypatch):
 
     pages = pages_df(spark, {MOCK_ORIGIN + path: body.replace(
         "{BASE}", MOCK_ORIGIN) for path, body in PAGES.items()})
-    calls = itertools.count()  # next() is atomic: branch threads send too
+    # next() is atomic: branch threads send too.  The driver's main thread
+    # is counted apart, since its calls are the ones no helper overlaps.
+    calls, main_calls = itertools.count(), itertools.count()
+    main = threading.main_thread()
     send = ClientServerConnection.send_command
 
     def counted(self, command, *a, **kw):
         next(calls)
+        if threading.current_thread() is main:
+            next(main_calls)
         return send(self, command, *a, **kw)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
     crawl(spark, CrawlConfig(url=f"{MOCK_ORIGIN}/"), pages=pages)
     monkeypatch.undo()
-    n = next(calls)
-    print(f"mock crawl made {n} py4j round trips")
-    assert 0 < n <= MOCK_CRAWL_MAX_PY4J
+    n, n_main = next(calls), next(main_calls)
+    print(f"mock crawl made {n} py4j round trips, {n_main} of them on "
+          "the main thread")
+    assert 0 < n_main <= n <= MOCK_CRAWL_MAX_PY4J
+
+
+class WideHandler(BaseHTTPRequestHandler):
+    """A root page linking 20 leaf pages."""
+
+    def do_GET(self):
+        self.send_response(200)
+        self.end_headers()
+        if self.path == "/":
+            body = "".join(f'<a href="/p{i}">p</a>' for i in range(20))
+        else:
+            body = "leaf"
+        self.wfile.write(f"<html>{body}</html>".encode())
+
+    def log_message(self, *a):
+        pass
+
+
+def test_live_page_pass_runs_in_parallel(spark, monkeypatch):
+    """A live fetch returns each host's rows in one partition, and an
+    epoch's pages are all on the seed host: the page pass must spread
+    them over its tasks itself."""
+    from pyspark.sql import functions as F
+
+    import goscrape_spark.plans.crawl as crawl_mod
+
+    srv = HTTPServer(("127.0.0.1", 0), WideHandler)
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    sizes = []
+    process = crawl_mod.process_pages_df
+
+    def recorded(pages, *a, **kw):
+        sizes.append(sorted(
+            r["count"] for r in pages.groupBy(
+                F.spark_partition_id().alias("p")).count().collect()))
+        return process(pages, *a, **kw)
+
+    monkeypatch.setattr(crawl_mod, "process_pages_df", recorded)
+    try:
+        res = crawl(spark, CrawlConfig(
+            url=f"http://127.0.0.1:{srv.server_port}/"), pages=None)
+    finally:
+        srv.shutdown()
+    assert res.epochs == 2
+    assert sizes[0] == [1]
+    # epoch 1's 20 pages: at least two non-empty page-pass partitions
+    assert sum(sizes[1]) == 20 and len(sizes[1]) >= 2, sizes

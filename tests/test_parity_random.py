@@ -55,8 +55,9 @@ def test_random_sites_parity(spark):
         sim = crawl_sequential(cfg, pages)
         res = crawl(spark, cfg, pages_df(spark, pages))
         assert res.seen_set() == sim.seen, f"seed {seed}: seen mismatch"
-        assert [(r.url, r.kind, r.status) for r in res.ordered_fetches()] == \
-               [(f.url, f.kind, f.status) for f in sim.fetches], \
+        assert [(r.url, r.kind, r.status, r.depth)
+                for r in res.ordered_fetches()] == \
+               [(f.url, f.kind, f.status, f.depth) for f in sim.fetches], \
                f"seed {seed}: order mismatch"
 
 
@@ -67,5 +68,5 @@ def test_random_site_parity_with_depth_and_regex(spark):
     sim = crawl_sequential(cfg, pages)
     res = crawl(spark, cfg, pages_df(spark, pages))
     assert res.seen_set() == sim.seen
-    assert [(r.url, r.kind) for r in res.ordered_fetches()] == \
-           [(f.url, f.kind) for f in sim.fetches]
+    assert [(r.url, r.kind, r.depth) for r in res.ordered_fetches()] == \
+           [(f.url, f.kind, f.depth) for f in sim.fetches]

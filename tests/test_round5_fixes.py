@@ -10,9 +10,9 @@ from goscrape_spark.sources.fixtures import (
 )
 
 
-def test_union_chain_compaction_bounds_plan_depth(spark):
+def test_union_chain_compaction_bounds_plan_depth(spark, monkeypatch):
     """A deep chain crawl must keep the per-epoch seen/written plans
-    O(compact_every), not O(epoch): the union chain collapses into one
+    O(COMPACT_EVERY), not O(epoch): the union chain collapses into one
     checkpointed table every K epochs, with unchanged crawl semantics.
 
     Semantics are asserted directly (compaction is load-bearing here: the
@@ -26,9 +26,8 @@ def test_union_chain_compaction_bounds_plan_depth(spark):
     chain[f"https://example.org/p{n}"] = "<html>end</html>"
     cfg = CrawlConfig(url="https://example.org/p0")  # max_depth 0 = unlimited
 
-    c = Crawler(spark, cfg, pages_df(spark, chain))
-    c.compact_every = 4
-    res = c.run()
+    monkeypatch.setattr(Crawler, "COMPACT_EVERY", 4)
+    res = Crawler(spark, cfg, pages_df(spark, chain)).run()
     assert res.epochs == n + 1                       # chain fully walked
     seen_rows = res.seen.collect()
     assert len(seen_rows) == n + 1                   # no dup, no phantom
@@ -37,7 +36,7 @@ def test_union_chain_compaction_bounds_plan_depth(spark):
     assert res.fetch_log.count() == n + 1            # each page once
     # final seen plan: at most ~(epochs % K) union legs, not ~epochs
     plan = res.seen._jdf.queryExecution().analyzed().toString()
-    assert plan.count("Union") <= c.compact_every + 1
+    assert plan.count("Union") <= Crawler.COMPACT_EVERY + 1
 
 
 def test_stage_secs_attribution_table(spark):
