@@ -35,10 +35,11 @@ seen-set (SURVEY §3.4):
   ``url()`` refs become candidates.  As the reference's cssProcessor runs
   on the bytes ``downloadAsset`` fetched, discovery reads the ok link rows
   of the fileExists chain, run first for the paths that hold a link asset.
-  A short fixpoint loop re-runs admission with the discovered candidates
-  added; it converges immediately unless a css-discovered image steals a
-  dedup key from a later page's link asset (possible but degenerate; the
-  loop handles it exactly).
+  A fixpoint loop re-runs admission with the discovered candidates added
+  until they stop changing; it converges immediately unless a
+  css-discovered image steals a dedup key from a later page's link asset
+  (possible but degenerate; the loop handles it exactly, one more round
+  per stolen key in a chain of them).
 
 Scale design (north_rule): frontier/seen shuffles hash on ``dedup_key`` /
 ``host``; per-epoch state is checkpointed (localCheckpoint for tests,
@@ -71,39 +72,39 @@ rows with the fetch columns added, so no join puts the outcomes back, and
 its one checkpoint carries the caller's label (``fetched``,
 ``asset_round``, ``sitemap_fetch``, ``robots_fetch``).
 
-Overlap.  ``Crawler.run`` starts helper threads (``_deferred``, a pyspark
-``InheritableThread``, so their jobs keep the caller's job group) for work
-whose result is needed later, and joins each one:
+Overlap.  ``Crawler.run`` starts helper threads for work whose result is
+needed later.  ``_deferred`` runs each one on a pyspark
+``InheritableThread``, so its jobs keep the caller's job group, and returns
+a ``concurrent.futures.Future`` that the thread completes:
 
 * the **warm-up**, started on run()'s first line: one job of ``n``
   one-row partitions through a ``mapInPandas`` that imports the page pass's
   module, with ``n`` the first epoch's page-pass width
   (``page_pass_width``).  The Python workers start while the driver runs the
   prologue and the first fetch.  Nothing takes its result; run()'s final
-  join waits for it;
-* **page_paths**, the slim ``(file_path, seq)`` checkpoint of the epoch's
-  page pass, taken by the fileExists admission and the written delta;
-* the three **post-admission branches** (asset fetch + written delta, the
-  next frontier's sequence, the Bloom build), taken before the epoch ends;
+  wait covers it;
+* the two **post-admission branches** (asset fetch + written delta, the
+  next frontier's sequence), plus the Bloom build when Bloom is on, taken
+  before the epoch ends;
 * the **commit** of epoch N (``CrawlCheckpoint.commit_epoch``), which runs
   while epoch N+1 runs.  Its arguments are bound when it is scheduled, and
-  commit N is joined before commit N+1 starts, so commits run one at a time
+  commit N is waited for before commit N+1 starts, so commits run one at a time
   in epoch order.  A commit writes its epoch directory under a temporary
   name and then replaces MANIFEST.json, so the manifest only ever names a
   fully written epoch: a driver killed while commit N is in flight resumes
   from epoch N-1 or N, and both are committed states the crawl can go on
   from.
 
-run() joins every helper whose result was not taken in its ``finally``,
-before it restores the session's AQE and shuffle partitions, so no job of
-the crawl runs under the restored conf.  A helper's failure surfaces from
-run(); when the loop raised too, the loop's error is raised with the
-helper's as its cause.
+run() waits for every helper in its ``finally``, before it restores the
+session's AQE and shuffle partitions, so no job of the crawl runs under the
+restored conf.  A helper's failure surfaces from run(); when the loop raised
+too, the loop's error is raised with the helper's as its cause.
 """
 
 from __future__ import annotations
 
 import time
+from concurrent.futures import Future, wait
 from dataclasses import dataclass, field
 from functools import partial, reduce
 from typing import Iterator
@@ -257,17 +258,9 @@ class Crawler:
             self._rebuild_rfc_rules()
         self.checkpoint = checkpoint
         self.max_epochs = max_epochs
-        # per-label cumulative checkpoint wall times: every epoch stage is
-        # materialized through _localckpt, so this doubles as a stage-level
-        # attribution table (bench.py emits it into BENCH_FULL)
-        self.stage_secs: dict[str, float] = {}
-        # helper threads started by _deferred whose results nobody has taken
-        # yet; run() joins them before it returns or raises
-        self._helpers: list = []
-        # metrics observed during the latest assets_allowed and inserts
-        # checkpoints
-        self._fs_obs = None
-        self._ins_obs = None
+        # futures of the helpers started by _deferred that are still running
+        # or failed; run() waits for them before it returns or raises
+        self._helpers: list[Future] = []
         # S4: session cookie jar state, keyed (domain, path, name); starts
         # from the configured cookies and absorbs live Set-Cookie snapshots
         # per fetch round (the reference's shared cookiejar.Jar,
@@ -485,7 +478,11 @@ class Crawler:
             # every helper's jobs end before the shared session's conf is
             # restored, also when the loop raised; a helper's failure
             # surfaces here, chained to the loop's own when there is one
-            helper_err = self._join_helpers()
+            wait(self._helpers)
+            errs = [h.exception() for h in self._helpers]
+            self._helpers = []
+            helper_err = next((e for e in errs
+                               if e is not None and e is not loop_err), None)
             spark.conf.set("spark.sql.shuffle.partitions", str(default_parts))
             spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
             if helper_err is not None:
@@ -607,26 +604,14 @@ class Crawler:
                 "*", F.lit(epoch).alias("depth"),
                 F.lit(epoch).alias("epoch")))
 
-            # file paths the ok pages of this epoch write (the "filesystem
-            # state" the fileExists check consults, download.go:76-79) fall
-            # out of the fused pass for free.  Slim checkpoint: the several
-            # consumers (blockers union, first-ok agg, written delta) would
-            # otherwise each re-scan the body-bearing processed blocks to
-            # project two tiny columns.
-            # deferred: the first consumer (the fileExists admission) is
-            # several actions downstream, so this tiny checkpoint overlaps
-            # the admission chain instead of serializing before it
-            page_paths_d = self._deferred(lambda: self._localckpt(
-                processed.select("file_path", "seq"), "page_paths"))
-
             candidates = page_candidate_rows(processed)
             if epoch == 0 and cfg.use_sitemaps:
                 sm_cands = self._sitemap_candidates()
                 if sm_cands is not None:
                     candidates = candidates.unionByName(sm_cands)
 
-            inserts, survivors, ranked, link_chain = \
-                self._admission_fixpoint(candidates, seen, page_paths_d,
+            inserts, survivors, ranked, link_chain, counts = \
+                self._admission_fixpoint(candidates, seen, processed,
                                          written, epoch)
 
             # record fetches: this epoch's page fetches + admitted assets
@@ -639,18 +624,19 @@ class Crawler:
                 F.lit(epoch).alias("depth"), F.lit(epoch).alias("epoch"),
                 F.lit("").alias("stage"))
 
-            # Three independent post-admission branches (all consume the
+            # Independent post-admission branches (all consume the
             # just-checkpointed inserts/assets_allowed): the asset fetch,
-            # the next-frontier sequence assignment, and the Bloom build.
-            # Overlapped (§2.6) so each branch's driver latency and stage
-            # tails back-fill the others.
+            # the next-frontier sequence assignment, and the Bloom build
+            # when Bloom is on.  Overlapped (§2.6) so each branch's driver
+            # latency and stage tails back-fill the others.
             delta = inserts.select("dedup_key") \
                            .withColumn("epoch", F.lit(epoch + 1))
 
             def _assets_branch():
                 # every round is checkpointed by its fetch; the paths that
                 # hold a link asset were fetched by CSS discovery
-                af = self._fetch_assets(ranked, False, epoch)
+                af = self._fetch_assets(ranked, counts["n_deferred_rest"],
+                                        False, epoch)
                 if link_chain is not None:
                     af = link_chain.unionByName(af)
                 # slim written-delta checkpoint: the lazy union chain used
@@ -659,7 +645,7 @@ class Crawler:
                 # all prior epochs' asset payloads just to read file_path.
                 # One tiny checkpoint per epoch keeps the chain body-free.
                 wd = self._localckpt(
-                    page_paths_d.get().select("file_path").unionByName(
+                    processed.select("file_path").unionByName(
                         af.filter(F.col("status") == "ok")
                           .select("file_path")),
                     "written_delta")
@@ -679,16 +665,14 @@ class Crawler:
                 np_df = self._localckpt(np_df, "next_pages")
                 return np_df, obs.get["n"]
 
-            def _bloom_branch():
-                if self.bloom is not None:
-                    # distributed per-partition build, OR-merged
-                    # driver-side
-                    self.bloom.add_keys_df(delta)
-
-            branches = [self._deferred(b) for b in
-                        (_assets_branch, _seq_branch, _bloom_branch)]
-            (asset_fetch, written_delta), (next_pages, n_next), _ = \
-                [b.get() for b in branches]
+            branches = [self._deferred(_assets_branch),
+                        self._deferred(_seq_branch)]
+            if self.bloom is not None:
+                # distributed per-partition build, OR-merged driver-side
+                branches.append(self._deferred(
+                    partial(self.bloom.add_keys_df, delta)))
+            (asset_fetch, written_delta), (next_pages, n_next), *_ = \
+                [b.result() for b in branches]
             fetch_logs.append(page_log)
             fetch_logs.append(
                 asset_fetch.drop("body", "file_path", "page_url"))
@@ -726,7 +710,7 @@ class Crawler:
                 # seen table: the seed's pre-rebase key plus the inserts,
                 # so a resume rebuilds seen purely from deltas.
                 if commit is not None:
-                    commit.get()
+                    commit.result()
                 commit = self._deferred(partial(
                     self.checkpoint.commit_epoch, epoch, frontier=frontier,
                     seen_delta=seen if epoch == 0 else delta,
@@ -734,7 +718,7 @@ class Crawler:
                     metrics={"next_seq": next_seq,
                              "seed_host": self.seed_host,
                              "frontier_rows": n_next,
-                             "seen_delta_rows": self._ins_obs.get["n"]
+                             "seen_delta_rows": counts["n"]
                              + (1 if epoch == 0 else 0)}))
             # plan-depth compaction: seen/written are lazy unionByName
             # chains over per-epoch checkpointed deltas — correct at BFS
@@ -783,60 +767,33 @@ class Crawler:
     # ~50-100 ms per-job driver latency of the epoch's bookkeeping actions
     # overlaps instead of summing.  InheritableThread propagates the JVM
     # thread-locals (job group), so job accounting still sees every job.
-    def _deferred(self, fn):
-        """Start ``fn`` on an InheritableThread now; ``.get()`` joins and
-        returns its result (re-raising any failure).  run() joins every
-        helper whose result nobody took before it returns or raises."""
+    def _deferred(self, fn) -> Future:
+        """Start ``fn`` on an InheritableThread now; the returned Future
+        holds its result or failure.  run() waits for every helper before
+        it returns or raises."""
         from pyspark import InheritableThread
 
-        box: dict = {}
+        fut: Future = Future()
 
         def work():
             try:
-                box["v"] = fn()
+                fut.set_result(fn())
             except BaseException as e:
-                box["e"] = e
+                fut.set_exception(e)
 
-        t = InheritableThread(target=work)
-        t.start()
-
-        class _Pending:
-            taken = False
-
-            def get(self):
-                t.join()
-                self.taken = True
-                if "e" in box:
-                    raise box["e"]
-                return box["v"]
-
-        p = _Pending()
-        self._helpers = [h for h in self._helpers if not h.taken] + [p]
-        return p
-
-    def _join_helpers(self) -> BaseException | None:
-        """Join every helper whose result nobody took; return the first
-        failure among them."""
-        err = None
-        for h in self._helpers:
-            if h.taken:
-                continue
-            try:
-                h.get()
-            except BaseException as e:
-                err = e if err is None else err
-        self._helpers = []
-        return err
+        InheritableThread(target=work).start()
+        # a helper that finished cleanly needs no final wait
+        self._helpers = [h for h in self._helpers
+                         if not h.done() or h.exception() is not None]
+        self._helpers.append(fut)
+        return fut
 
     def _localckpt(self, df: DataFrame, label: str = "") -> DataFrame:
         # eager: truncate lineage AND materialize once — every epoch state is
         # consumed by several downstream actions, and without materialization
-        # the whole epoch chain would re-execute per action.
-        t0 = time.time()
-        out = df.localCheckpoint(eager=True)
-        dt = time.time() - t0
-        self.stage_secs[label] = self.stage_secs.get(label, 0.0) + dt
-        return out
+        # the whole epoch chain would re-execute per action.  ``label`` names
+        # the stage for a tracer that wraps this method (perfbench/tracing.py)
+        return df.localCheckpoint(eager=True)
 
     def _http_source(self, rows: DataFrame, order: list[str]) -> DataFrame:
         from ..sources.fetch import http_fetch_df
@@ -916,26 +873,37 @@ class Crawler:
 
     # ------------------------------------------------------------------
     def _admission_fixpoint(self, candidates: DataFrame, seen: DataFrame,
-                            page_paths_d, written: DataFrame, epoch: int):
+                            processed: DataFrame, written: DataFrame,
+                            epoch: int):
         """Admission + in-epoch CSS discovery fixpoint (see module doc).
+        ``processed`` is the epoch's page pass, whose ok pages' writes the
+        fileExists check reads.
 
-        Returns ``(inserts, survivors, ranked, link_chain)``: survivors
-        drive the seen inserts and the next frontier; ``ranked`` is the
-        fileExists check of the asset survivors (``_fs_admit``) and
+        Returns ``(inserts, survivors, ranked, link_chain, counts)``:
+        survivors drive the seen inserts and the next frontier; ``ranked``
+        is the fileExists check of the asset survivors (``_fs_admit``) and
         ``link_chain`` the fetched chain of its link-bearing paths (None
         when there are none), whose ok link rows CSS discovery reads: a
         stylesheet is fetched once, in the wave where the reference
-        fetches it, and not at all when its file exists.
+        fetches it, and not at all when its file exists.  ``counts`` holds
+        the inserted-key count ``n`` and ``n_deferred_rest``, the deferred
+        rows outside the link-bearing paths (``_fetch_assets``).
 
         Stability is detected by an order-insensitive signature of every
         row on a link-bearing path, allowed or deferred (count + bit_xor
         of row hashes), observed during the assets_allowed checkpoint — no
         extra job and no driver-side materialization of the set itself.
         Paths do not interact in the chain, so when the signature repeats,
-        the previous round's chain is the chain for these rows."""
+        the previous round's chain is the chain for these rows: the round
+        is self-consistent, and only the sequential answer is.  The loop
+        runs until then, or until the chain yields no CSS candidates, with
+        no round cap.  A discovered image can only take the key of a link
+        asset considered after its own stylesheet, so round k settles at
+        least the first k link assets in consideration order, and the loop
+        ends within (link assets + 1) rounds."""
         cfg = self.config
         css_cands = link_chain = prev_sig = None
-        for _ in range(10):
+        while True:
             all_cands = candidates if css_cands is None \
                 else candidates.unionByName(css_cands)
             inserts, survivors = admit(all_cands, seen, self.seed_host,
@@ -943,7 +911,7 @@ class Crawler:
                                        cfg.excludes, bloom=self.bloom)
             # the inserted-key count (the epoch's seen delta) rides the
             # checkpoint's job
-            inserts, self._ins_obs = _observed(
+            inserts, ins_obs = _observed(
                 inserts, F.count(F.lit(1)).alias("n"))
             inserts = self._localckpt(inserts, "inserts")
             survivors = inserts.filter(F.col("survived"))
@@ -960,22 +928,21 @@ class Crawler:
             if self.robots_rfc is not None:
                 from ..operators.politeness import apply_robots_rfc
                 survivors = apply_robots_rfc(survivors, self.robots_rfc)
-            ranked = self._fs_admit(survivors.filter(F.col("is_asset")),
-                                    page_paths_d.get(), written)
-            # the signature rode the assets_allowed checkpoint's job
-            # (Observation) — no extra driver action here
-            m = self._fs_obs.get
+            ranked, m = self._fs_admit(survivors.filter(F.col("is_asset")),
+                                       processed, written)
+            counts = {"n": ins_obs.get["n"],
+                      "n_deferred_rest": m["n_deferred_rest"]}
             sig = (m["n_link"], m["h_link"])
             if sig[0] == 0:
-                return inserts, survivors, ranked, None
+                return inserts, survivors, ranked, None, counts
             if sig == prev_sig:
-                break
+                return inserts, survivors, ranked, link_chain, counts
             prev_sig = sig
-            link_chain = self._fetch_assets(ranked, True, epoch)
+            link_chain = self._fetch_assets(ranked, m["n_deferred_link"],
+                                            True, epoch)
             css_cands = self._css_candidates(link_chain)
             if css_cands is None:
-                break
-        return inserts, survivors, ranked, link_chain
+                return inserts, survivors, ranked, link_chain, counts
 
     # ------------------------------------------------------------------
     @staticmethod
@@ -994,8 +961,8 @@ class Crawler:
                         F.lit(0).alias("intra1"),
                         F.lit(0).alias("intra2"))
 
-    def _fs_admit(self, assets: DataFrame, page_paths: DataFrame,
-                  written: DataFrame) -> DataFrame:
+    def _fs_admit(self, assets: DataFrame, processed: DataFrame,
+                  written: DataFrame) -> tuple[DataFrame, dict]:
         """fileExists admission (scraper/download.go:76-79): drop admitted
         assets whose output path was already written by (a) any earlier
         epoch, (b) an ok page of this epoch stored before the asset's
@@ -1011,11 +978,15 @@ class Crawler:
 
         Every asset row carries its output ``file_path`` from the pass
         that emitted it (operators/extract.page_candidates,
-        ``_css_candidates``).  Returns the ``assets_allowed`` checkpoint
-        of the kept candidates, flagged ``_defer`` (not first on its path)
-        and ``_link_path`` (its path keeps a link asset)."""
+        ``_css_candidates``); the page writes are ``processed``'s rows.
+        Returns ``(ranked, counts)``: ``ranked`` is the ``assets_allowed``
+        checkpoint of the kept candidates, flagged ``_defer`` (not first on
+        its path) and ``_link_path`` (its path keeps a link asset);
+        ``counts`` holds the deferred rows inside and outside the
+        link-bearing paths (``n_deferred_link``, ``n_deferred_rest``) and
+        the fixpoint's signature (``n_link``, ``h_link``)."""
         pos = self._pos()
-        page_w = page_paths.select("file_path", self._page_pos().alias("pos"))
+        page_w = processed.select("file_path", self._page_pos().alias("pos"))
 
         # ONE window over file_path on (assets whose path no earlier
         # epoch wrote) ∪ (this epoch's ok page writes).  Per path, every
@@ -1060,14 +1031,14 @@ class Crawler:
         # sum: the signature only needs order-insensitivity, and summing
         # xxhash64 values overflows under ANSI mode.
         defer, link = F.col("_defer"), F.col("_link_path")
-        ranked, self._fs_obs = _observed(
+        ranked, obs = _observed(
             ranked,
             F.count(F.when(defer & link, 1)).alias("n_deferred_link"),
             F.count(F.when(defer & ~link, 1)).alias("n_deferred_rest"),
             F.count(F.when(link, 1)).alias("n_link"),
             F.bit_xor(F.when(link, F.xxhash64(*ORDER_COLS, "url")))
             .alias("h_link"))
-        return self._localckpt(ranked, "assets_allowed")
+        return self._localckpt(ranked, "assets_allowed"), obs.get
 
     def _css_candidates(self, chain: DataFrame) -> DataFrame | None:
         """cssProcessor discovery (scraper/download.go:104-131): the url()
@@ -1132,19 +1103,20 @@ class Crawler:
                                        order, self._host_delay_ms)
         return rows.withColumn("not_before_ms", F.lit(0).cast("long"))
 
-    def _fetch_assets(self, ranked: DataFrame, part: bool,
+    def _fetch_assets(self, ranked: DataFrame, n_deferred: int, part: bool,
                       epoch: int) -> DataFrame:
         """Run the fileExists chain for the paths of ``ranked``
         (``_fs_admit``) that hold a kept link asset (``part`` True) or for
         the others: fetch the allowed assets, then re-admit deferred
         same-path candidates whose predecessors all failed, one wave per
-        chain level — the exact sequential fileExists semantics.  The
-        first wave is scheduled over every allowed row, so a row's
-        ``not_before_ms`` does not depend on the part that fetches it."""
+        chain level — the exact sequential fileExists semantics.
+        ``n_deferred`` is the part's deferred row count from ``_fs_admit``;
+        at 0 the chain is one wave.  The first wave is scheduled over every
+        allowed row, so a row's ``not_before_ms`` does not depend on the
+        part that fetches it.  Returns the union of the waves' fetched
+        rows."""
         defer = F.col("_defer")
         in_part = F.col("_link_path") if part else ~F.col("_link_path")
-        n_deferred = self._fs_obs.get[
-            "n_deferred_link" if part else "n_deferred_rest"]
         deferred = ranked.filter(in_part & defer) if n_deferred else None
         rounds: list[DataFrame] = []
         cur = self._schedule(ranked.filter(~defer), ORDER_COLS) \

@@ -1,5 +1,5 @@
-"""The crawl loop's helper threads: ``Crawler.run`` joins every helper it
-started before it returns or raises, and the epoch commits that run in the
+"""The crawl loop's helper threads: ``Crawler.run`` waits for every helper
+it started before it returns or raises, and the epoch commits that run in the
 background stay serialized in epoch order and write what a synchronous
 commit writes."""
 
@@ -11,6 +11,7 @@ import time
 import pytest
 
 from goscrape_spark.config import CrawlConfig
+from goscrape_spark.plans import crawl as crawl_mod
 from goscrape_spark.plans.crawl import Crawler, crawl
 from goscrape_spark.sources.fixtures import (
     SITE_LINKS,
@@ -43,27 +44,27 @@ def _committed(ckpt):
                       for e in range(manifest["max_committed_epoch"] + 1)]
 
 
-def test_failed_loop_joins_page_paths_before_restoring_conf(spark,
-                                                            monkeypatch):
-    """The loop raises before it takes the page_paths checkpoint's result:
-    run() still waits for that job, and restores the conf only after it."""
+def test_failed_loop_waits_for_warm_up_before_restoring_conf(spark,
+                                                             monkeypatch):
+    """The loop raises while the warm-up helper still runs: run() still
+    waits for that job, and restores the conf only after it."""
     before = _conf(spark)
-    done = threading.Event()
+    failed, done = threading.Event(), threading.Event()
     aqe_at_end = []
-    orig = Crawler._localckpt
+    orig = crawl_mod._warm_python_workers
 
-    def slow_page_paths(self, df, label=""):
-        out = orig(self, df, label)
-        if label == "page_paths":
-            time.sleep(1)
-            aqe_at_end.append(spark.conf.get(AQE))
-            done.set()
-        return out
+    def blocked_warm_up(spark_, n):
+        failed.wait(120)
+        time.sleep(1)
+        orig(spark_, n)
+        aqe_at_end.append(spark.conf.get(AQE))
+        done.set()
 
     def failing_fixpoint(self, *a, **kw):
+        failed.set()
         raise RuntimeError("injected admission failure")
 
-    monkeypatch.setattr(Crawler, "_localckpt", slow_page_paths)
+    monkeypatch.setattr(crawl_mod, "_warm_python_workers", blocked_warm_up)
     monkeypatch.setattr(Crawler, "_admission_fixpoint", failing_fixpoint)
     with pytest.raises(RuntimeError, match="injected admission"):
         _crawl(spark)
@@ -103,7 +104,7 @@ def test_background_commits_run_in_epoch_order(spark, tmp_path,
         def __init__(self, fn):
             self._v = fn()
 
-        def get(self):
+        def result(self):
             return self._v
 
     with monkeypatch.context() as mp:

@@ -148,6 +148,32 @@ def test_parity_css_behind_failed_same_path_stylesheet(spark):
     ]
 
 
+def test_parity_css_steal_chain_converges(spark):
+    # /p{i} links /s{i}.css, whose only url() names s{i+1}.css.  The image a
+    # parsed sheet discovers takes the next sheet's key from the link of a
+    # later-considered page, so that sheet is fetched as an image and never
+    # parsed, and the sheets alternate between link and image along two
+    # chains (pages are considered p0, p1, p10..p19, p2..p9).  The CSS
+    # fixpoint settles one more sheet per admission round, so it needs more
+    # than 10 rounds here.  s19.css is an image, so /img.png is never
+    # fetched.
+    n = 20
+    pages = {"https://example.org/": "".join(
+        f'<a href="/p{i}">p</a>' for i in range(n))}
+    for i in range(n):
+        pages[f"https://example.org/p{i}"] = \
+            f'<link href="/s{i}.css" rel="stylesheet">'
+        nxt = f"s{i + 1}.css" if i + 1 < n else "img.png"
+        pages[f"https://example.org/s{i}.css"] = \
+            f"h1 {{ background: url(https://example.org/{nxt}); }}"
+    pages["https://example.org/img.png"] = "IMG"
+    sim, res = assert_parity(spark, CrawlConfig(url="https://example.org/"),
+                             pages)
+    stages = {f.url.rsplit("/", 1)[1]: f.stage for f in sim.fetches}
+    assert "img.png" not in stages
+    assert [stages[f"s{i}.css"] for i in range(n)] == ["link", "image"] * 10
+
+
 def test_parity_file_exists_skip(spark):
     """fileExists admission (scraper/download.go:76-79): an admitted asset
     whose output path was already written is neither fetched nor logged.

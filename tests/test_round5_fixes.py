@@ -1,13 +1,9 @@
-"""Round-5 regression tests: seen/written union-chain compaction, the
-fixpoint signature and the stage-time table."""
+"""Round-5 regression tests: seen/written union-chain compaction and the
+fixpoint signature."""
 
 from goscrape_spark.config import CrawlConfig
 from goscrape_spark.plans.crawl import Crawler
-from goscrape_spark.sources.fixtures import (
-    SITE_LINKS,
-    SITE_LINKS_START,
-    pages_df,
-)
+from goscrape_spark.sources.fixtures import pages_df
 
 
 def test_union_chain_compaction_bounds_plan_depth(spark, monkeypatch):
@@ -37,23 +33,6 @@ def test_union_chain_compaction_bounds_plan_depth(spark, monkeypatch):
     # final seen plan: at most ~(epochs % K) union legs, not ~epochs
     plan = res.seen._jdf.queryExecution().analyzed().toString()
     assert plan.count("Union") <= Crawler.COMPACT_EVERY + 1
-
-
-def test_stage_secs_attribution_table(spark):
-    """Every _localckpt label accumulates wall time into Crawler.stage_secs
-    (the bench emits this into BENCH_FULL as the headline stage-attribution
-    table — VERDICT r4 ask #3)."""
-    import json
-
-    c = Crawler(spark, CrawlConfig(url=SITE_LINKS_START),
-                pages_df(spark, SITE_LINKS))
-    c.run()
-    assert c.stage_secs, "no stages recorded"
-    # core epoch stages all present, values sane and JSON-serializable
-    for label in ("fetched", "processed", "inserts", "next_pages"):
-        assert label in c.stage_secs, label
-        assert c.stage_secs[label] >= 0.0
-    json.dumps(c.stage_secs)
 
 
 def test_fixpoint_signature_many_link_assets(spark):
