@@ -21,6 +21,7 @@ batches — never as a row-at-a-time Python UDF.
 
 from __future__ import annotations
 
+import re
 from typing import NamedTuple
 from urllib.parse import urlsplit
 
@@ -71,9 +72,17 @@ class GoURL(NamedTuple):
 
 _HIER_SCHEMES = ("http", "https", "ftp", "file", "")
 
+# a control byte (< 0x20 or 0x7f) before the first '#'
+_CTL_BEFORE_FRAGMENT_RE = re.compile(r"[^#\x00-\x1f\x7f]*[\x00-\x1f\x7f]")
+
 
 def parse_url(raw: str) -> GoURL:
-    """Parse like Go ``url.Parse`` (no decoding; fixtures are pre-escaped)."""
+    """Parse like Go ``url.Parse`` (no decoding; fixtures are pre-escaped).
+
+    Raises ``ValueError`` on a control byte (< 0x20 or 0x7f) before the
+    first ``#``, as Go does; ``urlsplit`` would drop ``\t\r\n`` instead."""
+    if _CTL_BEFORE_FRAGMENT_RE.match(raw):
+        raise ValueError("net/url: invalid control character in URL")
     s = urlsplit(raw)
     scheme = s.scheme
     # urlsplit treats "page2:..." colons conservatively; good enough here.

@@ -21,9 +21,13 @@ skipped — a tolerant scanner is equivalent on non-pathological markup and is
 far cheaper inside Arrow batches.  Entities in attribute values and text are
 decoded like x/net/html does.
 
-Spark surface: :func:`extract_spans_df` (url+body → exploded span rows via
-``mapInPandas``) and :func:`documents_table` (span-array form).  No per-row
-Python: the scanner runs once per document inside Arrow batches.
+Two walks read the scanned tags: :func:`extract_spans` (the oracle's) and
+:func:`media_refs` (the crawl's).  The crawl's :func:`process_page` scans a
+body once and hands its tags to :func:`media_refs` and to the rewrite.
+
+Spark surface: :func:`process_pages_df` (the crawl's page pass),
+:func:`extract_spans_df` (exploded span rows) and :func:`documents_table`
+(span-array form), each running the scanner inside Arrow batches.
 """
 
 from __future__ import annotations
@@ -271,19 +275,13 @@ def _resolve_or_none(base: GoURL, reference: str) -> str | None:
         return None
 
 
-def extract_media_refs(text: str, base_url: str) -> list[tuple]:
-    """Fast path for the crawl loop: (kind, media_ref, ref_no_frag, scheme,
-    host, path) tuples.
-
-    Candidate generation needs just the tag-kind and the resolved reference —
-    per-tag lists are deduplicated and sorted by :func:`page_candidates`, so
-    span offsets, text runs, and splice offsets are dead weight there.  The URL
-    components (scheme/host/path + fragment-stripped string) fall out of the
-    resolver for free here, letting admission skip three JVM-side regex
-    extractions per candidate row.
+def media_refs(text: str, tags: list[Tag], base: GoURL) -> list[tuple]:
+    """The crawl's refs of a page, one ``(kind, media_ref, ref_no_frag,
+    scheme, host, path)`` per ref :func:`extract_spans` resolves, over tags
+    scanned from ``text`` and the parsed page URL ``base``.  Offsets and
+    text runs are dead weight for :func:`page_candidates`; the URL parts
+    fall out of the resolver and spare admission three JVM regexes a row.
     """
-    base = parse_url(base_url)
-    tags, _ = scan_tags(text)
     out: list[tuple] = []
 
     def emit(kind: str, u) -> None:
@@ -327,125 +325,17 @@ def extract_media_refs(text: str, base_url: str) -> list[tuple]:
 
 def process_page(text: str, page_url: str, seed_host: str,
                  do_rewrite: bool = True) -> tuple[list[tuple], str, bool]:
-    """Fused extract_media_refs + rewrite_document over ONE scan_tags pass.
-
-    Byte-for-byte equivalent to running :func:`extract_media_refs` and
-    :func:`rewrite.rewrite_document` separately (pinned by
-    tests/test_fused_process.py + test_round6_fused_scan.py) but the
-    document is scanned once and each <style> block's css_extract runs
-    once — the two scans were ~45% of the per-page Python cost in the
-    crawl's hot Arrow stage (guide §4.2: make the per-batch native work
-    lean; OPTIMIZATION_r06.md has the profile).
-
-    Returns ``(refs, new_text, changed)``; with ``do_rewrite=False`` the
-    rewrite side is skipped entirely (binary bodies) and ``(refs, text,
-    False)`` comes back.
-    """
-    from ..functions.urlmath import (
-        resolve_srcset_urls,
-        resolve_url,
-        url_relative_to_root,
-    )
-    from .cssx import rewrite_style_content
-    from .rewrite import IGNORED_URL_PREFIXES, _escape_attr
-
+    """``(refs, new_text, changed)``: :func:`media_refs` and, unless
+    ``do_rewrite`` is false (binary bodies: ``text`` and False come back),
+    :func:`rewrite.rewrite_tags`, both over ONE :func:`scan_tags` pass (the
+    scan was ~46% of the pass's Python cost, OPTIMIZATION_r06.md)."""
+    from .rewrite import rewrite_tags  # rewrite imports this module
     base = parse_url(page_url)
     tags, _ = scan_tags(text)
-    refs: list[tuple] = []
-    edits: list[tuple[int, int, str]] = []
-    changed = False
-    relative_to_root = url_relative_to_root(base) if do_rewrite else ""
-
-    def emit(kind: str, u) -> None:
-        full = u.string()
-        no_frag = full.split("#", 1)[0]
-        refs.append((kind, full, no_frag, u.scheme, u.host, u.path))
-
-    for tag in tags:
-        if tag.name == "style":
-            # styleParser: extraction emits every resolvable url() ref;
-            # rewrite replaces adjusted tokens (both over ONE css_extract)
-            if tag.content_start < 0 or tag.content_end <= tag.content_start:
-                continue
-            css_text = text[tag.content_start:tag.content_end]
-            css_refs = css_extract(css_text, base)
-            for ref in css_refs:
-                try:
-                    emit("style-url", parse_url(ref.resolved))
-                except ValueError:
-                    continue
-            if do_rewrite:
-                rewrites: dict[str, str] = {}
-                for ref in css_refs:
-                    adjusted = resolve_url(base, ref.src, seed_host, False,
-                                           relative_to_root)
-                    if adjusted != ref.src:
-                        rewrites[ref.src] = adjusted
-                if rewrites:
-                    edits.append((tag.content_start, tag.content_end,
-                                  rewrite_style_content(css_text, rewrites)))
-                    changed = True
-            continue
-        attrlist = NODES.get(tag.name)
-        if attrlist is None:
-            continue
-        is_hyperlink = tag.name == "a"
-        node_changed = False
-        # rewrite's ignored-prefix quirk aborts the NODE's rewrite loop
-        # (scraper/html.go:87-91) but never the extraction side
-        rw_aborted = not do_rewrite
-        for attr in tag.attrs:
-            if attr.name not in attrlist:
-                continue
-            value = attr.value.strip()
-            is_srcset = attr.name in SRCSET_ATTRIBUTES
-            if is_srcset:
-                for cand in split_srcset(value):
-                    try:
-                        emit("img-srcset",
-                             resolve_reference(base, parse_url(cand)))
-                    except ValueError:
-                        continue
-            else:
-                try:
-                    emit(_KIND_BY_TAG[tag.name],
-                         resolve_reference(base, parse_url(value)))
-                except ValueError:
-                    pass
-            if rw_aborted:
-                continue
-            if value == "":
-                continue
-            if value.startswith(IGNORED_URL_PREFIXES):
-                node_changed = False
-                rw_aborted = True
-                continue
-            if is_srcset:
-                adjusted = resolve_srcset_urls(base, value, seed_host,
-                                               is_hyperlink, relative_to_root)
-            else:
-                adjusted = resolve_url(base, value, seed_host, is_hyperlink,
-                                       relative_to_root)
-            if adjusted == value:
-                continue
-            edits.append((attr.vstart, attr.vend,
-                          _escape_attr(adjusted, attr.quote)))
-            node_changed = True
-        changed = changed or node_changed
-
-    if not edits or not changed:
+    refs = media_refs(text, tags, base)
+    if not do_rewrite:
         return refs, text, False
-    edits.sort(key=lambda e: e[0])
-    out: list[str] = []
-    pos = 0
-    for start, end, repl in edits:
-        if start < pos:
-            continue  # overlapping edit (duplicate attr) — first wins
-        out.append(text[pos:start])
-        out.append(repl)
-        pos = end
-    out.append(text[pos:])
-    return refs, "".join(out), True
+    return (refs, *rewrite_tags(text, tags, base, seed_host))
 
 
 def tag_urls(spans: list[Span], tag: str) -> list[str]:

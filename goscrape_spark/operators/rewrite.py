@@ -22,10 +22,10 @@ replacement ever matches.  Downloaded CSS assets are therefore stored
 byte-identical; only asset DISCOVERY works.  We reproduce that (see
 plans/simulator.py and plans/crawl.py).
 
-The crawl does not call :func:`rewrite_document` directly: the fused page
-pass (operators/extract.process_page) runs the same rewrite over its one
-tag scan, inside the crawl's Arrow batches; this module is its reference
-(tests/test_fused_process.py) and the simulator's rewrite.
+This module is the only rewrite.  The simulator calls
+:func:`rewrite_document`; the crawl's page pass
+(operators/extract.process_page) calls :func:`rewrite_tags` on the tags
+of the one scan it also extracts the page's refs from.
 """
 
 from __future__ import annotations
@@ -35,9 +35,9 @@ from ..functions.urlmath import (
     resolve_url,
     url_relative_to_root,
 )
-from ..functions.urlnorm import parse_url
+from ..functions.urlnorm import GoURL, parse_url
 from .cssx import css_extract, rewrite_style_content
-from .extract import NODES, SRCSET_ATTRIBUTES, scan_tags
+from .extract import NODES, SRCSET_ATTRIBUTES, Tag, scan_tags
 
 # scraper/html.go:17-22
 IGNORED_URL_PREFIXES = ("#", "/#", "data:", "mailto:")
@@ -57,9 +57,15 @@ def rewrite_document(text: str, page_url: str, main_page_host: str) -> tuple[str
     """C16+C14: rewrite all URL references of a page to relative offline
     paths.  Returns (new_text, changed) — ``changed`` mirrors the
     reference's hasChanges (scraper/html.go:31-39)."""
-    base = parse_url(page_url)
+    return rewrite_tags(text, scan_tags(text)[0], parse_url(page_url),
+                        main_page_host)
+
+
+def rewrite_tags(text: str, tags: list[Tag], base: GoURL,
+                 main_page_host: str) -> tuple[str, bool]:
+    """:func:`rewrite_document` over tags already scanned from ``text``
+    (``scan_tags(text)[0]``) and its parsed page URL ``base``."""
     relative_to_root = url_relative_to_root(base)
-    tags, _ = scan_tags(text)
     edits: list[tuple[int, int, str]] = []
     changed = False
 

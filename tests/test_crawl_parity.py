@@ -227,6 +227,22 @@ def test_parity_asset_vs_page_conflict(spark):
     assert ("https://example.org/style.css", "asset") in kinds
 
 
+def test_parity_control_byte_ref_skipped(spark):
+    # Go's url.Parse rejects a control byte before '#', so htmlindex skips
+    # the ref; dropping the '\n' instead would fetch /ab.png, which the
+    # page does not name
+    pages = {
+        "https://example.org/": '<img src="/a\nb.png"><img src="/ok.png">',
+        "https://example.org/ab.png": "AB",
+        "https://example.org/ok.png": "OK",
+    }
+    sim, res = assert_parity(spark, CrawlConfig(url="https://example.org/"),
+                             pages)
+    fetched = {r.url for r in res.ordered_fetches()}
+    assert "https://example.org/ab.png" not in fetched
+    assert "https://example.org/ok.png" in fetched
+
+
 def test_parity_image_recode(spark):
     # image_quality=75 recodes the images queue (scraper/download.go:58-63):
     # an <img> and an absolute url() in a linked stylesheet.  The

@@ -71,6 +71,12 @@ def test_link_with_leading_space_and_fragment():
     assert tag_urls(spans, "a") == ["https://example.org/page2"]
 
 
+def test_control_byte_ref_skipped():
+    # htmlindex skips a ref url.Parse rejects (htmlindex/htmlindex.go:108-115)
+    spans = extract_spans('<img src="/a\nb.png">', "https://h.org/")
+    assert [s for s in spans if s.kind == "img"] == []
+
+
 def test_style_tag_css_urls():
     # TestScraperInternalCss fixture (scraper/scraper_test.go:135-155)
     html = """

@@ -1,6 +1,6 @@
 """Fused per-page pass (process_pages_df) must agree with the separate
 extract / rewrite / sniff / path operators it replaces, and emit each
-page's admission candidates from the refs those operators extract."""
+page's admission candidates from the oracle's per-tag ref lists."""
 
 from pyspark.sql import functions as F
 
@@ -8,10 +8,10 @@ from goscrape_spark.functions.filetype import sniff_extension
 from goscrape_spark.functions.urlmath import get_file_path
 from goscrape_spark.functions.urlnorm import parse_url
 from goscrape_spark.operators.extract import (
-    TAG_BY_KIND,
-    extract_media_refs,
+    extract_spans,
     process_pages_df,
     ref_dedup_key,
+    tag_urls,
 )
 from goscrape_spark.operators.rewrite import rewrite_document
 
@@ -37,19 +37,20 @@ STAGES = [("link", 1, True, "link"), ("script", 2, True, "script"),
 
 
 def want_cands(text, url):
-    """Per tag, the distinct http(s) refs sorted with their fragment, then
-    stage-ranked and numbered within the tag."""
-    refs = [r for r in extract_media_refs(text, url)
-            if r[3] in ("http", "https")]
+    """Per tag, the oracle's distinct sorted refs (with their fragment),
+    http(s) only, stage-ranked and numbered within the tag."""
+    spans = extract_spans(text, url)
     out = []
     for tag, rank, is_asset, stage in STAGES:
-        tagged = sorted({r[1:] for r in refs if TAG_BY_KIND[r[0]] == tag})
-        for i, (_, nf, s, h, p) in enumerate(tagged):
+        refs = [r for r in tag_urls(spans, tag)
+                if parse_url(r).scheme in ("http", "https")]
+        for i, ref in enumerate(refs):
+            u, nf = parse_url(ref), ref.split("#", 1)[0]
             out.append({
                 "stage_rank": rank, "sub_rank": 0, "intra1": i, "intra2": 0,
-                "url": nf, "scheme": s, "host": h, "path": p,
-                "is_asset": is_asset, "stage": stage,
-                "dedup_key": ref_dedup_key(nf, h, p, HOST),
+                "url": nf, "scheme": u.scheme, "host": u.host,
+                "path": u.path, "is_asset": is_asset, "stage": stage,
+                "dedup_key": ref_dedup_key(nf, u.host, u.path, HOST),
                 "file_path": get_file_path(parse_url(nf), HOST, "out", False)
                 if is_asset else None})
     return out

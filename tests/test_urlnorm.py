@@ -1,5 +1,7 @@
 """Ports of scraper/checks_test.go (normalize + dedup) fixtures."""
 
+import pytest
+
 from goscrape_spark.functions.urlnorm import (
     GoURL,
     dedup_key,
@@ -55,6 +57,16 @@ def test_parse_url_components():
     d = parse_url("data:image/gif;base64,R0lGODlhAQABAAD%3D=")
     assert d.scheme == "data" and d.opaque.startswith("image/gif")
     assert d.string() == "data:image/gif;base64,R0lGODlhAQABAAD%3D="
+
+
+def test_parse_url_rejects_control_bytes():
+    # Go's url.Parse: "invalid control character in URL" before the first
+    # '#' (urlsplit would silently drop \t\r\n and keep the rest)
+    for raw in ("/a\nb.png", "/a\tb", "/a\x01b"):
+        with pytest.raises(ValueError):
+            parse_url(raw)
+    # the fragment is cut off before the check
+    assert parse_url("/a.png#x\x01") == GoURL(path="/a.png", fragment="x\x01")
 
 
 def test_resolve_reference_basics():
