@@ -83,14 +83,7 @@ def _crawl_once(spark, n_pages: int, job_group: str | None = None,
               f"output={time.time() - t_seen:.2f}s", flush=True)
     out = {"sec": round(dt, 3), "fetches": n_fetches, "seen": n_seen,
            "epochs": res.epochs,
-           "urls_per_sec": round((n_fetches + n_seen) / dt, 1),
-           # stage attribution (VERDICT r4 ask #3): cumulative per-label
-           # checkpoint-materialization wall times over the whole crawl,
-           # largest first — the residual between sum(stages) and sec is
-           # driver orchestration + the final count/output actions
-           "stage_secs": dict(sorted(
-               ((k, round(v, 2)) for k, v in crawler.stage_secs.items()),
-               key=lambda kv: -kv[1]))}
+           "urls_per_sec": round((n_fetches + n_seen) / dt, 1)}
     if use_bloom and crawler.bloom is not None \
             and crawler.bloom.probe_total is not None:
         # anti-join probe reduction: rows the Bloom pre-filter certified
@@ -181,22 +174,23 @@ def _steady_run(spark, c, page_rows, shuffle_parts: int,
 
     from goscrape_spark.operators.admission import admit
     from goscrape_spark.operators.extract import process_pages_df
-    from goscrape_spark.plans.crawl import page_candidate_rows
+    from goscrape_spark.plans.crawl import PAGE_ORDER, page_candidate_rows
 
     host = "bench.example.org"
-    frontier = page_rows.select(
-        "url", F.lit(0).alias("depth"),
+    frontier = c._schedule(page_rows.select(
+        "url", F.lit(host).alias("host"),
         F.row_number().over(Window.orderBy("url")).cast("long")
-         .alias("seq")).repartition(shuffle_parts, "url") \
+         .alias("seq")), PAGE_ORDER).repartition(shuffle_parts, "url") \
         .localCheckpoint(eager=True)
-    fetched = c._fetch(frontier, 0)
+    # a steady-state epoch: epoch 0 would treat a row as the seed
+    fetched = c._fetch(frontier, 1)
     pages_ok = fetched.filter(F.col("status") == "ok")
-    bodies = pages_ok.select(F.col("page_url").alias("url"), "body", "seq",
-                             "depth")
+    bodies = pages_ok.select(F.col("page_url").alias("url"), "body", "seq")
     seen = spark.createDataFrame([], "dedup_key string")
     processed = process_pages_df(bodies, host, "")
     cands = page_candidate_rows(processed)
-    inserts, _surv = admit(cands, seen, host, 0, [], [])
+    inserts, _surv = admit(cands, seen, host, 0, max_depth=0,
+                           includes=[], excludes=[])
 
     n_inserts = inserts.count()        # untimed: codegen + JIT + plan
     secs = []
@@ -368,7 +362,11 @@ def _steady_worker(master: str, n_pages: int, shuffle_parts: int) -> None:
     from goscrape_spark.config import CrawlConfig
     from goscrape_spark.operators.admission import admit
     from goscrape_spark.operators.extract import process_pages_df
-    from goscrape_spark.plans.crawl import Crawler, page_candidate_rows
+    from goscrape_spark.plans.crawl import (
+        PAGE_ORDER,
+        Crawler,
+        page_candidate_rows,
+    )
     from goscrape_spark.session import get_spark
     from goscrape_spark.sources.synth import seed_url, synthetic_site
 
@@ -389,17 +387,18 @@ def _steady_worker(master: str, n_pages: int, shuffle_parts: int) -> None:
         def run_once(rows) -> dict:
             # seq assignment is the PREVIOUS epoch's last step in the real
             # loop; materialize it outside the timed region
-            frontier = rows.select(
-                "url", F.lit(0).alias("depth"),
+            frontier = c._schedule(rows.select(
+                "url", F.lit(host).alias("host"),
                 F.row_number().over(Window.orderBy("url")).cast("long")
-                 .alias("seq")).repartition(shuffle_parts, "url") \
-                .localCheckpoint(eager=True)
-            fetched = c._fetch(frontier, 0)
+                 .alias("seq")), PAGE_ORDER) \
+                .repartition(shuffle_parts, "url").localCheckpoint(eager=True)
+            # a steady-state epoch: epoch 0 would treat a row as the seed
+            fetched = c._fetch(frontier, 1)
             pages_ok = fetched.filter(F.col("status") == "ok")
             # no repartition: the fetch join already distributed bodies by
             # url hash; a second full-body shuffle was pure IO
             bodies = pages_ok.select(F.col("page_url").alias("url"),
-                                     "body", "seq", "depth")
+                                     "body", "seq")
             seen = spark.createDataFrame([], "dedup_key string")
             t0 = time.time()
             # the FUSED per-page pass (extract + sniff + rewrite + output
@@ -408,7 +407,8 @@ def _steady_worker(master: str, n_pages: int, shuffle_parts: int) -> None:
             processed = process_pages_df(bodies, host, "") \
                 .localCheckpoint(eager=True)
             cands = page_candidate_rows(processed)
-            inserts, _surv = admit(cands, seen, host, 0, [], [])
+            inserts, _surv = admit(cands, seen, host, 0, max_depth=0,
+                                   includes=[], excludes=[])
             n_inserts = inserts.count()
             dt = time.time() - t0
             n_pages_done = rows.count()

@@ -133,8 +133,8 @@ def bloom_crossover() -> None:
         bloom.add_keys_df(seen)
         cell = {"n_seen": n_seen}
         for arm, bf in (("off", None), ("on", bloom)):
-            inserts, _ = admit(cand, seen, "h.example.com", 0, [], [],
-                               bloom=bf)
+            inserts, _ = admit(cand, seen, "h.example.com", 0, max_depth=0,
+                               includes=[], excludes=[], bloom=bf)
             inserts.write.format("noop").mode("overwrite").save()  # untimed
             secs = []
             for _ in range(3):

@@ -16,6 +16,21 @@ with it off.  The cost of turning it off: Spark error messages lose their
 Python call-site context.  Sessions built without :func:`get_spark` keep
 PySpark's default.
 
+Python workers come from the crawl's own daemon (goscrape_spark/daemon.py,
+``spark.python.daemon.module``).  Spark puts three archives first on a
+worker's ``sys.path``: ``pyspark.zip``, ``py4j-*-src.zip`` and the
+spark-core jar.  Every task starts with ``importlib.invalidate_caches()``,
+and on Python 3.11 each cached zipimporter then re-reads its archive's
+whole directory: about 27,000 entries per task.  The daemon drops the
+archives when the installed pyspark and py4j are importable without them
+(otherwise it keeps Spark's path as it is), and it imports pandas, pyarrow
+and the crawl's UDF modules before it forks a worker.  On a 4-core host, a
+trivial ``mapInPandas`` task on a reused worker cost 0.13-0.23 Python CPU-s
+with Spark's daemon and a median 0.026 (0.02-0.06) with this one, in runs
+of 80 tasks.  Sessions built without :func:`get_spark` keep Spark's daemon,
+and so does a package loaded from a ``--py-files`` archive: Spark adds that
+to a worker's path only when a task starts, after the daemon has started.
+
 :func:`local_frame` builds the crawl's driver-side frames as JVM relations.
 """
 
@@ -50,6 +65,11 @@ def get_spark(app_name: str = "goscrape-spark", master: str | None = None,
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
+    if os.path.isfile(__file__):
+        # not from a --py-files archive: that reaches a worker's sys.path
+        # only when a task starts, after the daemon has started
+        builder = builder.config("spark.python.daemon.module",
+                                 "goscrape_spark.daemon")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
