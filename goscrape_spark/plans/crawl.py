@@ -78,12 +78,13 @@ needed later.  ``_deferred`` runs each one on a pyspark
 a ``concurrent.futures.Future`` that the thread completes:
 
 * the **warm-up**, started on run()'s first line: one job of ``n``
-  one-row partitions through a ``mapInPandas``, with ``n`` the first
-  epoch's page-pass width (``page_pass_width``).  The Python workers start
-  while the driver runs the prologue and the first fetch; under
-  ``get_spark`` each is a fork of the crawl's daemon (goscrape_spark/
-  daemon.py), which has the page pass's modules imported already.  Nothing
-  takes its result; run()'s final wait covers it;
+  one-row partitions through a ``mapInPandas`` that imports the page pass's
+  module, with ``n`` the first epoch's page-pass width
+  (``page_pass_width``).  The Python workers start while the driver runs
+  the prologue and the first fetch; under ``get_spark`` on a local master
+  each is a fork of the crawl's daemon (goscrape_spark/daemon.py), which
+  has the page pass's modules imported already.  Nothing takes its result;
+  run()'s final wait covers it;
 * the two **post-admission branches** (asset fetch + written delta, the
   next frontier's sequence), plus the Bloom build when Bloom is on, taken
   before the epoch ends;
@@ -175,13 +176,16 @@ def page_pass_width(n_frontier: int, default_parts: int) -> int:
 
 
 def _warm_python_workers(spark: SparkSession, n: int) -> None:
-    """Start the Python worker daemon and fork ``n`` workers from it: one job
-    of ``n`` one-row partitions through a ``mapInPandas``.  The crawl's
-    daemon (goscrape_spark/daemon.py) has the page pass's modules imported
-    before it forks.  Spark reuses idle workers, so the first page pass (and
-    a live crawl's first fetch) finds them running instead of starting them
+    """Start ``n`` Python workers with the page pass's modules imported: one
+    job of ``n`` one-row partitions through a ``mapInPandas``.  Under
+    ``get_spark`` on a local master each worker is a fork of the crawl's
+    daemon (goscrape_spark/daemon.py), which has imported them already and
+    the import here is a lookup; a session that keeps Spark's daemon imports
+    them here.  Spark reuses idle workers, so the first page pass (and a
+    live crawl's first fetch) finds them running instead of starting them
     cold."""
     def run(batches) -> Iterator:
+        import goscrape_spark.operators.extract  # noqa: F401
         for _ in batches:
             pass
         return iter(())

@@ -21,15 +21,20 @@ Python workers come from the crawl's own daemon (goscrape_spark/daemon.py,
 worker's ``sys.path``: ``pyspark.zip``, ``py4j-*-src.zip`` and the
 spark-core jar.  Every task starts with ``importlib.invalidate_caches()``,
 and on Python 3.11 each cached zipimporter then re-reads its archive's
-whole directory: about 27,000 entries per task.  The daemon drops the
-archives when the installed pyspark and py4j are importable without them
-(otherwise it keeps Spark's path as it is), and it imports pandas, pyarrow
-and the crawl's UDF modules before it forks a worker.  On a 4-core host, a
-trivial ``mapInPandas`` task on a reused worker cost 0.13-0.23 Python CPU-s
-with Spark's daemon and a median 0.026 (0.02-0.06) with this one, in runs
-of 80 tasks.  Sessions built without :func:`get_spark` keep Spark's daemon,
-and so does a package loaded from a ``--py-files`` archive: Spark adds that
-to a worker's path only when a task starts, after the daemon has started.
+whole directory.  The daemon drops the archives when the installed pyspark
+and py4j are importable without them at the archives' versions (otherwise
+it keeps Spark's path as it is), and it imports pandas, pyarrow and the
+crawl's UDF modules before it forks a worker.
+
+Spark starts the daemon before a task adds anything to a worker's path, so
+the daemon module must be importable as the driver imports it.  That holds
+only when workers share the driver's host, directory and environment: a
+``local``/``local[N]`` master whose workers find the package on disk where
+the driver found it (:func:`uses_crawl_daemon`).  Anywhere else
+(``local-cluster``, a cluster manager, a package shipped with
+``--py-files`` or ``addPyFile``, a package the driver found only through
+its own ``sys.path``) ``get_spark`` keeps Spark's daemon, as do sessions
+built without :func:`get_spark`.
 
 :func:`local_frame` builds the crawl's driver-side frames as JVM relations.
 """
@@ -37,12 +42,30 @@ to a worker's path only when a task starts, after the daemon has started.
 from __future__ import annotations
 
 import os
+import site
 from typing import Iterable
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
+
+
+def uses_crawl_daemon(master: str) -> bool:
+    """Whether a ``get_spark`` session on ``master`` starts its Python
+    workers from goscrape_spark/daemon.py: only on a local master, and only
+    when a worker finds the package where the driver found it, on disk in
+    the working directory, on ``PYTHONPATH`` or among the installed
+    packages.  A ``--py-files`` archive or a driver-only ``sys.path`` entry
+    is not enough: the archive reaches a worker's path when a task starts,
+    after the daemon has started, and the entry never does."""
+    if not (master == "local" or master.startswith("local[")):
+        return False
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    visible = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+               *site.getsitepackages(), site.getusersitepackages()]
+    return os.path.isfile(__file__) and os.path.realpath(root) in {
+        os.path.realpath(p) for p in visible if p}
 
 
 def get_spark(app_name: str = "goscrape-spark", master: str | None = None,
@@ -65,9 +88,7 @@ def get_spark(app_name: str = "goscrape-spark", master: str | None = None,
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
-    if os.path.isfile(__file__):
-        # not from a --py-files archive: that reaches a worker's sys.path
-        # only when a task starts, after the daemon has started
+    if uses_crawl_daemon(master):
         builder = builder.config("spark.python.daemon.module",
                                  "goscrape_spark.daemon")
     for k, v in (extra_conf or {}).items():
